@@ -8,9 +8,10 @@ import java.nio.file.{Files, Paths}
   * plan-shape claims in OPTIMIZATION_r*.md are checkable without running
   * Spark. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [q_name ...]
-  * With no names, dumps every declared query. Session configuration
-  * matches Bench (same shuffle partitions, extensions, codegen cache)
-  * so the dumped plan is the benched plan.
+  * With no names, dumps every declared query. Cores and shuffle
+  * partitions default to 4 (`SPARK_GRAFT_CPUS`), as in Bench and
+  * Verify; unlike Bench it keeps the default codegen cache, which
+  * changes compile time, not plans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,7 +19,7 @@ object PlanDump {
     val tag = args(1)
     val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -42,10 +43,19 @@ object PlanDump {
           qe.executedPlan.toString.split("== Initial Plan ==")(0)
         } else qe.explainString(FormattedMode)
         Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan)
-        val ex = "Exchange".r.findAllIn(plan).size
-        val reused = "ReusedExchange".r.findAllIn(plan).size
-        val scans = plan.linesIterator.count(l =>
-          l.contains("Scan parquet") || l.contains("FileScan"))
+        // one name per operator: the tree lines of the executed plan,
+        // the "(n) Name" detail headers of the formatted explain (its
+        // tree section repeats every node)
+        val ops = if (executed) {
+          plan.linesIterator.map(_.replaceFirst("""^[\s:+-]*(\*\(\d+\) )?""", "")).toList
+        } else {
+          plan.linesIterator.collect { case OpHeader(op) => op }.toList
+        }
+        // a ReusedExchange line also names the exchange it reuses, so
+        // exchanges count operators, not substring hits
+        val ex = ops.count(_.matches("""(Shuffle|Broadcast)?Exchange\b.*"""))
+        val reused = ops.count(_.startsWith("ReusedExchange"))
+        val scans = ops.count(o => o.startsWith("Scan parquet") || o.startsWith("FileScan"))
         println(s"[plandump] $n exchanges=$ex reused=$reused scans=$scans")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: $e")
@@ -53,4 +63,6 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  private val OpHeader = """^\(\d+\) (.*)$""".r
 }

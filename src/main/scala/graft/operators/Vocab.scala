@@ -61,135 +61,89 @@ object Vocab {
       .select(col("id"), col("token"), col("tfidf"))
   }
 
-  /** Per-document average token log-likelihood under the corpus's own
-    * unigram language model — the CCNet-recipe perplexity-proxy quality
-    * signal (docs whose tokens are globally rare score low; boilerplate
-    * of common tokens scores high). `lm_score` = Σ c·ln(tf/T) / Σ c
-    * over the doc's distinct tokens (c = in-doc count, tf = corpus
-    * count, T = corpus token total); perplexity = exp(−lm_score).
+  /** Per-document average token log-likelihood under a unigram
+    * language model — the CCNet-recipe perplexity-proxy quality signal
+    * (docs whose tokens are globally rare score low; boilerplate of
+    * common tokens scores high). `lm_score` = Σ ln(tf/T) / n over the
+    * doc's n token occurrences (tf = model count of the token, T =
+    * model token total); perplexity = exp(−lm_score).
     *
-    * Shape: the same two-level (id, token) partial aggregation as
-    * [[topK]] builds both the per-doc counts and the vocabulary, then
-    * one token-key equi-join attaches corpus frequencies — one row per
-    * distinct (doc, token), never per occurrence, and the vocabulary
-    * side is ≪ corpus so AQE broadcasts it when it truly is small
-    * (never forced). T rides IN-PLAN as a 1-row aggregate of the vocab
-    * broadcast-cross-joined onto the vocab side (the q_value_props
-    * idiom) — no eager driver job, so the self-model variant builds
-    * the vocabulary ONCE (the token shuffle is shared via exchange
-    * reuse) instead of paying a second corpus scan for the scalar. To
-    * score against a REFERENCE corpus's model (the actual CCNet setup
-    * — e.g. Wikipedia as the target distribution), pass its vocabulary
-    * as `model`; duplicate token rows in a supplied model (e.g. a
-    * union of shards) are merged by summing their counts, so the join
-    * cannot fan occurrences out. By default the corpus models itself.
-    * Zero-token docs drop out (nothing to score). */
+    * By default the corpus models itself: the vocabulary is one
+    * partial-agg'd token shuffle of this corpus. To score against a
+    * REFERENCE corpus's model (the actual CCNet setup — e.g. Wikipedia
+    * as the target distribution), pass its vocabulary (token, tf) as
+    * `model`; duplicate token rows in a supplied model (e.g. a union of
+    * shards) are merged by summing their counts, so the join cannot
+    * fan occurrences out.
+    *
+    * Shape: FLAT occurrence form — the (id, token) occurrence stream
+    * joins the vocabulary on token and partial-aggregates to one row
+    * per doc, with no per-doc (id, token) pre-aggregate (it saves the
+    * vocabulary's corpus scan but adds an occurrence-sized shuffle,
+    * and measured slower end to end). T rides IN-PLAN as a 1-row
+    * aggregate of the vocabulary broadcast-cross-joined onto the vocab
+    * side (the q_value_props idiom) — no eager driver job. Inner join:
+    * under a reference model, out-of-vocabulary tokens drop out of the
+    * average (CCNet scores known tokens; a smoothing variant would
+    * left-join + coalesce to a floor logprob). Zero-token docs drop
+    * out (nothing to score). */
   def lmScore(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       model: Option[DataFrame] = None): DataFrame = {
-    // the explicit isNotNull is a semantic no-op (explode of a split
-    // never yields null tokens) but load-bearing for ONE-SCAN
-    // execution: without it Catalyst infers isnotnull(token) from the
-    // join into only the probe branch, the vocab/total branches
-    // canonicalize differently, and AQE cannot reuse the token
-    // exchange — every branch would re-scan the corpus
     val toks = docs.select(
       col(idCol).as("id"),
       explode(TF.tokens(col(textCol))).as("token"))
-      .filter(col("token").isNotNull)
-    model match {
-      case Some(ref) =>
-        // reference model supplied: the vocabulary never touches the
-        // scored corpus, so the FLAT occurrence form is optimal — the
-        // probe stream pays no exchange at all when AQE broadcasts the
-        // (duplicate-key-merged) vocab, then partial-aggs per doc.
-        // Inner join: out-of-vocabulary tokens drop out of the average
-        // (CCNet scores known tokens; a smoothing variant would
-        // left-join + coalesce to a floor logprob)
-        val vocab = ref.groupBy(col("token")).agg(sum(col("tf")).as("tf"))
-        val totalT = vocab.agg(sum(col("tf")).cast("double").as("__T"))
-        toks.join(vocab.crossJoin(broadcast(totalT)), Seq("token"))
-          .groupBy(col("id"))
-          .agg((round(
-            sum(log(col("tf").cast("double") / col("__T"))) /
-              count(lit(1)), 4) + lit(0.0)).as("lm_score"))
-      case None =>
-        // self-model: derive the vocabulary as a MARGINAL of the
-        // per-doc (id, token) counts so the corpus is scanned and
-        // tokenized ONCE — the probe's (id, token) exchange and the
-        // vocab branch's first aggregation canonicalize equal and AQE
-        // reuses one stage, where the flat form re-scanned the corpus
-        // for the vocab branch (two full text passes). Σ c·ln(tf/T)
-        // over per-doc distinct tokens == Σ ln(tf/T) over occurrences
-        // (c = in-doc count), and the engine-order ulp wiggle is
-        // absorbed by the same 4dp round that already reconciles
-        // Spark's partial-agg order with the oracle's.
-        val dt = toks.groupBy(col("id"), col("token"))
-          .agg(count(lit(1)).as("c"))
-        val vocab = dt.groupBy(col("token")).agg(sum(col("c")).as("tf"))
-        val totalT = vocab.agg(sum(col("tf")).cast("double").as("__T"))
-        dt.join(vocab.crossJoin(broadcast(totalT)), Seq("token"))
-          .groupBy(col("id"))
-          .agg((round(
-            sum(col("c") * log(col("tf").cast("double") / col("__T"))) /
-              sum(col("c")), 4) + lit(0.0)).as("lm_score"))
-    }
+    val vocab = model
+      .map(_.groupBy(col("token")).agg(sum(col("tf")).as("tf")))
+      .getOrElse(toks.groupBy(col("token")).agg(count(lit(1)).as("tf")))
+    val totalT = vocab.agg(sum(col("tf")).cast("double").as("__T"))
+    toks.join(vocab.crossJoin(broadcast(totalT)), Seq("token"))
+      .groupBy(col("id"))
+      .agg((round(
+        sum(log(col("tf").cast("double") / col("__T"))) /
+          count(lit(1)), 4) + lit(0.0)).as("lm_score"))
   }
 
   /** Bigram extension of [[lmScore]]: per-doc average transition
-    * log-likelihood Σ c·ln(c₂(p,w)/c₁(p)) / Σ c over the doc's
-    * adjacent token pairs, with counts from the corpus itself — the
+    * log-likelihood Σ ln(c₂(p,w)/c₁(p)) / n over the doc's n adjacent
+    * token pairs, with counts from the corpus itself — the
     * higher-fidelity CCNet-style signal (word-salad docs score low
     * even when every individual token is common).
     *
-    * Scale shape: bigrams are built SCAN-SIDE (zip of the token array
-    * with its own tail — no posexplode + per-token window shuffle)
-    * and scored in c-WEIGHTED per-doc-distinct form: occurrences
-    * partial-agg into one (id, p, w, c) row per distinct per-doc pair,
-    * the corpus counts c₂/c₁ are marginals of that one table (AQE
-    * reuses its exchange — the corpus is scanned and tokenized ONCE),
-    * and Σ c·ln(c₂/c₁) / Σ c equals the flat occurrence average.
-    * c₁ attaches to the distinct-bigram table model-side.
-    * Docs with < 2 tokens have no transitions and drop out. */
+    * Shape: bigrams are built SCAN-SIDE (zip of the token array with
+    * its own tail — no posexplode + per-token window shuffle) and
+    * scored in the [[lmScore]] flat occurrence form: the pair stream
+    * joins the distinct-bigram table (c₁ attached model-side) and
+    * partial-aggregates per doc. Docs with < 2 tokens have no
+    * transitions and drop out. */
   def lmScoreBigram(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = TF.tokens(col(textCol))
     val m = greatest(size(toks) - 1, lit(0))
     val pairs = zip_with(
       slice(toks, lit(1), m), slice(toks, lit(2), m),
       (a, b) => struct(a.as("p"), b.as("w")))
-    // explicit not-nulls (semantic no-op) keep every branch's inferred
-    // join filters identical so the bigram exchange canonicalizes
-    // equal across c2/c1/probe and AQE reuses ONE stage — see lmScore
     val bg = docs.select(col(idCol).as("id"), explode(pairs).as("z"))
       .select(col("id"), col("z.p").as("p"), col("z.w").as("w"))
+      // no-op filter kept: without it the sf0.1 final plan goes from 2 scans/1 reuse to 3/0
       .filter(col("p").isNotNull && col("w").isNotNull)
-    // per-doc distinct pair counts — the ONE corpus pass: c2 and c1
-    // are marginals of this table, so the model branches reuse the
-    // (id, p, w) exchange via AQE instead of re-scanning and
-    // re-tokenizing the corpus for c2 (the lmScore self-model shape).
-    // Σ c·ln(c2/c1) over per-doc distinct pairs == the flat occurrence
-    // sum; the ulp-order wiggle is absorbed by the 4dp round exactly
-    // as the cross-engine partial-agg order already is.
-    val dbg = bg.groupBy(col("id"), col("p"), col("w"))
-      .agg(count(lit(1)).as("c"))
-    val c2 = dbg.groupBy(col("p"), col("w")).agg(sum(col("c")).as("c2"))
+    val c2 = bg.groupBy(col("p"), col("w")).agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("p")).agg(sum(col("c2")).as("c1"))
-    dbg.join(c2.join(c1, Seq("p")), Seq("p", "w"))
+    bg.join(c2.join(c1, Seq("p")), Seq("p", "w"))
       .groupBy(col("id"))
       .agg(
         // + 0.0 normalizes IEEE signed zero on the (≤0) score — a
         // tiny-negative mean rounds to -0.0 in DuckDB, +0.0 in Spark
-        (round(sum(col("c") * log(col("c2").cast("double") / col("c1"))) /
-          sum(col("c")), 4) + lit(0.0)).as("lm2_score"),
-        sum(col("c")).as("n_transitions"))
+        (round(sum(log(col("c2").cast("double") / col("c1"))) /
+          count(lit(1)), 4) + lit(0.0)).as("lm2_score"),
+        count(lit(1)).as("n_transitions"))
   }
 
   /** Interpolated trigram extension of [[lmScoreBigram]] — the
     * standard CCNet-adjacent word-salad catcher: per-doc average
-    * Σ c·ln(λ₃·P₃ + λ₂·P₂ + λ₁·P₁) / Σ c over the doc's adjacent
-    * token triples (u,v,w), with P₃ = c₃(u,v,w)/c₁₂(u,v),
+    * Σ ln(λ₃·P₃ + λ₂·P₂ + λ₁·P₁) / n over the doc's n adjacent token
+    * triples (u,v,w), with P₃ = c₃(u,v,w)/c₁₂(u,v),
     * P₂ = c₂₃(v,w)/c₂(v), P₁ = c(w)/T — every count a marginal of the
     * ONE corpus trigram table, so the model is self-consistent and
     * any SQL engine can replicate it exactly. Interpolation means a
@@ -197,18 +151,15 @@ object Vocab {
     * instead of −∞, which is what separates fluent-but-novel text
     * from actual word salad.
     *
-    * Scale shape: triples are built SCAN-SIDE (three aligned slices
-    * of the token array zipped into structs — no posexplode + window);
-    * occurrences partial-agg into one (id,u,v,w,c) row per distinct
-    * per-doc triple, and the corpus trigram table plus every marginal
-    * and T are aggregates of THAT table — the probe and model subtrees
-    * share one exchange via AQE reuse, so the corpus is scanned and
-    * tokenized ONCE per query (the flat-occurrence form paid a second
-    * full text pass for the model branch). T is a 1-row IN-PLAN
-    * aggregate broadcast-cross-joined onto the model side (the
-    * q_value_props idiom) — no eager driver scalar. Docs with < 3
-    * tokens have no transitions and drop out; a zero-trigram corpus
-    * yields an empty result rather than an error. */
+    * Shape: the [[lmScore]] flat occurrence form. The triple stream
+    * ([[trigrams]]) joins the distinct-trigram table ONCE on (u,v,w)
+    * and partial-aggregates per doc; the four marginal joins
+    * ([[trigramMarginals]]) move model-sized tables only, and T rides
+    * the model side as a 1-row IN-PLAN aggregate broadcast-cross-
+    * joined on (the q_value_props idiom) — no eager driver scalar.
+    * Docs with < 3 tokens have no transitions and drop out; a
+    * zero-trigram corpus yields an empty result rather than an
+    * error. */
   def lmScoreTrigram(
       docs: DataFrame,
       idCol: String,
@@ -216,68 +167,56 @@ object Vocab {
       l3: Double = 0.6,
       l2: Double = 0.3,
       l1: Double = 0.1): DataFrame = {
+    requireWeights(l3, l2, l1)
+    val tg = trigrams(docs, idCol, textCol)
+      // no-op filter kept: without it the sf0.1 final plan goes from 2 scans/5 reuses to 7/0
+      .filter(col("u").isNotNull && col("v").isNotNull && col("w").isNotNull)
+    val c3 = tg.groupBy(col("u"), col("v"), col("w")).agg(count(lit(1)).as("c3"))
+    val totalT = c3.agg(sum(col("c3")).cast("double").as("__T"))
+    val (c12, c23, c2m, cw) = trigramMarginals(c3)
+    val model = c3.join(c12, Seq("u", "v")).join(c23, Seq("v", "w"))
+      .join(c2m, Seq("v")).join(cw, Seq("w"))
+    // the λ-mix AST is parenthesized exactly like the DuckDB oracle so
+    // the doubles agree bit-for-bit before the 4dp round
+    val p = lit(l3) * (col("c3").cast("double") / col("c12")) +
+      lit(l2) * (col("c23").cast("double") / col("c2m")) +
+      lit(l1) * (col("cw").cast("double") / col("__T"))
+    tg.join(model.crossJoin(broadcast(totalT)), Seq("u", "v", "w"))
+      .groupBy(col("id"))
+      .agg(
+        (round(sum(log(p)) / count(lit(1)), 4) + lit(0.0)).as("lm3_score"),
+        count(lit(1)).as("n_transitions"))
+  }
+
+  private def requireWeights(l3: Double, l2: Double, l1: Double): Unit =
     require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9 && l3 >= 0 && l2 >= 0 && l1 >= 0,
       s"interpolation weights ($l3, $l2, $l1) must be non-negative and sum to 1")
+
+  /** The flat trigram occurrence stream (id, u, v, w): one row per
+    * adjacent token triple of each doc, built SCAN-SIDE from three
+    * aligned slices of the token array zipped into structs (no
+    * posexplode + window). Docs with < 3 tokens yield no rows. */
+  private def trigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = TF.tokens(col(textCol))
     val m = greatest(size(toks) - 2, lit(0))
     val uv = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
       (a, b) => struct(a.as("u"), b.as("v")))
     val triples = zip_with(uv, slice(toks, lit(3), m),
       (p, w) => struct(p.getField("u").as("u"), p.getField("v").as("v"), w.as("w")))
-    // explicit not-nulls (semantic no-op) are load-bearing: the five
-    // marginal/total branches otherwise inherit DIFFERENT inferred
-    // join-key not-null filters (isnotnull(u,v) vs (v,w) vs (v) vs
-    // (w)), the exchange children stop canonicalizing equal, and AQE
-    // rebuilds the corpus-triple aggregation once per branch — with
-    // the uniform filter they all reuse ONE triple stage (plan-pinned)
-    val tg = docs.select(col(idCol).as("id"), explode(triples).as("z"))
+    docs.select(col(idCol).as("id"), explode(triples).as("z"))
       .select(col("id"), col("z.u").as("u"), col("z.v").as("v"), col("z.w").as("w"))
-      .filter(col("u").isNotNull && col("v").isNotNull && col("w").isNotNull)
-    // per-doc distinct triple counts — the ONE corpus pass: c3 (and
-    // therefore every marginal and T) is a marginal of this table, so
-    // the model subtree reuses the probe's (id,u,v,w) exchange via AQE
-    // instead of re-scanning and re-tokenizing the corpus for the
-    // trigram aggregation (the flat form paid two full text passes).
-    // Σ c·ln(p) over per-doc distinct triples == Σ ln(p) over
-    // occurrences; the ulp-order wiggle is absorbed by the same 4dp
-    // round that already reconciles engine summation orders. Marginals
-    // still attach to the DISTINCT-trigram table first, so the per-doc
-    // stream pays ONE (u,v,w) join — the four marginal joins move
-    // model-sized tables only, and T rides the model side as a
-    // broadcast 1-row cross join
-    val dtg = tg.groupBy(col("id"), col("u"), col("v"), col("w"))
-      .agg(count(lit(1)).as("c"))
-    val c3 = dtg.groupBy(col("u"), col("v"), col("w")).agg(sum(col("c")).as("c3"))
-    val totalT = c3.agg(sum(col("c3")).cast("double").as("__T"))
-    dtg.join(enrichTrigrams(c3).crossJoin(broadcast(totalT)), Seq("u", "v", "w"))
-      .groupBy(col("id"))
-      .agg(
-        (round(sum(col("c") * log(interpP(l3, l2, l1, col("__T")))) / sum(col("c")), 4)
-          + lit(0.0)).as("lm3_score"),
-        sum(col("c")).as("n_transitions"))
   }
 
-  /** (u,v,w,c3) → the same rows with every lower-order marginal the
-    * interpolated score needs attached: c12(u,v), c23(v,w), c2m(v),
-    * c(w). All four aggregations and joins stay on the distinct-
-    * trigram table — per-doc tables never enter them. */
-  private def enrichTrigrams(c3: DataFrame): DataFrame = {
+  /** The lower-order marginals of a (u, v, w, c3) trigram table that
+    * the interpolated score needs: c12(u,v), c23(v,w), c2m(v) and
+    * cw(w). All four are aggregations of the model-sized table. */
+  private def trigramMarginals(c3: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val c12 = c3.groupBy(col("u"), col("v")).agg(sum(col("c3")).as("c12"))
     val c23 = c3.groupBy(col("v"), col("w")).agg(sum(col("c3")).as("c23"))
     val c2m = c23.groupBy(col("v")).agg(sum(col("c23")).as("c2m"))
     val cw = c23.groupBy(col("w")).agg(sum(col("c23")).as("cw"))
-    c3.join(c12, Seq("u", "v")).join(c23, Seq("v", "w"))
-      .join(c2m, Seq("v")).join(cw, Seq("w"))
+    (c12, c23, c2m, cw)
   }
-
-  // the λ-mix AST is parenthesized exactly like the DuckDB oracle so
-  // the doubles agree bit-for-bit before the 4dp round; `total` is the
-  // broadcast 1-row __T column (sum(c3) cast to double — exact below
-  // 2^53, so identical to the old driver-side literal)
-  private def interpP(l3: Double, l2: Double, l1: Double, total: org.apache.spark.sql.Column) =
-    lit(l3) * (col("c3").cast("double") / col("c12")) +
-      lit(l2) * (col("c23").cast("double") / col("c2m")) +
-      lit(l1) * (col("cw").cast("double") / total)
 
   /** The persistable state of [[lmScoreTrigramWith]]: the corpus
     * trigram table (u, v, w, c3). Every lower-order count the
@@ -285,17 +224,9 @@ object Vocab {
     * parquet write freezes the whole model — train on a reference
     * corpus once (Wikipedia, a held-out clean slice), score every
     * ingest batch against it without rescanning the reference. */
-  def trigramModel(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 2, lit(0))
-    val uv = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("u"), b.as("v")))
-    val triples = zip_with(uv, slice(toks, lit(3), m),
-      (p, w) => struct(p.getField("u").as("u"), p.getField("v").as("v"), w.as("w")))
-    docs.select(explode(triples).as("z"))
-      .select(col("z.u").as("u"), col("z.v").as("v"), col("z.w").as("w"))
+  def trigramModel(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    trigrams(docs, idCol, textCol)
       .groupBy(col("u"), col("v"), col("w")).agg(count(lit(1)).as("c3"))
-  }
 
   /** Score docs against a FROZEN trigram model ([[trigramModel]],
     * typically read back from parquet) — the incremental twin of
@@ -317,29 +248,15 @@ object Vocab {
       l3: Double = 0.6,
       l2: Double = 0.3,
       l1: Double = 0.1): DataFrame = {
-    require(math.abs(l3 + l2 + l1 - 1.0) < 1e-9 && l3 >= 0 && l2 >= 0 && l1 >= 0,
-      s"interpolation weights ($l3, $l2, $l1) must be non-negative and sum to 1")
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 2, lit(0))
-    val uv = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("u"), b.as("v")))
-    val triples = zip_with(uv, slice(toks, lit(3), m),
-      (p, w) => struct(p.getField("u").as("u"), p.getField("v").as("v"), w.as("w")))
-    val tg = docs.select(col(idCol).as("id"), explode(triples).as("z"))
-      .select(col("id"), col("z.u").as("u"), col("z.v").as("v"), col("z.w").as("w"))
+    requireWeights(l3, l2, l1)
     // duplicate trigram rows in a supplied model (e.g. a union of
     // shard models) merge by summing counts — otherwise the doc-sized
-    // join below would fan occurrences out and inflate every average.
-    // The explicit not-nulls keep the four marginal branches'
-    // inferred join filters identical so AQE reuses one model stage
-    // (the lmScoreTrigram pattern)
+    // join below would fan occurrences out and inflate every average
     val c3 = model.select(col("u"), col("v"), col("w"), col("c3"))
+      // not-null filter kept: without it an sf0.1 model-scoring plan goes from 2 scans/5 reuses to 7/0
       .filter(col("u").isNotNull && col("v").isNotNull && col("w").isNotNull)
       .groupBy(col("u"), col("v"), col("w")).agg(sum(col("c3")).as("c3"))
-    val c12 = c3.groupBy(col("u"), col("v")).agg(sum(col("c3")).as("c12"))
-    val c23 = c3.groupBy(col("v"), col("w")).agg(sum(col("c3")).as("c23"))
-    val c2m = c23.groupBy(col("v")).agg(sum(col("c23")).as("c2m"))
-    val cw = c23.groupBy(col("w")).agg(sum(col("c23")).as("cw"))
+    val (c12, c23, c2m, cw) = trigramMarginals(c3)
     // model total rides IN-PLAN as a broadcast 1-row aggregate (the
     // lmScoreTrigram idiom) — no eager job, so the frozen-model scorer
     // composes into one fully lazy plan. It attaches to the model-sized
@@ -357,7 +274,7 @@ object Vocab {
     // numerators: c12 only matters when the trigram exists, c2m only
     // when the bigram does, so both attach model-side, never in a
     // doc-sized join
-    tg
+    trigrams(docs, idCol, textCol)
       .join(c3.join(c12, Seq("u", "v")), Seq("u", "v", "w"), "left")
       .join(c23.join(c2m, Seq("v")), Seq("v", "w"), "left")
       .join(cw.crossJoin(broadcast(totalT)), Seq("w"), "left")
@@ -375,26 +292,19 @@ object Vocab {
     * table. Low novelty against a training-corpus model flags likely
     * memorization/duplication of training text; high novelty against
     * a clean reference flags out-of-distribution or garbled text.
-    * One LEFT join of the per-doc trigram table against the model on
-    * (u,v,w) — the [[lmScoreTrigramWith]] cost shape minus the
+    * One LEFT join of the trigram occurrence stream against the model
+    * on (u,v,w) — the [[lmScoreTrigramWith]] cost shape minus the
     * backoff levels. Docs with < 3 tokens drop out. */
   def noveltyRate(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       model: DataFrame): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 2, lit(0))
-    val uv = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("u"), b.as("v")))
-    val triples = zip_with(uv, slice(toks, lit(3), m),
-      (p, w) => struct(p.getField("u").as("u"), p.getField("v").as("v"), w.as("w")))
-    val tg = docs.select(col(idCol).as("id"), explode(triples).as("z"))
-      .select(col("id"), col("z.u").as("u"), col("z.v").as("v"), col("z.w").as("w"))
     val novel = sum(when(col("c3").isNull, lit(1L)).otherwise(lit(0L)))
     // membership probe only — dedup the model keys so duplicate rows
     // in a supplied table can't fan the occurrence stream out
-    tg.join(model.select(col("u"), col("v"), col("w"), col("c3"))
+    trigrams(docs, idCol, textCol)
+      .join(model.select(col("u"), col("v"), col("w"), col("c3"))
           .dropDuplicates("u", "v", "w"),
         Seq("u", "v", "w"), "left")
       .groupBy(col("id"))
@@ -412,8 +322,8 @@ object Vocab {
     * this answers: how much of each document would a tokenizer
     * shatter into unknowns/bytes — a high OOV rate flags encoding
     * damage, the wrong language, or a vocab trained on the wrong
-    * distribution. Same two-level (id, token) partial-agg shape as
-    * [[lmScore]]; the vocab side is one TakeOrdered (never a global
+    * distribution. Same flat occurrence shape as [[lmScore]]; the
+    * vocab side is one TakeOrdered (never a global
     * sort) and joins by token equality. */
   def oovRate(
       docs: DataFrame,

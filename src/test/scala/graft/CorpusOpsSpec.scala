@@ -162,6 +162,24 @@ class CorpusOpsSpec extends SparkSpec {
     assert(!out.contains(13L), "no transitions, nothing to measure")
   }
 
+  test("lm scores and novelty do not depend on the shuffle partition count") {
+    // the per-doc averages sum doubles in shuffle order; the 4dp round
+    // must absorb that, so 1 and 7 partitions give the same rows
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def rows(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      Seq("q_lm_score", "q_lm_bigram", "q_lm_trigram", "q_novelty").map(q =>
+        q -> SparkEntry.queries(q)(spark, Sf).collect().map(_.toSeq).toSet).toMap
+    }
+    val (one, seven) = try (rows(1), rows(7)) finally spark.conf.set(key, prev)
+    for ((q, r) <- one) {
+      assert(r.nonEmpty, s"$q returned no rows")
+      assert(r == seven(q), s"$q differs across partition counts: " +
+        s"${(r diff seven(q)).take(3)} vs ${(seven(q) diff r).take(3)}")
+    }
+  }
+
   test("oovRate: fractions are hand-exact against an explicit vocab") {
     import spark.implicits._
     val docs = Seq((1L, "a a b z"), (2L, "z q"), (3L, "a b")).toDF("doc_id", "text")

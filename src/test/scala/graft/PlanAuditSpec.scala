@@ -156,9 +156,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_lm_score shuffles keyed rows, never raw text or occurrences") {
-    // two-level (id, token) aggregation + token-key vocab join: every
-    // pre-shuffle aggregate must be partial (map-side combine), and the
-    // scanned text column must not survive into any exchange
+    // flat occurrence stream + token-key vocab join: every pre-shuffle
+    // aggregate must be partial (map-side combine), and the scanned
+    // text column must not survive into any exchange
     for (q <- Seq("q_lm_score", "q_lm_bigram")) {
       val p = planOf(q)
       assert(p.contains("HashAggregate"), s"$q expected hash aggregation:\n$p")
@@ -497,21 +497,33 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_lm_trigram: occurrences shuffle at most twice, text never does") {
-    // shared-scan contract: the doc-sized stream pays one (id,u,v,w)
-    // partial-agg exchange (whose subtree every model branch REUSES at
-    // runtime — pinned by the finalPlan test below) and one per-doc
-    // average exchange. The static plan inlines the shared subtree
-    // into each marginal branch, so count distinct doc-sized exchange
-    // SHAPES (keys with expr-ids stripped), not lineage copies.
+    // flat-form contract: the doc-sized trigram stream pays one
+    // exchange into the (u,v,w) join and one partial-agg'd exchange
+    // into the per-doc average; marginal joins move model-sized tables
     val p = planNoAutoBroadcast("q_lm_trigram")
     val exLines = p.linesIterator.filter(_.contains("hashpartitioning")).toList
     assert(!exLines.exists(_.contains("text#")),
       s"q_lm_trigram shuffles raw document text: $exLines")
     // doc-sized exchanges are exactly those carrying the doc id
-    val docSized = exLines.filter(_.contains("id#"))
-      .map(_.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "")).distinct
-    assert(docSized.size <= 2,
-      s"per-doc trigram stream pays ${docSized.size} exchange shapes: $docSized")
+    val docSized = exLines.count(_.contains("id#"))
+    assert(docSized <= 2, s"per-doc trigram stream pays $docSized exchanges: $exLines")
+  }
+
+  test("lm scorers never pre-aggregate per (doc, n-gram)") {
+    // each scorer joins the raw n-gram occurrences to the corpus counts
+    // and averages per doc. An exchange keyed on the doc id AND an
+    // n-gram column is the per-doc pre-aggregate: it saves one corpus
+    // scan but measured slower end to end (q_lm_trigram at sf0.1 on a
+    // 4-core box: 4.6 s with it, 3.2 s without, 11x the shuffled rows)
+    val ngramCols = Seq("token#", "p#", "w#", "u#", "v#")
+    for (q <- Seq("q_lm_score", "q_lm_bigram", "q_lm_trigram")) {
+      val keyed = "hashpartitioning\\(([^()]*)\\)".r
+        .findAllMatchIn(planNoAutoBroadcast(q)).map(_.group(1).split(", ").toSeq)
+        .filter(ks => ks.exists(_.startsWith("id#")) &&
+          ks.exists(k => ngramCols.exists(k.startsWith)))
+        .toList
+      assert(keyed.isEmpty, s"$q shuffles per (doc, n-gram): $keyed")
+    }
   }
 
   test("q_corr_matrix reads the input exactly once for all pairs") {
@@ -609,15 +621,17 @@ class PlanAuditSpec extends SparkSpec {
     val fin = finalPlanOf(SparkEntry.queries("q_lm_trigram")(spark, Sf))
     val scans = fin.linesIterator.count(_.contains("FileScan"))
     val reused = fin.linesIterator.count(_.contains("ReusedExchange"))
-    assert(scans <= 1, s"q_lm_trigram scans the corpus $scans times:\n$fin")
+    assert(scans <= 2, s"q_lm_trigram scans the corpus $scans times:\n$fin")
     assert(reused >= 5, s"marginals/total rebuilt instead of reused ($reused):\n$fin")
   }
 
   test("q_lm_score / q_lm_bigram: model side reuses the probe's n-gram exchange") {
+    // two scans (n-gram counts + per-doc probe); the counts exchange is
+    // built once and reused by the other model branch (T, or c1)
     for (q <- Seq("q_lm_score", "q_lm_bigram")) {
       val fin = finalPlanOf(SparkEntry.queries(q)(spark, Sf))
       val scans = fin.linesIterator.count(_.contains("FileScan"))
-      assert(scans <= 1, s"$q scans the corpus $scans times:\n$fin")
+      assert(scans <= 2, s"$q scans the corpus $scans times:\n$fin")
       assert(fin.contains("ReusedExchange"),
         s"$q model branch rebuilt instead of reused:\n$fin")
     }
