@@ -307,8 +307,14 @@ object Bench {
     // whether warmup completed, and how many rechecks were shed —
     // a degraded record must say so itself
     val gov = f""","passes":$passes,"warmup":"$warmup","rechecks_skipped":$rechecksSkipped,"box_delta":$boxDelta%.3f,"budget_sec":${budget.round},"elapsed_sec":${elapsed.round}"""
+    // the box the record was taken on: cores the JVM sees, the cores
+    // the session ran on (SPARK_GRAFT_CPUS) and the JVM, so records from
+    // different machines are not compared as if they were one
+    val box = s""","box":{"nproc":${Runtime.getRuntime.availableProcessors},""" +
+      s""""cpus":${cpus.toIntOption.fold(jq(cpus))(_.toString)},""" +
+      s""""jvm":${jq(sys.props("java.vm.name") + " " + sys.props("java.vm.version"))}}"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"rechecked":$recheckJson$gov$note,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"rechecked":$recheckJson$gov$box$note,"sf":"$sfDir"}"""
     println(line)
     // durable copy: the driver's artifact keeps only a stdout tail, so
     // the written file is the complete per-query record of the run

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DateType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loader for the driver-generated TPC-H-ish testdata.
   *
@@ -19,8 +23,41 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampNTZType, Timesta
   * to DateType once at scan — otherwise every dt-family consumer pays
   * a per-row timestamp→date conversion (the r7 bench showed 4–8×
   * regressions on q_dt_offset/q_dt_arith from exactly this).
+  *
+  * Schema cache: `spark.read.parquet` launches a Spark job just to read
+  * a footer and infer the schema, so each table file's schema is
+  * inferred once per session and every later read passes it back with
+  * `read.schema`. Only the inferred `StructType` is cached — never
+  * data, a DataFrame, a plan or a result. The cache is per session,
+  * held weakly so it never keeps a stopped session alive. An entry is
+  * keyed on the file's resolved path, length and modification time
+  * (Hadoop `getFileStatus`), so a rewritten file is inferred again, and
+  * on the session confs that change parquet inference
+  * (`InferenceConfs`), so flipping one of them re-infers too.
   */
 object Tables {
+  /** Session confs that change the schema parquet inference returns. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private val schemas = Collections.synchronizedMap(
+    new WeakHashMap[SparkSession, ConcurrentHashMap[Seq[Any], StructType]]())
+
+  /** The schema `s.read.parquet(path)` would infer, from the session's
+    * cache when this file version was already inferred under the same
+    * inference confs (see the object doc). */
+  private[graft] def parquetSchema(s: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val key = Seq(st.getPath.toString, st.getLen, st.getModificationTime) ++
+      InferenceConfs.map(s.conf.getOption)
+    schemas.computeIfAbsent(s, _ => new ConcurrentHashMap())
+      .computeIfAbsent(key, _ => s.read.parquet(path).schema)
+  }
+
   /** Instant (LTZ) → UTC wall-clock NTZ, independent of the session
     * time zone: the LTZ→NTZ cast renders in the session tz, so convert
     * that wall clock back from the session tz to UTC. A bare NTZ cast
@@ -43,9 +80,14 @@ object Tables {
     }
 
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"$dir/$name.parquet"
+    normalize(name, s.read.schema(parquetSchema(s, path)).parquet(path))
+  }
+
+  /** The per-table normalization [[t]] applies to the raw parquet read. */
+  private[graft] def normalize(name: String, raw: DataFrame): DataFrame = name match {
+    case "events" =>
       raw.schema("ts").dataType match {
         case LongType => // TIMESTAMP(NANOS) read as ns-since-epoch long
           raw.withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
@@ -55,13 +97,8 @@ object Tables {
         case other =>
           throw new IllegalStateException(s"unexpected events.ts type: $other")
       }
-    } else {
-      val raw = s.read.parquet(s"$dir/$name.parquet")
-      name match {
-        case "orders"   => normDate(raw, "o_orderdate")
-        case "lineitem" => normDate(raw, "l_shipdate")
-        case _          => raw
-      }
-    }
+    case "orders"   => normDate(raw, "o_orderdate")
+    case "lineitem" => normDate(raw, "l_shipdate")
+    case _          => raw
   }
 }

@@ -22,12 +22,13 @@ object EventStreams {
     StructField("value", DoubleType),
     StructField("props", StringType))
 
-  /** Streams need an explicit schema; probe the batch footer once for
-    * ts's physical layout — TIMESTAMP(NANOS) arrives only as a raw
-    * nanos long (legacy nanosAsLong, same workaround as graft.Tables),
+  /** Streams need an explicit schema; take ts's physical layout from
+    * the batch footer (inferred once per session and file version by
+    * graft.Tables) — TIMESTAMP(NANOS) arrives only as a raw nanos long
+    * (legacy nanosAsLong, same workaround as graft.Tables),
     * TIMESTAMP(MICROS) reads natively. */
   private def rawEventsSchema(spark: SparkSession, dir: String): StructType = {
-    val batchTs = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val batchTs = graft.Tables.parquetSchema(spark, s"$dir/events.parquet")("ts").dataType
     val tsType = batchTs match {
       case LongType => LongType
       case _ => TimestampNTZType
