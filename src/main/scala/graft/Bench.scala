@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Verify.jsonString
 
 /** Per-query wall-time benchmark over SPARK_GRAFT_SF_DIR (driver
   * contract: one JSON line on stdout). Queries run in sorted-name order
@@ -86,23 +86,7 @@ object Bench {
     val budget = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .flatMap(_.toDoubleOption).getOrElse(1500.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // static conf, must be set before the session exists: the default
-      // 100-entry codegen class cache holds ~30 queries' generated
-      // stages, so ROUND-ROBIN passes (see below) would recompile every
-      // stage every pass and bench compile time, not execution time
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // silence the bounded-global-window warning flood (see Verify.main:
-    // PlanAuditSpec's empty-partition-window audit is the real guard)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    val spark = Session.local(Session.cpus)
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run for local
     // iteration (the driver never sets it — round records are full)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -284,25 +268,19 @@ object Bench {
       s"[bench] governor: skipped $rechecksSkipped rechecks " +
         s"(elapsed ${elapsed.round}s of ${budget.round}s budget)")
     val results = names.flatMap(n => samples.get(n).flatMap(_.minOption).map(n -> _))
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => jq(k) + ":" + v }
+    val qs = results.map { case (k, v) => jsonString(k) + ":" + v }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => jq(k) + ":" + jq(v.take(300)) }
+    val errJson = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v.take(300)) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val recheckJson = rechecked.map { case (k, v) => jq(k) + ":" + v }
+    val recheckJson = rechecked.map { case (k, v) => jsonString(k) + ":" + v }
       .mkString("{", ",", "}")
     // environment note for the committed record (SPARK_GRAFT_BENCH_NOTE):
     // the workflow stamps two-run minima / box-drift context here so a
     // future reader can tell machine drift from regression without
     // re-deriving it
     val note = sys.env.get("SPARK_GRAFT_BENCH_NOTE")
-      .map(n => s""","note":${jq(n)}""").getOrElse("")
+      .map(n => s""","note":${jsonString(n)}""").getOrElse("")
     // governor provenance: how many timed passes this record carries,
     // whether warmup completed, and how many rechecks were shed —
     // a degraded record must say so itself
@@ -311,8 +289,8 @@ object Bench {
     // the session ran on (SPARK_GRAFT_CPUS) and the JVM, so records from
     // different machines are not compared as if they were one
     val box = s""","box":{"nproc":${Runtime.getRuntime.availableProcessors},""" +
-      s""""cpus":${cpus.toIntOption.fold(jq(cpus))(_.toString)},""" +
-      s""""jvm":${jq(sys.props("java.vm.name") + " " + sys.props("java.vm.version"))}}"""
+      s""""cpus":${Session.cpus},""" +
+      s""""jvm":${jsonString(sys.props("java.vm.name") + " " + sys.props("java.vm.version"))}}"""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"rechecked":$recheckJson$gov$box$note,"sf":"$sfDir"}"""
     println(line)

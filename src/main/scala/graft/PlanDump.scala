@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -8,10 +7,8 @@ import java.nio.file.{Files, Paths}
   * plan-shape claims in OPTIMIZATION_r*.md are checkable without running
   * Spark. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [q_name ...]
-  * With no names, dumps every declared query. Cores and shuffle
-  * partitions default to 4 (`SPARK_GRAFT_CPUS`), as in Bench and
-  * Verify; unlike Bench it keeps the default codegen cache, which
-  * changes compile time, not plans.
+  * With no names, dumps every declared query. The session is
+  * `Session.local(Session.cpus)`, the one Bench and Verify run on.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,14 +16,7 @@ object PlanDump {
     val tag = args(1)
     val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))

@@ -1,16 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftShim, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftShim, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
 /** SQL surface for the native kernels: registers `graft_*` functions so
   * `spark.sql("SELECT graft_simhash(text) ...")` reaches the same
-  * Catalyst expressions as the Column API. Two entry points:
-  *
-  *  - `spark.sql.extensions=graft.plans.GraftExtensions` at session
-  *    build (the standard SparkSessionExtensions path), or
-  *  - `GraftFunctions.register(spark)` on a live session.
+  * Catalyst expressions as the Column API. One entry point:
+  * `spark.sql.extensions=graft.plans.GraftExtensions` at session build
+  * (the standard SparkSessionExtensions path), which `graft.Session`
+  * sets for every session graft builds.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -174,12 +173,4 @@ object GraftFunctions {
       (args: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions.aggregate.Product(
           arity("graft_product", 1)(args).head)))
-
-  /** Register on an already-built session (tests, notebooks). */
-  def register(spark: SparkSession): Unit = {
-    val registry = GraftShim.functionRegistry(spark)
-    all.foreach { case (name, info, builder) =>
-      registry.registerFunction(FunctionIdentifier(name), info, builder)
-    }
-  }
 }

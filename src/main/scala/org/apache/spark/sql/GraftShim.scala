@@ -17,11 +17,6 @@ object GraftShim {
   def resolvedExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
-  /** private[sql] session internals needed to register native functions
-    * on a live session (the extensions path covers session build). */
-  def functionRegistry(spark: SparkSession): catalyst.analysis.FunctionRegistry =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-
   /** Drain the (private[spark]) listener bus — lets tests that count
     * jobs via a SparkListener observe a deterministic event count. */
   def drainListenerBus(spark: SparkSession): Unit =

@@ -2,17 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
-import graft.plans.GraftFunctions
 
 /** The graft_* SQL functions must reach the same native expressions as
-  * the Column API (GraftExtensions wires the same builders into
-  * spark.sql.extensions at session build). */
+  * the Column API. The shared session loads them the way every main
+  * does: `graft.Session` sets spark.sql.extensions=GraftExtensions. */
 class SqlFunctionsSpec extends SparkSpec {
 
-  private lazy val registered: Unit = GraftFunctions.register(spark)
-
   test("graft_simhash via SQL equals the Column API and the HOF form") {
-    registered
     Tables.t(spark, Sf, "documents").limit(50).createOrReplaceTempView("docs_sql")
     val viaSql = spark.sql("SELECT doc_id, graft_simhash(text) AS s FROM docs_sql")
     val viaCol = Tables.t(spark, Sf, "documents").limit(50)
@@ -21,7 +17,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("graft_simhash_md5 / graft_minhash_md5_key / graft_lexical_stats equal the Column API") {
-    registered
     Tables.t(spark, Sf, "documents").limit(30).createOrReplaceTempView("docs_sqlk")
     val viaSql = spark.sql(
       """SELECT doc_id, graft_simhash_md5(text) AS sm,
@@ -37,7 +32,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("graft_minhash and graft_shingle_hashes have the declared shapes") {
-    registered
     Tables.t(spark, Sf, "documents").limit(10).createOrReplaceTempView("docs_sql2")
     val r = spark.sql(
       """SELECT size(graft_minhash(text, 3, 64)) AS nsig,
@@ -48,7 +42,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("graft_cosine of a vector with itself is 1") {
-    registered
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0D, 2.0D, 3.0D), array(1.0D, 2.0D, 3.0D)) AS c")
       .head().getDouble(0)
@@ -56,7 +49,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("composed Column kernels resolve through SQL like the Column API") {
-    registered
     val reason = spark.sql("SELECT graft_quality_reason('hi there') AS r")
       .head().getString(0)
     assert(reason == "too_short")
@@ -90,7 +82,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("graft_compress_ratio via SQL equals the Column API") {
-    registered
     val loop = "'" + ("repeat me " * 40).trim + "'"
     val viaSql = spark.sql(s"SELECT graft_compress_ratio($loop, 6)").head().getDouble(0)
     import spark.implicits._
@@ -101,7 +92,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("graft_product: SQL and Column API agree; nulls skipped; all-null group is null") {
-    registered
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val df = Seq[(String, Option[Double])](
@@ -125,7 +115,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("unicode normalization functions resolve through SQL") {
-    registered
     val r = spark.sql(
       "SELECT graft_nfc('Cafe\u0301') AS nfc, " +
         "graft_nfkc('\uFF23afe\u0301 \uFB01n') AS nfkc, " +
@@ -137,7 +126,6 @@ class SqlFunctionsSpec extends SparkSpec {
   }
 
   test("wrong argument counts fail analysis instead of being ignored") {
-    registered
     for (bad <- Seq(
         "SELECT graft_quality_reason('a', 'b')",
         "SELECT graft_simhash()",

@@ -365,7 +365,6 @@ class TextDedupSpec extends SparkSpec {
     assert(out(5L) == "Ƃ odd but real char")
     assert(out(6L) == null)
     // SQL face reaches the same kernel
-    graft.plans.GraftFunctions.register(spark)
     df.createOrReplaceTempView("moji_docs")
     val viaSql = spark.sql(
       "SELECT graft_fix_mojibake(t) FROM moji_docs WHERE id = 1").head().getString(0)
