@@ -1,11 +1,13 @@
 package graft.functions
 
-/** Driver-side spherical k-means for IVF coarse quantization
-  * (SURVEY.md §2.3 similarity search). Training runs on a bounded
-  * sample collected to the driver — the standard IVF recipe: the
-  * quantizer sees thousands of vectors, the index assignment (the
-  * 100 TB part) stays a distributed column expression over broadcast
-  * centroids ([[graft.operators.Similarity.ivfTopK]]).
+/** Driver-side k-means for the ANN family (SURVEY.md §2.3), trained
+  * on its one bounded sample (`Similarity.trainingSample`): the
+  * quantizer sees thousands of vectors, the assignment (the 100 TB
+  * part) stays a column expression over broadcast centroids
+  * ([[graft.operators.Similarity.ivfAssign]]). [[spherical]] is the IVF
+  * quantizer of `ivfTopK`, `Pq.ivfPqTopK`, `Dedup.semanticPairs` and
+  * `Sampling.clusterBalancedSample`; [[euclidean]] trains the PQ
+  * sub-codebooks, on the same sample in `Pq.ivfPqTopK`.
   */
 object KMeans {
 

@@ -989,11 +989,10 @@ object Dedup {
     scoreCosine(attachPerSide(candidates, vecs, "v"), threshold)
   }
 
-  /** SemDeDup-style semantic dedup candidates: spherical k-means
-    * cluster assignment (the Similarity.ivfTopK coarse quantizer —
-    * centroids trained on a bounded hash-ordered sample, broadcast as a
-    * literal, assignment a per-row scan expression) partitions the
-    * corpus into cells; near-dup pairs are scored WITHIN cells only via
+  /** SemDeDup-style semantic dedup candidates: the IVF quantizer
+    * (KMeans.spherical on the non-null rows' Similarity.trainingSample,
+    * assigned by Similarity.ivfAssign's argmax-cell scan expression)
+    * partitions the corpus into cells; near-dup pairs are scored WITHIN cells only via
     * the same ids-only bucket machinery as [[cosinePairs]]. The
     * standard embedding-level dedup for training data: linear in n
     * (cell population ~ n/k), recall spec-tested against the exact
@@ -1009,24 +1008,13 @@ object Dedup {
       trainSample: Int = 2048,
       iters: Int = 10,
       maxBucketSize: Int = 100000): DataFrame = {
-    import graft.functions.KMeans
-    val sample = emb
-      .filter(col(vecCol).isNotNull)
-      .orderBy(xxhash64(col(idCol)))
-      .limit(trainSample)
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
+    val sample = Similarity.trainingSample(
+      emb.filter(col(vecCol).isNotNull), idCol, vecCol, trainSample)
     require(sample.nonEmpty,
       s"semanticPairs: no non-null '$vecCol' vectors to train cells on")
-    val centArr = KMeans.spherical(sample, nClusters, iters)
-    val cents = typedlit(centArr.map(_.toList).toList)
-    val dots = transform(cents, c => graft.plans.VectorColumns.cosine(col(vecCol), c))
-    val assigned = emb
-      .withColumn("__ds", dots)
-      .withColumn("__cell", array_position(col("__ds"), array_max(col("__ds"))) - 1)
-      .drop("__ds")
-    cosinePairs(assigned, idCol, vecCol, threshold, bucketBy = "__cell", maxBucketSize)
+    val centArr = graft.functions.KMeans.spherical(sample, nClusters, iters)
+    cosinePairs(Similarity.ivfAssign(emb, idCol, vecCol, centArr), "cid", "cv", threshold,
+      bucketBy = "cell", maxBucketSize)
   }
 
   /** The prune step of SemDeDup: keep only rows with no lower-id near

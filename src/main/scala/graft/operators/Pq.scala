@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{KMeans, VectorFunctions => VF}
 
@@ -17,8 +16,8 @@ import graft.functions.{KMeans, VectorFunctions => VF}
   * 100 TB shape, same contract as the IVF index (Similarity.ivfBuild):
   *
   *  - '''training''' is a bounded deterministic driver-side k-means per
-  *    subspace over a hash-ordered TakeOrdered sample — never a corpus
-  *    scan per iteration;
+  *    subspace over the IVF index's hash-ordered TakeOrdered sample
+  *    (Similarity.trainingSample) — never a corpus scan per iteration;
   *  - '''encode''' is a per-partition kernel against the codebook as a
   *    BROADCAST VARIABLE (m·ksub·(d/m) doubles ≈ 100 KB): one tight
   *    argmin loop per subspace, the float vectors never shuffle, the
@@ -60,7 +59,8 @@ object Pq {
   }
 
   /** Train m sub-codebooks of `ksub` centroids each on a bounded,
-    * deterministic sample. Requires dim % m == 0 (loud). */
+    * deterministic sample (Similarity.trainingSample). Requires
+    * dim % m == 0 (loud). */
   def train(
       corpus: DataFrame,
       idCol: String,
@@ -68,22 +68,20 @@ object Pq {
       m: Int = 8,
       ksub: Int = 256,
       trainSample: Int = 2048,
-      iters: Int = 10): Array[Array[Array[Double]]] = {
+      iters: Int = 10): Array[Array[Array[Double]]] =
+    trainOn(Similarity.trainingSample(corpus, idCol, vecCol, trainSample), m, ksub, iters)
+
+  /** [[train]] over an already collected sample. */
+  private def trainOn(sample: Array[Array[Double]], m: Int, ksub: Int, iters: Int)
+      : Array[Array[Array[Double]]] = {
     require(m >= 1 && ksub >= 2, "need m >= 1 subspaces and ksub >= 2 codes")
-    // deterministic pseudo-random sample — TakeOrdered by id hash, not
-    // a global sort (the ivfBuild idiom)
-    val sample = corpus
-      .orderBy(xxhash64(col(idCol)))
-      .limit(trainSample)
-      .select(col(vecCol))
-      .collect()
-      .map(r => toUnitDouble(r.getSeq[Any](0)))
     require(sample.nonEmpty, "empty training sample")
-    val dim = sample.head.length
+    val unit = sample.map(v => toUnitDouble(v.toSeq))
+    val dim = unit.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
     Array.tabulate(m) { s =>
-      val sub = sample.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
+      val sub = unit.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
       KMeans.euclidean(sub, ksub, iters)
     }
   }
@@ -207,8 +205,8 @@ object Pq {
     * the per-query LUTs; the per-pair score is a zip of (code, LUT row)
     * lookups — m additions, no vector math. Set `rerank > 0` to
     * re-score that many ADC candidates per query with exact cosine
-    * against the float vectors (one extra id-equality join) — the
-    * standard recall-recovery stage. */
+    * against the float vectors of `corpus` (one extra id-equality
+    * join) — the standard recall-recovery stage. */
   def adcTopK(
       encoded: DataFrame,
       queries: DataFrame,
@@ -216,34 +214,28 @@ object Pq {
       vecCol: String,
       codebooks: Array[Array[Array[Double]]],
       k: Int,
-      rerank: Int = 0,
-      corpus: DataFrame = null): DataFrame = {
-    val q = lutDf(queries, idCol, vecCol, codebooks)
-    val scored = encoded
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
+      corpus: DataFrame,
+      rerank: Int = 0): DataFrame =
+    adcRanked(
+      encoded.join(broadcast(lutDf(queries, idCol, vecCol, codebooks)),
+        col("qid") =!= col("cid")),
+      corpus, queries, idCol, vecCol, k, rerank)
+
+  /** The ADC tail of [[adcTopK]] and [[ivfPqTopK]]: score (qid, cid,
+    * codes, lut) pair rows by m LUT lookups, keep the top k per query
+    * — or, with `rerank > 0`, the top max(rerank, k) re-scored with
+    * exact cosine against `corpus` (the candidate set scales with
+    * |queries| · rerank, so the big corpus joins it by id). */
+  private def adcRanked(pairs: DataFrame, corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, rerank: Int): DataFrame = {
+    val adc = Similarity.topKPerQuery(
+      pairs.select(col("qid"), col("cid"),
         round(aggregate(
           zip_with(col("codes"), col("lut"), (code, row) => element_at(row, code + 1)),
-          lit(0.0), (a, d) => a + d), 6).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    val adc = scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= (if (rerank > 0) math.max(rerank, k) else k))
-    if (rerank <= 0) adc.select(col("qid"), col("cid"), col("sim"), col("rank"))
-    else {
-      require(corpus != null, "rerank needs the float-vector corpus")
-      // exact cosine on the ADC candidates only: candidate set scales
-      // with |queries| · rerank, so the big corpus joins it by id
-      val exact = adc.select(col("qid"), col("cid"))
-        .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
-        .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))), Seq("qid"))
-        .select(col("qid"), col("cid"),
-          (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim"))
-      val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-      exact.withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("cid"), col("sim"), col("rank"))
-    }
+          lit(0.0), (a, d) => a + d), 6).as("sim")),
+      if (rerank > 0) math.max(rerank, k) else k)
+    if (rerank <= 0) adc
+    else Similarity.exactRerank(adc, corpus, queries, idCol, vecCol, k)
   }
 
   /** IVF-PQ: the composed 100 TB ANN shape — the IVF coarse quantizer
@@ -251,7 +243,8 @@ object Pq {
     * only the surviving codes. Both indexes persist (cell-assigned
     * table + centroid table + codebook table), so a standing corpus
     * pays assignment + encode ONCE and queries touch
-    * ~nProbe/nLists of the codes — never a float vector. With
+    * ~nProbe/nLists of the codes — never a float vector. The IVF cells
+    * and the PQ sub-codebooks train on ONE collected sample. With
     * `rerank > 0` the ADC survivors re-score exactly against the float
     * corpus by id-equality join (the candidate set scales with
     * |queries| · rerank, not the corpus).
@@ -269,54 +262,22 @@ object Pq {
       rerank: Int = 0,
       trainSample: Int = 2048,
       iters: Int = 10): DataFrame = {
-    val (assigned, centroids) = Similarity.ivfBuild(corpus, idCol, vecCol, nLists, trainSample, iters)
-    val cb = train(corpus, idCol, vecCol, m, ksub, trainSample, iters)
+    val sample = Similarity.trainingSample(corpus, idCol, vecCol, trainSample)
+    val (assigned, centroids) = Similarity.ivfIndex(corpus, idCol, vecCol, sample, nLists, iters)
+    val probes = Similarity.ivfProbes(queries, idCol, vecCol, centroids, nProbe)
+    val cb = trainOn(sample, m, ksub, iters)
     // codes keyed by IVF cell in ONE encode pass — the cell id rides
     // the kernel as a passthrough column, no join back to `assigned`
     val encoded = encode(assigned, "cid", "cv", cb, keep = Seq("cell"))
-
     // per-query probes (nProbe best cells) + the ADC lookup table,
     // both on the small query side
-    val centArr = centroids.orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    val cents = typedlit(centArr.map(_.toList).toList)
-    val wp = Window.partitionBy(col("qid")).orderBy(col("d").desc, col("cell"))
-    val probes = queries
-      .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        posexplode(transform(cents,
-          c => graft.plans.VectorColumns.cosine(col(vecCol), c))).as(Seq("cell", "d")))
-      .withColumn("pr", row_number().over(wp))
-      .filter(col("pr") <= math.min(nProbe, centArr.length))
-      .select(col("qid"), col("qv"), col("cell").cast("long").as("cell"))
-    val luts = lutDf(queries, idCol, vecCol, cb)
-    val probesWithLut = probes.join(luts, Seq("qid"))
+    val probesWithLut = probes.join(lutDf(queries, idCol, vecCol, cb), Seq("qid"))
       .select(col("qid"), col("cell"), col("lut"))
-
     // corpus codes stream through ONE broadcast join on the cell id;
     // the per-pair score is m LUT additions
-    val scored = encoded
-      .join(broadcast(probesWithLut), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        round(aggregate(
-          zip_with(col("codes"), col("lut"), (code, row) => element_at(row, code + 1)),
-          lit(0.0), (a, d) => a + d), 6).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    val adc = scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= (if (rerank > 0) math.max(rerank, k) else k))
-    if (rerank <= 0) adc.select(col("qid"), col("cid"), col("sim"), col("rank"))
-    else {
-      val exact = adc.select(col("qid"), col("cid"))
-        .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
-        .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))), Seq("qid"))
-        .select(col("qid"), col("cid"),
-          (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim"))
-      val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-      exact.withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select(col("qid"), col("cid"), col("sim"), col("rank"))
-    }
+    adcRanked(
+      encoded.join(broadcast(probesWithLut), Seq("cell")).filter(col("qid") =!= col("cid")),
+      corpus, queries, idCol, vecCol, k, rerank)
   }
 
   /** Index health metric: sampled-recall estimate of a STANDING PQ
@@ -349,8 +310,7 @@ object Pq {
       .orderBy(md5(col(idCol).cast("string").cast("binary")), col(idCol))
       .limit(nQueries)
     val exact = Similarity.bruteForceTopK(corpus, probes, idCol, vecCol, k)
-    val adc = adcTopK(encoded, probes, idCol, vecCol, codebooks, k,
-      rerank, if (rerank > 0) corpus else null)
+    val adc = adcTopK(encoded, probes, idCol, vecCol, codebooks, k, corpus, rerank)
     val hits = exact.select(col("qid"), col("cid"))
       .join(adc.select(col("qid"), col("cid")), Seq("qid", "cid"), "left_semi")
       .groupBy(col("qid")).agg(count(lit(1)).as("hits"))
@@ -376,7 +336,6 @@ object Pq {
       trainSample: Int = 2048,
       iters: Int = 10): DataFrame = {
     val cb = train(corpus, idCol, vecCol, m, ksub, trainSample, iters)
-    adcTopK(encode(corpus, idCol, vecCol, cb), queries, idCol, vecCol, cb, k,
-      rerank, corpus)
+    adcTopK(encode(corpus, idCol, vecCol, cb), queries, idCol, vecCol, cb, k, corpus, rerank)
   }
 }

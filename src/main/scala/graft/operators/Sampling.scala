@@ -457,9 +457,9 @@ object Sampling {
     * semantic cluster at `perCluster` rows, so the sample covers the
     * embedding space instead of mirroring the corpus's majority modes
     * (the diversity-sampling stage of a pretraining mixture). Clusters
-    * come from the SAME bounded k-means machinery as the IVF index
-    * (Similarity.ivfBuild): training is one TakeOrdered sample collect,
-    * assignment is a scan-local argmax column, and the cap is one
+    * come from the IVF quantizer (Similarity.ivfBuild): training is
+    * one TakeOrdered collect (Similarity.trainingSample), assignment
+    * Similarity.ivfAssign's scan-local argmax column, and the cap is one
     * row_number window partitioned by cluster — a single shuffle of
     * (id, cluster), never of the vectors. The within-cluster pick
     * order is the id hash, so the sample is deterministic and

@@ -28,18 +28,8 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    val scored = c
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rank"))
-  }
+      k: Int): DataFrame =
+    topKPerQuery(bruteForceScored(corpus, queries, idCol, vecCol), k)
 
   /** Hard-negative mining for contrastive / retrieval training: per
     * query, the top-`k` corpus vectors whose cosine falls in
@@ -64,20 +54,18 @@ object Similarity {
       lo: Double,
       hi: Double): DataFrame = {
     require(lo < hi, s"band [$lo, $hi) is empty")
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    val scored = c
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6)
-          + lit(0.0)).as("sim"))
-      .filter(col("sim") >= lo && col("sim") < hi)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rank"))
+    topKPerQuery(bruteForceScored(corpus, queries, idCol, vecCol)
+      .filter(col("sim") >= lo && col("sim") < hi), k)
   }
+
+  /** (qid, cid, sim) for every query × corpus pair but self-pairs: the
+    * query side is broadcast, the corpus streams once. */
+  private def bruteForceScored(
+      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("cid"), col(vecCol).as("cv"))
+      .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))),
+        col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), exactSim)
 
   /** Exact top-k cosine neighbors over int8-QUANTIZED vectors
     * (VectorFunctions.int8Quantize): the memory-bound recall stage —
@@ -109,14 +97,8 @@ object Similarity {
     val sim = when(denom > 0,
       round(idot(col("qv"), col("cv")).cast("double") / denom, 6) + lit(0.0))
       .otherwise(0.0)
-    val scored = c
-      .join(broadcast(q), col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), sim.as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rank"))
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), sim.as("sim")), k)
   }
 
   /** LSH-bucketed ANN: `numPlanes` hyperplane bits split into `bands`
@@ -154,17 +136,31 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"))
       .distinct()
+    exactRerank(candidates, corpus, queries, idCol, vecCol, k)
+  }
 
-    // Candidates attach to corpus vectors via a plain equi-join on the
-    // id: the candidate set scales with |queries| × collision rate, so
-    // it must not be force-broadcast (AQE still broadcasts it at
-    // runtime when it is genuinely small). Only the query side — small
-    // by caller contract — carries a broadcast hint.
-    val scored = candidates
+  /** Exact top-k over a (qid, cid) candidate set: the candidates attach
+    * to the corpus vectors by a plain equi-join on the id (the set
+    * scales with |queries| × collision rate or × rerank depth, so it
+    * must not be force-broadcast; AQE still broadcasts it at runtime
+    * when it is genuinely small), then to the query vectors through a
+    * broadcast — the query side is small by caller contract. */
+  private[operators] def exactRerank(candidates: DataFrame, corpus: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame =
+    topKPerQuery(candidates.select(col("qid"), col("cid"))
       .join(corpus.select(col(idCol).as("cid"), col(vecCol).as("cv")), Seq("cid"))
       .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))), Seq("qid"))
-      .select(col("qid"), col("cid"),
-        (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim"))
+      .select(col("qid"), col("cid"), exactSim), k)
+
+  /** The exact score of every ranking in the ANN family: cosine of
+    * `qv` and `cv` rounded to 6 dp, -0.0 folded to 0.0. */
+  private def exactSim: Column =
+    (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim")
+
+  /** The top-k tail of every ANN ranking: rank (qid, cid, sim) rows
+    * per query by sim desc with a cid tie-break, so the result is
+    * deterministic across partitionings; keeps (qid, cid, sim, rank). */
+  private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
     scored
       .withColumn("rank", row_number().over(w))
@@ -213,16 +209,25 @@ object Similarity {
       vecCol: String,
       nLists: Int = 16,
       trainSample: Int = 2048,
-      iters: Int = 10): (DataFrame, DataFrame) = {
-    // deterministic pseudo-random sample: top-N by id hash is a
-    // TakeOrderedAndProject (per-partition partial top-N + merge), not
-    // a global sort of the corpus
-    val sample = corpus
-      .orderBy(xxhash64(col(idCol)))
-      .limit(trainSample)
+      iters: Int = 10): (DataFrame, DataFrame) =
+    ivfIndex(corpus, idCol, vecCol, trainingSample(corpus, idCol, vecCol, trainSample),
+      nLists, iters)
+
+  /** The one k-means training sample of the ANN family, as double
+    * vectors: the first `n` rows by id hash — deterministic, and a
+    * TakeOrderedAndProject (per-partition partial top-N + merge), not a
+    * global sort of the corpus. */
+  private[operators] def trainingSample(
+      df: DataFrame, idCol: String, vecCol: String, n: Int): Array[Array[Double]] =
+    df.orderBy(xxhash64(col(idCol)))
+      .limit(n)
       .select(transform(col(vecCol), x => x.cast("double")).as("v"))
       .collect()
       .map(_.getSeq[Double](0).toArray)
+
+  /** [[ivfBuild]] over an already collected training sample. */
+  private[operators] def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      sample: Array[Array[Double]], nLists: Int, iters: Int): (DataFrame, DataFrame) = {
     val centArr = KMeans.spherical(sample, nLists, iters)
     import corpus.sparkSession.implicits._
     val centDf = centArr.zipWithIndex
@@ -263,35 +268,33 @@ object Similarity {
       vecCol: String,
       k: Int,
       nProbe: Int = 6): DataFrame = {
-    val centArr = centroids.orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    val nCells = centArr.length // < nLists when the train sample is tiny
-    require(nProbe >= 1, "nProbe must be positive")
-    val cents = typedlit(centArr.map(_.toList).toList)
+    // query side is small by caller contract (same as bruteForceTopK);
+    // the corpus side streams through a broadcast hash join on the cell
+    topKPerQuery(assigned
+      .join(broadcast(ivfProbes(queries, idCol, vecCol, centroids, nProbe)), Seq("cell"))
+      .filter(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), exactSim), k)
+  }
 
-    // queries: nProbe best cells via posexplode + row_number — the
-    // query side is small by caller contract, so the window is free
+  /** (qid, qv, cell): each query's `nProbe` best cells by cosine, ties
+    * to the lower cell. The tiny centroid table is collected and sorted
+    * on the driver (a Spark sort would add a shuffle and its jobs) and
+    * inlined as a literal; the window runs on the small query side. */
+  private[operators] def ivfProbes(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, nProbe: Int): DataFrame = {
+    require(nProbe >= 1, "nProbe must be positive")
+    val centArr = centroids.collect().sortBy(_.getLong(0))
+      .map(_.getSeq[Double](1).toList)
+    val nCells = centArr.length // < nLists when the train sample is tiny
+    val cents = typedlit(centArr.toList)
     val wp = Window.partitionBy(col("qid")).orderBy(col("d").desc, col("cell"))
-    val probes = queries
+    queries
       .select(col(idCol).as("qid"), col(vecCol).as("qv"),
         posexplode(transform(cents, c => graft.plans.VectorColumns.cosine(col(vecCol), c)))
           .as(Seq("cell", "d")))
       .withColumn("pr", row_number().over(wp))
       .filter(col("pr") <= math.min(nProbe, nCells))
       .select(col("qid"), col("qv"), col("cell").cast("long").as("cell"))
-
-    // query side is small by caller contract (same as bruteForceTopK);
-    // the corpus side streams through a broadcast hash join on the cell
-    val scored = assigned
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (round(graft.plans.VectorColumns.cosine(col("qv"), col("cv")), 6) + lit(0.0)).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("cid"), col("sim"), col("rank"))
   }
 
   /** Embedding-space drift between two corpus slices — the

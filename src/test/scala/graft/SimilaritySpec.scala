@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.Similarity
 
@@ -426,6 +429,53 @@ class SimilaritySpec extends SparkSpec {
     assert(out.filter(col("qid") === col("cid")).count() == 0)
   }
 
+  test("both IVF probe entry points reject nProbe = 0") {
+    import graft.operators.Pq
+    val queries = emb.filter(col("vec_id") < 5)
+    val (assigned, cents) = Similarity.ivfBuild(emb, "vec_id", "embedding",
+      nLists = 4, trainSample = 256, iters = 2)
+    intercept[IllegalArgumentException](Similarity.ivfTopKIndexed(
+      assigned, cents, queries, "vec_id", "embedding", k = 3, nProbe = 0))
+    intercept[IllegalArgumentException](Pq.ivfPqTopK(
+      emb, queries, "vec_id", "embedding", k = 3, nLists = 4, nProbe = 0,
+      ksub = 4, trainSample = 256, iters = 2))
+  }
+
+  test("building an IVF query launches one Spark job: the training-sample collect") {
+    val sc = spark.sparkContext
+    val names = Seq("q_ann_ivf", "q_ann_ivf_exact", "q_ann_ivf_pq")
+    Tables.t(spark, Sf, "embeddings") // warm: the schema is inferred once per session
+    for (q <- names) {
+      sc.setJobGroup(s"ivf_build_$q", s"build $q")
+      try SparkEntry.queries(q)(spark, Sf) finally sc.clearJobGroup()
+    }
+    // the status tracker fills from the listener bus in event order:
+    // once a later control job shows up, every build job is listed
+    sc.setJobGroup("ivf_build_control", "control job")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    eventually(timeout(30.seconds)) {
+      assert(sc.statusTracker.getJobIdsForGroup("ivf_build_control").nonEmpty)
+    }
+    val jobs = names.map(q => q -> sc.statusTracker.getJobIdsForGroup(s"ivf_build_$q").length)
+    assert(jobs.forall(_._2 == 1), s"eager jobs per build: $jobs")
+  }
+
+  test("rows-only ANN queries do not depend on the shuffle partition count") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def rows(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      Seq("q_ann_ivf", "q_ann_ivf_pq", "q_ann_pq", "q_dedup_semantic", "q_mixture_cluster")
+        .map(q => q -> SparkEntry.queries(q)(spark, Sf).collect().map(_.toSeq).toSet).toMap
+    }
+    val (one, seven) = try (rows(1), rows(7)) finally spark.conf.set(key, prev)
+    for ((q, r) <- one) {
+      assert(r.nonEmpty, s"$q returned no rows")
+      assert(r == seven(q), s"$q differs across partition counts: " +
+        s"${(r diff seven(q)).take(3)} vs ${(seven(q) diff r).take(3)}")
+    }
+  }
+
   test("recallEstimate reports the true sampled ADC recall, deterministically") {
     import graft.operators.{Pq, Similarity}
     val corpus = emb.select(col("vec_id"), col("embedding")).limit(200)
@@ -446,7 +496,7 @@ class SimilaritySpec extends SparkSpec {
       .select("qid", "cid").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val exact = topSets(Similarity.bruteForceTopK(corpus, probes, "vec_id", "embedding", 5))
-    val adc = topSets(Pq.adcTopK(enc, probes, "vec_id", "embedding", cb, 5))
+    val adc = topSets(Pq.adcTopK(enc, probes, "vec_id", "embedding", cb, 5, corpus))
     rows.foreach { case (qid, hits, k, recall) =>
       val want = (exact.getOrElse(qid, Set.empty) & adc.getOrElse(qid, Set.empty)).size
       assert(k == 5 && hits == want.toLong,
