@@ -4,15 +4,21 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis column functions for the LLM-pipeline operators
-  * (SURVEY.md §2.3). Built exclusively from `org.apache.spark.sql.
-  * functions._` — every expression is codegen'd, no UDFs, so they stay
-  * inside WholeStageCodegen at 100 TB.
+  * (SURVEY.md §2.3). Built from `org.apache.spark.sql.functions._` and
+  * the native kernels in [[graft.plans]] — no UDFs. The `transform`/
+  * `filter`/`aggregate` lambdas used here are NOT codegen'd: they run
+  * interpreted per array element, so hot paths go through the native
+  * kernels (the tokenizer, the hashes, the n-grams).
   */
 object TextFunctions {
 
-  /** Whitespace tokens, empties removed. */
+  /** Whitespace tokens, empties removed: runs of Java-regex `\s`
+    * (ASCII space, \t, \n, \x0B, \f, \r) split, null in → null out.
+    * The engine's one tokenizer, a native kernel
+    * ([[graft.plans.WhitespaceTokens]]) shared with every token hash
+    * and n-gram kernel. */
   def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= "")
+    graft.plans.TextHashColumns.whitespaceTokens(text)
 
   def tokenCount(text: Column): Column = size(tokens(text))
 

@@ -221,7 +221,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String, n: Int): Array[Array[Double]] =
     df.orderBy(xxhash64(col(idCol)))
       .limit(n)
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
+      .select(col(vecCol).cast("array<double>").as("v"))
       .collect()
       .map(_.getSeq[Double](0).toArray)
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{TextFunctions => TF}
+import graft.plans.TextHashColumns.tokenNgrams
 
 /** Corpus vocabulary statistics — the token-frequency table a
   * training-data pipeline builds before tokenizer training or
@@ -112,19 +113,16 @@ object Vocab {
     * higher-fidelity CCNet-style signal (word-salad docs score low
     * even when every individual token is common).
     *
-    * Shape: bigrams are built SCAN-SIDE (zip of the token array with
-    * its own tail — no posexplode + per-token window shuffle) and
-    * scored in the [[lmScore]] flat occurrence form: the pair stream
-    * joins the distinct-bigram table (c₁ attached model-side) and
-    * partial-aggregates per doc. Docs with < 2 tokens have no
+    * Shape: bigrams are built SCAN-SIDE by the native adjacent-n-gram
+    * kernel ([[graft.plans.TokenNgrams]]: one loop per row over the
+    * doc's tokens — no posexplode + per-token window shuffle, no
+    * interpreted lambdas) and scored in the [[lmScore]] flat occurrence
+    * form: the pair stream joins the distinct-bigram table (c₁ attached
+    * model-side) and partial-aggregates per doc. Docs with < 2 tokens have no
     * transitions and drop out. */
   def lmScoreBigram(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 1, lit(0))
-    val pairs = zip_with(
-      slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("p"), b.as("w")))
-    val bg = docs.select(col(idCol).as("id"), explode(pairs).as("z"))
+    val bg = docs.select(col(idCol).as("id"),
+        explode(tokenNgrams(col(textCol), "p", "w")).as("z"))
       .select(col("id"), col("z.p").as("p"), col("z.w").as("w"))
       // no-op filter kept: without it the sf0.1 final plan goes from 2 scans/1 reuse to 3/0
       .filter(col("p").isNotNull && col("w").isNotNull)
@@ -193,19 +191,13 @@ object Vocab {
       s"interpolation weights ($l3, $l2, $l1) must be non-negative and sum to 1")
 
   /** The flat trigram occurrence stream (id, u, v, w): one row per
-    * adjacent token triple of each doc, built SCAN-SIDE from three
-    * aligned slices of the token array zipped into structs (no
-    * posexplode + window). Docs with < 3 tokens yield no rows. */
-  private def trigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 2, lit(0))
-    val uv = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("u"), b.as("v")))
-    val triples = zip_with(uv, slice(toks, lit(3), m),
-      (p, w) => struct(p.getField("u").as("u"), p.getField("v").as("v"), w.as("w")))
-    docs.select(col(idCol).as("id"), explode(triples).as("z"))
+    * adjacent token triple of each doc, built SCAN-SIDE by the native
+    * adjacent-n-gram kernel ([[graft.plans.TokenNgrams]], no posexplode
+    * + window). Docs with < 3 tokens yield no rows. */
+  private def trigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"),
+        explode(tokenNgrams(col(textCol), "u", "v", "w")).as("z"))
       .select(col("id"), col("z.u").as("u"), col("z.v").as("v"), col("z.w").as("w"))
-  }
 
   /** The lower-order marginals of a (u, v, w, c3) trigram table that
     * the interpolated score needs: c12(u,v), c23(v,w), c2m(v) and
@@ -707,7 +699,8 @@ object Vocab {
     * reads before merging multi-word units.
     *
     * 100 TB shape: two token-keyed aggregations (unigrams, adjacent
-    * bigrams), both map-side partial — the shuffles carry one row per
+    * bigrams from the native n-gram kernel [[graft.plans.TokenNgrams]]),
+    * both map-side partial — the shuffles carry one row per
     * distinct token/pair per mapper, never per occurrence. The bigram
     * table then joins the vocabulary-sized unigram table twice (AQE
     * broadcasts it when it fits) and both totals ride in-plan as
@@ -717,14 +710,10 @@ object Vocab {
     * 4dp round. */
   def pmi(docs: DataFrame, idCol: String, textCol: String, minCount: Long = 5): DataFrame = {
     require(minCount >= 1, "minCount must be >= 1")
-    val toks = TF.tokens(col(textCol))
-    val m = greatest(size(toks) - 1, lit(0))
-    val pairs = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-      (a, b) => struct(a.as("p"), b.as("w")))
     val uni = docs.select(explode(TF.tokens(col(textCol))).as("tok"))
       .filter(col("tok").isNotNull)
       .groupBy(col("tok")).agg(count(lit(1)).as("c1"))
-    val bg = docs.select(explode(pairs).as("z"))
+    val bg = docs.select(explode(tokenNgrams(col(textCol), "p", "w")).as("z"))
       .select(col("z.p").as("p"), col("z.w").as("w"))
       .filter(col("p").isNotNull && col("w").isNotNull)
       .groupBy(col("p"), col("w")).agg(count(lit(1)).as("c_ab"))

@@ -2,37 +2,41 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the text-dedup hash kernels
-  * (SURVEY.md §4): the HOF-lambda formulations (interpreted per array
-  * element, re-evaluating the shingle subtree per outer iteration) are
-  * ~50× slower; these run the whole kernel as one tight Scala loop per
-  * row over Spark's own XXH64. Each expression implements doGenCode as
-  * a static call into the kernel object, so the surrounding projection
-  * stays inside whole-stage codegen (no interpreted-subtree fallback,
-  * no row re-materialization per call).
+/** Native Catalyst expressions for the engine's whitespace tokenizer
+  * and the token kernels built on it: the text-dedup hashes (SURVEY.md
+  * §4), the per-doc repetition/diversity counters, and the adjacent
+  * n-gram builder behind the n-gram LM family ([[TokenNgrams]]). The
+  * HOF-lambda formulations (`filter`/`transform`/`zip_with`/
+  * `aggregate` lambdas are interpreted per array element, and re-
+  * evaluate the shingle subtree per outer iteration) are ~50× slower;
+  * these run the whole kernel as one tight Scala loop per row over
+  * Spark's own XXH64. Each expression implements doGenCode as a static
+  * call into the kernel object, so the surrounding projection stays
+  * inside whole-stage codegen (no interpreted-subtree fallback, no row
+  * re-materialization per call).
   */
 object TextHash {
 
   private val Seed = 42L
 
-  /** Matches Java-regex `\s` (the semantics of
-    * `filter(split(text, "\\s+"), t => t =!= "")`): ASCII space, \t,
-    * \n, \x0B, \f, \r only. Deliberately NOT Character.isWhitespace —
-    * Unicode spaces (U+1680, U+2028, …) are token characters under
-    * `\s`, and these kernels must agree bitwise with the HOF
-    * formulation in [[graft.functions.TextFunctions]]. */
+  /** Matches Java-regex `\s` (what `split(text, "\\s+")` and the
+    * DuckDB oracles split on): ASCII space, \t, \n, \x0B, \f, \r only.
+    * Deliberately NOT Character.isWhitespace — Unicode spaces (U+00A0,
+    * U+2028, U+3000, …) are token characters under `\s`. */
   @inline private def isRegexSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
+  /** The engine's one tokenizer: runs of `\s` whitespace split, empty
+    * tokens dropped. Every token kernel here and
+    * [[graft.functions.TextFunctions.tokens]] ([[WhitespaceTokens]])
+    * call it, so they agree on what a token is by construction. */
   private[plans] def whitespaceTokens(s: UTF8String): Array[UTF8String] = {
-    // split on runs of `\s` whitespace, dropping empties — same result
-    // as filter(split(text, "\\s+"), t => t =!= "")
     val str = s.toString
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     var i = 0
@@ -62,6 +66,25 @@ object TextHash {
 
   // Codegen entry points (referenced as TextHash$.MODULE$.…kernel from
   // generated Java): take/return Catalyst-native types only.
+
+  def tokensKernel(input: UTF8String): GenericArrayData =
+    new GenericArrayData(whitespaceTokens(input).asInstanceOf[Array[Any]])
+
+  /** Adjacent `n`-token windows, one struct of `n` token strings per
+    * start position 0..m−n — m−n+1 rows for m tokens, none when m < n.
+    * Structs share the token UTF8Strings (immutable), no copy. */
+  def tokenNgramsKernel(input: UTF8String, n: Int): GenericArrayData = {
+    val toks = whitespaceTokens(input)
+    val out = new Array[Any](math.max(toks.length - n + 1, 0))
+    var i = 0
+    while (i < out.length) {
+      val gram = new Array[Any](n)
+      System.arraycopy(toks, i, gram, 0, n)
+      out(i) = new GenericInternalRow(gram)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
 
   def minhashKernel(input: UTF8String, shingleN: Int, numHashes: Int): GenericArrayData = {
     val hashes = shingleHashes(input, shingleN)
@@ -502,6 +525,54 @@ object TextHash {
   }
 }
 
+/** The engine's whitespace tokenizer as an array<string> column — see
+  * [[TextHash.whitespaceTokens]]. Null text yields null; blank text an
+  * empty array. */
+case class WhitespaceTokens(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    TextHash.tokensKernel(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.tokensKernel($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Adjacent whitespace-token n-grams, n = `fieldNames.size`:
+  * array<struct<f1:string, …, fn:string>>, one struct per window in
+  * document order — the scan-side occurrence builder of the n-gram LM
+  * family ([[graft.operators.Vocab]]). The fields are declared
+  * NULLABLE although the kernel never emits a null token: the type then
+  * equals that of the equivalent `zip_with` struct-lambda form (the
+  * spec's reference), so the callers' output schemas and their
+  * `isNotNull` filters on the fields (which a non-nullable field lets
+  * the optimizer fold away) keep their meaning. */
+case class TokenNgrams(child: Expression, fieldNames: Seq[String])
+    extends UnaryExpression {
+  require(fieldNames.size >= 2, "an n-gram needs n >= 2 fields")
+
+  override def dataType: DataType = ArrayType(
+    StructType(fieldNames.map(StructField(_, StringType, nullable = true))),
+    containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    TextHash.tokenNgramsKernel(input.asInstanceOf[UTF8String], fieldNames.size)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.tokenNgramsKernel($c, ${fieldNames.size});")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** MinHash signature: array of `numHashes` minima of per-seed hashes
   * over the document's distinct `shingleN`-gram shingles. Seed variants
   * derive from one base shingle hash via XXH64.hashLong — O(shingles ×
@@ -804,6 +875,12 @@ case class HashedNgramMeanWeight(
 }
 
 object TextHashColumns {
+  def whitespaceTokens(text: Column): Column =
+    GraftShim.column(WhitespaceTokens(GraftShim.expression(text)))
+
+  def tokenNgrams(text: Column, fieldNames: String*): Column =
+    GraftShim.column(TokenNgrams(GraftShim.expression(text), fieldNames))
+
   def minhashSignature(text: Column, shingleN: Int, numHashes: Int): Column =
     GraftShim.column(MinHashSignature(GraftShim.expression(text), shingleN, numHashes))
 

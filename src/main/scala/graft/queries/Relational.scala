@@ -1094,10 +1094,10 @@ object Relational {
     }),
 
     // list namespace over a real list value (split tokens): distinct
-    // count / contains / slice+join — all codegen'd array builtins,
-    // token split identical to the text-pipeline tokenizer
+    // count / contains / slice+join — all codegen'd array builtins over
+    // the text-pipeline tokenizer's token array
     "q_list_words" -> ((s, dir) => {
-      val words = filter(split(col("text"), "\\s+"), x => x =!= "")
+      val words = graft.functions.TextFunctions.tokens(col("text"))
       t(s, dir, "documents").select(
         col("doc_id"),
         size(words).as("n_words"),
@@ -1111,7 +1111,7 @@ object Relational {
     // doc; every result sorted before the string join so both engines'
     // set-op orderings (appearance vs hash) cancel out
     "q_list_sets" -> ((s, dir) => {
-      val words = filter(split(col("text"), "\\s+"), x => x =!= "")
+      val words = graft.functions.TextFunctions.tokens(col("text"))
       val a = slice(words, 1, 8)
       val b = slice(words, 5, 8)
       t(s, dir, "documents").select(
@@ -1129,7 +1129,7 @@ object Relational {
     // index_of/eval-sum): binary string order matches DuckDB's default
     // collation, so sorted prefixes compare exactly
     "q_list_sort" -> ((s, dir) => {
-      val words = filter(split(col("text"), "\\s+"), x => x =!= "")
+      val words = graft.functions.TextFunctions.tokens(col("text"))
       t(s, dir, "documents").select(
         col("doc_id"),
         concat_ws("|", slice(sort_array(words), 1, 5)).as("sorted5"),

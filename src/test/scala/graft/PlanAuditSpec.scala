@@ -629,6 +629,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(reused >= 5, s"marginals/total rebuilt instead of reused ($reused):\n$fin")
   }
 
+  test("lm family builds tokens and n-grams natively — no interpreted lambda in the plan") {
+    // zip_with/filter lambdas run interpreted per array element and
+    // keep the scan stage out of whole-stage codegen; the tokenizer and
+    // the n-gram builder are native kernels (TextHashExpressions)
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    for (q <- Seq("q_lm_score", "q_lm_bigram", "q_lm_trigram", "q_novelty", "q_pmi")) {
+      val plan = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
+      val hofs = plan.flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+      assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
+    }
+  }
+
   test("q_lm_score / q_lm_bigram: model side reuses the probe's n-gram exchange") {
     // two scans (n-gram counts + per-doc probe); the counts exchange is
     // built once and reused by the other model branch (T, or c1)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions => TF}
 import graft.operators.{Dedup, DedupCluster}
@@ -57,11 +58,71 @@ class TextDedupSpec extends SparkSpec {
       val out = docs.limit(5).select(
         graft.plans.TextHashColumns.simhash(col("text")).as("sh"),
         graft.plans.TextHashColumns.minhashSignature(col("text"), 3, 16).as("mh"),
-        graft.plans.TextHashColumns.shingleHashes(col("text"), 3).as("shs"))
+        graft.plans.TextHashColumns.shingleHashes(col("text"), 3).as("shs"),
+        graft.plans.TextHashColumns.whitespaceTokens(col("text")).as("tok"),
+        graft.plans.TextHashColumns.tokenNgrams(col("text"), "p", "w").as("bg"),
+        graft.plans.TextHashColumns.tokenNgrams(col("text"), "u", "v", "w").as("tg"))
         .collect()
       assert(out.length == 5)
       assert(out.forall(r => r.getSeq[Long](1).length == 16))
     } finally spark.conf.set(key, prev)
+  }
+
+  // The HOF formulations the native tokenizer and n-gram kernel
+  // replaced, kept as references: `\s+` regex split minus empties, and
+  // n aligned slices of the token array zipped into structs.
+  private def hofTokens(text: Column): Column =
+    filter(split(text, "\\s+"), t => t =!= "")
+
+  private def hofNgrams(text: Column, names: Seq[String]): Column = {
+    val toks = hofTokens(text)
+    val m = greatest(size(toks) - (names.size - 1), lit(0))
+    val pairs = zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
+      (a, b) => struct(a.as(names(0)), b.as(names(1))))
+    if (names.size == 2) pairs
+    else zip_with(pairs, slice(toks, lit(3), m), (p, w) => struct(
+      p.getField(names(0)).as(names(0)), p.getField(names(1)).as(names(1)), w.as(names(2))))
+  }
+
+  /** Asserts the native column and its HOF reference agree on type
+    * (nullability included) and on every row of `df`. */
+  private def assertSameAsHof(df: DataFrame, native: Column, hof: Column, what: String): Unit = {
+    val both = df.select(native.as("native"), hof.as("hof"))
+    val Seq(n, h) = both.schema.fields.toSeq
+    assert(n.dataType == h.dataType && n.nullable == h.nullable,
+      s"$what: native ${n.dataType} (nullable ${n.nullable}) vs HOF ${h.dataType} (nullable ${h.nullable})")
+    val rows = both.collect()
+    assert(rows.nonEmpty)
+    rows.foreach(r => assert(r.get(0) == r.get(1), s"$what: native ${r.get(0)} vs HOF ${r.get(1)}"))
+    assert(both.filter(!(col("native") <=> col("hof"))).count() == 0, what)
+  }
+
+  test("native tokenizer and n-gram kernel match the HOF split/zip_with builders bitwise") {
+    import spark.implicits._
+    val texts: Seq[String] = Seq(
+      null, "", "   ", " \t\n\r\f\u000B ",
+      "one", "one two", "one two three",
+      // runs of every `\s` char, leading and trailing blanks
+      "\t\n\r\f\u000B  alpha \t\n\r\f\u000Bbeta\r\n\r\ngamma  delta\f\u000B \t",
+      // Unicode spaces are token characters under `\s`
+      "a\u00A0b c\u2028d e\u3000f g \u00A0 \u2028 \u3000",
+      // multi-byte tokens: 2-, 3- and 4-byte UTF-8, a surrogate pair
+      "na\u00efve caf\u00e9 \u4e2d\u6587 \u6587\u672c \ud83d\ude00 emoji\ud834\udd1e x")
+    // a LocalRelation folds on the driver (interpreted nullSafeEval); an
+    // RDD-backed frame and the parquet table run whole-stage codegen
+    val local = texts.toDF("text")
+    val viaRdd = spark.sparkContext.parallelize(texts.map(Tuple1(_)), 2).toDF("text")
+    for ((df, label) <- Seq((local, "edge cases"), (viaRdd, "edge cases, codegen"),
+        (docs.select(col("text")), "documents"))) {
+      assertSameAsHof(df, TF.tokens(col("text")), hofTokens(col("text")), s"tokens, $label")
+      for (names <- Seq(Seq("p", "w"), Seq("u", "v", "w"))) {
+        assertSameAsHof(df, graft.plans.TextHashColumns.tokenNgrams(col("text"), names: _*),
+          hofNgrams(col("text"), names), s"${names.size}-grams, $label")
+      }
+    }
+    val grams = local.select(size(graft.plans.TextHashColumns.tokenNgrams(
+      col("text"), "u", "v", "w")).as("n")).collect().map(r => if (r.isNullAt(0)) -1 else r.getInt(0))
+    assert(grams.toSeq == Seq(-1, 0, 0, 0, 0, 0, 1, 2, 5, 5), grams.mkString(","))
   }
 
   test("RepetitionStats counts unigram and 2-gram repetition exactly") {
