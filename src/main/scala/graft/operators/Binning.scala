@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: `cut` is a pure codegen'd when-chain — scan-local,
   * zero shuffles, whole-stage-codegen friendly. `qcut` computes its
-  * breaks with the distributed exact-quantile machinery
-  * ([[Quantiles.exactQuantiles]] — range partitioning, never a global
-  * sort funnel) and joins the one-row-per-group break table back as a
-  * broadcast, so the data stream pays one map-side join and the
-  * binning itself is again a scan-local when-chain. Nothing is eager:
-  * both return lazy plans.
+  * breaks with the distributed exact quantiles
+  * ([[Quantiles.exactQuantiles]] — the two-pass rank core, never a
+  * global sort funnel) and joins the one-row-per-group break table
+  * back as a broadcast, so the data stream pays one map-side join and
+  * the binning itself is again a scan-local when-chain. `cut` is
+  * lazy; `qcut` runs the rank core's bounded pass-1 job when it is
+  * built.
   */
 object Binning {
 

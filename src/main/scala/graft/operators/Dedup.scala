@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.util.sketch.BloomFilter
@@ -349,17 +349,29 @@ object Dedup {
       sigs: DataFrame,
       maxHamming: Int,
       maxBucketSize: Int = 1000): DataFrame =
-    hammingChunked(sigs, maxHamming)
-      .groupBy(col("chunk"), col("key")).agg(count(lit(1)).as("bs"))
-      .groupBy(col("chunk")).agg(
-        count(lit(1)).as("n_buckets"),
-        sum(col("bs")).as("n_rows"),
-        count(when(col("bs") > maxBucketSize, 1)).as("dropped_buckets"),
-        coalesce(sum(when(col("bs") > maxBucketSize, col("bs"))), lit(0L)).as("dropped_rows"),
-        round(coalesce(sum(when(col("bs") > maxBucketSize, col("bs"))), lit(0L))
-          / sum(col("bs")).cast("double"), 6).as("dropped_fraction"),
-        coalesce(sum(when(col("bs") <= maxBucketSize, (col("bs") * (col("bs") - 1) / 2).cast("long"))),
-          lit(0L)).as("candidate_pairs"))
+    bucketStats(hammingChunked(sigs, maxHamming), "chunk", "key", maxBucketSize)
+
+  /** The dropped-bucket diagnostics shared by [[hammingBucketStats]]
+    * and [[lshBucketStats]]: bucket sizes per (`level`, `bucket`), then
+    * per `level` the bucket and row counts, what the `maxBucketSize`
+    * cap drops, and the candidate pairs the kept buckets generate.
+    * `lead` columns come right after `level` in each output row. */
+  private def bucketStats(
+      rows: DataFrame, level: String, bucket: String, maxBucketSize: Int,
+      lead: Column*): DataFrame = {
+    val bs = col("bs")
+    val droppedRows = coalesce(sum(when(bs > maxBucketSize, bs)), lit(0L))
+    val stats = lead ++ Seq(
+      count(lit(1)).as("n_buckets"),
+      sum(bs).as("n_rows"),
+      count(when(bs > maxBucketSize, 1)).as("dropped_buckets"),
+      droppedRows.as("dropped_rows"),
+      round(droppedRows / sum(bs).cast("double"), 6).as("dropped_fraction"),
+      coalesce(sum(when(bs <= maxBucketSize, (bs * (bs - 1) / 2).cast("long"))),
+        lit(0L)).as("candidate_pairs"))
+    rows.groupBy(col(level), col(bucket)).agg(count(lit(1)).as("bs"))
+      .groupBy(col(level)).agg(stats.head, stats.tail: _*)
+  }
 
   private def hammingChunked(sigs: DataFrame, maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
@@ -770,29 +782,8 @@ object Dedup {
           .as(Seq("pos", "s")))
       .select(col("id"), col("pos"),
         col("s.sh").as("sh"), col("s.cs").as("cs"), col("s.ce").as("ce"))
-    // shingle hashes present in ≥2 documents, with the id that keeps
-    // its copy — ONE window pass over the hash-shuffled positions
-    // instead of a capped groupBy + join-back: the cap drops whole
-    // buckets, so within a surviving bucket `min(id) != max(id)` is
-    // exactly `countDistinct(id) >= 2` and `min(id)` is the keeper.
-    // This halves the expensive part at any scale: the tokenize+hash
-    // scan runs ONCE and the corpus crosses ONE exchange (the
-    // agg+join form re-ran the scan for the join probe side).
-    val wb = Window.partitionBy(col("sh"))
-    val flagged0 = pos
-      .withColumn("__bsize", count(lit(1)).over(wb))
-      .withColumn("__keeper", min(col("id")).over(wb))
-      .withColumn("__maxid", max(col("id")).over(wb))
-      .filter(col("__bsize") <= maxShingleFreq &&
-        col("__keeper") =!= col("__maxid"))
-    val flagged =
-      if (keepFirst) flagged0.filter(col("id") =!= col("__keeper")) else flagged0
-    // gaps-and-islands: consecutive flagged positions form one run; a
-    // run of r shingles covers r + shingleN - 1 tokens
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    flagged
-      .withColumn("__grp", col("pos") - row_number().over(w))
-      .groupBy(col("id"), col("__grp"))
+    // a run of r shingles covers r + shingleN - 1 tokens
+    duplicateRuns(pos, "sh", keepFirst, maxShingleFreq)
       .agg(min(col("cs")).as("span_start"), max(col("ce")).as("span_end"),
         (count(lit(1)) + lit(shingleN - 1)).cast("int").as("span_tokens"))
       .filter(col("span_tokens") >= minSpanTokens)
@@ -847,11 +838,32 @@ object Dedup {
         posexplode(graft.plans.TextHashColumns.md5Shingles(col(textCol), shingleN))
           .as(Seq("__p0", "m")))
       .select(col("id"), (col("__p0") + 1).as("pos"), col("m"))
-    // same single-window dup set as production duplicateSpans (the cap
-    // drops whole buckets, so min!=max == countDistinct>=2): the
-    // md5-per-shingle scan — the twin's dominant cost — runs once, not
-    // once per side of an agg+join
-    val wb = Window.partitionBy(col("m"))
+    duplicateRuns(pos, "m", keepFirst, maxShingleFreq)
+      .agg(min(col("pos")).cast("long").as("span_start_tok"),
+        (max(col("pos")) + lit(shingleN - 1)).cast("long").as("span_end_tok"),
+        (count(lit(1)) + lit(shingleN - 1)).as("span_tokens"))
+      .filter(col("span_tokens") >= minSpanTokens)
+      .select(col("id").as(idCol),
+        col("span_start_tok"), col("span_end_tok"), col("span_tokens"))
+  }
+
+  /** The flagged runs shared by [[duplicateSpans]] and
+    * [[duplicateSpansExact]], grouped per (id, run): `pos` holds
+    * (id, pos, `key`, …) shingle positions. A position is flagged when
+    * its key's bucket holds at most `maxShingleFreq` positions from at
+    * least two documents — and, with `keepFirst`, when it is not in
+    * the bucket's lowest-id (keeper) document. ONE window pass over the
+    * key-shuffled positions decides both: the cap drops whole buckets,
+    * so within a surviving bucket `min(id) != max(id)` is exactly
+    * `countDistinct(id) >= 2` and `min(id)` is the keeper. The scan
+    * runs ONCE and the corpus crosses ONE exchange (an agg+join form
+    * re-runs the scan for the join's probe side). Consecutive flagged
+    * positions form one run (gaps-and-islands); the caller aggregates
+    * each run into its own output columns. */
+  private def duplicateRuns(
+      pos: DataFrame, key: String, keepFirst: Boolean,
+      maxShingleFreq: Int): RelationalGroupedDataset = {
+    val wb = Window.partitionBy(col(key))
     val flagged0 = pos
       .withColumn("__bsize", count(lit(1)).over(wb))
       .withColumn("__keeper", min(col("id")).over(wb))
@@ -864,12 +876,6 @@ object Dedup {
     flagged
       .withColumn("__grp", col("pos") - row_number().over(w))
       .groupBy(col("id"), col("__grp"))
-      .agg(min(col("pos")).cast("long").as("span_start_tok"),
-        (max(col("pos")) + lit(shingleN - 1)).cast("long").as("span_end_tok"),
-        (count(lit(1)) + lit(shingleN - 1)).as("span_tokens"))
-      .filter(col("span_tokens") >= minSpanTokens)
-      .select(col("id").as(idCol),
-        col("span_start_tok"), col("span_end_tok"), col("span_tokens"))
   }
 
   /** Corpus-wide exact line/paragraph dedup (the CCNet recipe's
@@ -1100,18 +1106,8 @@ object Dedup {
       corpusSize: Long = -1L): DataFrame = {
     val bits = resolveBits(emb, dim, bitsPerBand, bands, targetBucketSize, corpusSize)
     val vecs = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-    signBanded(vecs, bits, bands)
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("bs"))
-      .groupBy(col("band")).agg(
-        lit(bits).as("bits_per_band"),
-        count(lit(1)).as("n_buckets"),
-        sum(col("bs")).as("n_rows"),
-        count(when(col("bs") > maxBucketSize, 1)).as("dropped_buckets"),
-        coalesce(sum(when(col("bs") > maxBucketSize, col("bs"))), lit(0L)).as("dropped_rows"),
-        round(coalesce(sum(when(col("bs") > maxBucketSize, col("bs"))), lit(0L))
-          / sum(col("bs")).cast("double"), 6).as("dropped_fraction"),
-        coalesce(sum(when(col("bs") <= maxBucketSize, (col("bs") * (col("bs") - 1) / 2).cast("long"))),
-          lit(0L)).as("candidate_pairs"))
+    bucketStats(signBanded(vecs, bits, bands), "band", "bucket", maxBucketSize,
+      lit(bits).as("bits_per_band"))
   }
 
   /** Recall-first sign-LSH band shape for a cosine threshold: the

@@ -23,9 +23,10 @@ object Pack {
     * pack_id). A document exceeding the budget gets its own pack
     * (training-side chunking decides what to do with it; packing must
     * not silently drop it). pack_id = partitionId << 33 | local bin —
-    * the same 31/33 bit split as Spark's monotonically_increasing_id
-    * (graft.plans.PartitionIds), so ids stay positive and collision-free
-    * for any partition count Spark itself supports. The id must be an
+    * the partition id in the upper 31 bits and the bin number in the
+    * lower 33, the split Spark's monotonically_increasing_id uses, so
+    * ids stay positive and collision-free for any partition count Spark
+    * itself supports. The id must be an
     * integral column and a null token count packs as 0 tokens — both
     * checked/handled up front so a bad input fails the DRIVER with a
     * clear message, not an executor with an opaque NPE. */

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Exact interpolated per-group quantiles, distributed (SURVEY.md §2.2).
@@ -9,22 +8,18 @@ import org.apache.spark.sql.functions._
   * The textbook formulation — `row_number().over(partitionBy(group)
   * .orderBy(value))` — puts every group in ONE task, so parallelism
   * equals the number of groups: fatal when groups are few and large
-  * (3 return-flags × 33 B rows at 100 TB). Here global within-group
-  * ranks are reconstructed from a RANGE partitioning instead:
+  * (3 return-flags × 33 B rows at 100 TB). Here every within-group
+  * position comes from the two-pass rank core ([[Ranks.positions]]):
+  * range partitioning on (group…, value), a local sort per task, and
+  * per-(partition, group) offsets stitched into exact global
+  * positions — parallelism is the shuffle partition count regardless
+  * of the group count, and nothing data-sized funnels through a task.
   *
-  *  1. range-partition by (group…, value): partitions hold disjoint,
-  *     ordered key ranges, so a group's rows are ordered ACROSS
-  *     partitions and each partition sorts locally — n·log(n/p) work
-  *     per task, parallelism = #shuffle-partitions regardless of the
-  *     group count;
-  *  2. after the local sort, `monotonically_increasing_id` encodes the
-  *     ordered local position; subtracting the per-(partition, group)
-  *     minimum id (a tiny map-side-combined aggregate, broadcast back)
-  *     yields the local in-group rank;
-  *  3. adding the running count of the group's rows in earlier
-  *     partitions (a window over that same tiny aggregate) yields the
-  *     exact global rank — one wide shuffle total, no per-group
-  *     serialization.
+  * The core gets one of two inputs: the raw non-null rows (each row's
+  * position range is its own rank, lo = hi), or, for a bounded value
+  * domain, the (group, value) counts table (one row per distinct pair,
+  * lo..hi spanning its ties). One interpolation expression serves
+  * both, and both give bit-identical results.
   *
   * The interpolation arithmetic (floor/ceil ranks + linear weights) is
   * spelled out so an external engine (the DuckDB oracle) executes
@@ -51,62 +46,6 @@ object Quantiles {
     exactQuantilesStrategy(df, groupCols, valCol,
       ps.map { case (name, p) => (name, p, "linear") })
 
-  /** Exact linear-interpolated per-group quantiles for BOUNDED value
-    * domains (enum-like columns: quantities, flags, bucket ids), via a
-    * counts table instead of the range shuffle. The only data-sized
-    * shuffle is a map-side-partial (group, value) count — one row per
-    * distinct pair per mapper — after which every rank is reconstructed
-    * from a c-weighted cumsum over the counts table; per-group window
-    * state is the DOMAIN size (corpus-independent), so a 33 B-row group
-    * with 50 distinct values costs a 50-row window task at any scale.
-    * The r15 A/B at the 10× stress scale: 2.3 s (range) → 0.7 s
-    * (counts) for the quantity median, values bit-equal.
-    *
-    * The interpolation arithmetic is the SAME expression per matched
-    * rank as [[exactQuantilesStrategy]]'s linear branch —
-    * v·(1 − |rank − idx|) with the floor and ceil terms added in fixed
-    * order (two-term FP addition is commutative, so this matches the
-    * range path's row-order sum bit for bit).
-    *
-    * NOT for continuous columns: there the counts table is data-sized,
-    * the per-group window becomes one giant task, and the extra hash
-    * aggregation buys no compression — use [[exactQuantiles]]. */
-  def exactQuantilesCounts(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valCol: String,
-      ps: Seq[(String, Double)]): DataFrame = {
-    require(groupCols.nonEmpty,
-      "exactQuantilesCounts needs group columns (a global variant would " +
-        "need an unpartitioned window — use exactQuantiles)")
-    require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0 && p <= 1 })
-    val g = groupCols.map(col)
-    val counts = df
-      .select((groupCols :+ valCol).map(col): _*)
-      .filter(col(valCol).isNotNull)
-      .groupBy(g :+ col(valCol): _*)
-      .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(g: _*).orderBy(col(valCol))
-    val cum = counts
-      .withColumn("__hi", sum(col("__c")).over(w) - 1)
-      .withColumn("__lo", col("__hi") - col("__c") + 1)
-      .withColumn("__n", sum(col("__c")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-    def q(p: Double): Column = {
-      val idx = (col("__n").cast("double") - 1) * p
-      val v = col(valCol)
-      val fl = floor(idx)
-      val ce = ceil(idx)
-      sum(when(fl >= col("__lo") && fl <= col("__hi"),
-        v * (lit(1.0) - abs(fl - idx))).otherwise(lit(0.0))) +
-        sum(when(ce =!= fl && ce >= col("__lo") && ce <= col("__hi"),
-          v * (lit(1.0) - abs(ce - idx))).otherwise(lit(0.0)))
-    }
-    cum.groupBy(g: _*).agg(
-      ps.head match { case (name, p) => q(p).as(name) },
-      ps.tail.map { case (name, p) => q(p).as(name) }: _*)
-  }
-
   /** As [[exactQuantiles]] but with a per-output interpolation strategy.
     *
     * @param ps (output column name, p in [0,1], strategy) triples
@@ -115,85 +54,87 @@ object Quantiles {
       df: DataFrame,
       groupCols: Seq[String],
       valCol: String,
-      ps: Seq[(String, Double, String)]): DataFrame = {
+      ps: Seq[(String, Double, String)]): DataFrame =
+    quantiles(df, groupCols, valCol, ps, counts = false)
+
+  /** [[exactQuantilesStrategy]] for BOUNDED value domains (enum-like
+    * columns: quantities, flags, bucket ids): the rank core runs over
+    * the (group, value) counts table instead of the raw rows. The only
+    * data-sized shuffle is then a map-side-partial (group, value)
+    * count — one row per distinct pair per mapper — and the range
+    * shuffle moves the counts table, whose size is the DOMAIN size
+    * (corpus-independent). The r15 A/B at the 10× stress scale:
+    * 2.3 s (range over rows) → 0.7 s (counts) for the quantity median,
+    * values bit-equal. On a continuous column the counts table is as
+    * large as the data and the extra hash aggregation buys nothing —
+    * results stay exact, only the speed is lost. */
+  def exactQuantilesCounts(
+      df: DataFrame,
+      groupCols: Seq[String],
+      valCol: String,
+      ps: Seq[(String, Double, String)]): DataFrame =
+    quantiles(df, groupCols, valCol, ps, counts = true)
+
+  private def quantiles(
+      df: DataFrame,
+      groupCols: Seq[String],
+      valCol: String,
+      ps: Seq[(String, Double, String)],
+      counts: Boolean): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p, _) => p >= 0 && p <= 1 })
     ps.foreach { case (_, _, s) =>
       require(Strategies.contains(s), s"unknown quantile strategy '$s' (${Strategies.mkString("/")})")
     }
-    val g = groupCols.map(col)
-
-    // 1. range shuffle + local sort; mid encodes (partition, position).
-    //    Null values are excluded up front (SQL/DuckDB quantile
-    //    semantics: quantiles are over the non-null values; without the
-    //    filter, nulls sort first and shift every rank, and a
-    //    percentile landing on a null rank would sum to a wrong value).
-    val keys = g :+ col(valCol)
-    val sorted = df
-      .select((groupCols :+ valCol).map(col): _*)
+    // Null values are excluded up front (SQL/DuckDB quantile semantics:
+    // quantiles are over the non-null values; a null would take a rank
+    // and shift every position after it)
+    val rows = df.select((groupCols :+ valCol).map(col): _*)
       .filter(col(valCol).isNotNull)
-      .repartitionByRange(keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-
-    // 2. tiny per-(partition, group) skeleton: row count + first id.
-    //    #rows = #partitions × #groups-touching-them — broadcastable at
-    //    any data scale (it grows with the cluster, not the data).
-    val pid = graft.plans.PartitionIds.pid(col("__mid")).as("__pid")
-    val skel = sorted
-      .groupBy((pid +: g): _*)
-      .agg(count(lit(1)).as("__c"), min(col("__mid")).as("__minmid"))
-    val wOff = Window.partitionBy(g: _*)
-      .orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val off = skel
-      .withColumn("__off", sum(col("__c")).over(wOff) - col("__c"))
-      .withColumn("__n", sum(col("__c")).over(Window.partitionBy(g: _*)))
-
-    // 3. exact global rank, then the interpolated quantiles. The
-    //    offsets side is renamed wholesale — it shares lineage with
-    //    `sorted`, and same-name references across a self-derived join
-    //    are ambiguous.
-    val offR = off.select(
-      (col("__pid") +:
-        groupCols.zipWithIndex.map { case (c, i) => col(c).as(s"__g$i") }) ++
-        Seq(col("__minmid"), col("__off"), col("__n")): _*)
-    val cond = groupCols.zipWithIndex
-      .map { case (c, i) => col(c) <=> col(s"__g$i") }
-      .foldLeft(graft.plans.PartitionIds.pid(col("__mid")) === col("__pid"))(_ && _)
-    val ranked = sorted
-      .join(broadcast(offR), cond)
-      .select(
-        (groupCols.map(col) :+
-          col(valCol).as("__v") :+
-          (col("__mid") - col("__minmid") + col("__off")).cast("double").as("__rn") :+
-          col("__n").cast("double").as("__n2")): _*)
+    val ranked =
+      if (counts) Ranks.positions(
+        rows.groupBy((groupCols :+ valCol).map(col): _*).agg(count(lit(1)).as("__w")),
+        groupCols, valCol, Some("__w"))
+      else Ranks.positions(rows, groupCols, valCol, None)
 
     // Each strategy is a different pick/blend of the same two neighbor
-    // ranks floor(idx)/ceil(idx), spelled out as explicit arithmetic so
-    // an external engine computes bit-identical results. `nearest`
-    // rounds half-up (round() is half-away-from-zero in both Spark's
+    // ranks floor(idx)/ceil(idx): a row contributes the value for each
+    // neighbor rank inside its position range [lo, hi]. Spelled out as
+    // explicit arithmetic so an external engine computes bit-identical
+    // results; on raw rows (lo = hi = the row's rank) this is the
+    // per-row textbook expression. Only two terms are ever non-zero and
+    // two-term FP addition is commutative, so the sum does not depend
+    // on row order or on which input fed the core. `nearest` rounds
+    // half-up (round() is half-away-from-zero in both Spark's
     // BigDecimal HALF_UP and DuckDB's std::round for the non-negative
     // idx). `midpoint` sums two half-weights, which collapse to 1.0
-    // when idx is integral and floor == ceil match the same rank.
+    // when idx is integral and floor == ceil.
     def q(p: Double, strategy: String): Column = {
-      val idx = (col("__n2") - 1) * p
-      val rn = col("__rn")
-      val v = col("__v")
-      strategy match {
+      val idx = (col("__n").cast("double") - 1) * p
+      val v = col(valCol)
+      val fl = floor(idx)
+      val ce = ceil(idx)
+      def at(rank: Column, x: Column): Column =
+        when(rank >= col("__lo") && rank <= col("__hi"), x).otherwise(lit(0.0))
+      sum(strategy match {
         case "linear" =>
-          sum(when(rn === floor(idx) || rn === ceil(idx),
-            v * (lit(1.0) - abs(rn - idx))).otherwise(lit(0.0)))
-        case "lower" => sum(when(rn === floor(idx), v).otherwise(lit(0.0)))
-        case "higher" => sum(when(rn === ceil(idx), v).otherwise(lit(0.0)))
-        case "nearest" => sum(when(rn === round(idx, 0), v).otherwise(lit(0.0)))
-        case "midpoint" =>
-          sum(when(rn === floor(idx), v * 0.5).otherwise(lit(0.0))
-            + when(rn === ceil(idx), v * 0.5).otherwise(lit(0.0)))
-      }
+          // ceil counts only when it differs from floor: at an integral
+          // idx the floor term already carries the whole weight
+          at(fl, v * (lit(1.0) - abs(fl - idx))) +
+            at(when(ce =!= fl, ce), v * (lit(1.0) - abs(ce - idx)))
+        case "lower" => at(fl, v)
+        case "higher" => at(ce, v)
+        case "nearest" => at(round(idx, 0), v)
+        case "midpoint" => at(fl, v * 0.5) + at(ce, v * 0.5)
+      })
     }
-    ranked
+    val out = ranked.table
       .groupBy(groupCols.map(col): _*)
       .agg(ps.head match { case (name, p, s) => q(p, s).as(name) },
         ps.tail.map { case (name, p, s) => q(p, s).as(name) }: _*)
+    // one row per group, and pass 1 counted the groups exactly: a small
+    // result gets the rank tables' broadcast hint, so a caller joining
+    // it back onto the data (fillNullStrategy) does not shuffle the
+    // data side — the planner sees an ExistingRDD with no size estimate
+    if (ranked.groups.length <= Ranks.BroadcastRankRows) broadcast(out) else out
   }
 }

@@ -124,8 +124,6 @@ object Vocab {
     val bg = docs.select(col(idCol).as("id"),
         explode(tokenNgrams(col(textCol), "p", "w")).as("z"))
       .select(col("id"), col("z.p").as("p"), col("z.w").as("w"))
-      // no-op filter kept: without it the sf0.1 final plan goes from 2 scans/1 reuse to 3/0
-      .filter(col("p").isNotNull && col("w").isNotNull)
     val c2 = bg.groupBy(col("p"), col("w")).agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("p")).agg(sum(col("c2")).as("c1"))
     bg.join(c2.join(c1, Seq("p")), Seq("p", "w"))
@@ -167,8 +165,6 @@ object Vocab {
       l1: Double = 0.1): DataFrame = {
     requireWeights(l3, l2, l1)
     val tg = trigrams(docs, idCol, textCol)
-      // no-op filter kept: without it the sf0.1 final plan goes from 2 scans/5 reuses to 7/0
-      .filter(col("u").isNotNull && col("v").isNotNull && col("w").isNotNull)
     val c3 = tg.groupBy(col("u"), col("v"), col("w")).agg(count(lit(1)).as("c3"))
     val totalT = c3.agg(sum(col("c3")).cast("double").as("__T"))
     val (c12, c23, c2m, cw) = trigramMarginals(c3)
@@ -245,7 +241,8 @@ object Vocab {
     // shard models) merge by summing counts — otherwise the doc-sized
     // join below would fan occurrences out and inflate every average
     val c3 = model.select(col("u"), col("v"), col("w"), col("c3"))
-      // not-null filter kept: without it an sf0.1 model-scoring plan goes from 2 scans/5 reuses to 7/0
+      // a caller-supplied model (e.g. read back from parquet) may hold
+      // null n-gram fields, which would count into the marginals
       .filter(col("u").isNotNull && col("v").isNotNull && col("w").isNotNull)
       .groupBy(col("u"), col("v"), col("w")).agg(sum(col("c3")).as("c3"))
     val (c12, c23, c2m, cw) = trigramMarginals(c3)
@@ -715,7 +712,6 @@ object Vocab {
       .groupBy(col("tok")).agg(count(lit(1)).as("c1"))
     val bg = docs.select(explode(tokenNgrams(col(textCol), "p", "w")).as("z"))
       .select(col("z.p").as("p"), col("z.w").as("w"))
-      .filter(col("p").isNotNull && col("w").isNotNull)
       .groupBy(col("p"), col("w")).agg(count(lit(1)).as("c_ab"))
     val t1 = uni.agg(sum(col("c1")).cast("double").as("__T1"))
     val t2 = bg.agg(sum(col("c_ab")).cast("double").as("__T2"))

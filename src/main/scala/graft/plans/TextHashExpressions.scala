@@ -547,18 +547,17 @@ case class WhitespaceTokens(child: Expression) extends UnaryExpression {
 /** Adjacent whitespace-token n-grams, n = `fieldNames.size`:
   * array<struct<f1:string, …, fn:string>>, one struct per window in
   * document order — the scan-side occurrence builder of the n-gram LM
-  * family ([[graft.operators.Vocab]]). The fields are declared
-  * NULLABLE although the kernel never emits a null token: the type then
-  * equals that of the equivalent `zip_with` struct-lambda form (the
-  * spec's reference), so the callers' output schemas and their
-  * `isNotNull` filters on the fields (which a non-nullable field lets
-  * the optimizer fold away) keep their meaning. */
+  * family ([[graft.operators.Vocab]]). The kernel never emits a null
+  * token, so the fields are declared non-nullable: the optimizer then
+  * knows the n-gram columns are never null, and the lm branches that
+  * aggregate them stay canonically equal (exchange reuse) without a
+  * not-null filter on each. */
 case class TokenNgrams(child: Expression, fieldNames: Seq[String])
     extends UnaryExpression {
   require(fieldNames.size >= 2, "an n-gram needs n >= 2 fields")
 
   override def dataType: DataType = ArrayType(
-    StructType(fieldNames.map(StructField(_, StringType, nullable = true))),
+    StructType(fieldNames.map(StructField(_, StringType, nullable = false))),
     containsNull = false)
   override def nullable: Boolean = child.nullable
 

@@ -1582,28 +1582,28 @@ object Relational {
           count(lit(1)).as("n"))
     }),
 
-    // whole-frame Spearman matrix: global average-tie ranks via the
-    // distributed two-scan cumsum (avgRank — no single-partition
-    // window), then the one-pass co-moment matrix over the ranks
+    // whole-frame Spearman matrix: global average-tie ranks from the
+    // two-pass rank core (Ranks — no single-partition window), then
+    // the one-pass co-moment matrix over the ranks
     "q_corr_matrix_spearman" -> ((s, dir) =>
       corrMatrix(t(s, dir, "lineitem"),
         Seq("l_quantity", "l_extendedprice", "l_discount"),
         method = "spearman")),
 
-    // global Series.rank("average") as a query: the distributed
-    // two-scan cumsum over per-value counts — what a naive
-    // Window.orderBy(price) would funnel through one task
+    // global Series.rank("average") as a query: the two-pass rank
+    // core over per-value counts — what a naive Window.orderBy(price)
+    // would funnel through one task
     "q_rank_global" -> ((s, dir) =>
-      avgRank(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
+      graft.operators.Ranks.avgRank(t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
         "o_totalprice", "price_rank")
         .select(col("o_orderkey"), col("price_rank"))),
 
     // the remaining polars tie methods (min/max/dense) — all three in
-    // ONE two-pass over the same counts table, oracle-checked against
-    // DuckDB's global rank()/dense_rank() windows (single-node there;
-    // the Spark side never builds a global window)
+    // ONE rank-core call over the same counts table, oracle-checked
+    // against DuckDB's global rank()/dense_rank() windows (single-node
+    // there; the Spark side never builds a global window)
     "q_rank_global_methods" -> ((s, dir) =>
-      rankGlobal(
+      graft.operators.Ranks.rankGlobal(
         t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice")),
         "o_totalprice",
         Seq("rank_min" -> "min", "rank_max" -> "max", "rank_dense" -> "dense"))
@@ -1646,253 +1646,6 @@ object Relational {
         .select(col("o_orderkey"), col("o.prio").as("prio"),
           col("o.price_eur").as("price_eur")))
   )
-
-  /** Global average-tie rank of `c` appended as column `out` — the
-    * distributed form of polars `Series.rank("average")`. NO global
-    * single-partition window: the CDF's minimal representation (one
-    * (value, count) row per distinct value) is range-partitioned by
-    * value, locally sorted, and cumulated with the withRowIndex
-    * RDD-layer two-pass — `queryExecution.toRdd` finalizes the
-    * physical plan (AQE included) ONCE, pass 1 collects one long per
-    * partition (bounded by numShufflePartitions — cluster config,
-    * never data), pass 2 turns the running sum + broadcast offsets
-    * into the rank, and both passes provably share every shuffle
-    * stage because they run over the same RDD object. Cost: one
-    * column-pruned scan, one hash-agg exchange, one counts-sized
-    * range shuffle, one value-keyed join back; nothing corpus-sized
-    * ever funnels through a single task.
-    *
-    * Dropping to the RDD layer here replaced the previous in-plan
-    * offsets form (a __pid-keyed aggregate + single-partition window
-    * + broadcast join over a ReusedExchange): that plan was correct
-    * and scale-flat but paid ~6 extra AQE stage-materialization jobs
-    * of pure coordination latency per call (measured: the r10 bench's
-    * q_rank_global 2.5× regression was almost entirely inter-job gap,
-    * not work — job-time sum was identical with AQE off). The
-    * two-pass form runs THREE jobs total (range sampling, partition
-    * sums, the caller's action), keeps nothing in the cache, and
-    * keeps the layout guarantee by construction rather than by
-    * exchange-reuse canonicalization. Like withRowIndex, the bounded
-    * pass-1 job runs eagerly at call time. Rows with a null value
-    * keep a null rank. */
-  def avgRank(df: DataFrame, c: String, out: String): DataFrame =
-    df.join(avgRankTable(df, c, out), Seq(c), "left")
-
-  /** The (value → rank) table behind [[avgRank]]: one row per distinct
-    * value of `c` in `df`, rank in column `out`. Exposed so callers
-    * ranking SEVERAL columns of the same frame (corrMatrix spearman)
-    * can compute each table from the BASE frame and attach them with
-    * independent joins — computing column k's table from the
-    * already-joined accumulator would make each eager pass-1 job
-    * recompute every previous join. */
-  def avgRankTable(df: DataFrame, c: String, out: String): DataFrame =
-    rankTable(df, c, Seq(out -> "average"))
-
-  /** [[avgRankTable]] for SEVERAL same-typed columns of one frame in a
-    * SINGLE two-pass: the columns melt to (cid, value) rows, ONE
-    * counts aggregation + ONE (cid, value) range shuffle rank all k
-    * columns together, and the bounded pass-1 stats collect runs once
-    * (per-(partition, cid) sums — ≤ partitions × k rows). vs k
-    * independent [[avgRankTable]] calls: one corpus scan instead of k
-    * column-pruned scans, 2 eager jobs instead of 2k, one counts
-    * exchange instead of k (same total key volume — the melt adds no
-    * data, it concatenates the k per-column count tables into one).
-    * Requires a shared column type (the melt array is homogeneous);
-    * [[corrMatrix]] falls back to per-column tables otherwise.
-    * Returns one (value-named-as-col, out) table per column, all
-    * slices of the SAME ranked plan — the range shuffle is computed
-    * once and reused across their joins. */
-  def avgRankTables(df: DataFrame, cols: Seq[String], outs: Seq[String]): Seq[DataFrame] = {
-    require(cols.nonEmpty && cols.length == outs.length,
-      "avgRankTables needs one output name per column")
-    val types = cols.map(c => df.schema(c).dataType).distinct
-    require(types.length == 1, s"avgRankTables needs one shared column type, got $types")
-    val valueType = types.head
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    // deliberately NOT persisted — see rankTable for the measured
-    // trade (the double-computed agg beats the cache round-trip)
-    val counts = df
-      .select(posexplode(array(cols.map(col): _*)).as(Seq("__cid", "__v")))
-      .filter(col("__v").isNotNull)
-      .groupBy(col("__cid"), col("__v")).agg(count(lit(1)).as("__n"))
-    val sorted = counts.repartitionByRange(nPart, col("__cid"), col("__v"))
-      .sortWithinPartitions(col("__cid"), col("__v"))
-    val rdd = sorted.queryExecution.toRdd
-    val partStats =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        val m = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
-        it.foreach { r =>
-          val prev = m.getOrElse(r.getInt(0), (0L, 0L))
-          m(r.getInt(0)) = (prev._1 + r.getLong(2), prev._2 + 1)
-        }
-        Iterator.single((pid, m.toSeq))
-      }.collect().sortBy(_._1)
-    // per-cid prefix offsets in pid order (range partitioning orders
-    // partitions by (cid, value), so pid order IS value order per cid)
-    val offsets = scala.collection.mutable.HashMap.empty[(Int, Int), (Long, Long)]
-    val runN = scala.collection.mutable.HashMap.empty[Int, Long]
-    val runK = scala.collection.mutable.HashMap.empty[Int, Long]
-    for ((pid, seq) <- partStats; (cid, (sn, ck)) <- seq.sortBy(_._1)) {
-      offsets((pid, cid)) = (runN.getOrElse(cid, 0L), runK.getOrElse(cid, 0L))
-      runN(cid) = runN.getOrElse(cid, 0L) + sn
-      runK(cid) = runK.getOrElse(cid, 0L) + ck
-    }
-    val bOff = spark.sparkContext.broadcast(offsets.toMap)
-    val ranksRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var curCid = Int.MinValue
-      var run = 0L
-      it.map { r =>
-        val rc = r.copy() // unsafe rows are reused per input batch
-        val cid = rc.getInt(0)
-        if (cid != curCid) {
-          curCid = cid
-          run = bOff.value((pid, cid))._1
-        }
-        val n = rc.getLong(2)
-        run += n
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](cid, rc.get(1, valueType), run - (n - 1) / 2.0))
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__cid",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("__v", valueType),
-      org.apache.spark.sql.types.StructField("__rank",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-    val all = org.apache.spark.sql.GraftShim
-      .internalCreateDataFrame(spark, ranksRdd, schema)
-    cols.indices.map { i =>
-      val slice = all.filter(col("__cid") === i)
-        .select(col("__v").as(cols(i)), col("__rank").as(outs(i)))
-      // exact per-column distinct count from the pass-1 stats: small
-      // rank tables broadcast their attach join (see rankTable) —
-      // corrMatrix(spearman) on lineitem turns ALL THREE sort-merge
-      // attach joins of the full frame into broadcast-hash joins at
-      // sf0.1 (quantity: 50 rows, discount: 11, price: 583k — under
-      // the 1M bound there; a continuous column at production scale
-      // exceeds it and reverts to SMJ). One broadcast PER COLUMN can
-      // coexist in a single plan, so the per-table bound must be read
-      // times the caller's column count — see BroadcastRankRows.
-      if (runK.getOrElse(i, 0L) <= BroadcastRankRows) broadcast(slice) else slice
-    }
-  }
-
-  /** polars Series.rank for every tie method with a distributed form —
-    * "average"/"min"/"max"/"dense" — appended in one pass per call
-    * (`outs` is (output column, method)*). All four are arithmetic on
-    * the same two running counters the two-pass cumsum maintains
-    * (rows ≤ v and distinct values ≤ v), so asking for several
-    * methods costs ONE counts shuffle, not one per method. "ordinal"
-    * is deliberately absent here: it ranks by arrival order within
-    * ties, which is row-level (withRowIndex over a sort), not a
-    * property of the value CDF. */
-  def rankGlobal(df: DataFrame, c: String, outs: Seq[(String, String)]): DataFrame =
-    df.join(rankTable(df, c, outs), Seq(c), "left")
-
-  /** One (value, rank…) row per distinct value, one column per
-    * requested method. See [[avgRank]] for the two-pass layout
-    * contract. average is a double (tie midpoint); min/max/dense are
-    * longs. */
-  private def rankTable(
-      df: DataFrame, c: String, outs: Seq[(String, String)]): DataFrame = {
-    val methods = Set("average", "min", "max", "dense")
-    require(outs.nonEmpty && outs.forall(o => methods.contains(o._2)),
-      s"rank methods must be among ${methods.mkString("/")}: $outs")
-    val spark = df.sparkSession
-    val nPart = spark.sessionState.conf.numShufflePartitions
-    // deliberately NOT persisted, although the range exchange's
-    // partitioner SAMPLES its child and therefore executes the counts
-    // agg twice (sample job + map stage): the A/B measured the
-    // transient MEMORY_AND_DISK cache SLOWER on both scales
-    // (q_rank_global 1.65 -> 1.12s at sf0.1, 1.42 -> 1.26s at the 10x
-    // stress dir; spearman matrix 2.81 -> 2.30s) — the agg is a
-    // column-pruned scan + map-side partial whose recompute beats the
-    // cache write+read round-trip. Correctness is unaffected: the
-    // bounds are sampled once per RDD graph, and the stats/rank jobs
-    // read the SAME range-shuffle map output either way.
-    val counts = df.select(col(c)).na.drop()
-      .groupBy(col(c)).agg(count(lit(1)).as("__n"))
-    val sorted = counts.repartitionByRange(nPart, col(c))
-      .sortWithinPartitions(col(c))
-    val keyField = sorted.schema.fields(0)
-    val rdd = sorted.queryExecution.toRdd
-    val partStats =
-      rdd.mapPartitionsWithIndex { (pid, it) =>
-        var sumN = 0L
-        var cnt = 0L
-        it.foreach { r => sumN += r.getLong(1); cnt += 1 }
-        Iterator.single((pid, sumN, cnt))
-      }.collect().sortBy(_._1)
-    val offN = spark.sparkContext.broadcast(
-      partStats.map(_._2).scanLeft(0L)(_ + _))
-    val offK = spark.sparkContext.broadcast(
-      partStats.map(_._3).scanLeft(0L)(_ + _))
-    val keyType = keyField.dataType
-    val methodsArr = outs.map(_._2).toArray
-    val ranksRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run = offN.value(pid)
-      var idx = offK.value(pid)
-      it.map { r =>
-        val rc = r.copy() // unsafe rows are reused per input batch
-        val n = rc.getLong(1)
-        run += n
-        idx += 1
-        val vals = new Array[Any](methodsArr.length + 1)
-        vals(0) = rc.get(0, keyType)
-        var i = 0
-        while (i < methodsArr.length) {
-          vals(i + 1) = methodsArr(i) match {
-            // avg rank of a tie group = (count ≤ v) − (n_eq − 1)/2
-            case "average" => run - (n - 1) / 2.0
-            case "min" => run - n + 1
-            case "max" => run
-            case "dense" => idx
-          }
-          i += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    val schema = org.apache.spark.sql.types.StructType(
-      keyField +: outs.map { case (name, m) =>
-        org.apache.spark.sql.types.StructField(name,
-          if (m == "average") org.apache.spark.sql.types.DoubleType
-          else org.apache.spark.sql.types.LongType,
-          nullable = false)
-      })
-    val table = org.apache.spark.sql.GraftShim
-      .internalCreateDataFrame(spark, ranksRdd, schema)
-    // the pass-1 stats collect already knows the EXACT distinct-value
-    // count (offK's last entry) — when the rank table is small, hint
-    // broadcast so the caller's value-keyed attach join stops
-    // shuffling the data side (the planner sees an ExistingRDD with no
-    // stats and would pick a sort-merge join: two exchanges + sorts of
-    // the full frame for an 11-row discount table). Data-adaptive like
-    // AQE but with an exact count, so it is scale-safe: a continuous
-    // column (price at 100 TB) exceeds the bound and keeps SMJ.
-    if (offK.value.last <= BroadcastRankRows) broadcast(table) else table
-  }
-
-  /** Rank/quantile attach tables at or under this EXACT row count get
-    * a broadcast hint. Honest sizing: the (value, rank) payload is
-    * ~16 B/row, but a built broadcast HashedRelation costs several
-    * times that (UnsafeRow framing + hash-map slots + pointer array —
-    * realistically ~70–100 B/row), so the 1M cap is ≤ ~100 MB built
-    * per table, and [[avgRankTables]] can hold one such broadcast per
-    * rank column in a single plan (3 columns in the corr-matrix
-    * family → worst case ~300 MB per executor). That is inside the
-    * "few hundred MB is usually fine" broadcast envelope and far
-    * under the 8 GB / 512M-row hard cap at any executor count —
-    * broadcasts replicate per executor, not per task, so 1000-executor
-    * fan-out multiplies cluster-wide bytes but not per-executor
-    * memory. A caller ranking MANY columns at once should lower the
-    * bound proportionally; the enum-like domains (flags, quantities,
-    * buckets) this exists for sit orders of magnitude below it. */
-  private val BroadcastRankRows = 1000000L
 
   /** polars rolling_map — the generic bounded-window kernel the named
     * rolling family doesn't cover: the last `n` values of `c` (per
@@ -1944,17 +1697,16 @@ object Relational {
           avg(col(c)).over(Window.partitionBy(groupCols.map(col): _*)))
       case "median" =>
         // boundedDomain: the caller vouches the value domain is
-        // enum-like (e.g. quantity 1..50), so the median comes from
-        // the counts-table path — the only data-sized shuffle is a
-        // map-side-partial (group, value) count instead of a range
-        // exchange of every row (bit-identical results; see
+        // enum-like (e.g. quantity 1..50), so the rank core gets the
+        // (group, value) counts table — the only data-sized shuffle is
+        // a map-side-partial count instead of a range exchange of
+        // every row (bit-identical results; see
         // Quantiles.exactQuantilesCounts and the r15 stress A/B)
+        val median = Seq(("__fill", 0.5, "linear"))
         val med =
-          if (boundedDomain && groupCols.nonEmpty)
-            graft.operators.Quantiles
-              .exactQuantilesCounts(df, groupCols, c, Seq(("__fill", 0.5)))
-          else graft.operators.Quantiles
-            .exactQuantiles(df, groupCols, c, Seq(("__fill", 0.5)))
+          if (boundedDomain)
+            graft.operators.Quantiles.exactQuantilesCounts(df, groupCols, c, median)
+          else graft.operators.Quantiles.exactQuantilesStrategy(df, groupCols, c, median)
         if (groupCols.isEmpty) df.crossJoin(broadcast(med))
         else df.join(med, groupCols, "left")
       case other => throw new IllegalArgumentException(
@@ -1999,11 +1751,12 @@ object Relational {
     * merge order (the q_corr convention).
     *
     * `method = "spearman"` (polars corr(method="spearman")) replaces
-    * each column with its global average-tie rank via [[avgRank]]
-    * before the same one-pass co-moment aggregate — k extra
-    * column-pruned counting scans and k value-keyed joins, all
-    * distributed; the ranks themselves are exact integers/halves so
-    * the rank transform contributes no float drift. */
+    * each column with its global average-tie rank before the same
+    * one-pass co-moment aggregate: one [[graft.operators.Ranks]] core
+    * call per distinct column type (the columns of a type melt into
+    * one counts table) and k value-keyed joins, all distributed; the
+    * ranks themselves are exact integers/halves so the rank transform
+    * contributes no float drift. */
   def corrMatrix(df: DataFrame, cols: Seq[String], dp: Int = 4,
       method: String = "pearson"): DataFrame = {
     require(cols.length >= 2, "corrMatrix needs at least two columns")
@@ -2011,16 +1764,13 @@ object Relational {
       case "pearson" => df
       case "spearman" =>
         val base0 = df.select(cols.map(col): _*)
-        // one melted two-pass ranks all k columns together when types
-        // agree (one scan + one counts exchange + 2 eager jobs instead
-        // of k of each); mixed-type frames fall back to per-column
-        val tables =
-          if (cols.map(c => base0.schema(c).dataType).distinct.length == 1)
-            avgRankTables(base0, cols, cols.map(c => s"__r_$c"))
-          else cols.map(c => avgRankTable(base0, c, s"__r_$c"))
-        cols.zip(tables).foldLeft(base0) {
-          case (acc, (c, tbl)) => acc.join(tbl, Seq(c), "left")
-        }.select(cols.map(c => col(s"__r_$c").as(c)): _*)
+        val typeOf = cols.map(c => c -> base0.schema(c).dataType).toMap
+        val tables = cols.map(typeOf).distinct.flatMap { t =>
+          val same = cols.filter(typeOf(_) == t)
+          same.zip(graft.operators.Ranks.avgRankTables(base0, same, same.map(c => s"__r_$c")))
+        }.toMap
+        cols.foldLeft(base0)((acc, c) => acc.join(tables(c), Seq(c), "left"))
+          .select(cols.map(c => col(s"__r_$c").as(c)): _*)
       case other =>
         throw new IllegalArgumentException(s"unknown corr method '$other'")
     }

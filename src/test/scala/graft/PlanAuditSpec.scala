@@ -201,11 +201,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_quantile_nearest shares q_quantile's single range shuffle") {
-    val df = SparkEntry.queries("q_quantile_nearest")(spark, Sf)
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange"),
-      s"strategy quantiles re-shuffle per output:\n$plan")
+    // every strategy reads the one rank-core RDD: one range shuffle per
+    // call, however many strategies it mixes
+    assertOneRankCore(SparkEntry.queries("q_quantile_nearest")(spark, Sf), "q_quantile_nearest")
   }
 
   test("q_ann_lsh broadcasts only the declared small query side") {
@@ -487,13 +485,11 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_rank_global: no data-sized single-partition window") {
-    // the rank comes from the two-scan cumsum over per-value COUNTS;
-    // every Window in the plan must be partitioned (by the pinned
-    // partition id), never a global Window over the data
-    val p = planOf("q_rank_global")
-    val winArgs = p.linesIterator.filter(_.contains("windowspecdefinition")).mkString
-    assert(winArgs.isEmpty || winArgs.contains("__pid"),
-      s"q_rank_global window is not partitioned by __pid: $winArgs")
+    // the rank comes from the two-pass core over per-value COUNTS: one
+    // ExistingRDD scan, no live range exchange and no Window at all —
+    // a global Window over the data would funnel it through one task
+    val fin = assertOneRankCore(SparkEntry.queries("q_rank_global")(spark, Sf), "q_rank_global")
+    assert(!fin.contains("Window"), s"q_rank_global plans a window:\n$fin")
   }
 
   test("q_lm_trigram: occurrences shuffle at most twice, text never does") {
@@ -593,6 +589,21 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
+  /** The rank core's contract on a caller's final plan (see the avgRank
+    * pin below): exactly one ExistingRDD scan, no live range exchange,
+    * nothing left persisted. Returns the final plan. */
+  private def assertOneRankCore(df: org.apache.spark.sql.DataFrame, what: String): String = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val fin = finalPlanOf(df)
+    val existing = fin.linesIterator.count(_.contains("Scan ExistingRDD"))
+    val ranged = fin.linesIterator.count(_.contains("rangepartitioning"))
+    assert(existing == 1 && ranged == 0,
+      s"$what: not one finalized rank RDD: existing=$existing ranged=$ranged\n$fin")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      s"$what left frames in the cache after materialization")
+    fin
+  }
+
   test("avgRank: rank side is ONE finalized RDD plan, nothing left persisted") {
     // the two-pass contract: the partition sums and the rank map run
     // over the SAME finalized RDD (queryExecution.toRdd — the
@@ -607,7 +618,7 @@ class PlanAuditSpec extends SparkSpec {
     // across suites, and another test's localCheckpoint RDDs stay in
     // the persisted set until GC clears them — only NEW pins are ours
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val fin = finalPlanOf(graft.queries.Relational.avgRank(df, "price", "r"))
+    val fin = finalPlanOf(graft.operators.Ranks.avgRank(df, "price", "r"))
     val existing = fin.linesIterator.count(_.contains("Scan ExistingRDD"))
     val ranged = fin.linesIterator.count(_.contains("rangepartitioning"))
     assert(existing == 1 && ranged == 0,
@@ -619,9 +630,9 @@ class PlanAuditSpec extends SparkSpec {
   test("q_lm_trigram: corpus triples aggregate ONCE — marginals and total reuse the stage") {
     // two scans total (triple build + per-doc probe) and five reused
     // exchanges (c12/c23/c2m/cw marginals + the broadcast 1-row total
-    // all read the one triple stage). The uniform not-null filter on
-    // the triple stream is what keeps the branches canonically equal —
-    // a regression here multiplies corpus scans by the branch count.
+    // all read the one triple stage). The n-gram kernel's non-nullable
+    // fields keep the branches canonically equal — a regression here
+    // multiplies corpus scans by the branch count.
     val fin = finalPlanOf(SparkEntry.queries("q_lm_trigram")(spark, Sf))
     val scans = fin.linesIterator.count(_.contains("FileScan"))
     val reused = fin.linesIterator.count(_.contains("ReusedExchange"))

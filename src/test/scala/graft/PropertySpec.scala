@@ -69,7 +69,7 @@ class PropertySpec extends SparkSpec {
       (rank().over(Window.orderBy(col("v"))) +
         (count(lit(1)).over(Window.partitionBy(col("v"))) - 1) / lit(2.0)).as("r"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val got = graft.queries.Relational.avgRank(df, "v", "r")
+    val got = graft.operators.Ranks.avgRank(df, "v", "r")
       .select("id", "r").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
       .toMap

@@ -52,29 +52,65 @@ class QuantilesSpec extends SparkSpec {
       (s"g${i % 4}", v)
     }
     val df = rows.toDF("g", "v")
-    val ps = Seq("p0" -> 0.0, "p03" -> 0.03, "p25" -> 0.25, "p50" -> 0.5,
-      "p77" -> 0.777, "p100" -> 1.0)
-    def toMap(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => r.getString(0) ->
-        (1 to ps.length).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
-      .toMap
-    val range = toMap(Quantiles.exactQuantiles(df, Seq("g"), "v", ps))
-    val counts = toMap(Quantiles.exactQuantilesCounts(df, Seq("g"), "v", ps))
-    assert(range == counts, s"range=$range counts=$counts")
-    assertThrows[IllegalArgumentException](
-      Quantiles.exactQuantilesCounts(df, Nil, "v", ps))
+    // every strategy at every p, grouped and global
+    val ps = for {
+      (name, p) <- Seq("p0" -> 0.0, "p03" -> 0.03, "p25" -> 0.25, "p50" -> 0.5,
+        "p77" -> 0.777, "p100" -> 1.0)
+      s <- Quantiles.Strategies.toSeq.sorted
+    } yield (s"${name}_$s", p, s)
+    for (groups <- Seq(Seq("g"), Nil)) {
+      def toMap(d: org.apache.spark.sql.DataFrame) = d.collect()
+        .map(r => groups.indices.map(r.getString) ->
+          ps.indices.map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(groups.length + i))))
+        .toMap
+      val range = toMap(Quantiles.exactQuantilesStrategy(df, groups, "v", ps))
+      val counts = toMap(Quantiles.exactQuantilesCounts(df, groups, "v", ps))
+      assert(range.size == (if (groups.isEmpty) 1 else 4))
+      assert(range == counts, s"groups=$groups range=$range counts=$counts")
+    }
   }
 
-  test("the skeleton and rank paths share one range shuffle at runtime") {
-    // both consumers of the range-partitioned data must resolve to the
-    // same exchange (AQE reuse) — otherwise the corpus is scanned and
-    // shuffled twice per quantile call
-    val df = Quantiles.exactQuantiles(
-      Tables.t(spark, Sf, "lineitem").select(col("l_returnflag"), col("l_extendedprice")),
-      Seq("l_returnflag"), "l_extendedprice", Seq("p50" -> 0.5))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange"), s"range shuffle computed twice:\n$plan")
+  test("a quantile call reads ONE finalized rank-core RDD for all five strategies") {
+    // the rank core's contract: pass 1 and pass 2 run over the same
+    // finalized RDD, so the caller's plan holds one ExistingRDD scan
+    // and NO live range exchange (the range shuffle is inside the
+    // pre-finalized subplan) — for the raw rows and the counts table
+    // alike, however many strategies the call mixes; nothing cached
+    val li = Tables.t(spark, Sf, "lineitem").select(col("l_returnflag"), col("l_extendedprice"))
+    val ps = Quantiles.Strategies.toSeq.sorted.map(s => (s, 0.3, s))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (df <- Seq(
+        Quantiles.exactQuantilesStrategy(li, Seq("l_returnflag"), "l_extendedprice", ps),
+        Quantiles.exactQuantilesCounts(li, Seq("l_returnflag"), "l_extendedprice", ps))) {
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      val existing = plan.linesIterator.count(_.contains("Scan ExistingRDD"))
+      val ranged = plan.linesIterator.count(_.contains("rangepartitioning"))
+      assert(existing == 1 && ranged == 0,
+        s"quantiles not one finalized rank RDD: existing=$existing ranged=$ranged\n$plan")
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "quantiles left frames in the cache")
+  }
+
+  test("rank and quantile queries do not depend on the shuffle partition count") {
+    // the rank core stitches global positions from per-partition
+    // offsets: 1 partition (no stitching) and 7 (groups split across
+    // partitions) must give the same rows
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def rows(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      Seq("q_quantile", "q_quantile_nearest", "q_fill_median", "q_qcut", "q_winsorize",
+        "q_rank_global", "q_rank_global_methods", "q_corr_matrix_spearman")
+        .map(q => q -> SparkEntry.queries(q)(spark, Sf).collect().map(_.toSeq).toSet).toMap
+    }
+    val (one, seven) = try (rows(1), rows(7)) finally spark.conf.set(key, prev)
+    for ((q, r) <- one) {
+      assert(r.nonEmpty, s"$q returned no rows")
+      assert(r == seven(q), s"$q differs across partition counts: " +
+        s"${(r diff seven(q)).take(3)} vs ${(seven(q) diff r).take(3)}")
+    }
   }
 
   test("interpolation strategies pick/blend the documented neighbor ranks") {

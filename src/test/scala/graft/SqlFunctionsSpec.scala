@@ -183,7 +183,7 @@ class SqlFunctionsSpec extends SparkSpec {
   test("rankGlobal tie methods agree on a controlled multiset") {
     import spark.implicits._
     val df = Seq(10.0, 10.0, 20.0, 5.0).toDF("v")
-    val got = graft.queries.Relational.rankGlobal(df, "v",
+    val got = graft.operators.Ranks.rankGlobal(df, "v",
         Seq("a" -> "average", "mn" -> "min", "mx" -> "max", "d" -> "dense"))
       .collect().map(r => r.getDouble(0) ->
         (r.getDouble(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
@@ -205,7 +205,7 @@ class SqlFunctionsSpec extends SparkSpec {
         (count(lit(1)).over(Window.partitionBy(col("v"))) - 1) / lit(2.0)).as("r"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     def got(d: org.apache.spark.sql.DataFrame) =
-      graft.queries.Relational.avgRank(d, "v", "r")
+      graft.operators.Ranks.avgRank(d, "v", "r")
         .select("id", "r").collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
         .toMap
@@ -222,16 +222,16 @@ class SqlFunctionsSpec extends SparkSpec {
       ((i % 13).toDouble, (i * 7 % 5).toDouble, (300 - i).toDouble % 9)
     }.toDF("a", "b", "c")
     val cols = Seq("a", "b", "c")
-    val melted = graft.queries.Relational
+    val melted = graft.operators.Ranks
       .avgRankTables(df, cols, cols.map(c => s"r_$c"))
     cols.zip(melted).foreach { case (c, tbl) =>
       val got = tbl.collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-      val want = graft.queries.Relational.avgRankTable(df, c, s"r_$c")
+      val want = graft.operators.Ranks.avgRankTable(df, c, s"r_$c")
         .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
       assert(got == want, s"column $c rank table diverged")
     }
     intercept[IllegalArgumentException](
-      graft.queries.Relational.avgRankTables(
+      graft.operators.Ranks.avgRankTables(
         df.withColumn("s", lit("x")), Seq("a", "s"), Seq("ra", "rs")))
   }
 
