@@ -1,13 +1,14 @@
 package graft.functions
 
-/** Driver-side k-means for the ANN family (SURVEY.md §2.3), trained
+/** In-memory k-means for the ANN family (SURVEY.md §2.3), trained
   * on its one bounded sample (`Similarity.trainingSample`): the
   * quantizer sees thousands of vectors, the assignment (the 100 TB
   * part) stays a column expression over broadcast centroids
-  * ([[graft.operators.Similarity.ivfAssign]]). [[spherical]] is the IVF
-  * quantizer of `ivfTopK`, `Pq.ivfPqTopK`, `Dedup.semanticPairs` and
-  * `Sampling.clusterBalancedSample`; [[euclidean]] trains the PQ
-  * sub-codebooks, on the same sample in `Pq.ivfPqTopK`.
+  * ([[graft.operators.Similarity.ivfAssign]]). [[spherical]] is the
+  * driver-side IVF quantizer of `ivfTopK`, `Pq.ivfPqTopK`,
+  * `Dedup.semanticPairs` and `Sampling.clusterBalancedSample`;
+  * [[euclidean]] trains the PQ sub-codebooks, one Spark task per
+  * subspace, on the same sample in `Pq.ivfPqTopK`.
   */
 object KMeans {
 

@@ -1,22 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, RelationalGroupedDataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.plans.{BloomColumns, TextHashColumns}
 
 /** Deduplication family for pretraining-scale corpora (SURVEY.md §2.3).
-  * Every variant produces candidate pairs through a key-equality
-  * shuffle join (hash key, band bucket, shingle hash, or LSH bucket) —
-  * never an O(n²) cross join — so cost stays linear-ish in corpus size
-  * at 100 TB. Mega-buckets (stop-shingles / degenerate bands) are
-  * capped.
+  * Every variant produces candidate pairs per shared key (hash key,
+  * band bucket, shingle hash, or LSH bucket) — one hash shuffle on the
+  * key and a per-bucket pair walk ([[Dedup.bucketPairs]]), never an
+  * O(n²) cross join — so cost stays linear-ish in corpus size at
+  * 100 TB. Mega-buckets (stop-shingles / degenerate bands) are capped.
   *
   * Shared shape: candidate (id_a, id_b) pairs are generated and
   * `distinct`-ed carrying ONLY the two ids (8-byte keys through the
-  * bucket shuffle — signatures stay out of the candidate join), then
+  * bucket shuffle — signatures stay out of the candidate pass), then
   * the per-doc signature/fingerprint is attached once per side via a
   * plain equi-join on the id so each pair is scored exactly once. The
   * candidate table grows linearly with corpus size (web-scale dup
@@ -184,7 +185,7 @@ object Dedup {
       threshold: Double,
       maxBucketSize: Int): DataFrame = {
     // band keys only — the 64-long signature is NOT carried into the
-    // bucket shuffle/join; it is re-attached per candidate pair below.
+    // bucket shuffle; it is re-attached per candidate pair below.
     val banded = sigs.select(
       col("id"),
       posexplode(bandBuckets(col("sig"), numHashes, bands)).as(Seq("band", "bucket")))
@@ -308,15 +309,17 @@ object Dedup {
     * table (id, sig): the signature is cut into `maxHamming + 1`
     * chunks, so any pair within the hamming budget agrees on at least
     * one chunk (pigeonhole) and becomes a candidate; verified by
-    * bit_count of the xor. The 8-byte signature rides the chunk rows
-    * through the bucket shuffle (see the body comment) — no per-side
-    * re-attach join, so the signature subtree executes exactly once. */
+    * bit_count of the xor. Candidates come from one [[bucketPairs]]
+    * pass over the (chunk, key) buckets — one shuffle, no window, no
+    * self-join — with the 8-byte signature riding the chunk rows as
+    * the pass's payload (see the body comment), so the signature
+    * subtree executes exactly once. */
   def hamming64Pairs(
       sigs: DataFrame,
       maxHamming: Int,
       maxBucketSize: Int): DataFrame = {
     // The 8-byte signature RIDES the chunk rows instead of being
-    // re-attached per side: the old two attach-joins re-executed the
+    // re-attached per side: two attach-joins would re-execute the
     // whole signature subtree twice more (for [[phashPairs]] that is
     // two more full JDK image decodes of the corpus; for
     // [[simhashPairs]] two more text-kernel passes — branches below a
@@ -325,13 +328,7 @@ object Dedup {
     // at any scale. The cross-chunk dedup keys stay (id_a, id_b) —
     // sigs are functionally dependent on the ids, so grouping by all
     // four changes nothing; distinct cardinality is identical.
-    val chunked = hammingChunked(sigs, maxHamming)
-    val capped = capBuckets(chunked, Seq("chunk", "key"), maxBucketSize)
-    capped.select(col("chunk"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
-      .join(capped.select(col("chunk"), col("key"), col("id").as("id_b"), col("sig").as("sig_b")),
-        Seq("chunk", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sig_a"), col("sig_b"))
+    bucketPairs(hammingChunked(sigs, maxHamming), Seq("chunk", "key"), Seq("sig"), maxBucketSize)
       .distinct()
       .select(col("id_a"), col("id_b"),
         bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
@@ -394,8 +391,9 @@ object Dedup {
 
   /** Exact n-gram Jaccard pairs. Shingles travel as 64-bit hashes
     * (graft.plans.ShingleHashes) — candidates = docs sharing ≥1 shingle
-    * hash, intersection counted per pair, Jaccard from |A|+|B|-|A∩B|.
-    * Stop-shingle buckets are capped to keep the join linear at scale. */
+    * hash, listed per shingle by one [[bucketPairs]] pass, intersection
+    * counted per pair, Jaccard from |A|+|B|-|A∩B|. Stop-shingle buckets
+    * are capped to keep the pair count linear at scale. */
   def jaccardPairs(
       docs: DataFrame,
       idCol: String,
@@ -403,22 +401,19 @@ object Dedup {
       shingleN: Int = 5,
       threshold: Double = 0.5,
       maxShingleFreq: Int = 1000): DataFrame = {
-    // |shingles| rides the exploded rows (8 bytes next to the 8-byte
-    // hash) instead of living in a separate (id, n) branch: the old
-    // two size-joins each re-ran the scan + shingle-hash kernel (three
-    // text passes per call — branches below a scan share no exchange,
-    // so nothing reuses), and at any scale re-hashing the corpus twice
-    // more costs far above shipping one extra long through the two
-    // hash-keyed shuffles. Sizes are pre-cap by construction (computed
-    // before capBuckets), exactly like the old separate branch.
+    // |shingles| rides the exploded rows as the pair pass's payload (8
+    // bytes next to the 8-byte hash) instead of living in a separate
+    // (id, n) branch: two size-joins would each re-run the scan +
+    // shingle-hash kernel (branches below a scan share no exchange, so
+    // nothing reuses), and at any scale re-hashing the corpus twice
+    // more costs far above shipping one extra long through the
+    // shuffle. Sizes are pre-cap by construction (computed before the
+    // pass drops capped buckets).
     val sh = docs
       .select(col(idCol).as("id"),
         TextHashColumns.shingleHashes(col(textCol), shingleN).as("shs"))
       .select(col("id"), size(col("shs")).as("n"), explode(col("shs")).as("sh"))
-    val capped = capBuckets(sh, Seq("sh"), maxShingleFreq)
-    capped.select(col("id").as("id_a"), col("n").as("n_a"), col("sh"))
-      .join(capped.select(col("id").as("id_b"), col("n").as("n_b"), col("sh")), Seq("sh"))
-      .filter(col("id_a") < col("id_b"))
+    bucketPairs(sh, Seq("sh"), Seq("n"), maxShingleFreq)
       .groupBy(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
       .agg(count(lit(1)).as("i"))
       .select(col("id_a"), col("id_b"),
@@ -974,12 +969,12 @@ object Dedup {
 
   /** Embedding near-dup pairs above a cosine threshold, pair space
     * bounded by an existing bucket column (a cluster / label / shard
-    * key): shuffle join on the bucket key — the 100 TB shape when the
+    * key): one shuffle on the bucket key — the 100 TB shape when the
     * data already carries a locality column. Same candidate
     * architecture as the hash families: ids-only through the bucket
-    * join, vectors attached once per side, and a `maxBucketSize` cap
-    * so one degenerate label (an "unknown" catch-all) can't turn the
-    * self-join quadratic. */
+    * pair pass, vectors attached once per side, and a `maxBucketSize`
+    * cap so one degenerate label (an "unknown" catch-all) can't turn
+    * the pair count quadratic. */
   def cosinePairs(
       emb: DataFrame,
       idCol: String,
@@ -1230,27 +1225,142 @@ object Dedup {
 
   /** Drop rows whose bucket key exceeds `maxBucketSize` occurrences —
     * one window pass over the already-bucket-shuffled rows (no second
-    * scan of the input, unlike a groupBy + anti-join). Degenerate
-    * buckets (stop-shingles, empty-doc bands) otherwise turn the
-    * candidate join quadratic. */
+    * scan of the input, unlike a groupBy + anti-join). Only the
+    * one-sided [[crossJaccardPairs]] join uses it: the self-joins list
+    * their pairs with [[bucketPairs]], which applies the same cap in
+    * its single pass. Degenerate buckets (stop-shingles) otherwise
+    * turn the probe join quadratic. */
   private def capBuckets(df: DataFrame, keys: Seq[String], maxBucketSize: Int): DataFrame =
     df.withColumn("__bsize", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("__bsize") <= maxBucketSize)
       .drop("__bsize")
 
+  /** Every pair of rows sharing a bucket, listed per bucket in ONE
+    * pass — the candidate generator of every dedup self-join
+    * ([[candidatePairs]], [[hamming64Pairs]], [[jaccardPairs]]),
+    * following the inverted-list pair enumeration of string-similarity
+    * join systems instead of a relational self-join.
+    *
+    * Input: the `keys` columns, an `id` column and the `payload`
+    * columns. Output: (id_a, id_b, payload_a…, payload_b…), each
+    * payload column suffixed `_a`/`_b`, one row per pair of input rows
+    * in a common bucket with id_a < id_b — the rows, multiplicity
+    * included, of the equi-self-join on `keys` filtered to
+    * id_a < id_b, after dropping every bucket of more than
+    * `maxBucketSize` rows (the [[capBuckets]] semantics: null-id rows
+    * count toward the size). A null key or a null id never pairs, as
+    * in the equi-join.
+    *
+    * Shape: one hash shuffle on `keys`, a sort by (keys, id) within
+    * each partition, then a `mapPartitions` walk over each run of equal
+    * keys that buffers at most `maxBucketSize` rows and emits the run's
+    * pairs lazily; a run past the cap is skipped to its end. So memory
+    * stays bounded at any scale, nothing is broadcast, and there is no
+    * window or join to run twice. The shuffle asks for the session's
+    * shuffle-partition count explicitly, which AQE does not coalesce:
+    * the walk costs per pair it emits, not per byte it reads, and
+    * coalescing by bytes put sf0.1's few-MB shingle table — and its
+    * whole walk — into one task. Keys compare by value equality of
+    * their external (Row) form: long, int and string keys, the types
+    * every caller uses. */
+  private[graft] def bucketPairs(
+      df: DataFrame, keys: Seq[String], payload: Seq[String], maxBucketSize: Int): DataFrame = {
+    val sorted = df.select((keys ++ ("id" +: payload)).map(col): _*)
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys.map(col): _*)
+      .sortWithinPartitions((keys :+ "id").map(col): _*)
+    def side(tag: String) = ("id" +: payload).map(c => sorted.schema(c).copy(name = s"${c}_$tag"))
+    val (a, b) = (side("a"), side("b"))
+    val enc = Encoders.row(StructType(Seq(a.head, b.head) ++ a.tail ++ b.tail))
+    val nKeys = keys.length
+    sorted.mapPartitions(rows => new BucketPairs(rows, nKeys, maxBucketSize))(enc)
+  }
+
+  /** The [[bucketPairs]] walk over one partition's (keys…, id,
+    * payload…) rows sorted by (keys, id): `run` holds the current
+    * bucket's non-null-id rows (sorted by id), and (a, b) is the next
+    * pair to emit from it. */
+  private final class BucketPairs(rows: Iterator[Row], nKeys: Int, maxBucketSize: Int)
+      extends Iterator[Row] {
+    private val in = rows.buffered
+    private val run = scala.collection.mutable.ArrayBuffer.empty[Row]
+    private var a = 0
+    private var b = 0
+    private var ready = false
+
+    private def sameKeys(x: Row, y: Row): Boolean = {
+      var k = 0
+      while (k < nKeys && x.get(k) == y.get(k)) k += 1
+      k == nKeys
+    }
+
+    /** Load the next bucket that has two ids to pair; false at the end
+      * of the partition. */
+    private def nextRun(): Boolean = {
+      while (in.hasNext) {
+        run.clear()
+        val first = in.next()
+        var n = 1 // rows in the bucket, null ids included
+        if (!first.isNullAt(nKeys)) run += first
+        while (in.hasNext && sameKeys(in.head, first)) {
+          val r = in.next()
+          n += 1
+          if (n > maxBucketSize) run.clear() // capped: skip to the run's end
+          else if (!r.isNullAt(nKeys)) run += r
+        }
+        val nullKey = (0 until nKeys).exists(first.isNullAt)
+        if (n <= maxBucketSize && !nullKey && run.length >= 2) {
+          a = 0
+          b = 1
+          return true
+        }
+      }
+      run.clear()
+      false
+    }
+
+    override def hasNext: Boolean = {
+      // ids ascend within a run, so an id differing from run(a)'s is
+      // greater: equal ids (duplicate rows) never pair
+      while (!ready) {
+        if (b < run.length) {
+          if (run(a).get(nKeys) != run(b).get(nKeys)) ready = true else b += 1
+        } else if (a + 2 < run.length) {
+          a += 1
+          b = a + 1
+        } else if (!nextRun()) return false
+      }
+      true
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException("no more bucket pairs")
+      ready = false
+      val x = run(a)
+      val y = run(b)
+      b += 1
+      val np = x.length - nKeys - 1 // payload columns
+      val out = new Array[Any](2 + 2 * np)
+      out(0) = x.get(nKeys)
+      out(1) = y.get(nKeys)
+      var i = 0
+      while (i < np) {
+        out(2 + i) = x.get(nKeys + 1 + i)
+        out(2 + np + i) = y.get(nKeys + 1 + i)
+        i += 1
+      }
+      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+    }
+  }
+
   /** Distinct candidate (id_a, id_b) pairs from a (id, bucketKeys…)
-    * table: self-join per bucket carrying ids only, ordered to one
+    * table: one [[bucketPairs]] pass carrying ids only, ordered to one
     * orientation, deduped across buckets BEFORE any scoring.
     * `dedupe = false` skips the distinct shuffle when each id occurs
     * in exactly one bucket (a single locality column). */
   private def candidatePairs(
       bucketed: DataFrame, keys: Seq[String], maxBucketSize: Int,
       dedupe: Boolean = true): DataFrame = {
-    val capped = capBuckets(bucketed, keys, maxBucketSize)
-    val pairs = capped.select((keys.map(col) :+ col("id").as("id_a")): _*)
-      .join(capped.select((keys.map(col) :+ col("id").as("id_b")): _*), keys)
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val pairs = bucketPairs(bucketed, keys, Nil, maxBucketSize)
     if (dedupe) pairs.distinct() else pairs
   }
 

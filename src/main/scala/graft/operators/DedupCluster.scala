@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * label and its neighbors' labels; at fixpoint a component is labelled
   * with its minimum member id. One round = one hash join (edges ×
   * labels) + one min-aggregation — all key-equality shuffles, nothing
-  * driver-side except the O(1) convergence probe. Rounds needed =
+  * driver-side except the O(1) convergence probe (does any edge still
+  * point at a smaller label?). Rounds needed =
   * component diameter: near-dup clusters are clique-ish (diameter 1-3),
   * so propagation beats the O(log n) star-contraction algorithms'
   * constant factor there; a pathological long-chain graph needs
@@ -60,25 +61,26 @@ object DedupCluster {
     var round = 1
     var converged = false
     while (!converged && round < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("comp").as("nc")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("nc")).as("nbr"))
-      val step = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("comp").as("__old"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
-      // probe BEFORE materializing: the terminal round of every CC call
-      // is a pure re-verification (labels already at fixpoint), so
-      // probing the lazy step first lets that round skip the
-      // localCheckpoint job entirely — the fixpoint labels are the ones
-      // already checkpointed last round. Clique-ish near-dup graphs
-      // converge in one joined round, so this halves the loop's jobs in
-      // the common case; a non-terminal round pays the probe's
-      // early-exit partial scan (limit(1) stops at the first changed
-      // row) and then materializes as before.
-      converged = step.filter(col("comp") < col("__old")).limit(1).count() == 0
+      // Probe on the edge endpoints, not on the step: a round lowers a
+      // label iff some edge has label(dst) < label(src) (every labelled
+      // node is an edge src, and the edge list is symmetric). The probe
+      // is two lookups per edge and an early-exit limit(1), with no
+      // min-aggregation, so the terminal round — at sf0.1 every CC call
+      // converges at its first joined round — never builds the step,
+      // and a non-terminal round builds it once, for its checkpoint.
+      converged = edges
+        .join(labels.select(col("id").as("src"), col("comp").as("cs")), Seq("src"))
+        .join(labels.select(col("id").as("dst"), col("comp").as("cd")), Seq("dst"))
+        .filter(col("cd") < col("cs"))
+        .limit(1).count() == 0
       if (!converged) {
-        labels = step.select(col("id"), col("comp")).localCheckpoint()
+        val nbrMin = edges
+          .join(labels.select(col("id").as("dst"), col("comp").as("nc")), Seq("dst"))
+          .groupBy(col("src").as("id")).agg(min(col("nc")).as("nbr"))
+        labels = labels
+          .join(nbrMin, Seq("id"), "left")
+          .select(col("id"), least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"))
+          .localCheckpoint()
         round += 1
       }
     }

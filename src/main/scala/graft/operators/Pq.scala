@@ -15,9 +15,11 @@ import graft.functions.{KMeans, VectorFunctions => VF}
   *
   * 100 TB shape, same contract as the IVF index (Similarity.ivfBuild):
   *
-  *  - '''training''' is a bounded deterministic driver-side k-means per
-  *    subspace over the IVF index's hash-ordered TakeOrdered sample
-  *    (Similarity.trainingSample) — never a corpus scan per iteration;
+  *  - '''training''' is a bounded deterministic k-means per subspace
+  *    over the IVF index's hash-ordered TakeOrdered sample
+  *    (Similarity.trainingSample), one task per subspace in one Spark
+  *    job over the broadcast sample — never a corpus scan per
+  *    iteration;
   *  - '''encode''' is a per-partition kernel against the codebook as a
   *    BROADCAST VARIABLE (m·ksub·(d/m) doubles ≈ 100 KB): one tight
   *    argmin loop per subspace, the float vectors never shuffle, the
@@ -69,21 +71,30 @@ object Pq {
       ksub: Int = 256,
       trainSample: Int = 2048,
       iters: Int = 10): Array[Array[Array[Double]]] =
-    trainOn(Similarity.trainingSample(corpus, idCol, vecCol, trainSample), m, ksub, iters)
+    trainOn(corpus.sparkSession,
+      Similarity.trainingSample(corpus, idCol, vecCol, trainSample), m, ksub, iters)
 
-  /** [[train]] over an already collected sample. */
-  private def trainOn(sample: Array[Array[Double]], m: Int, ksub: Int, iters: Int)
-      : Array[Array[Array[Double]]] = {
+  /** [[train]] over an already collected sample: ONE Spark job with one
+    * task per subspace over the broadcast sample, so the m independent
+    * k-means runs use every core instead of one driver thread. Each
+    * task runs the same deterministic [[KMeans.euclidean]] on the same
+    * slice as a driver loop would, so the codebooks are bit-identical
+    * to it. */
+  private def trainOn(spark: SparkSession, sample: Array[Array[Double]], m: Int, ksub: Int,
+      iters: Int): Array[Array[Array[Double]]] = {
     require(m >= 1 && ksub >= 2, "need m >= 1 subspaces and ksub >= 2 codes")
     require(sample.nonEmpty, "empty training sample")
     val unit = sample.map(v => toUnitDouble(v.toSeq))
     val dim = unit.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val dsub = dim / m
-    Array.tabulate(m) { s =>
-      val sub = unit.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(unit)
+    // collect() returns the tasks' results in partition order: subspace s
+    sc.parallelize(0 until m, m).map { s =>
+      val sub = bc.value.map(v => java.util.Arrays.copyOfRange(v, s * dsub, (s + 1) * dsub))
       KMeans.euclidean(sub, ksub, iters)
-    }
+    }.collect()
   }
 
   /** The codebook as a (sub, code, centroid) DataFrame for parquet
@@ -265,7 +276,7 @@ object Pq {
     val sample = Similarity.trainingSample(corpus, idCol, vecCol, trainSample)
     val (assigned, centroids) = Similarity.ivfIndex(corpus, idCol, vecCol, sample, nLists, iters)
     val probes = Similarity.ivfProbes(queries, idCol, vecCol, centroids, nProbe)
-    val cb = trainOn(sample, m, ksub, iters)
+    val cb = trainOn(corpus.sparkSession, sample, m, ksub, iters)
     // codes keyed by IVF cell in ONE encode pass — the cell id rides
     // the kernel as a passthrough column, no join back to `assigned`
     val encoded = encode(assigned, "cid", "cv", cb, keep = Seq("cell"))

@@ -1596,7 +1596,7 @@ object Pipeline {
     // are pure comparisons + integer packing (no float arithmetic), so
     // both engines build identical candidate sets — the sum-of-powers
     // form below equals Spark's acc*2+bit left fold for a fixed band
-    // width — including the mega-bucket cap (capBuckets
+    // width — including the mega-bucket cap (Dedup.bucketPairs
     // maxBucketSize=100000) and the auto-derived band width
     // (Dedup.autoBitsPerBand): `length(bin((n + 63) // 64 - 1))` is the
     // same integer bitLength Spark computes via numberOfLeadingZeros,
@@ -1632,9 +1632,9 @@ object Pipeline {
            JOIN embeddings eb ON cand.id_b = eb.vec_id)
          WHERE cos >= 0.4"""
     },
-    // cap replica: same windowed-count filter the Spark path applies
-    // (capBuckets maxBucketSize=100000), so a degenerate label past the
-    // cap drops identically in both engines
+    // cap replica: a windowed-count filter drops every label of more
+    // than 100000 rows, as Dedup.bucketPairs' maxBucketSize does, so a
+    // degenerate label past the cap drops identically in both engines
     "q_dedup_cosine_bucketed" ->
       """WITH capped AS (
            SELECT vec_id, label, embedding FROM (

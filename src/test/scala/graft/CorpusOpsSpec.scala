@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.operators.{DedupCluster, Sessionize, Vocab}
 
 class CorpusOpsSpec extends SparkSpec {
@@ -452,6 +454,26 @@ class CorpusOpsSpec extends SparkSpec {
     assert(comps == Set(1L), "chain must collapse to one component")
     assertThrows[IllegalArgumentException](
       DedupCluster.connectedComponents(chain, maxIter = 3))
+  }
+
+  test("building q_dedup_cluster launches at most 8 Spark jobs") {
+    // the build runs the CC loop: the edge and round-1 label
+    // checkpoints, then one endpoint probe per round. The pair pass
+    // needs no broadcast build job, and a converged probe builds no
+    // step
+    val sc = spark.sparkContext
+    Tables.t(spark, Sf, "documents") // warm: the schema is inferred once per session
+    sc.setJobGroup("cc_build", "build q_dedup_cluster")
+    try SparkEntry.queries("q_dedup_cluster")(spark, Sf) finally sc.clearJobGroup()
+    // the status tracker fills from the listener bus in event order:
+    // once a later control job shows up, every build job is listed
+    sc.setJobGroup("cc_build_control", "control job")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    eventually(timeout(30.seconds)) {
+      assert(sc.statusTracker.getJobIdsForGroup("cc_build_control").nonEmpty)
+    }
+    val jobs = sc.statusTracker.getJobIdsForGroup("cc_build").length
+    assert(jobs <= 8, s"building q_dedup_cluster launched $jobs jobs")
   }
 
   test("dropDuplicates keeps exactly the min-id document per cluster") {

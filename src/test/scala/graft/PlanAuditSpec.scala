@@ -16,6 +16,25 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, Sf).queryExecution
       .explainString(FormattedMode)
 
+  test("dedup candidate plans have no Window and no join on a bucket key") {
+    // Dedup.bucketPairs lists each bucket's pairs after one shuffle on
+    // the bucket keys. A window cap under an equi-self-join on those
+    // keys runs the window once per join side, and under 10 MB AQE
+    // broadcasts the whole capped table.
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    val bucketCols = Set("sh", "band", "bucket", "key", "chunk", "bk")
+    for (q <- Seq("q_dedup_minhash", "q_dedup_simhash", "q_dedup_simhash_exact",
+                  "q_dedup_hamming_exact", "q_dedup_minhash_exact", "q_dedup_phash",
+                  "q_dedup_jaccard", "q_dedup_threshold_curve", "q_dedup_cosine",
+                  "q_dedup_cosine_bucketed")) {
+      val lp = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
+      assert(lp.collect { case w: Window => w }.isEmpty, s"$q plans a window:\n$lp")
+      val keyed = lp.collect { case j: Join => j.condition.toSeq.flatMap(_.references.map(_.name)) }
+        .flatten.filter(bucketCols)
+      assert(keyed.isEmpty, s"$q joins on bucket columns ${keyed.distinct}:\n$lp")
+    }
+  }
+
   test("q1_agg pushes the shipdate filter into the parquet scan") {
     // the column is DATE-normalized over a timestamp[us] physical type,
     // so the pushed predicate is the unwrap rule's raw-timestamp form

@@ -441,9 +441,11 @@ class SimilaritySpec extends SparkSpec {
       ksub = 4, trainSample = 256, iters = 2))
   }
 
-  test("building an IVF query launches one Spark job: the training-sample collect") {
+  test("IVF builds launch only training jobs: the sample collect, plus one PQ job") {
+    // the PQ sub-codebooks train in one job, one task per subspace
     val sc = spark.sparkContext
-    val names = Seq("q_ann_ivf", "q_ann_ivf_exact", "q_ann_ivf_pq")
+    val expected = Map("q_ann_ivf" -> 1, "q_ann_ivf_exact" -> 1, "q_ann_ivf_pq" -> 2)
+    val names = expected.keys.toSeq.sorted
     Tables.t(spark, Sf, "embeddings") // warm: the schema is inferred once per session
     for (q <- names) {
       sc.setJobGroup(s"ivf_build_$q", s"build $q")
@@ -457,7 +459,7 @@ class SimilaritySpec extends SparkSpec {
       assert(sc.statusTracker.getJobIdsForGroup("ivf_build_control").nonEmpty)
     }
     val jobs = names.map(q => q -> sc.statusTracker.getJobIdsForGroup(s"ivf_build_$q").length)
-    assert(jobs.forall(_._2 == 1), s"eager jobs per build: $jobs")
+    assert(jobs.toMap == expected, s"eager jobs per build: $jobs")
   }
 
   test("rows-only ANN queries do not depend on the shuffle partition count") {

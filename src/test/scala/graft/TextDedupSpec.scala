@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
 import graft.functions.{TextFunctions => TF}
@@ -335,6 +336,88 @@ class TextDedupSpec extends SparkSpec {
     val r = Dedup.jaccardPairs(df, "doc_id", "text", shingleN = 5, threshold = 0.1).collect()
     assert(r.length == 1)
     assert(math.abs(r(0).getDouble(2) - 6.0 / 7.0) < 1e-3)
+  }
+
+  /** The capped self-join that [[Dedup.bucketPairs]] replaced, kept as
+    * its reference: a window count drops buckets past the cap, then an
+    * equi-self-join on the keys filtered to id_a < id_b. */
+  private def selfJoinPairs(
+      df: DataFrame, keys: Seq[String], payload: Seq[String], cap: Int): DataFrame = {
+    val capped = df
+      .withColumn("__bsize", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("__bsize") <= cap)
+    def side(tag: String) =
+      capped.select(keys.map(col) ++ ("id" +: payload).map(c => col(c).as(s"${c}_$tag")): _*)
+    side("a").join(side("b"), keys)
+      .filter(col("id_a") < col("id_b"))
+      .select((Seq("id_a", "id_b") ++ payload.map(_ + "_a") ++ payload.map(_ + "_b")).map(col): _*)
+  }
+
+  private def assertSamePairs(
+      df: DataFrame, keys: Seq[String], payload: Seq[String], cap: Int): Unit = {
+    def bag(d: DataFrame) = d.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val got = Dedup.bucketPairs(df, keys, payload, cap)
+    val want = selfJoinPairs(df, keys, payload, cap)
+    assert(got.columns.toSeq == want.columns.toSeq)
+    val (g, w) = (bag(got), bag(want))
+    assert(w.nonEmpty, "reference produced no pairs: the case tests nothing")
+    assert(g == w, s"bucketPairs differs from the capped self-join: " +
+      s"extra ${(g.toSet diff w.toSet).take(5)}, missing ${(w.toSet diff g.toSet).take(5)}")
+  }
+
+  test("bucketPairs lists exactly the capped self-join's pairs, multiplicity included") {
+    import spark.implicits._
+    val cap = 3
+    // k=1: null ids count toward the size but never pair; k=null never
+    // pairs; k=2: a duplicate (key, id) row doubles its pairs; k=3 has
+    // exactly `cap` rows, k=4 one more (dropped), k=5 reaches cap + 1
+    // only through its null id (dropped)
+    val single = Seq[(Option[Long], Option[Long], Option[Int])](
+      (None, Some(1L), Some(10)), (None, Some(2L), Some(10)),
+      (Some(1L), None, Some(1)), (Some(1L), Some(3L), Some(2)), (Some(1L), Some(4L), None),
+      (Some(2L), Some(5L), Some(3)), (Some(2L), Some(5L), Some(3)), (Some(2L), Some(6L), Some(4)),
+      (Some(3L), Some(7L), Some(5)), (Some(3L), Some(8L), Some(6)), (Some(3L), Some(9L), Some(7)),
+      (Some(4L), Some(10L), Some(1)), (Some(4L), Some(11L), Some(1)),
+      (Some(4L), Some(12L), Some(1)), (Some(4L), Some(13L), Some(1)),
+      (Some(5L), None, Some(1)), (Some(5L), Some(14L), Some(1)),
+      (Some(5L), Some(15L), Some(1)), (Some(5L), Some(16L), Some(1))).toDF("k", "id", "n")
+    assertSamePairs(single, Seq("k"), Nil, cap)
+    assertSamePairs(single, Seq("k"), Seq("n"), cap)
+    // two-column keys, a string key, two payload columns
+    val two = Seq[(Int, String, Long, Long, String)](
+      (0, "x", 1L, 100L, "a"), (0, "x", 2L, 200L, "b"), (0, "x", 2L, 200L, "b"),
+      (0, "y", 1L, 100L, "a"), (0, "y", 3L, 300L, null), (1, "x", 1L, 100L, "a"),
+      (1, "x", 4L, 400L, "d"), (1, null, 5L, 500L, "e"), (1, null, 6L, 600L, "f"),
+      (2, "z", 7L, 700L, "g"), (2, "z", 8L, 800L, "h"), (2, "z", 9L, 900L, "i"),
+      (2, "z", 10L, 1000L, "j")).toDF("band", "bucket", "id", "sig", "tag")
+    assertSamePairs(two, Seq("band", "bucket"), Seq("sig", "tag"), cap)
+    assertSamePairs(two.select("bucket", "id"), Seq("bucket"), Nil, cap = 10)
+    // 31 buckets of 25, 49 or 50 rows over several partitions, repeated
+    // ids: the cap of 49 keeps 26 buckets and drops 5
+    val many = (0 until 1500).map(i => ((i * i) % 61L, (i * 104729) % 400L, i % 5))
+      .toDF("k", "id", "n")
+    assertSamePairs(many, Seq("k"), Seq("n"), cap = 49)
+  }
+
+  test("dedup pair queries do not depend on the shuffle partition count") {
+    // bucketPairs walks each hash partition's sorted buckets: 1
+    // partition (every bucket in one walk) and 7 must give the same rows
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def rows(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      Seq("q_dedup_minhash", "q_dedup_simhash", "q_dedup_simhash_exact", "q_dedup_hamming_exact",
+        "q_dedup_minhash_exact", "q_dedup_phash", "q_dedup_jaccard", "q_dedup_threshold_curve",
+        "q_dedup_cosine", "q_dedup_cosine_bucketed", "q_dedup_cluster", "q_dedup_cluster_sizes",
+        "q_split_safe", "q_dedup_keep_best")
+        .map(q => q -> SparkEntry.queries(q)(spark, Sf).collect().map(_.toSeq).toSet).toMap
+    }
+    val (one, seven) = try (rows(1), rows(7)) finally spark.conf.set(key, prev)
+    for ((q, r) <- one) {
+      assert(r.nonEmpty, s"$q returned no rows")
+      assert(r == seven(q), s"$q differs across partition counts: " +
+        s"${(r diff seven(q)).take(3)} vs ${(seven(q) diff r).take(3)}")
+    }
   }
 
   test("cosinePairs(bucketBy) caps a degenerate mega-bucket") {
