@@ -1,4 +1,6 @@
 package graft
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
@@ -7,7 +9,10 @@ import java.nio.file.{Files, Paths}
   * plan-shape claims in OPTIMIZATION_r*.md are checkable without running
   * Spark. Usage:
   *   runMain graft.PlanDump <outDir> <tag> [q_name ...]
-  * With no names, dumps every declared query. The session is
+  * With no names, dumps every declared query. Each query prints one
+  * `[plandump]` line: exchanges, reused exchanges, scans, and
+  * `lambdas=<n>` — the higher-order-function nodes of its optimized
+  * plan ([[lambdas]]), the interpreted-lambda census. The session is
   * `Session.local(Session.cpus)`, the one Bench and Verify run on.
   */
 object PlanDump {
@@ -46,7 +51,8 @@ object PlanDump {
         val ex = ops.count(_.matches("""(Shuffle|Broadcast)?Exchange\b.*"""))
         val reused = ops.count(_.startsWith("ReusedExchange"))
         val scans = ops.count(o => o.startsWith("Scan parquet") || o.startsWith("FileScan"))
-        println(s"[plandump] $n exchanges=$ex reused=$reused scans=$scans")
+        val hofs = lambdas(qe.optimizedPlan).size
+        println(s"[plandump] $n exchanges=$ex reused=$reused scans=$scans lambdas=$hofs")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $n failed: $e")
       }
@@ -55,4 +61,10 @@ object PlanDump {
   }
 
   private val OpHeader = """^\(\d+\) (.*)$""".r
+
+  /** The higher-order-function nodes (`transform`, `filter`,
+    * `aggregate`, `zip_with`, …) of a plan: their lambdas run
+    * interpreted, once per array element. */
+  def lambdas(plan: LogicalPlan): Seq[HigherOrderFunction] =
+    plan.flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
 }

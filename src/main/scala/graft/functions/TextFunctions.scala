@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * the native kernels in [[graft.plans]] — no UDFs. The `transform`/
   * `filter`/`aggregate` lambdas used here are NOT codegen'd: they run
   * interpreted per array element, so hot paths go through the native
-  * kernels (the tokenizer, the hashes, the n-grams).
+  * kernels (the tokenizer, the hashes, the n-grams, the BPE counter).
   */
 object TextFunctions {
 
@@ -67,62 +67,29 @@ object TextFunctions {
   /** TRUE byte-level BPE token count, GPT-2 style — the default for
     * budget operators: [[gpt2Pretokens]] pre-tokens (case, punctuation
     * and whitespace preserved), whitespace mapped to [[WsTo]] markers,
-    * the same sentinel-spaced rank-ordered merge replay as
-    * [[bpeTokenCountMerges]], plus a byte fallback — each non-ASCII
-    * char counts its extra UTF-8 bytes (octet_length − length) as
-    * unmerged byte symbols, which is byte-level BPE with an
-    * ASCII-symbol merge table. Null text → 0. Scan-local HOF Columns;
-    * for production 50k-merge tables use [[graft.operators.Bpe]]
-    * (identical semantics, spec-pinned). */
+    * rank-priority merges, plus a byte fallback — each non-ASCII char
+    * counts its extra UTF-8 bytes as unmerged byte symbols, which is
+    * byte-level BPE with an ASCII-symbol merge table. Null text → 0.
+    * The native kernel [[graft.plans.BpeCount]]; see
+    * [[graft.operators.Bpe]] for the semantics. */
   def bpeTokenCountGpt2(
       text: Column,
-      merges: Seq[(String, String)] = DefaultMerges): Column = {
-    val counts = transform(gpt2Pretokens(text), w0 => {
-      val w = translate(w0, WsFrom, WsTo)
-      val base = concat(lit(" "), regexp_replace(w, "(.)", "$1 "))
-      val merged = merges.foldLeft(base) { case (s, (a, b)) =>
-        replace(s, lit(s" $a $b "), lit(s" $a$b "))
-      }
-      size(split(trim(merged), " ")).cast("long") +
-        (octet_length(w0) - length(w0)).cast("long")
-    })
-    coalesce(aggregate(counts, lit(0L), (acc, c) => acc + c), lit(0L))
-  }
+      merges: Seq[(String, String)] = DefaultMerges): Column =
+    graft.plans.BpeKernel.count(text, merges, byteLevel = true)
 
   /** Lowercased alphanumeric words — the shared BPE pre-tokenization. */
   def alnumWords(text: Column): Column =
     filter(split(regexp_replace(lower(text), "[^a-z0-9]+", " "), " "), w => w =!= "")
 
-  /** TRUE byte-pair-encoding token count against an explicit ordered
-    * merge table — the original BPE application (Sennrich et al. 2016):
-    * each word starts as space-separated characters with sentinel
-    * boundary spaces, merges apply in rank order as literal
-    * leftmost-non-overlapping replacements of " a b " with " ab ", and
-    * the token count is what remains. The sentinel spaces make a merge
-    * match whole symbols only (never a symbol suffix/prefix), and the
-    * plain-replace formulation is what DuckDB's replace() executes
-    * byte-identically — the oracle replays the exact algorithm.
-    *
-    * Pure codegen-able Column expression (HOF lambda over the word
-    * array; scan-local, zero shuffle): right for merge tables up to a
-    * few hundred entries, where the replace chain still compiles. For
-    * real 50k-merge vocabularies use [[graft.operators.Bpe.tokenCounts]]
-    * (broadcast table + per-partition word memoization) — same
-    * semantics, spec-pinned equal. */
+  /** TRUE byte-pair-encoding token count of the lowercase alphanumeric
+    * words ([[alnumWords]]) against an explicit ordered merge table —
+    * the legacy counter behind the `graft_bpe_count` SQL function.
+    * Null text → 0. The native kernel [[graft.plans.BpeCount]]; see
+    * [[graft.operators.Bpe]] for the semantics. */
   def bpeTokenCountMerges(
       text: Column,
-      merges: Seq[(String, String)] = DefaultMerges): Column = {
-    val counts = transform(alnumWords(text), w => {
-      val base = concat(lit(" "), regexp_replace(w, "(.)", "$1 "))
-      val merged = merges.foldLeft(base) { case (s, (a, b)) =>
-        replace(s, lit(s" $a $b "), lit(s" $a$b "))
-      }
-      size(split(trim(merged), " "))
-    })
-    // null text → 0, matching Bpe.tokenCounts and the DuckDB replica
-    // (both coalesce to 0) — all three formulations agree on null input
-    coalesce(aggregate(counts, lit(0L), (acc, c) => acc + c), lit(0L))
-  }
+      merges: Seq[(String, String)] = DefaultMerges): Column =
+    graft.plans.BpeKernel.count(text, merges, byteLevel = false)
 
   def charCount(text: Column): Column = length(text)
 

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.TextFunctions
+import graft.plans.BpeKernel
 
 /** Tokenizer-faithful BPE token counting at corpus scale
   * (SURVEY.md §2.3): the budget operators (pack / per-language budgets /
@@ -12,7 +12,10 @@ import graft.functions.TextFunctions
   * curation budgets are measured in BPE tokens against a fixed merge
   * table, not whitespace splits.
   *
-  * Two fidelity levels share one kernel:
+  * Every BPE count — [[tokenCounts]], `TextFunctions.bpeTokenCountGpt2`,
+  * `TextFunctions.bpeTokenCountMerges` and the `graft_bpe_count` SQL
+  * function — is the one native expression [[graft.plans.BpeCount]], at
+  * one of two fidelity levels:
   *
   *  - '''byte-level (default)''' — GPT-2-style: pre-tokens from
   *    [[TextFunctions.Gpt2Pattern]] (case, punctuation and whitespace
@@ -20,38 +23,33 @@ import graft.functions.TextFunctions
   *    GPT-2 marker chars (' '→Ġ …, [[TextFunctions.WsTo]]) so a space
   *    can live inside a merged symbol, and a byte fallback: every
   *    non-ASCII char contributes its extra UTF-8 bytes as unmerged
-  *    byte symbols. Semantics are EXACTLY
-  *    [[TextFunctions.bpeTokenCountGpt2]] (spec-pinned equal).
-  *  - '''legacy''' (`byteLevel = false`) — lowercase-alnum words only,
-  *    matching [[TextFunctions.bpeTokenCountMerges]].
+  *    byte symbols.
+  *  - '''legacy''' (`byteLevel = false`) — lowercase-alnum words only.
   *
   * The merge application is RANK-PRIORITY adjacent-pair merging
   * (Sennrich et al. 2016): repeatedly merge the lowest-rank pair
-  * present in the word, leftmost-non-overlapping, against a broadcast
-  * rank map — per-word cost is O(len² · pairs-applied), INDEPENDENT of
-  * merge-table size. (A literal replace chain over the table — the
-  * Column/oracle formulation — scans all |merges| entries per word:
-  * identical results on consistent tables, where each pair's parts are
-  * base chars or earlier merge outputs, but ~|merges|/len slower; a
-  * production 50k-entry table makes that the difference between
-  * CPU-bound-impractical and free.)
+  * present in the word, all its leftmost-non-overlapping occurrences
+  * at once, against a broadcast rank map — per-word cost is
+  * O(len² · pairs-applied), INDEPENDENT of merge-table size, and a
+  * per-task pre-token memo runs the merge once per distinct pre-token.
   *
-  * Executed as batched mapPartitions with
-  *
-  *  - the rank map broadcast once per executor (a 50k-merge GPT-2
-  *    style table is ~1 MB — never a per-task literal),
-  *  - a per-partition pre-token → count memo: natural text repeats
-  *    words heavily (Zipf), so merging runs once per DISTINCT
-  *    pre-token per partition, not once per occurrence.
+  * The DuckDB oracle replays a literal replace chain instead: each
+  * word as sentinel-spaced symbols, one leftmost-non-overlapping
+  * `replace(" a b " → " ab ")` per merge in rank order. It scans all
+  * |merges| entries per word, and it agrees with rank-priority merging
+  * only when (a) the table is consistent — each pair's parts are base
+  * chars or earlier merge outputs, no pair listed twice (the kernel
+  * keeps a duplicate's FIRST rank; the chain applies it again) — and
+  * (b) no word holds a pair twice in a row ("banana", "0000"): two
+  * adjacent occurrences share one sentinel space, so the chain merges
+  * only the first where rank-priority merges both. The committed
+  * corpora hold no such word; a reference-chain spec pins both the
+  * agreement and the divergence.
   *
   * No shuffle — token counting stays inside the scan stage like every
   * other text kernel.
   */
 object Bpe {
-
-  /** Rank-map key separator — NUL can't appear inside a merge symbol
-    * that came from a text vocab file. */
-  private val Sep = '\u0000'
 
   /** Collect an ordered merge table from a (rank, left, right)
     * DataFrame (e.g. `spark.read.parquet(vocabPath)`). Merge tables are
@@ -70,9 +68,6 @@ object Bpe {
       s"merge table exceeds maxMerges=$maxMerges rows — is this really a vocab table?")
     rows.map(r => (r.getString(1), r.getString(2))).toSeq
   }
-
-  private def utf8Len(cp: Int): Int =
-    if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4
 
   /** Train a BPE merge table from the corpus (Sennrich et al. 2016) —
     * the tokenizer-TRAINING half of the kernel family; its output
@@ -183,130 +178,12 @@ object Bpe {
       .toDF("rank", "left", "right")
   }
 
-  /** Rank-priority merge of `syms` in place; returns the surviving
-    * symbol count. Lowest-rank adjacent pair present merges first,
-    * all its leftmost-non-overlapping occurrences at once — the
-    * original BPE application order. */
-  private def mergeCount(
-      syms: scala.collection.mutable.ArrayBuffer[String],
-      ranks: java.util.HashMap[String, Integer]): Long = {
-    var done = syms.length < 2 || ranks.isEmpty
-    while (!done) {
-      var bestRank = Int.MaxValue
-      var bestA: String = null
-      var bestB: String = null
-      var i = 0
-      while (i < syms.length - 1) {
-        val r = ranks.get(syms(i) + Sep + syms(i + 1))
-        if (r != null && r.intValue < bestRank) {
-          bestRank = r.intValue; bestA = syms(i); bestB = syms(i + 1)
-        }
-        i += 1
-      }
-      if (bestA == null) done = true
-      else {
-        var read = 0
-        var write = 0
-        while (read < syms.length) {
-          if (read < syms.length - 1 && syms(read) == bestA && syms(read + 1) == bestB) {
-            syms(write) = bestA + bestB; read += 2
-          } else {
-            syms(write) = syms(read); read += 1
-          }
-          write += 1
-        }
-        syms.takeInPlace(write)
-        if (syms.length < 2) done = true
-      }
-    }
-    syms.length.toLong
-  }
-
   /** (id, n_bpe) per document. */
   def tokenCounts(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       merges: Seq[(String, String)],
-      byteLevel: Boolean = true): DataFrame = {
-    val ranksLocal = new java.util.HashMap[String, Integer](merges.length * 2)
-    merges.zipWithIndex.foreach { case ((a, b), r) =>
-      // first (lowest) rank wins on a duplicate pair, like the chain
-      ranksLocal.putIfAbsent(a + Sep + b, Integer.valueOf(r))
-    }
-    val bc = docs.sparkSession.sparkContext.broadcast(ranksLocal)
-    val outSchema = StructType(Seq(
-      StructField("id", docs.schema(idCol).dataType),
-      StructField("n_bpe", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val idIdx = docs.schema.fieldIndex(idCol)
-    val textIdx = docs.schema.fieldIndex(textCol)
-    docs.mapPartitions { rows =>
-      val ranks = bc.value
-      val gpt2 = java.util.regex.Pattern.compile(TextFunctions.Gpt2Pattern)
-      // pre-token memo: bounded so an adversarial all-distinct-words
-      // corpus can't grow a task's heap without limit
-      val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
-      val MaxMemo = 1 << 20
-
-      // byte-level: whitespace → GPT-2 markers, symbols = code points,
-      // plus the UTF-8 byte surplus of non-ASCII chars
-      def countByteLevel(w0: String): Long = {
-        val hit = memo.get(w0)
-        if (hit != null) return hit.longValue()
-        val syms = new scala.collection.mutable.ArrayBuffer[String](w0.length)
-        var surplus = 0L
-        var i = 0
-        while (i < w0.length) {
-          val cp = w0.codePointAt(i)
-          val s = cp match {
-            case 0x20 => "Ġ"
-            case 0x0A => "Ċ"
-            case 0x09 => "ĉ"
-            case 0x0D => "č"
-            case _ =>
-              surplus += utf8Len(cp) - 1
-              new String(Character.toChars(cp))
-          }
-          syms += s
-          i += Character.charCount(cp)
-        }
-        val c = mergeCount(syms, ranks) + surplus
-        if (memo.size < MaxMemo) memo.put(w0, c)
-        c
-      }
-
-      // legacy: lowercase alnum symbols, no surplus (words are ASCII).
-      // Locale.ROOT matches Spark's locale-independent lower()
-      def countLegacyWord(w: String): Long = {
-        val hit = memo.get(w)
-        if (hit != null) return hit.longValue()
-        val syms = new scala.collection.mutable.ArrayBuffer[String](w.length)
-        var i = 0
-        while (i < w.length) { syms += String.valueOf(w.charAt(i)); i += 1 }
-        val c = mergeCount(syms, ranks)
-        if (memo.size < MaxMemo) memo.put(w, c)
-        c
-      }
-
-      rows.map { r =>
-        val text = r.getString(textIdx)
-        var total = 0L
-        if (text != null) {
-          if (byteLevel) {
-            val m = gpt2.matcher(text)
-            while (m.find()) total += countByteLevel(m.group())
-          } else {
-            val words = text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+")
-            var i = 0
-            while (i < words.length) {
-              if (words(i).nonEmpty) total += countLegacyWord(words(i))
-              i += 1
-            }
-          }
-        }
-        Row(r.get(idIdx), total)
-      }
-    }(enc).withColumnRenamed("id", idCol)
-  }
+      byteLevel: Boolean = true): DataFrame =
+    docs.select(col(idCol), BpeKernel.count(col(textCol), merges, byteLevel).as("n_bpe"))
 }

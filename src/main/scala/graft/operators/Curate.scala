@@ -30,9 +30,11 @@ object Curate {
 
   /** @param tokenCounter how budgets are measured: defaults to the
     *        cheap whitespace count; pass
-    *        `TF.bpeTokenCountMerges(_, merges)` for tokenizer-faithful
-    *        BPE budgets — still a scan-side column, so the spine's
-    *        plan shape (and the text-free exchanges) is unchanged.
+    *        `TF.bpeTokenCountGpt2(_, merges)` (or the legacy
+    *        `TF.bpeTokenCountMerges`) for tokenizer-faithful BPE
+    *        budgets — the native scan-side `BpeCount` expression, so
+    *        the spine's plan shape (and the text-free exchanges) is
+    *        unchanged.
     * @return the curated corpus: (idCol, langCol, n_tok, cum_n_tok) */
   def corpus(
       docs: DataFrame,

@@ -298,7 +298,7 @@ object Unigram {
 
   /** (id, n_sp) per document: Viterbi piece count under the trained
     * vocabulary — broadcast table, per-partition distinct-pretoken
-    * memo, zero shuffles (the [[Bpe.tokenCounts]] shape exactly). */
+    * memo, zero shuffles. */
   def tokenCounts(
       docs: DataFrame,
       idCol: String,

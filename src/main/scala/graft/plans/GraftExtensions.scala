@@ -98,6 +98,12 @@ object GraftFunctions {
         arity("graft_cosine", 2)(args)
         CosineSim(args.head, args(1))
       }),
+    // legacy lowercase-alnum count under the default merge table
+    ("graft_bpe_count",
+      new ExpressionInfo(classOf[BpeCount].getName, "graft_bpe_count"),
+      (args: Seq[Expression]) => BpeCount(arity("graft_bpe_count", 1)(args).head,
+        BpeKernel.broadcastRanks(graft.functions.TextFunctions.DefaultMerges),
+        byteLevel = false)),
     // Column-composed kernels ride the same registry through the eager
     // node converter (a lazy wrapper would reach codegen unevaluable
     // when embedded mid-tree by the registry)
@@ -119,12 +125,6 @@ object GraftFunctions {
       (args: Seq[Expression]) => GraftShim.resolvedExpression(
         graft.functions.TextFunctions.redactPii(
           GraftShim.column(arity("graft_redact", 1)(args).head)))),
-    ("graft_bpe_count",
-      new ExpressionInfo(graft.functions.TextFunctions.getClass.getName,
-        "graft_bpe_count"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.TextFunctions.bpeTokenCountMerges(
-          GraftShim.column(arity("graft_bpe_count", 1)(args).head)))),
     ("graft_fix_mojibake",
       new ExpressionInfo(classOf[FixMojibake].getName, "graft_fix_mojibake"),
       (args: Seq[Expression]) =>

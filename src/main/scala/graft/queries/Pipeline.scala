@@ -57,10 +57,11 @@ object Pipeline {
         TF.tokenCount(col("text")).as("n_ws"),
         TF.bpeTokenCount(col("text")).as("n_bpe"))),
 
-    // tokenizer-faithful counts: rank-ordered BPE merges against a
-    // fixed merge table via the broadcast + word-memo operator path
-    // (graft.operators.Bpe); the whitespace/regex counts above are the
-    // cheap approximations, this is the budget-grade number
+    // tokenizer-faithful counts: rank-priority BPE merges against a
+    // fixed merge table through the native BpeCount kernel (broadcast
+    // rank map, per-task word memo; graft.operators.Bpe); the
+    // whitespace/regex counts above are the cheap approximations, this
+    // is the budget-grade number
     "q_token_bpe" -> ((s, dir) =>
       graft.operators.Bpe.tokenCounts(
         t(s, dir, "documents"), "doc_id", "text", TF.DefaultMerges)),
@@ -939,10 +940,10 @@ object Pipeline {
         col("source"), Seq(col("doc_id")), "n_tok",
         alpha = 0.5, totalTokens = 2000)),
 
-    // per-language budget measured in TRUE BPE tokens (GPT-2 byte-level
-    // Column path — scan-local, oracle-identical to the Bpe operator):
-    // the budget family counts case/punctuation/whitespace tokens, not
-    // just lowercase words
+    // per-language budget measured in TRUE BPE tokens (GPT-2 byte-level,
+    // the same scan-local BpeCount kernel as q_token_bpe): the budget
+    // family counts case/punctuation/whitespace tokens, not just
+    // lowercase words
     "q_budget_bpe" -> ((s, dir) =>
       graft.operators.Sampling.budgetPerStratum(
         t(s, dir, "documents").select(
@@ -1252,13 +1253,14 @@ object Pipeline {
   private[queries] val TokSql =
     """list_filter(string_split_regex(text, '\s+'), x -> x <> '')"""
 
-  // TextFunctions.bpeTokenCountGpt2 replica over `text` — shared by
-  // q_token_bpe and the BPE-measured budget. Replays the byte-level
-  // algorithm verbatim: GPT-2-style pre-tokens (RE2 compiles the same
-  // pattern Java does), whitespace → marker chars, sentinel-spaced
-  // rank-ordered merge chain (DuckDB replace() = Java String.replace
-  // leftmost-non-overlap), plus the UTF-8 byte surplus strlen - length
-  // for non-ASCII chars.
+  // byte-level BPE count over `text` — shared by q_token_bpe and the
+  // BPE-measured budget: GPT-2-style pre-tokens (RE2 compiles the same
+  // pattern Java does), whitespace → marker chars, a sentinel-spaced
+  // rank-ordered merge chain (DuckDB replace(), leftmost-non-overlap),
+  // plus the UTF-8 byte surplus strlen - length for non-ASCII chars.
+  // The chain equals the engine's rank-priority merging on consistent
+  // tables unless a word holds a pair twice in a row (graft.operators.Bpe
+  // documents the difference; no committed corpus has such a word).
   private val BpeNTokSql: String = {
     val mapped =
       "replace(replace(replace(replace(w, ' ', 'Ġ'), chr(10), 'Ċ'), chr(9), 'ĉ'), chr(13), 'č')"

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import graft.operators.{DedupCluster, Sessionize, Vocab}
@@ -569,26 +570,92 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 4L, 4L -> 0L, 5L -> 6L))
   }
 
-  test("Bpe.tokenCounts (broadcast + memo) equals the Column formulation on real docs") {
+  test("Bpe.tokenCounts and the Column counters equal the replace-chain reference on real docs") {
     import graft.functions.{TextFunctions => TF}
     val docs = Tables.t(spark, Sf, "documents")
-    // byte-level default vs the GPT-2 Column path
+    // byte-level default vs the GPT-2 replace chain
     val viaOperator = graft.operators.Bpe
       .tokenCounts(docs, "doc_id", "text", TF.DefaultMerges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaColumn = docs
-      .select(col("doc_id"), TF.bpeTokenCountGpt2(col("text")).as("n_bpe"))
+    val viaChain = docs
+      .select(col("doc_id"), BpeChains.gpt2(col("text")).as("n_bpe"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaOperator == viaColumn)
+    assert(viaOperator == viaChain)
     assert(viaOperator.nonEmpty && viaOperator.values.forall(_ >= 0))
-    // legacy lowercase-alnum path vs its Column twin
+    // legacy lowercase-alnum path vs its chain twin
     val legacyOperator = graft.operators.Bpe
       .tokenCounts(docs, "doc_id", "text", TF.DefaultMerges, byteLevel = false)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val legacyColumn = docs
-      .select(col("doc_id"), TF.bpeTokenCountMerges(col("text")).as("n_bpe"))
+    val legacyChain = docs
+      .select(col("doc_id"), BpeChains.legacy(col("text")).as("n_bpe"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(legacyOperator == legacyColumn)
+    assert(legacyOperator == legacyChain)
+  }
+
+  test("native BpeCount matches the replace-chain references bit for bit") {
+    import spark.implicits._
+    import graft.functions.{TextFunctions => TF}
+    val texts: Seq[String] = Seq(
+      null, "", "   ", " \t\n\r ",
+      // \x0B and \f are `\s` but have no GPT-2 marker: plain symbols
+      "\u000B\f\u000B\f", "a\u000Bb\fc \u000B\u000B the",
+      "the thing", "Hello, world! DON'T stop", "10 000 2000",
+      // 2-, 3- and 4-byte UTF-8, surrogate pairs
+      "naïve café 中文 文本", "😀 emoji𝄞 x😀y")
+    // a LocalRelation folds on the driver (interpreted eval); an
+    // RDD-backed frame and the parquet table run whole-stage codegen
+    val local = texts.toDF("text")
+    val viaRdd = spark.sparkContext.parallelize(texts.map(Tuple1(_)), 2).toDF("text")
+    val docs = Tables.t(spark, Sf, "documents").select(col("text"))
+    // the first rank of a duplicate pair wins: "abcd" → ab,c,d (3);
+    // had the repeat's rank 3 won, (b,c) then (bc,d) would merge → a,bcd (2)
+    val dup = Seq(("a", "b"), ("b", "c"), ("bc", "d"), ("a", "b"))
+    def same(df: org.apache.spark.sql.DataFrame, kernel: org.apache.spark.sql.Column,
+        chain: org.apache.spark.sql.Column, what: String): Unit = {
+      val both = df.select(kernel.as("kernel"), chain.as("chain"))
+      val Seq(k, c) = both.schema.fields.toSeq
+      assert(k.dataType == LongType && !k.nullable && c.dataType == LongType && !c.nullable,
+        s"$what: kernel $k vs chain $c")
+      val rows = both.collect()
+      assert(rows.nonEmpty)
+      rows.foreach(r => assert(r.getLong(0) == r.getLong(1),
+        s"$what: kernel ${r.getLong(0)} vs chain ${r.getLong(1)}"))
+    }
+    for ((df, label) <- Seq((local, "edge cases"), (viaRdd, "edge cases, codegen"),
+        (docs, "documents"))) {
+      for (merges <- Seq(TF.DefaultMerges, Nil)) {
+        same(df, TF.bpeTokenCountGpt2(col("text"), merges),
+          BpeChains.gpt2(col("text"), merges), s"byte-level, ${merges.size} merges, $label")
+        same(df, TF.bpeTokenCountMerges(col("text"), merges),
+          BpeChains.legacy(col("text"), merges), s"legacy, ${merges.size} merges, $label")
+      }
+      // an empty table leaves every symbol: UTF-8 bytes (every char is
+      // in some pre-token), or the chars of the lowercase-alnum words
+      same(df, TF.bpeTokenCountGpt2(col("text"), Nil),
+        coalesce(octet_length(col("text")).cast("long"), lit(0L)), s"byte-level symbols, $label")
+      same(df, TF.bpeTokenCountMerges(col("text"), Nil),
+        coalesce(length(regexp_replace(lower(col("text")), "[^a-z0-9]", "")).cast("long"), lit(0L)),
+        s"legacy symbols, $label")
+    }
+    val abcd = Seq("abcd", "x abcd").toDF("text")
+    same(abcd, TF.bpeTokenCountGpt2(col("text"), dup), BpeChains.gpt2(col("text"), dup),
+      "byte-level, duplicate pair")
+    same(abcd, TF.bpeTokenCountMerges(col("text"), dup), BpeChains.legacy(col("text"), dup),
+      "legacy, duplicate pair")
+    assert(abcd.select(TF.bpeTokenCountMerges(col("text"), dup)).as[Long].collect()
+      .toSeq == Seq(3L, 4L))
+
+    // where the chain is NOT the spec: a pair twice in a row shares one
+    // sentinel space, so the chain merges only the first occurrence
+    // (banana: b,an,a,n,a = 5; 0000: 00,0,0 = 3) where rank-priority
+    // merges both (b,an,an,a = 4; 00,00 = 2). Java's `.` also skips the
+    // line separators U+2028/U+2029/U+0085, so the chain glues one to
+    // the next char of a punctuation run (".\u2028." = 2 symbols + 2
+    // surplus bytes, not 3 + 2).
+    val runs = Seq("banana", "0000", ".\u2028.").toDF("text")
+    val got = runs.select(TF.bpeTokenCountGpt2(col("text")), BpeChains.gpt2(col("text")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((4L, 5L), (2L, 3L), (5L, 4L)), got)
   }
 
   test("GPT-2 byte-level BPE: case, punctuation, whitespace and unicode all count") {

@@ -663,11 +663,26 @@ class PlanAuditSpec extends SparkSpec {
     // zip_with/filter lambdas run interpreted per array element and
     // keep the scan stage out of whole-stage codegen; the tokenizer and
     // the n-gram builder are native kernels (TextHashExpressions)
-    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
     for (q <- Seq("q_lm_score", "q_lm_bigram", "q_lm_trigram", "q_novelty", "q_pmi")) {
-      val plan = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
-      val hofs = plan.flatMap(_.expressions.flatMap(_.collect { case h: HigherOrderFunction => h }))
+      val hofs = PlanDump.lambdas(SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan)
       assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
+    }
+  }
+
+  test("BPE counts run natively — no interpreted lambda in the plan") {
+    // every BPE count, Column, operator and SQL alike, is the one native
+    // BpeCount expression, not a transform/aggregate replace chain
+    val plans = Seq("q_budget_bpe", "q_token_bpe").map(q =>
+      q -> SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan) :+
+      ("graft_bpe_count" -> {
+        Tables.t(spark, Sf, "documents").createOrReplaceTempView("bpe_docs")
+        spark.sql("SELECT graft_bpe_count(text) AS n FROM bpe_docs").queryExecution.optimizedPlan
+      })
+    for ((q, plan) <- plans) {
+      val hofs = PlanDump.lambdas(plan)
+      assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
+      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.BpeCount]))),
+        s"$q counts without the native BpeCount:\n$plan")
     }
   }
 

@@ -20,7 +20,7 @@ class PropertySpec extends SparkSpec {
   private def draw[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
 
-  test("BPE: operator path equals Column path on random texts") {
+  test("BPE: native kernel equals the replace-chain reference on random texts") {
     import spark.implicits._
     val genText = Gen.listOfN(12,
       Gen.oneOf(Gen.alphaLowerStr.map(_.take(8)), Gen.numStr.map(_.take(4)),
@@ -30,26 +30,26 @@ class PropertySpec extends SparkSpec {
       .map { case (t, i) => (i.toLong, t) }
     val df = texts.toDF("doc_id", "text")
     // byte-level (GPT-2) pair
-    val viaColumn = df.select(col("doc_id"), TF.bpeTokenCountGpt2(col("text")).as("n"))
+    val viaChain = df.select(col("doc_id"), BpeChains.gpt2(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaOperator = graft.operators.Bpe
       .tokenCounts(df, "doc_id", "text", TF.DefaultMerges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaColumn == viaOperator)
+    assert(viaChain == viaOperator)
     // legacy (lowercase-alnum) pair
-    val legacyColumn = df.select(col("doc_id"), TF.bpeTokenCountMerges(col("text")).as("n"))
+    val legacyChain = df.select(col("doc_id"), BpeChains.legacy(col("text")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val legacyOperator = graft.operators.Bpe
       .tokenCounts(df, "doc_id", "text", TF.DefaultMerges, byteLevel = false)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(legacyColumn == legacyOperator)
+    assert(legacyChain == legacyOperator)
     // sanity bounds: byte-level count ≥ one per alnum word, ≤ one per
     // char of the (ASCII) text — merges only ever shrink symbol counts
     val words = texts.map { case (i, t) =>
       i -> t.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty) }.toMap
     words.foreach { case (i, ws) =>
-      assert(viaColumn(i) >= ws.length)
-      assert(viaColumn(i) <= texts.toMap.apply(i).length.toLong.max(ws.map(_.length).sum))
+      assert(viaOperator(i) >= ws.length)
+      assert(viaOperator(i) <= texts.toMap.apply(i).length.toLong.max(ws.map(_.length).sum))
     }
   }
 
