@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.concurrent.Eventually._
@@ -570,26 +571,24 @@ class CorpusOpsSpec extends SparkSpec {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 4L, 4L -> 0L, 5L -> 6L))
   }
 
-  test("Bpe.tokenCounts and the Column counters equal the replace-chain reference on real docs") {
+  test("Bpe.tokenCounts (broadcast + memo) equals the Column formulation on real docs") {
     import graft.functions.{TextFunctions => TF}
     val docs = Tables.t(spark, Sf, "documents")
-    // byte-level default vs the GPT-2 replace chain
+    def counts(c: Column) = docs.select(col("doc_id"), c.as("n_bpe"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // byte-level default vs the GPT-2 Column path and its replace chain
     val viaOperator = graft.operators.Bpe
       .tokenCounts(docs, "doc_id", "text", TF.DefaultMerges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaChain = docs
-      .select(col("doc_id"), BpeChains.gpt2(col("text")).as("n_bpe"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaOperator == viaChain)
+    assert(viaOperator == counts(TF.bpeTokenCountGpt2(col("text"))))
+    assert(viaOperator == counts(BpeChains.gpt2(col("text"))))
     assert(viaOperator.nonEmpty && viaOperator.values.forall(_ >= 0))
-    // legacy lowercase-alnum path vs its chain twin
+    // legacy lowercase-alnum path vs its Column twin and its replace chain
     val legacyOperator = graft.operators.Bpe
       .tokenCounts(docs, "doc_id", "text", TF.DefaultMerges, byteLevel = false)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val legacyChain = docs
-      .select(col("doc_id"), BpeChains.legacy(col("text")).as("n_bpe"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(legacyOperator == legacyChain)
+    assert(legacyOperator == counts(TF.bpeTokenCountMerges(col("text"))))
+    assert(legacyOperator == counts(BpeChains.legacy(col("text"))))
   }
 
   test("native BpeCount matches the replace-chain references bit for bit") {
