@@ -70,7 +70,7 @@ object TextFunctions {
     * rank-priority merges, plus a byte fallback — each non-ASCII char
     * counts its extra UTF-8 bytes as unmerged byte symbols, which is
     * byte-level BPE with an ASCII-symbol merge table. Null text → 0.
-    * The native kernel [[graft.plans.BpeCount]]; see
+    * The native [[graft.plans.TokenCount]] kernel; see
     * [[graft.operators.Bpe]] for the semantics. */
   def bpeTokenCountGpt2(
       text: Column,
@@ -84,7 +84,7 @@ object TextFunctions {
   /** TRUE byte-pair-encoding token count of the lowercase alphanumeric
     * words ([[alnumWords]]) against an explicit ordered merge table —
     * the legacy counter behind the `graft_bpe_count` SQL function.
-    * Null text → 0. The native kernel [[graft.plans.BpeCount]]; see
+    * Null text → 0. The native [[graft.plans.TokenCount]] kernel; see
     * [[graft.operators.Bpe]] for the semantics. */
   def bpeTokenCountMerges(
       text: Column,

@@ -14,8 +14,9 @@ import graft.plans.BpeKernel
   *
   * Every BPE count — [[tokenCounts]], `TextFunctions.bpeTokenCountGpt2`,
   * `TextFunctions.bpeTokenCountMerges` and the `graft_bpe_count` SQL
-  * function — is the one native expression [[graft.plans.BpeCount]], at
-  * one of two fidelity levels:
+  * function — is the native count expression [[graft.plans.TokenCount]]
+  * under a BPE model (the one [[Unigram.tokenCounts]] runs under a
+  * piece table), at one of two fidelity levels:
   *
   *  - '''byte-level (default)''' — GPT-2-style: pre-tokens from
   *    [[TextFunctions.Gpt2Pattern]] (case, punctuation and whitespace
@@ -75,9 +76,10 @@ object Bpe {
     * unchanged.
     *
     * Architecture is the standard one for corpus-scale tokenizer
-    * training: the ONLY distributed pass is word counting (two-level
-    * partial aggregation — by Zipf the distinct-word table is
-    * orders of magnitude smaller than the corpus), and merge learning
+    * training: the ONLY distributed pass is word counting
+    * ([[wordCounts]]; two-level partial aggregation — by Zipf the
+    * distinct-word table is orders of magnitude smaller than the
+    * corpus), and merge learning
     * iterates driver-side over that bounded table. `maxWords` caps the
     * collect LOUDLY (like [[mergesFrom]]) — the top-`maxWords` words
     * by count carry virtually all pair mass, the dropped tail is
@@ -97,23 +99,8 @@ object Bpe {
       byteLevel: Boolean = true,
       maxWords: Int = 1000000): Seq[(String, String)] = {
     require(numMerges > 0, "numMerges must be positive")
-    import graft.functions.{TextFunctions => TF}
-    val words =
-      if (byteLevel)
-        docs.select(explode(transform(TF.gpt2Pretokens(col(textCol)),
-          w => translate(w, TF.WsFrom, TF.WsTo))).as("w"))
-      else
-        docs.select(explode(TF.alnumWords(col(textCol))).as("w"))
-    val wc = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w"))
-      .limit(maxWords + 1)
-      .collect()
-    require(wc.length <= maxWords,
-      s"distinct-word table exceeds maxWords=$maxWords — raise the cap explicitly " +
-        "if the corpus vocabulary is really this large")
     // driver-side: words as code-point symbol arrays + counts
-    val syms = wc.map { r =>
-      val w = r.getString(0)
+    val syms = wordCounts(docs, textCol, byteLevel, maxWords).map { case (w, c) =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[String]
       var i = 0
       while (i < w.length) {
@@ -121,7 +108,7 @@ object Bpe {
         buf += new String(Character.toChars(cp))
         i += Character.charCount(cp)
       }
-      (buf, r.getLong(1))
+      (buf, c)
     }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var continue = true
@@ -167,6 +154,31 @@ object Bpe {
       }
     }
     merges.toSeq
+  }
+
+  /** The one distributed pass of tokenizer training, shared by
+    * [[trainMerges]] and [[Unigram.train]]: (word, count) by count desc,
+    * then word. Words are byte-level GPT-2 pre-tokens with whitespace
+    * mapped to the marker chars (so a merge or a piece can span a
+    * leading space), or the legacy lowercase-alnum words. At most
+    * `maxWords` words are collected, and more fails loudly. */
+  private[operators] def wordCounts(docs: DataFrame, textCol: String,
+      byteLevel: Boolean, maxWords: Int): Array[(String, Long)] = {
+    import graft.functions.{TextFunctions => TF}
+    val words =
+      if (byteLevel)
+        docs.select(explode(transform(TF.gpt2Pretokens(col(textCol)),
+          w => translate(w, TF.WsFrom, TF.WsTo))).as("w"))
+      else
+        docs.select(explode(TF.alnumWords(col(textCol))).as("w"))
+    val wc = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc, col("w"))
+      .limit(maxWords + 1)
+      .collect()
+    require(wc.length <= maxWords,
+      s"distinct-word table exceeds maxWords=$maxWords — raise the cap explicitly " +
+        "if the corpus vocabulary is really this large")
+    wc.map(r => (r.getString(0), r.getLong(1)))
   }
 
   /** The trained table as a (rank, left, right) DataFrame — the shape

@@ -32,7 +32,7 @@ object Curate {
     *        cheap whitespace count; pass
     *        `TF.bpeTokenCountGpt2(_, merges)` (or the legacy
     *        `TF.bpeTokenCountMerges`) for tokenizer-faithful BPE
-    *        budgets — the native scan-side `BpeCount` expression, so
+    *        budgets — the native scan-side `TokenCount` expression, so
     *        the spine's plan shape (and the text-free exchanges) is
     *        unchanged.
     * @return the curated corpus: (idCol, langCol, n_tok, cum_n_tok) */

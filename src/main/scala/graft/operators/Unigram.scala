@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.functions.TextFunctions
+import graft.plans.UnigramKernel
 
 /** SentencePiece-style unigram-LM tokenizer (Kudo 2018): training and
   * corpus-scale token counting — the second production tokenizer family
@@ -13,11 +12,13 @@ import graft.functions.TextFunctions
   * are unigram, not BPE).
   *
   * Same corpus-scale architecture as [[Bpe.trainMerges]]: the ONLY
-  * distributed pass is word counting (two-level partial aggregation
-  * over Zipf-compressed distinct words), everything iterative happens
-  * driver-side over that bounded table, and inference is a broadcast
-  * piece table applied per partition with a distinct-word memo — zero
-  * shuffles, scan-stage work like every other text kernel.
+  * distributed pass is word counting, the one pass both trainers share
+  * ([[Bpe.wordCounts]]: two-level partial aggregation over
+  * Zipf-compressed distinct words), and everything iterative happens
+  * driver-side over that bounded table. Inference is the native count
+  * expression BPE uses, [[graft.plans.TokenCount]], over a broadcast
+  * piece table with a per-task pre-token memo — zero shuffles,
+  * scan-stage work like every other text kernel.
   *
   * Training = hard EM (Viterbi counts), the k-means-style variant:
   *
@@ -26,8 +27,9 @@ import graft.functions.TextFunctions
   *     top `seedMult × vocabSize` kept, plus ALL single characters
   *     (guarantees every word stays segmentable).
   *  2. '''E-step''': Viterbi-best segmentation of each distinct word
-  *     under current piece log-probs (dp over end positions, max
-  *     piece length bounds the inner loop).
+  *     under current piece log-probs (`UnigramKernel.viterbi`, the DP
+  *     the count runs too: over end positions, max piece length bounds
+  *     the inner loop).
   *  3. '''M-step''': piece probabilities ← normalized Viterbi counts
   *     (+ smoothing ε so a piece never hits -∞ between rounds).
   *     The hard-EM objective Σ_w c_w · logP(bestseg(w)) is
@@ -69,108 +71,6 @@ object Unigram {
       .toDF("rank", "piece", "logp")
   }
 
-  /** Distributed word-count pass shared with BPE training: byte-level
-    * GPT-2 pretokens with whitespace marker mapping (so a piece can
-    * span a leading space exactly like a BPE symbol), or legacy
-    * lowercase-alnum words. */
-  private def wordCounts(docs: DataFrame, textCol: String,
-      byteLevel: Boolean, maxWords: Int): Array[(String, Long)] = {
-    import graft.functions.{TextFunctions => TF}
-    val words =
-      if (byteLevel)
-        docs.select(explode(transform(TF.gpt2Pretokens(col(textCol)),
-          w => translate(w, TF.WsFrom, TF.WsTo))).as("w"))
-      else
-        docs.select(explode(TF.alnumWords(col(textCol))).as("w"))
-    val wc = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w"))
-      .limit(maxWords + 1)
-      .collect()
-    require(wc.length <= maxWords,
-      s"distinct-word table exceeds maxWords=$maxWords — raise the cap explicitly " +
-        "if the corpus vocabulary is really this large")
-    wc.map(r => (r.getString(0), r.getLong(1)))
-  }
-
-  /** Viterbi-best segmentation of `w` under `logp` (pieces absent from
-    * the map are unusable; single chars are guaranteed present for
-    * training words). Returns (total logp, piece count); `unkLogp`
-    * prices characters never seen in training (inference only). */
-  private def viterbi(w: String, logp: java.util.HashMap[String, java.lang.Double],
-      maxPieceLen: Int, unkLogp: Double): (Double, Int) = {
-    val n = w.length
-    val bestLp = new Array[Double](n + 1)
-    val bestN = new Array[Int](n + 1)
-    java.util.Arrays.fill(bestLp, Double.NegativeInfinity)
-    bestLp(0) = 0.0
-    var end = 1
-    while (end <= n) {
-      var start = math.max(0, end - maxPieceLen)
-      while (start < end) {
-        if (bestLp(start) != Double.NegativeInfinity) {
-          // avoid splitting a surrogate pair: a piece must end on a
-          // code-point boundary
-          val boundaryOk = !(end < n && Character.isHighSurrogate(w.charAt(end - 1)) &&
-            Character.isLowSurrogate(w.charAt(end)))
-          if (boundaryOk) {
-            val lpObj = logp.get(w.substring(start, end))
-            val lp =
-              if (lpObj != null) lpObj.doubleValue
-              else if (end - start <= 2 && (end - start == 1 ||
-                Character.isSurrogatePair(w.charAt(start), w.charAt(start + 1))))
-                unkLogp // unseen single code point: priced, never stuck
-              else Double.NegativeInfinity
-            if (lp != Double.NegativeInfinity) {
-              val cand = bestLp(start) + lp
-              // strict > : ties resolve to the LONGEST last piece
-              // (smallest start is examined first), deterministic
-              if (cand > bestLp(end)) {
-                bestLp(end) = cand
-                bestN(end) = bestN(start) + 1
-              }
-            }
-          }
-        }
-        start += 1
-      }
-      end += 1
-    }
-    (bestLp(n), bestN(n))
-  }
-
-  /** Backtrace variant: the actual best piece sequence (training M-step
-    * needs the pieces, not just the count). */
-  private def viterbiPieces(w: String, logp: java.util.HashMap[String, java.lang.Double],
-      maxPieceLen: Int): Seq[String] = {
-    val n = w.length
-    val bestLp = new Array[Double](n + 1)
-    val back = new Array[Int](n + 1)
-    java.util.Arrays.fill(bestLp, Double.NegativeInfinity)
-    bestLp(0) = 0.0
-    var end = 1
-    while (end <= n) {
-      var start = math.max(0, end - maxPieceLen)
-      while (start < end) {
-        if (bestLp(start) != Double.NegativeInfinity) {
-          val lpObj = logp.get(w.substring(start, end))
-          if (lpObj != null) {
-            val cand = bestLp(start) + lpObj.doubleValue
-            if (cand > bestLp(end)) { bestLp(end) = cand; back(end) = start }
-          }
-        }
-        start += 1
-      }
-      end += 1
-    }
-    if (bestLp(n) == Double.NegativeInfinity) Seq.empty
-    else {
-      val out = scala.collection.mutable.ListBuffer.empty[String]
-      var p = n
-      while (p > 0) { out.prepend(w.substring(back(p), p)); p = back(p) }
-      out.toSeq
-    }
-  }
-
   /** Train a unigram vocabulary; returns (piece, logp) with logp the
     * final normalized log-probability. `vocabSize` counts pieces
     * INCLUDING the mandatory single characters. */
@@ -187,7 +87,7 @@ object Unigram {
     require(vocabSize > 0, "vocabSize must be positive")
     require(emIters >= 1, "emIters must be >= 1 (EM is what normalizes after pruning)")
     require(shrinkFactor > 0 && shrinkFactor < 1, "shrinkFactor in (0,1)")
-    val wc = wordCounts(docs, textCol, byteLevel, maxWords)
+    val wc = Bpe.wordCounts(docs, textCol, byteLevel, maxWords)
 
     // mandatory coverage: every single code point seen in training
     val chars = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -239,11 +139,18 @@ object Unigram {
     val init = -math.log(vocab.length.toDouble)
     vocab.foreach(p => logp.put(p, java.lang.Double.valueOf(init)))
 
+    // the best segmentation under the current table; every char of a
+    // training word is a piece, so no unk price
+    def segment(w: String): List[String] = {
+      val (lp, back) = UnigramKernel.viterbi(w, logp, maxPieceLen, Double.NegativeInfinity)
+      if (lp == Double.NegativeInfinity) Nil else UnigramKernel.pieces(w, back)
+    }
+
     def emRound(): java.util.HashMap[String, java.lang.Double] = {
       val counts = new java.util.HashMap[String, java.lang.Double]()
       var total = 0.0
       wc.foreach { case (w, c) =>
-        viterbiPieces(w, logp, maxPieceLen).foreach { p =>
+        segment(w).foreach { p =>
           val prev = counts.get(p)
           counts.put(p, java.lang.Double.valueOf(
             if (prev == null) c.toDouble else prev.doubleValue + c))
@@ -272,7 +179,7 @@ object Unigram {
         // prune by Viterbi count mass, single chars immune
         val counts = new java.util.HashMap[String, java.lang.Double]()
         wc.foreach { case (w, c) =>
-          viterbiPieces(w, logp, maxPieceLen).foreach { p =>
+          segment(w).foreach { p =>
             val prev = counts.get(p)
             counts.put(p, java.lang.Double.valueOf(
               if (prev == null) c.toDouble else prev.doubleValue + c))
@@ -296,80 +203,17 @@ object Unigram {
     vocab.sorted.toSeq.map(p => (p, logp.get(p).doubleValue))
   }
 
-  /** (id, n_sp) per document: Viterbi piece count under the trained
-    * vocabulary — broadcast table, per-partition distinct-pretoken
-    * memo, zero shuffles. */
+  /** (id, n_sp) per document: the Viterbi piece count under the
+    * vocabulary, through the native [[graft.plans.TokenCount]]
+    * expression — broadcast piece table, per-task pre-token memo, zero
+    * shuffles, the [[Bpe.tokenCounts]] shape. Null text counts 0. */
   def tokenCounts(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       pieces: Seq[(String, Double)],
-      byteLevel: Boolean = true): DataFrame = {
-    val table = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
-    var maxLen = 1
-    pieces.foreach { case (p, lp) =>
-      table.put(p, java.lang.Double.valueOf(lp))
-      if (p.length > maxLen) maxLen = p.length
-    }
-    // unseen chars priced below every real piece: floor - 10 nats
-    val unkLogp = (pieces.iterator.map(_._2).foldLeft(0.0)(math.min)) - 10.0
-    val bc = docs.sparkSession.sparkContext.broadcast((table, maxLen, unkLogp))
-    val outSchema = StructType(Seq(
-      StructField("id", docs.schema(idCol).dataType),
-      StructField("n_sp", LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val idIdx = docs.schema.fieldIndex(idCol)
-    val textIdx = docs.schema.fieldIndex(textCol)
-    docs.mapPartitions { rows =>
-      val (tbl, mLen, unk) = bc.value
-      val gpt2 = java.util.regex.Pattern.compile(TextFunctions.Gpt2Pattern)
-      val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
-      val MaxMemo = 1 << 20
-
-      def countWord(w0: String): Long = {
-        val hit = memo.get(w0)
-        if (hit != null) return hit.longValue()
-        val w =
-          new String(w0.flatMap {
-            case ' '  => "Ġ"
-            case '\n' => "Ċ"
-            case '\t' => "ĉ"
-            case '\r' => "č"
-            case c    => c.toString
-          })
-        val c = viterbi(w, tbl, mLen, unk)._2.toLong
-        if (memo.size < MaxMemo) memo.put(w0, c)
-        c
-      }
-
-      def countLegacy(w: String): Long = {
-        val hit = memo.get(w)
-        if (hit != null) return hit.longValue()
-        val c = viterbi(w, tbl, mLen, unk)._2.toLong
-        if (memo.size < MaxMemo) memo.put(w, c)
-        c
-      }
-
-      rows.map { r =>
-        val text = r.getString(textIdx)
-        var total = 0L
-        if (text != null) {
-          if (byteLevel) {
-            val m = gpt2.matcher(text)
-            while (m.find()) total += countWord(m.group())
-          } else {
-            val words = text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+")
-            var i = 0
-            while (i < words.length) {
-              if (words(i).nonEmpty) total += countLegacy(words(i))
-              i += 1
-            }
-          }
-        }
-        Row(r.get(idIdx), total)
-      }
-    }(enc).withColumnRenamed("id", idCol)
-  }
+      byteLevel: Boolean = true): DataFrame =
+    docs.select(col(idCol), UnigramKernel.count(col(textCol), pieces, byteLevel).as("n_sp"))
 
   /** Hard-EM objective Σ_w c_w · logP(bestseg(w)) for a vocabulary over
     * the counted-word table of `docs` — exposed for the monotonicity
@@ -377,11 +221,11 @@ object Unigram {
   def corpusObjective(docs: DataFrame, textCol: String,
       pieces: Seq[(String, Double)], maxPieceLen: Int = 8,
       byteLevel: Boolean = true, maxWords: Int = 1000000): Double = {
-    val wc = wordCounts(docs, textCol, byteLevel, maxWords)
+    val wc = Bpe.wordCounts(docs, textCol, byteLevel, maxWords)
     val table = new java.util.HashMap[String, java.lang.Double](pieces.length * 2)
     pieces.foreach { case (p, lp) => table.put(p, java.lang.Double.valueOf(lp)) }
     wc.iterator.map { case (w, c) =>
-      val (lp, _) = viterbi(w, table, maxPieceLen, Double.NegativeInfinity)
+      val (lp, _) = UnigramKernel.viterbi(w, table, maxPieceLen, Double.NegativeInfinity)
       c * lp
     }.sum
   }

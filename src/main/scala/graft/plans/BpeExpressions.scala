@@ -15,9 +15,24 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
-/** The BPE token-count kernel behind [[BpeCount]]: rank-priority
-  * adjacent-pair merging (Sennrich et al. 2016) against a rank map —
-  * repeatedly merge the lowest-rank pair present in the word, all its
+/* The native token count of both production tokenizer families, BPE
+ * (graft.operators.Bpe) and unigram-LM (graft.operators.Unigram): one
+ * expression, [[TokenCount]], owns what they share (the pre-tokenizer,
+ * the per-task memo, the broadcast model handle, null text → 0,
+ * codegen); a [[TokenModel]] supplies only the count of one pre-token. */
+
+/** A tokenizer model as [[TokenCount]] sees it: the token count of one
+  * RAW pre-token (whitespace not yet mapped to the GPT-2 markers — BPE
+  * tells a mapped space from a literal 'Ġ' by its UTF-8 surplus). */
+sealed trait TokenModel extends Serializable {
+  /** The name a count under this model shows in plans and SQL text. */
+  def sqlName: String
+  def countWord(preToken: String): Long
+}
+
+/** The BPE token-count kernel: rank-priority adjacent-pair merging
+  * (Sennrich et al. 2016) against a rank map — repeatedly merge the
+  * lowest-rank pair present in the word, all its
   * leftmost-non-overlapping occurrences at once. Per-word cost is
   * O(len² · pairs applied), independent of the merge-table size. */
 object BpeKernel {
@@ -29,25 +44,21 @@ object BpeKernel {
     * that came from a text vocab file. */
   private val Sep = '\u0000'
 
-  /** Bound on a task's pre-token memo, so an adversarial
-    * all-distinct-words corpus can't grow the heap without limit. */
-  private[plans] val MaxMemo = 1 << 20
-
-  /** The rank map of an ordered merge table, broadcast: it ships once
-    * per executor, never as a per-task literal (a 50k-merge table is
-    * ~1 MB). On a duplicate pair the first (lowest) rank wins. */
-  private[plans] def broadcastRanks(merges: Seq[(String, String)]): Broadcast[Ranks] = {
+  /** The model of an ordered merge table: its rank map (a 50k-merge
+    * table is ~1 MB). On a duplicate pair the first (lowest) rank
+    * wins. */
+  private[plans] def model(merges: Seq[(String, String)]): TokenModel = {
     val m = new Ranks(merges.length * 2)
     merges.zipWithIndex.foreach { case ((a, b), r) =>
       m.putIfAbsent(a + Sep + b, Integer.valueOf(r))
     }
-    SparkSession.active.sparkContext.broadcast(m)
+    new BpeModel(m)
   }
 
   /** Per-document BPE token count of `text` under `merges`; null text
     * counts 0. */
   def count(text: Column, merges: Seq[(String, String)], byteLevel: Boolean): Column =
-    GraftShim.column(BpeCount(GraftShim.expression(text), broadcastRanks(merges), byteLevel))
+    TokenCount.column(text, model(merges), byteLevel)
 
   private[plans] def utf8Len(cp: Int): Int =
     if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4
@@ -88,10 +99,132 @@ object BpeKernel {
   }
 }
 
+/** BPE per pre-token: symbols are code points with whitespace mapped
+  * to the GPT-2 markers, plus the UTF-8 byte surplus of every other
+  * non-ASCII char. A lowercase-alnum word (the legacy pre-tokens) has
+  * neither whitespace nor surplus, so one count serves both modes. */
+private[plans] final class BpeModel(ranks: BpeKernel.Ranks) extends TokenModel {
+  def sqlName: String = "graft_bpe_count"
+
+  def countWord(w: String): Long = {
+    val syms = new ArrayBuffer[String](w.length)
+    var surplus = 0L
+    var i = 0
+    while (i < w.length) {
+      val cp = w.codePointAt(i)
+      val marker = TextFunctions.WsFrom.indexOf(cp)
+      syms += (if (marker >= 0) String.valueOf(TextFunctions.WsTo.charAt(marker)) else {
+        surplus += BpeKernel.utf8Len(cp) - 1
+        new String(Character.toChars(cp))
+      })
+      i += Character.charCount(cp)
+    }
+    BpeKernel.mergeCount(syms, ranks) + surplus
+  }
+}
+
+/** The unigram-LM kernel (Kudo 2018): Viterbi-best segmentation of a
+  * word into vocabulary pieces — the count kernel and the E-step of
+  * `graft.operators.Unigram.train`. */
+object UnigramKernel {
+
+  /** Piece → log-probability. */
+  type LogProbs = java.util.HashMap[String, java.lang.Double]
+
+  /** The model of a vocabulary: its piece table, its longest piece and
+    * the unk price — chars never seen in training cost the table's
+    * floor (at most 0) minus 10 nats. */
+  private def model(pieces: Seq[(String, Double)]): TokenModel = {
+    val table = new LogProbs(pieces.length * 2)
+    var maxLen = 1
+    pieces.foreach { case (p, lp) =>
+      table.put(p, java.lang.Double.valueOf(lp))
+      if (p.length > maxLen) maxLen = p.length
+    }
+    val unkLogp = pieces.iterator.map(_._2).foldLeft(0.0)(math.min) - 10.0
+    new UnigramModel(table, maxLen, unkLogp)
+  }
+
+  /** Per-document unigram piece count of `text` under `pieces`; null
+    * text counts 0. */
+  def count(text: Column, pieces: Seq[(String, Double)], byteLevel: Boolean): Column =
+    TokenCount.column(text, model(pieces), byteLevel)
+
+  /** Viterbi-best segmentation of `w` under `logp`: the best last piece
+    * ending at `end` starts at `back(end)`. Returns (total logp, back);
+    * the total is -∞ when `w` has no segmentation. A piece ends on a
+    * code-point boundary; pieces absent from `logp` are unusable, and
+    * `unkLogp` prices a single code point never seen in training (pass
+    * -∞ to forbid it). Strict > keeps, among equal totals, the LONGEST
+    * last piece (the smallest start is examined first). */
+  def viterbi(w: String, logp: LogProbs, maxPieceLen: Int,
+      unkLogp: Double): (Double, Array[Int]) = {
+    val n = w.length
+    val bestLp = new Array[Double](n + 1)
+    val back = new Array[Int](n + 1)
+    java.util.Arrays.fill(bestLp, Double.NegativeInfinity)
+    bestLp(0) = 0.0
+    var end = 1
+    while (end <= n) {
+      val boundaryOk = !(end < n && Character.isHighSurrogate(w.charAt(end - 1)) &&
+        Character.isLowSurrogate(w.charAt(end)))
+      var start = math.max(0, end - maxPieceLen)
+      while (boundaryOk && start < end) {
+        if (bestLp(start) != Double.NegativeInfinity) {
+          val lpObj = logp.get(w.substring(start, end))
+          val lp =
+            if (lpObj != null) lpObj.doubleValue
+            else if (end - start == 1 ||
+                (end - start == 2 && Character.isSurrogatePair(w.charAt(start), w.charAt(start + 1))))
+              unkLogp
+            else Double.NegativeInfinity
+          if (lp != Double.NegativeInfinity) {
+            val cand = bestLp(start) + lp
+            if (cand > bestLp(end)) { bestLp(end) = cand; back(end) = start }
+          }
+        }
+        start += 1
+      }
+      end += 1
+    }
+    (bestLp(n), back)
+  }
+
+  /** The pieces of the segmentation [[viterbi]] found, first to last. */
+  def pieces(w: String, back: Array[Int]): List[String] = {
+    var out = List.empty[String]
+    var p = w.length
+    while (p > 0) { out = w.substring(back(p), p) :: out; p = back(p) }
+    out
+  }
+}
+
+/** Unigram per pre-token: the Viterbi piece count of the pre-token with
+  * whitespace mapped to the GPT-2 markers (the training words' form). */
+private[plans] final class UnigramModel(logp: UnigramKernel.LogProbs, maxLen: Int,
+    unkLogp: Double) extends TokenModel {
+  def sqlName: String = "graft_unigram_count"
+
+  def countWord(w: String): Long = {
+    val cs = w.toCharArray
+    var i = 0
+    while (i < cs.length) {
+      val marker = TextFunctions.WsFrom.indexOf(cs(i))
+      if (marker >= 0) cs(i) = TextFunctions.WsTo.charAt(marker)
+      i += 1
+    }
+    val (lp, back) = UnigramKernel.viterbi(new String(cs), logp, maxLen, unkLogp)
+    var n = 0L
+    var p = cs.length
+    while (lp != Double.NegativeInfinity && p > 0) { n += 1; p = back(p) }
+    n
+  }
+}
+
 /** One task's counter: the compiled pre-tokenizer and a bounded
   * pre-token → count memo. Natural text repeats words heavily (Zipf),
-  * so merging runs once per DISTINCT pre-token per task. */
-final class BpeCounter(ranks: BpeKernel.Ranks, byteLevel: Boolean) {
+  * so the model counts once per DISTINCT pre-token per task. */
+final class TokenCounter(model: TokenModel, byteLevel: Boolean) {
   private val gpt2 = Pattern.compile(TextFunctions.Gpt2Pattern)
   private val nonAlnum = Pattern.compile("[^a-z0-9]+")
   private val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
@@ -117,53 +250,33 @@ final class BpeCounter(ranks: BpeKernel.Ranks, byteLevel: Boolean) {
   private def memoized(w: String): Long = {
     val hit = memo.get(w)
     if (hit != null) return hit.longValue()
-    val c = if (byteLevel) byteLevelCount(w) else legacyCount(w)
-    if (memo.size < BpeKernel.MaxMemo) memo.put(w, c)
+    val c = model.countWord(w)
+    if (memo.size < TokenCounter.MaxMemo) memo.put(w, c)
     c
-  }
-
-  // byte-level: whitespace → GPT-2 markers, symbols = code points,
-  // plus the UTF-8 byte surplus of non-ASCII chars
-  private def byteLevelCount(w: String): Long = {
-    val syms = new ArrayBuffer[String](w.length)
-    var surplus = 0L
-    var i = 0
-    while (i < w.length) {
-      val cp = w.codePointAt(i)
-      val marker = TextFunctions.WsFrom.indexOf(cp)
-      syms += (if (marker >= 0) String.valueOf(TextFunctions.WsTo.charAt(marker)) else {
-        surplus += BpeKernel.utf8Len(cp) - 1
-        new String(Character.toChars(cp))
-      })
-      i += Character.charCount(cp)
-    }
-    BpeKernel.mergeCount(syms, ranks) + surplus
-  }
-
-  // legacy: lowercase-alnum symbols, no surplus (words are ASCII)
-  private def legacyCount(w: String): Long = {
-    val syms = new ArrayBuffer[String](w.length)
-    var i = 0
-    while (i < w.length) { syms += String.valueOf(w.charAt(i)); i += 1 }
-    BpeKernel.mergeCount(syms, ranks)
   }
 }
 
-/** BPE token count of a document, non-nullable long (null text → 0) —
-  * see [[BpeKernel]] and [[graft.operators.Bpe]]. `byteLevel` picks
-  * GPT-2 byte-level symbols over [[TextFunctions.Gpt2Pattern]]
-  * pre-tokens, or the legacy lowercase-alnum words. The rank map rides
-  * a broadcast, so the plan carries a handle, not the table; the
-  * generated code holds one [[BpeCounter]] (and so one memo) per
-  * task. */
-case class BpeCount(child: Expression, ranks: Broadcast[BpeKernel.Ranks], byteLevel: Boolean)
+object TokenCounter {
+  /** Bound on a task's pre-token memo, so an adversarial
+    * all-distinct-words corpus can't grow the heap without limit. */
+  private val MaxMemo = 1 << 20
+}
+
+/** Token count of a document under a tokenizer model, non-nullable
+  * long (null text → 0) — see [[BpeKernel]], [[UnigramKernel]],
+  * [[graft.operators.Bpe]] and [[graft.operators.Unigram]]. `byteLevel`
+  * picks GPT-2 byte-level pre-tokens ([[TextFunctions.Gpt2Pattern]])
+  * or the legacy lowercase-alnum words. The model rides a broadcast,
+  * so the plan carries a handle, not the table; the generated code
+  * holds one [[TokenCounter]] (and so one memo) per task. */
+case class TokenCount(child: Expression, model: Broadcast[TokenModel], byteLevel: Boolean)
     extends UnaryExpression {
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
-  override def prettyName: String = "graft_bpe_count"
+  override def prettyName: String = model.value.sqlName
 
-  def newCounter(): BpeCounter = new BpeCounter(ranks.value, byteLevel)
+  def newCounter(): TokenCounter = new TokenCounter(model.value, byteLevel)
 
   @transient private lazy val counter = newCounter()
 
@@ -173,8 +286,8 @@ case class BpeCount(child: Expression, ranks: Broadcast[BpeKernel.Ranks], byteLe
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("bpeCount", this)
-    val counter = ctx.addMutableState(classOf[BpeCounter].getName, "bpeCounter",
+    val self = ctx.addReferenceObj("tokenCount", this)
+    val counter = ctx.addMutableState(classOf[TokenCounter].getName, "tokenCounter",
       v => s"$v = $self.newCounter();")
     val c = child.genCode(ctx)
     ev.copy(code = code"""
@@ -185,4 +298,15 @@ case class BpeCount(child: Expression, ranks: Broadcast[BpeKernel.Ranks], byteLe
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object TokenCount {
+
+  /** Per-document count of `text` under `model`; null text counts 0. */
+  def column(text: Column, model: TokenModel, byteLevel: Boolean): Column =
+    GraftShim.column(TokenCount(GraftShim.expression(text), broadcast(model), byteLevel))
+
+  /** The model ships once per executor, never as a per-task literal. */
+  private[plans] def broadcast(model: TokenModel): Broadcast[TokenModel] =
+    SparkSession.active.sparkContext.broadcast(model)
 }

@@ -100,9 +100,9 @@ object GraftFunctions {
       }),
     // legacy lowercase-alnum count under the default merge table
     ("graft_bpe_count",
-      new ExpressionInfo(classOf[BpeCount].getName, "graft_bpe_count"),
-      (args: Seq[Expression]) => BpeCount(arity("graft_bpe_count", 1)(args).head,
-        BpeKernel.broadcastRanks(graft.functions.TextFunctions.DefaultMerges),
+      new ExpressionInfo(classOf[TokenCount].getName, "graft_bpe_count"),
+      (args: Seq[Expression]) => TokenCount(arity("graft_bpe_count", 1)(args).head,
+        TokenCount.broadcast(BpeKernel.model(graft.functions.TextFunctions.DefaultMerges)),
         byteLevel = false)),
     // Column-composed kernels ride the same registry through the eager
     // node converter (a lazy wrapper would reach codegen unevaluable

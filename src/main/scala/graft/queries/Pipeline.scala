@@ -58,7 +58,7 @@ object Pipeline {
         TF.bpeTokenCount(col("text")).as("n_bpe"))),
 
     // tokenizer-faithful counts: rank-priority BPE merges against a
-    // fixed merge table through the native BpeCount kernel (broadcast
+    // fixed merge table through the native TokenCount kernel (broadcast
     // rank map, per-task word memo; graft.operators.Bpe); the
     // whitespace/regex counts above are the cheap approximations, this
     // is the budget-grade number
@@ -80,7 +80,9 @@ object Pipeline {
     // variant): seed substrings → Viterbi E-step / count-normalize
     // M-step → prune to the target vocab. Rows-only by design (the EM
     // fixpoint has no SQL oracle); determinism, monotone objective and
-    // Viterbi optimality vs brute-force enumeration are spec-pinned
+    // Viterbi optimality vs brute-force enumeration are spec-pinned.
+    // One distributed word-count pass (the one q_bpe_train runs);
+    // EM on the Zipf-bounded word table, driver-side
     "q_sp_train" -> ((s, dir) =>
       graft.operators.Unigram.piecesDf(s,
         graft.operators.Unigram.train(
@@ -88,11 +90,11 @@ object Pipeline {
         .select(col("rank"), col("piece"), round(col("logp"), 6).as("logp"))),
 
     // unigram-LM token counting under the trained vocabulary: Viterbi
-    // segmentation against a broadcast piece table with a per-partition
-    // distinct-pretoken memo — the q_token_bpe operator shape for the
-    // second production tokenizer family. Rows-only by design (Viterbi
-    // has no SQL oracle); segmentation optimality and count bounds are
-    // spec-pinned
+    // segmentation in the native TokenCount kernel q_token_bpe runs
+    // (broadcast piece table, per-task pre-token memo) — one scan-side
+    // select for the second production tokenizer family. Rows-only by
+    // design (Viterbi has no SQL oracle); segmentation optimality and
+    // count bounds are spec-pinned
     "q_token_sp" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val pieces = graft.operators.Unigram.train(docs, "text", vocabSize = 120)
@@ -941,7 +943,7 @@ object Pipeline {
         alpha = 0.5, totalTokens = 2000)),
 
     // per-language budget measured in TRUE BPE tokens (GPT-2 byte-level,
-    // the same scan-local BpeCount kernel as q_token_bpe): the budget
+    // the same scan-local TokenCount kernel as q_token_bpe): the budget
     // family counts case/punctuation/whitespace tokens, not just
     // lowercase words
     "q_budget_bpe" -> ((s, dir) =>

@@ -600,7 +600,11 @@ class CorpusOpsSpec extends SparkSpec {
       "\u000B\f\u000B\f", "a\u000Bb\fc \u000B\u000B the",
       "the thing", "Hello, world! DON'T stop", "10 000 2000",
       // 2-, 3- and 4-byte UTF-8, surrogate pairs
-      "naïve café 中文 文本", "😀 emoji𝄞 x😀y")
+      "naïve café 中文 文本", "😀 emoji𝄞 x😀y",
+      // a literal U+0120 is the space marker's symbol plus one surplus
+      // byte; a mapped space is the symbol alone (each model sees the
+      // raw pre-token)
+      "\u0120", "\u0120the \u0120at")
     // a LocalRelation folds on the driver (interpreted eval); an
     // RDD-backed frame and the parquet table run whole-stage codegen
     val local = texts.toDF("text")

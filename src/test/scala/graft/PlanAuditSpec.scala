@@ -670,19 +670,32 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("BPE counts run natively — no interpreted lambda in the plan") {
-    // every BPE count, Column, operator and SQL alike, is the one native
-    // BpeCount expression, not a transform/aggregate replace chain
+    // every BPE count, Column, operator and SQL alike, is the native
+    // TokenCount expression under a BPE model, not a transform/aggregate
+    // replace chain; the unigram count (q_token_sp) is the same
+    // expression under a piece table, not a mapPartitions row loop
+    import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, MapPartitions}
+    import graft.plans.TokenCount
+    def counts(model: String)(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e match {
+        case t: TokenCount => t.prettyName == model
+        case _ => false
+      }
     val plans = Seq("q_budget_bpe", "q_token_bpe").map(q =>
-      q -> SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan) :+
-      ("graft_bpe_count" -> {
+      (q, "graft_bpe_count", SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan)) :+
+      (("graft_bpe_count", "graft_bpe_count", {
         Tables.t(spark, Sf, "documents").createOrReplaceTempView("bpe_docs")
         spark.sql("SELECT graft_bpe_count(text) AS n FROM bpe_docs").queryExecution.optimizedPlan
-      })
-    for ((q, plan) <- plans) {
+      })) :+
+      (("q_token_sp", "graft_unigram_count",
+        SparkEntry.queries("q_token_sp")(spark, Sf).queryExecution.optimizedPlan))
+    for ((q, model, plan) <- plans) {
       val hofs = PlanDump.lambdas(plan)
       assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
-      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.BpeCount]))),
-        s"$q counts without the native BpeCount:\n$plan")
+      assert(plan.exists(_.expressions.exists(_.exists(counts(model)))),
+        s"$q counts without the native TokenCount ($model):\n$plan")
+      assert(!plan.exists(p => p.isInstanceOf[MapPartitions] || p.isInstanceOf[DeserializeToObject]),
+        s"$q counts in a row loop:\n$plan")
     }
   }
 

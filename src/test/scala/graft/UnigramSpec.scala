@@ -127,4 +127,55 @@ class UnigramSpec extends SparkSpec {
       .collect().map(_.getLong(1))
     assert(counts.forall(_ >= 3L), "every doc yields at least its word count in pieces")
   }
+
+  test("native unigram count matches the row-loop reference bit for bit") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.LongType
+    val texts: Seq[String] = Seq(
+      null, "", "   ", " \t\n\r ",
+      // \x0B and \f are `\s` but have no GPT-2 marker: plain chars
+      "\u000B\f\u000B\f", "a\u000Bb\fc \u000B\u000B the",
+      "the token budget", "Hello, world! DON'T stop", "10 000 2000",
+      // a literal marker char reads like a mapped space to unigram
+      "\u0120the the",
+      // 2-, 3- and 4-byte UTF-8, surrogate pairs; chars never seen in
+      // training pay the unk price
+      "naïve café 中文 文本", "😀 emoji𝄞 x😀y", "zqxj ÿ \u2028")
+    val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    // a LocalRelation folds on the driver (interpreted eval); an
+    // RDD-backed frame and the parquet table run whole-stage codegen
+    val local = rows.toDF("doc_id", "text")
+    val viaRdd = spark.sparkContext.parallelize(rows, 2).toDF("doc_id", "text")
+    val docs = Tables.t(spark, Sf, "documents").select(col("doc_id"), col("text"))
+    val hand = Seq(
+      "t" -> math.log(0.05), "h" -> math.log(0.04), "e" -> math.log(0.06),
+      "th" -> math.log(0.10), "the" -> math.log(0.12), "\u0120" -> math.log(0.07),
+      "\u0120the" -> math.log(0.15), "é" -> math.log(0.02), "😀" -> math.log(0.01),
+      "to" -> math.log(0.03), "ok" -> math.log(0.02), "en" -> math.log(0.03))
+    val corpus = docsOf("the token budget measures the token stream",
+      "der Käse ist gut, the cat isn't", "😀 tokens\tand\nlines")
+    def same(df: DataFrame, pieces: Seq[(String, Double)], byteLevel: Boolean,
+        what: String): Unit = {
+      val got = Unigram.tokenCounts(df, "doc_id", "text", pieces, byteLevel)
+      val n = got.schema("n_sp")
+      assert(n.dataType == LongType && !n.nullable, s"$what: $n")
+      val kernel = got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val loop = UnigramLoop.tokenCounts(df, "doc_id", "text", pieces, byteLevel)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(kernel.nonEmpty && kernel == loop, s"$what: kernel $kernel vs loop $loop")
+    }
+    for (byteLevel <- Seq(true, false)) {
+      val trained = Unigram.train(corpus, "text", vocabSize = 60, byteLevel = byteLevel)
+      val onDocs = Unigram.train(docs, "text", vocabSize = 120, byteLevel = byteLevel)
+      for ((vocab, v) <- Seq((hand, "hand"), (trained, "trained"), (onDocs, "documents-trained"));
+           (df, label) <- Seq((local, "edge cases"), (viaRdd, "edge cases, codegen"),
+             (docs, "documents")))
+        same(df, vocab, byteLevel, s"byteLevel=$byteLevel, $v vocab, $label")
+    }
+    // null, empty and word-free text count 0 in legacy mode
+    val legacy = Unigram.tokenCounts(local, "doc_id", "text", hand, byteLevel = false)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Seq(0L, 1L, 2L, 3L, 4L).forall(legacy(_) == 0L), legacy)
+  }
 }
