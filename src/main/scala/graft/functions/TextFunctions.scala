@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 /** Text-analysis column functions for the LLM-pipeline operators
   * (SURVEY.md §2.3). Built from `org.apache.spark.sql.functions._` and
   * the native kernels in [[graft.plans]] — no UDFs. The `transform`/
-  * `filter`/`aggregate` lambdas used here are NOT codegen'd: they run
+  * `filter`/`aggregate` lambdas still used here (the line signals, the
+  * URL query filter, shingles, MinHash) are NOT codegen'd: they run
   * interpreted per array element, so hot paths go through the native
-  * kernels (the tokenizer, the hashes, the n-grams, the BPE counter).
+  * kernels (the tokenizer, the hashes, the n-grams, the BPE counter,
+  * and the one text-signal pass behind the quality gate, the quality
+  * ratios and language ID).
   */
 object TextFunctions {
 
@@ -93,13 +96,21 @@ object TextFunctions {
 
   def charCount(text: Column): Column = length(text)
 
-  /** Fraction of characters that are sentence punctuation. */
-  def punctRatio(text: Column): Column =
-    length(regexp_replace(text, "[^.!?,;:]", "")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
+  /** The one-pass counts behind the Gopher-style signals below — see
+    * [[graft.plans.TextSignals]]. */
+  private def counts(text: Column): graft.plans.TextCounts =
+    graft.plans.TextSignals.columns(text)
 
-  /** Stopword lists per language for the n-gram/stopword heuristics.
-    * Fixed, tiny, broadcast as literals into codegen. */
+  /** `num / max(den, 1)` over int counts, in doubles. */
+  private def ratio(num: Column, den: Column): Column =
+    num.cast("double") / greatest(den, lit(1)).cast("double")
+
+  /** Fraction of characters that are sentence punctuation ([.!?,;:]). */
+  def punctRatio(text: Column): Column = ratio(counts(text).punct, counts(text).chars)
+
+  /** Stopword lists per language for the stopword heuristics. Fixed
+    * and tiny: the text-signal kernel ([[graft.plans.TextSignals]])
+    * builds its one word → lists index from them. */
   val Stopwords: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "in", "is", "on", "for"),
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "mit", "ein"),
@@ -108,22 +119,13 @@ object TextFunctions {
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "他", "这")
   )
 
-  def stopwordHits(text: Column, words: Seq[String]): Column = {
-    val wordArr = array(words.map(lit): _*)
-    size(filter(tokens(text), t => array_contains(wordArr, t)))
-  }
-
   /** Fraction of tokens that are (any-language) stopwords. */
-  def stopwordRatio(text: Column): Column = {
-    val all = Stopwords.flatMap(_._2)
-    stopwordHits(text, all).cast("double") /
-      greatest(tokenCount(text), lit(1)).cast("double")
-  }
+  def stopwordRatio(text: Column): Column = ratio(counts(text).stopwords, counts(text).words)
 
   /** Language-ID heuristic: argmax of per-language stopword hits with a
     * fixed tie-break order (the declaration order of [[Stopwords]]). */
   def langId(text: Column): Column = {
-    val hits = Stopwords.map { case (lang, words) => lang -> stopwordHits(text, words) }
+    val hits = Stopwords.map(_._1).zip(counts(text).stopwordsByLang)
     // ordered CASE: branch i fires when h_i >= every later h_j (earlier
     // branches already failed) — mirrors the DuckDB oracle SQL verbatim.
     val preds = hits.zipWithIndex.map { case ((lang, h), i) =>
@@ -139,7 +141,7 @@ object TextFunctions {
   /** Composite quality score in [0,1]: length + punctuation + stopword
     * signals (the reference-free heuristic a pretraining pipeline uses). */
   def qualityScore(text: Column): Column = {
-    val lenScore = least(tokenCount(text).cast("double") / lit(200.0), lit(1.0))
+    val lenScore = least(counts(text).words.cast("double") / lit(200.0), lit(1.0))
     val punct = punctRatio(text)
     val punctScore = when(punct > 0.2, lit(0.0)).otherwise(lit(1.0) - punct * 2.5)
     val stopScore = least(stopwordRatio(text) * lit(4.0), lit(1.0))
@@ -157,50 +159,34 @@ object TextFunctions {
 
   /** Fraction of characters that are neither alphanumeric nor
     * whitespace — the "symbol soup" signal of boilerplate/markup. */
-  def symbolRatio(text: Column): Column =
-    length(regexp_replace(text, "[a-zA-Z0-9\\s]", "")).cast("double") /
-      greatest(length(text), lit(1)).cast("double")
+  def symbolRatio(text: Column): Column = ratio(counts(text).symbols, counts(text).chars)
 
   /** Mean word length over non-whitespace chars — degenerate docs
     * (char soup, minified code) land far outside the natural-language
     * 2..12 band. */
-  def meanWordLen(text: Column): Column =
-    length(regexp_replace(text, "\\s+", "")).cast("double") /
-      greatest(tokenCount(text), lit(1)).cast("double")
+  def meanWordLen(text: Column): Column = ratio(counts(text).nonWs, counts(text).words)
 
   /** Gopher-style quality gate: the FIRST failing rule's name, or "ok".
     * Rule order is fixed (cheapest signals first) so the reason is
     * deterministic; `keep = reason == "ok"`. Thresholds follow the
     * published Gopher/C4 heuristics scaled to short synthetic docs.
-    * Executes as the native single-pass [[graft.plans.FilterReason]]
-    * (the Column form below re-scans every document with a regex per
-    * signal); the Column reference stays spec-compared bit-for-bit. */
+    * Null text → null. */
   def filterReason(
       text: Column,
       minWords: Int = 5,
       maxWords: Int = 1000,
       minMeanWordLen: Double = 2.0,
       maxMeanWordLen: Double = 12.0,
-      maxSymbolRatio: Double = 0.1): Column =
-    graft.plans.TextGateColumns.filterReason(text, minWords, maxWords,
-      minMeanWordLen, maxMeanWordLen, maxSymbolRatio, Stopwords.flatMap(_._2))
-
-  /** The Column/regex reference formulation of [[filterReason]]. */
-  def filterReasonHof(
-      text: Column,
-      minWords: Int = 5,
-      maxWords: Int = 1000,
-      minMeanWordLen: Double = 2.0,
-      maxMeanWordLen: Double = 12.0,
       maxSymbolRatio: Double = 0.1): Column = {
-    val nw = tokenCount(text)
+    val c = counts(text)
     val mwl = meanWordLen(text)
-    when(nw < minWords, "too_short")
-      .when(nw > maxWords, "too_long")
+    when(c.words < minWords, "too_short")
+      .when(c.words > maxWords, "too_long")
       .when(mwl < minMeanWordLen || mwl > maxMeanWordLen, "word_len")
       .when(symbolRatio(text) > maxSymbolRatio, "symbols")
-      .when(stopwordHits(text, Stopwords.flatMap(_._2)) === 0, "no_stopwords")
-      .otherwise("ok")
+      .when(c.stopwords === 0, "no_stopwords")
+      // no ELSE: every count is null on null text, so the reason is too
+      .when(c.stopwords > 0, "ok")
   }
 
   /** Non-blank lines of a document (the unit of the Gopher line-level

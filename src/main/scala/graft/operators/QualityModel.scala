@@ -16,7 +16,9 @@ import graft.functions.{TextFunctions => TF}
   *
   * 100 TB shape: training cost is fixed by `maxSample` (one bounded
   * collect of 6 doubles per row); scoring is closed-form arithmetic
-  * over scan-local signals — whole-stage codegen, zero shuffles, and
+  * over scan-local signals — five of the six features read the one
+  * native text-signal pass the rule gate reads
+  * ([[graft.plans.TextSignals]]) — whole-stage codegen, zero shuffles, and
   * bit-reproducible anywhere because the weights are plain doubles
   * computed by a fixed-iteration, full-batch gradient loop (no RNG,
   * no data-order dependence).
@@ -24,33 +26,25 @@ import graft.functions.{TextFunctions => TF}
 object QualityModel {
 
   /** The fixed feature set, in weight order after the intercept:
-    * length score, punctuation ratio, stopword ratio, symbol ratio,
-    * scaled mean word length, compression ratio. All scan-local.
+    * length score (words / 200, capped at 1), punctuation ratio,
+    * stopword ratio, symbol ratio, mean word length / 10, compression
+    * ratio. All scan-local.
     *
-    * The first five run as ONE native code-point pass
-    * ([[graft.plans.TextGate.features]]) — the Column reference form
-    * ([[featureColumnsRef]]) re-scans every document with a
-    * regexp_replace or split chain per feature, which made the
-    * score/train scans the hottest pure-CPU part of q_quality_model
-    * (measured ~5× this kernel at sf0.1). Values are bit-identical
-    * (same int counts, same max(·,1) guards, same division order —
-    * spec-pinned); the five element_at's share one evaluation through
-    * whole-stage-codegen subexpression elimination. */
+    * The first five are Column arithmetic over ONE native code-point
+    * pass ([[graft.plans.TextSignals]]), the counts the quality gate
+    * and score read too: subexpression elimination (and the kernel's
+    * per-row memo) runs the pass once per document however many
+    * features read it. */
   def featureColumns(text: Column): Seq[Column] = {
-    val qf = graft.plans.TextGateColumns.qualityFeatures(
-      text, TF.Stopwords.flatMap(_._2))
-    (1 to 5).map(i => element_at(qf, i)) :+ TF.compressionRatio(text)
+    val words = graft.plans.TextSignals.columns(text).words
+    // `least` skips nulls: gated, so null text keeps a null length score
+    when(words.isNotNull, least(words.cast("double") / lit(200.0), lit(1.0))) +: Seq(
+      TF.punctRatio(text),
+      TF.stopwordRatio(text),
+      TF.symbolRatio(text),
+      TF.meanWordLen(text) / lit(10.0),
+      TF.compressionRatio(text))
   }
-
-  /** The regexp/split Column reference of [[featureColumns]] —
-    * spec-compared bit-for-bit against the native kernel. */
-  def featureColumnsRef(text: Column): Seq[Column] = Seq(
-    least(TF.tokenCount(text).cast("double") / lit(200.0), lit(1.0)),
-    TF.punctRatio(text),
-    TF.stopwordRatio(text),
-    TF.symbolRatio(text),
-    TF.meanWordLen(text) / lit(10.0),
-    TF.compressionRatio(text))
 
   val NumFeatures: Int = 6
 

@@ -55,7 +55,7 @@ object Quantiles {
       groupCols: Seq[String],
       valCol: String,
       ps: Seq[(String, Double, String)]): DataFrame =
-    quantiles(df, groupCols, valCol, ps, counts = false)
+    quantilesAndGroups(df, groupCols, valCol, ps, counts = false)._1
 
   /** [[exactQuantilesStrategy]] for BOUNDED value domains (enum-like
     * columns: quantities, flags, bucket ids): the rank core runs over
@@ -73,14 +73,19 @@ object Quantiles {
       groupCols: Seq[String],
       valCol: String,
       ps: Seq[(String, Double, String)]): DataFrame =
-    quantiles(df, groupCols, valCol, ps, counts = true)
+    quantilesAndGroups(df, groupCols, valCol, ps, counts = true)._1
 
-  private def quantiles(
+  /** [[exactQuantilesStrategy]] (or, with `counts`,
+    * [[exactQuantilesCounts]]) and its EXACT group count — the result's
+    * row count, which pass 1 of the rank core already knows. A caller
+    * joining the result back onto its data sizes that join by it (the
+    * planner sees an ExistingRDD with no size estimate). */
+  private[graft] def quantilesAndGroups(
       df: DataFrame,
       groupCols: Seq[String],
       valCol: String,
       ps: Seq[(String, Double, String)],
-      counts: Boolean): DataFrame = {
+      counts: Boolean): (DataFrame, Long) = {
     require(ps.nonEmpty && ps.forall { case (_, p, _) => p >= 0 && p <= 1 })
     ps.foreach { case (_, _, s) =>
       require(Strategies.contains(s), s"unknown quantile strategy '$s' (${Strategies.mkString("/")})")
@@ -131,10 +136,6 @@ object Quantiles {
       .groupBy(groupCols.map(col): _*)
       .agg(ps.head match { case (name, p, s) => q(p, s).as(name) },
         ps.tail.map { case (name, p, s) => q(p, s).as(name) }: _*)
-    // one row per group, and pass 1 counted the groups exactly: a small
-    // result gets the rank tables' broadcast hint, so a caller joining
-    // it back onto the data (fillNullStrategy) does not shuffle the
-    // data side — the planner sees an ExistingRDD with no size estimate
-    if (ranked.groups.length <= Ranks.BroadcastRankRows) broadcast(out) else out
+    (out, ranked.groups.length.toLong)
   }
 }

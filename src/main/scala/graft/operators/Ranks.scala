@@ -270,8 +270,8 @@ object Ranks {
     }
   }
 
-  /** Rank attach tables and quantile results at or under this EXACT
-    * row count get a broadcast hint. Honest sizing: the (value, rank) payload is
+  /** Rank attach tables, and quantile results where a caller joins
+    * them back, at or under this EXACT row count get a broadcast hint. Honest sizing: the (value, rank) payload is
     * ~16 B/row, but a built broadcast HashedRelation costs several
     * times that (UnsafeRow framing + hash-map slots + pointer array —
     * realistically ~70–100 B/row), so the 1M cap is ≤ ~100 MB built
@@ -284,5 +284,5 @@ object Ranks {
     * ranking MANY columns at once should lower the bound
     * proportionally; the enum-like domains (flags, quantities,
     * buckets) this exists for sit orders of magnitude below it. */
-  private[operators] val BroadcastRankRows = 1000000L
+  private[graft] val BroadcastRankRows = 1000000L
 }

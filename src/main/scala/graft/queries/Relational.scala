@@ -1702,12 +1702,13 @@ object Relational {
         // a map-side-partial count instead of a range exchange of
         // every row (bit-identical results; see
         // Quantiles.exactQuantilesCounts and the r15 stress A/B)
-        val median = Seq(("__fill", 0.5, "linear"))
-        val med =
-          if (boundedDomain)
-            graft.operators.Quantiles.exactQuantilesCounts(df, groupCols, c, median)
-          else graft.operators.Quantiles.exactQuantilesStrategy(df, groupCols, c, median)
+        val (med, groups) = graft.operators.Quantiles.quantilesAndGroups(
+          df, groupCols, c, Seq(("__fill", 0.5, "linear")), counts = boundedDomain)
         if (groupCols.isEmpty) df.crossJoin(broadcast(med))
+        // one row per group: a small result broadcasts, so the data
+        // side does not shuffle
+        else if (groups <= graft.operators.Ranks.BroadcastRankRows)
+          df.join(broadcast(med), groupCols, "left")
         else df.join(med, groupCols, "left")
       case other => throw new IllegalArgumentException(
         s"unknown fill_null strategy '$other' (mean/median)")

@@ -224,16 +224,9 @@ object EventStreams {
       saveCounts: DataFrame => Unit,
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Vocab
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // materialize BEFORE save: merged is a lazy plan over loadCounts(),
-      // so with a parquet-table state backend an unmaterialized emit would
-      // re-read the just-overwritten path (double-counting the batch) or
-      // hit a read-while-write conflict
-      val merged = Vocab.mergeTokenCounts(loadCounts(), Vocab.tokenCounts(batch, textCol))
-        .localCheckpoint()
-      saveCounts(merged)
-      emit(Vocab.driftSummaryCounts(refCounts, merged))
-    }.start()
+    foldAndEmit(docs, loadCounts, saveCounts, emit)(
+      Vocab.tokenCounts(_, textCol), Vocab.mergeTokenCounts,
+      Vocab.driftSummaryCounts(refCounts, _))
   }
 
   /** Per-stratum twin of [[driftMonitoringSink]]: running
@@ -252,14 +245,9 @@ object EventStreams {
       saveCounts: DataFrame => Unit,
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Vocab
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // materialized before save — see driftMonitoringSink
-      val merged = Vocab.mergeStratumTokenCounts(
-        loadCounts(), Vocab.stratumTokenCounts(batch, stratumCol, textCol))
-        .localCheckpoint()
-      saveCounts(merged)
-      emit(Vocab.driftByStratumCounts(refCounts, merged))
-    }.start()
+    foldAndEmit(docs, loadCounts, saveCounts, emit)(
+      Vocab.stratumTokenCounts(_, stratumCol, textCol), Vocab.mergeStratumTokenCounts,
+      Vocab.driftByStratumCounts(refCounts, _))
   }
 
   /** Streaming corpus-health monitor — the live twin of
@@ -278,13 +266,8 @@ object EventStreams {
       saveSums: DataFrame => Unit,
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Curate
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // materialized before save — see driftMonitoringSink
-      val merged = Curate.mergeHealthSums(loadSums(), Curate.healthSums(batch, textCol))
-        .localCheckpoint()
-      saveSums(merged)
-      emit(Curate.finalizeHealth(merged))
-    }.start()
+    foldAndEmit(docs, loadSums, saveSums, emit)(
+      Curate.healthSums(_, textCol), Curate.mergeHealthSums, Curate.finalizeHealth)
   }
 
   /** Streaming contamination triage — the live twin of
@@ -330,14 +313,8 @@ object EventStreams {
       saveSums: DataFrame => Unit,
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Profile
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // materialized before save — see driftMonitoringSink
-      val merged = Profile.mergeProfileSums(
-        loadSums(), Profile.profileSums(batch, cols))
-        .localCheckpoint()
-      saveSums(merged)
-      emit(Profile.finalizeProfile(merged))
-    }.start()
+    foldAndEmit(docs, loadSums, saveSums, emit)(
+      Profile.profileSums(_, cols), Profile.mergeProfileSums, Profile.finalizeProfile)
   }
 
   /** Streaming mixture-epoch planner — the live twin of
@@ -364,15 +341,30 @@ object EventStreams {
       saveCounts: DataFrame => Unit,
       emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Sampling
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // materialized before save — see driftMonitoringSink
-      val merged = Sampling.mergeDomainTokenCounts(
-        loadCounts(), Sampling.domainTokenCounts(batch, col(domainCol), tokenCol))
-        .localCheckpoint()
-      saveCounts(merged)
-      emit(Sampling.mixturePlanFromCounts(merged, weights, totalTokens, maxEpochs))
-    }.start()
+    foldAndEmit(docs, loadCounts, saveCounts, emit)(
+      Sampling.domainTokenCounts(_, col(domainCol), tokenCol), Sampling.mergeDomainTokenCounts,
+      Sampling.mixturePlanFromCounts(_, weights, totalTokens, maxEpochs))
   }
+
+  /** The running-state monitors' micro-batch step: fold the batch's
+    * partial state into the loaded state, save it, emit its finalized
+    * view. The merge is materialized BEFORE the save: it is a lazy
+    * plan over `load()`, so with a parquet-table state backend an
+    * unmaterialized emit would re-read the just-overwritten path
+    * (double-counting the batch) or hit a read-while-write conflict. */
+  private def foldAndEmit(
+      docs: DataFrame,
+      load: () => DataFrame,
+      save: DataFrame => Unit,
+      emit: DataFrame => Unit)(
+      partial: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame,
+      finalize: DataFrame => DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
+    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val merged = merge(load(), partial(batch)).localCheckpoint()
+      save(merged)
+      emit(finalize(merged))
+    }.start()
 
   /** Stream-static enrichment: a broadcast left join against a batch
     * dimension table — stateless (no watermark needed), the dimension

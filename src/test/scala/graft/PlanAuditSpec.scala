@@ -669,6 +669,21 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("text signals run natively — one counting expression, no interpreted lambda") {
+    // the quality gate, the quality ratios and score, and language ID
+    // are Column arithmetic over the TextSignals counts, not regexp
+    // re-scans and interpreted stopword `filter` lambdas
+    for (q <- Seq("q_lang_id", "q_quality_score", "q_text_quality", "q_budget_quality",
+                  "q_quality_calibration", "q_quality_filter", "q_corpus_health",
+                  "q_health_by_source")) {
+      val plan = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
+      val hofs = PlanDump.lambdas(plan)
+      assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
+      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.TextSignals]))),
+        s"$q reads no TextSignals counts:\n$plan")
+    }
+  }
+
   test("BPE counts run natively — no interpreted lambda in the plan") {
     // every BPE count, Column, operator and SQL alike, is the native
     // TokenCount expression under a BPE model, not a transform/aggregate

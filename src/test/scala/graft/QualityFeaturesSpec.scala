@@ -9,26 +9,7 @@ import graft.operators.QualityModel
   * silently drift from the r13-committed values. */
 class QualityFeaturesSpec extends SparkSpec {
 
-  private val edge = Seq(
-    "",                       // empty: every ratio over max(·,1)
-    " \t\n\f\r ",       // all six \s class members, zero words
-    "the and of to in is on for", // all stopwords
-    "!!! ??? ,,, ;;; :::",    // pure punctuation tokens
-    "der die und le la los que 的 是 了", // multi-language incl. multibyte
-    "x",                      // one 1-char word
-    "a" * 500,                // one giant word
-    "word",                   // no stopword, no symbol
-    "naïve café — em–dash …", // non-ASCII letters and symbols
-    "mixed 123 abc !@# the %" // everything at once
-  )
-
-  private def randomDoc(seed: Int): String = {
-    val rnd = new scala.util.Random(seed)
-    val pool = Vector("the", "and", "zork", "a1b2", "...", "!?;", "naïve",
-      "的", "x", "LONGWORDHERE", "12345", "@#%", "tab\tin", "nl\nin")
-    Seq.fill(1 + rnd.nextInt(40))(pool(rnd.nextInt(pool.size)))
-      .mkString(if (rnd.nextBoolean()) " " else "  ")
-  }
+  import QualityFeaturesSpec.{edge, randomDoc}
 
   test("native kernel equals the Column reference bit-for-bit") {
     import spark.implicits._
@@ -36,7 +17,7 @@ class QualityFeaturesSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val native = QualityModel.featureColumns(col("text"))
-    val ref = QualityModel.featureColumnsRef(col("text"))
+    val ref = RegexSignals.featureColumnsRef(col("text"))
     val both = df.select(
       (col("id") +:
         native.zipWithIndex.map { case (c, i) => c.as(s"n$i") }) ++
@@ -62,5 +43,30 @@ class QualityFeaturesSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got(1L).isEmpty)
     assert(got(2L).nonEmpty)
+  }
+}
+
+/** The edge list and the random-document generator the text-signal
+  * specs share. */
+object QualityFeaturesSpec {
+  val edge = Seq(
+    "",                       // empty: every ratio over max(·,1)
+    " \t\n\f\r ",       // all six \s class members, zero words
+    "the and of to in is on for", // all stopwords
+    "!!! ??? ,,, ;;; :::",    // pure punctuation tokens
+    "der die und le la los que 的 是 了", // multi-language incl. multibyte
+    "x",                      // one 1-char word
+    "a" * 500,                // one giant word
+    "word",                   // no stopword, no symbol
+    "naïve café — em–dash …", // non-ASCII letters and symbols
+    "mixed 123 abc !@# the %" // everything at once
+  )
+
+  def randomDoc(seed: Int): String = {
+    val rnd = new scala.util.Random(seed)
+    val pool = Vector("the", "and", "zork", "a1b2", "...", "!?;", "naïve",
+      "的", "x", "LONGWORDHERE", "12345", "@#%", "tab\tin", "nl\nin")
+    Seq.fill(1 + rnd.nextInt(40))(pool(rnd.nextInt(pool.size)))
+      .mkString(if (rnd.nextBoolean()) " " else "  ")
   }
 }

@@ -347,18 +347,11 @@ class SamplingSpec extends SparkSpec {
   test("native FilterReason matches the regex formulation on real docs and edges") {
     import spark.implicits._
     val real = Tables.t(spark, Sf, "documents").select(col("text"))
-    val edges = Seq(
-      "",                         // empty
-      "   \t\n  ",                // whitespace only
-      "the \u000b and of to the", // vertical tab is Java \s whitespace
-      "café naïve the of to in is on for",  // non-ASCII letters count as symbols
-      "😀 the of to in is on for words here", // supplementary code point
-      "the " * 600                // long doc past maxWords
-    ).map(Tuple1(_)).toDF("text")
+    val edges = SamplingSpec.FilterReasonEdges.map(Tuple1(_)).toDF("text")
     for (df <- Seq(real, edges)) {
       val bad = df.select(
           TF.filterReason(col("text")).as("native"),
-          TF.filterReasonHof(col("text")).as("hof"))
+          RegexSignals.filterReasonHof(col("text")).as("hof"))
         .filter(col("native") =!= col("hof")).count()
       assert(bad == 0, "single-pass gate differs from the regex reference")
     }
@@ -651,4 +644,16 @@ class SamplingSpec extends SparkSpec {
     assert(degenerate.length == 4 &&
       degenerate.forall(r => !r.isNullAt(0) && r.getDouble(0) == 0.0))
   }
+}
+
+object SamplingSpec {
+  /** Quality-gate edge cases, shared with the text-signal spec. */
+  val FilterReasonEdges: Seq[String] = Seq(
+    "",                         // empty
+    "   \t\n  ",                // whitespace only
+    "the \u000b and of to the", // vertical tab is Java \s whitespace
+    "café naïve the of to in is on for",  // non-ASCII letters count as symbols
+    "😀 the of to in is on for words here", // supplementary code point
+    "the " * 600                // long doc past maxWords
+  )
 }
