@@ -18,8 +18,8 @@ object TextFunctions {
   /** Whitespace tokens, empties removed: runs of Java-regex `\s`
     * (ASCII space, \t, \n, \x0B, \f, \r) split, null in → null out.
     * The engine's one tokenizer, a native kernel
-    * ([[graft.plans.WhitespaceTokens]]) shared with every token hash
-    * and n-gram kernel. */
+    * ([[graft.plans.TextHashColumns.whitespaceTokens]]) shared with
+    * every token hash and n-gram kernel. */
   def tokens(text: Column): Column =
     graft.plans.TextHashColumns.whitespaceTokens(text)
 
@@ -56,9 +56,6 @@ object TextFunctions {
   val Gpt2Pattern: String =
     "'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+"
 
-  def gpt2Pretokens(text: Column): Column =
-    regexp_extract_all(text, lit(Gpt2Pattern), lit(0))
-
   /** GPT-2 byte-to-unicode markers for the whitespace chars that may
     * appear inside a pre-token (0x20→Ġ, 0x0A→Ċ, 0x09→ĉ, 0x0D→č): a
     * space inside a symbol would break the sentinel-spaced merge
@@ -68,7 +65,7 @@ object TextFunctions {
   val WsTo = "ĠĊĉč" // Ġ Ċ ĉ č
 
   /** TRUE byte-level BPE token count, GPT-2 style — the default for
-    * budget operators: [[gpt2Pretokens]] pre-tokens (case, punctuation
+    * budget operators: [[Gpt2Pattern]] pre-tokens (case, punctuation
     * and whitespace preserved), whitespace mapped to [[WsTo]] markers,
     * rank-priority merges, plus a byte fallback — each non-ASCII char
     * counts its extra UTF-8 bytes as unmerged byte symbols, which is
@@ -80,13 +77,10 @@ object TextFunctions {
       merges: Seq[(String, String)] = DefaultMerges): Column =
     graft.plans.BpeKernel.count(text, merges, byteLevel = true)
 
-  /** Lowercased alphanumeric words — the shared BPE pre-tokenization. */
-  def alnumWords(text: Column): Column =
-    filter(split(regexp_replace(lower(text), "[^a-z0-9]+", " "), " "), w => w =!= "")
-
   /** TRUE byte-pair-encoding token count of the lowercase alphanumeric
-    * words ([[alnumWords]]) against an explicit ordered merge table —
-    * the legacy counter behind the `graft_bpe_count` SQL function.
+    * words ([[graft.plans.PreTokens]]) against an explicit ordered merge
+    * table — the legacy counter behind the `graft_bpe_count` SQL
+    * function.
     * Null text → 0. The native [[graft.plans.TokenCount]] kernel; see
     * [[graft.operators.Bpe]] for the semantics. */
   def bpeTokenCountMerges(

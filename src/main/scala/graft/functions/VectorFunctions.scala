@@ -23,9 +23,8 @@ object VectorFunctions {
   /** Random-hyperplane signature: `planes(p)(d)` fixed pseudo-random
     * weights; bit p = sign of dot(v, planes(p)). Returns array<int> of
     * 0/1 bits — group consecutive `bandBits` bits for LSH buckets.
-    * Executes as the native codegen'd [[graft.plans.HyperplaneBits]]
-    * (one generated double loop per row vs an interpreted lambda fold
-    * per plane); the HOF reference below stays spec-compared. */
+    * Executes as the native [[graft.plans.HyperplaneBits]] (one double
+    * loop per row vs an interpreted lambda fold per plane); the HOF reference below stays spec-compared. */
   def hyperplaneBits(v: Column, planes: Array[Array[Double]]): Column =
     graft.plans.VectorColumns.hyperplaneBits(v, planes)
 
@@ -75,7 +74,7 @@ object VectorFunctions {
     * same arithmetic in every engine (a bare `round` differs between
     * half-up and half-even implementations). 4× smaller vectors for
     * ANN recall stages; zero vectors quantize to zeros. Executes as the
-    * native codegen'd [[graft.plans.Int8Quantize]] (the HOF form below
+    * native [[graft.plans.VectorKernels.int8Quantize]] (the HOF form below
     * re-evaluates max|x| per ELEMENT when interpreted — O(d²) per row);
     * the HOF reference stays spec-compared bit-for-bit. */
   def int8Quantize(v: Column): Column =

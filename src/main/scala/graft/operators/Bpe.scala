@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.plans.BpeKernel
+import graft.plans.{BpeKernel, PreTokens}
 
 /** Tokenizer-faithful BPE token counting at corpus scale
   * (SURVEY.md §2.3): the budget operators (pack / per-language budgets /
@@ -160,17 +160,13 @@ object Bpe {
     * [[trainMerges]] and [[Unigram.train]]: (word, count) by count desc,
     * then word. Words are byte-level GPT-2 pre-tokens with whitespace
     * mapped to the marker chars (so a merge or a piece can span a
-    * leading space), or the legacy lowercase-alnum words. At most
-    * `maxWords` words are collected, and more fails loudly. */
+    * leading space), or the legacy lowercase-alnum words: the
+    * pre-tokenizer the counts run ([[PreTokens]]), one native kernel
+    * per document. At most `maxWords` words are collected, and more
+    * fails loudly. */
   private[operators] def wordCounts(docs: DataFrame, textCol: String,
       byteLevel: Boolean, maxWords: Int): Array[(String, Long)] = {
-    import graft.functions.{TextFunctions => TF}
-    val words =
-      if (byteLevel)
-        docs.select(explode(transform(TF.gpt2Pretokens(col(textCol)),
-          w => translate(w, TF.WsFrom, TF.WsTo))).as("w"))
-      else
-        docs.select(explode(TF.alnumWords(col(textCol))).as("w"))
+    val words = docs.select(explode(PreTokens.trainingWords(col(textCol), byteLevel)).as("w"))
     val wc = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w"))
       .limit(maxWords + 1)

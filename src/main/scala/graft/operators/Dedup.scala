@@ -390,7 +390,7 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard pairs. Shingles travel as 64-bit hashes
-    * (graft.plans.ShingleHashes) — candidates = docs sharing ≥1 shingle
+    * (graft.plans.TextHashColumns.shingleHashes) — candidates = docs sharing ≥1 shingle
     * hash, listed per shingle by one [[bucketPairs]] pass, intersection
     * counted per pair, Jaccard from |A|+|B|-|A∩B|. Stop-shingle buckets
     * are capped to keep the pair count linear at scale. */
@@ -747,7 +747,8 @@ object Dedup {
     * span_end, span_tokens), the character range in code points
     * (`substring` units), ready for [[removeSpans]].
     *
-    * 100 TB shape: positional shingles (graft.plans.PositionalShingles)
+    * 100 TB shape: positional shingles
+    * (graft.plans.TextHashColumns.positionalShingles)
     * are computed scan-side; the duplicated-hash set is one groupBy on
     * the 8-byte hash carrying (sh, id); flagging is an equi-join back
     * on the hash carrying (id, pos, cs, ce) — ints only; runs assemble
@@ -822,7 +823,7 @@ object Dedup {
     // membership is decided by md5 equality either way, the key never
     // reaches the output, and the window exchange+sort below moves
     // half the hex-string bytes. The digests come from ONE native
-    // kernel pass per doc (Md5Shingles — byte-for-byte
+    // kernel pass per doc (md5Shingles — byte-for-byte
     // unhex(md5(concat_ws(" ", slice(tokens, i, n))))) instead of the
     // interpreted 4-expression HOF subtree per position, which was
     // the twin's dominant cost. The oracle replays md5 semantics on

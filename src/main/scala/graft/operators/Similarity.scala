@@ -250,7 +250,7 @@ object Similarity {
     // argmax cell only — dots computed once per row in a projection,
     // the array never leaves the stage
     df.select(col(idCol).as("cid"), col(vecCol).as("cv"),
-        transform(cents, c => graft.plans.VectorColumns.cosine(col(vecCol), c)).as("__ds"))
+        graft.plans.VectorColumns.cosines(col(vecCol), cents).as("__ds"))
       .select(col("cid"), col("cv"),
         (array_position(col("__ds"), array_max(col("__ds"))) - 1).as("cell"))
   }
@@ -290,7 +290,7 @@ object Similarity {
     val wp = Window.partitionBy(col("qid")).orderBy(col("d").desc, col("cell"))
     queries
       .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        posexplode(transform(cents, c => graft.plans.VectorColumns.cosine(col(vecCol), c)))
+        posexplode(graft.plans.VectorColumns.cosines(col(vecCol), cents))
           .as(Seq("cell", "d")))
       .withColumn("pr", row_number().over(wp))
       .filter(col("pr") <= math.min(nProbe, nCells))

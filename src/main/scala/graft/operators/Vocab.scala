@@ -114,7 +114,7 @@ object Vocab {
     * even when every individual token is common).
     *
     * Shape: bigrams are built SCAN-SIDE by the native adjacent-n-gram
-    * kernel ([[graft.plans.TokenNgrams]]: one loop per row over the
+    * kernel ([[graft.plans.TextHashColumns.tokenNgrams]]: one loop per row over the
     * doc's tokens — no posexplode + per-token window shuffle, no
     * interpreted lambdas) and scored in the [[lmScore]] flat occurrence
     * form: the pair stream joins the distinct-bigram table (c₁ attached
@@ -188,8 +188,8 @@ object Vocab {
 
   /** The flat trigram occurrence stream (id, u, v, w): one row per
     * adjacent token triple of each doc, built SCAN-SIDE by the native
-    * adjacent-n-gram kernel ([[graft.plans.TokenNgrams]], no posexplode
-    * + window). Docs with < 3 tokens yield no rows. */
+    * adjacent-n-gram kernel ([[graft.plans.TextHashColumns.tokenNgrams]],
+    * no posexplode + window). Docs with < 3 tokens yield no rows. */
   private def trigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
         explode(tokenNgrams(col(textCol), "u", "v", "w")).as("z"))
@@ -696,7 +696,8 @@ object Vocab {
     * reads before merging multi-word units.
     *
     * 100 TB shape: two token-keyed aggregations (unigrams, adjacent
-    * bigrams from the native n-gram kernel [[graft.plans.TokenNgrams]]),
+    * bigrams from the native n-gram kernel
+    * [[graft.plans.TextHashColumns.tokenNgrams]]),
     * both map-side partial — the shuffles carry one row per
     * distinct token/pair per mapper, never per occurrence. The bigram
     * table then joins the vocabulary-sized unigram table twice (AQE

@@ -10,16 +10,18 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
 /* The native token count of both production tokenizer families, BPE
  * (graft.operators.Bpe) and unigram-LM (graft.operators.Unigram): one
- * expression, [[TokenCount]], owns what they share (the pre-tokenizer,
- * the per-task memo, the broadcast model handle, null text → 0,
- * codegen); a [[TokenModel]] supplies only the count of one pre-token. */
+ * expression, [[TokenCount]], owns what they share (the per-task memo,
+ * the broadcast model handle, null text → 0, codegen) over one
+ * pre-tokenizer, [[PreTokens]], which tokenizer training reads too; a
+ * [[TokenModel]] supplies only the count of one pre-token. */
 
 /** A tokenizer model as [[TokenCount]] sees it: the token count of one
   * RAW pre-token (whitespace not yet mapped to the GPT-2 markers — BPE
@@ -206,6 +208,40 @@ private[plans] final class UnigramModel(logp: UnigramKernel.LogProbs, maxLen: In
   def sqlName: String = "graft_unigram_count"
 
   def countWord(w: String): Long = {
+    val (lp, back) = UnigramKernel.viterbi(PreTokens.marked(w), logp, maxLen, unkLogp)
+    var n = 0L
+    var p = w.length
+    while (lp != Double.NegativeInfinity && p > 0) { n += 1; p = back(p) }
+    n
+  }
+}
+
+/** The pre-tokenizer of both tokenizer families, for counting
+  * ([[TokenCounter]]) and for training ([[graft.operators.Bpe]]'s word
+  * counts): GPT-2 byte-level pre-tokens ([[TextFunctions.Gpt2Pattern]])
+  * or the legacy lowercase-alnum words. */
+object PreTokens {
+  private val Gpt2 = Pattern.compile(TextFunctions.Gpt2Pattern)
+  private val NonAlnum = Pattern.compile("[^a-z0-9]+")
+
+  /** Calls `f` on each raw pre-token of `s`, in document order. */
+  def foreach(s: String, byteLevel: Boolean)(f: String => Unit): Unit =
+    if (byteLevel) {
+      val m = Gpt2.matcher(s)
+      while (m.find()) f(m.group())
+    } else {
+      // Locale.ROOT matches Spark's locale-independent lower()
+      val words = NonAlnum.split(s.toLowerCase(java.util.Locale.ROOT))
+      var i = 0
+      while (i < words.length) {
+        if (words(i).nonEmpty) f(words(i))
+        i += 1
+      }
+    }
+
+  /** `w` with its whitespace mapped to the GPT-2 markers
+    * ([[TextFunctions.WsTo]]): the form a word trains in. */
+  def marked(w: String): String = {
     val cs = w.toCharArray
     var i = 0
     while (i < cs.length) {
@@ -213,37 +249,33 @@ private[plans] final class UnigramModel(logp: UnigramKernel.LogProbs, maxLen: In
       if (marker >= 0) cs(i) = TextFunctions.WsTo.charAt(marker)
       i += 1
     }
-    val (lp, back) = UnigramKernel.viterbi(new String(cs), logp, maxLen, unkLogp)
-    var n = 0L
-    var p = cs.length
-    while (lp != Double.NegativeInfinity && p > 0) { n += 1; p = back(p) }
-    n
+    new String(cs)
   }
+
+  /** The kernel: a document's training words, [[marked]] pre-tokens in
+    * document order. */
+  def trainingWordsKernel(text: UTF8String, byteLevel: Boolean): ArrayData = {
+    val out = new ArrayBuffer[Any]
+    foreach(text.toString, byteLevel)(w => out += UTF8String.fromString(marked(w)))
+    new GenericArrayData(out.toArray)
+  }
+
+  /** [[trainingWordsKernel]] as an array<string> column; null text
+    * gives null. */
+  def trainingWords(text: Column, byteLevel: Boolean): Column =
+    KernelCall.column("trainingwords", PreTokens, "trainingWordsKernel",
+      ArrayType(StringType, containsNull = false), Seq(text), Seq(byteLevel))
 }
 
-/** One task's counter: the compiled pre-tokenizer and a bounded
-  * pre-token → count memo. Natural text repeats words heavily (Zipf),
-  * so the model counts once per DISTINCT pre-token per task. */
+/** One task's counter: a bounded pre-token → count memo over
+  * [[PreTokens]]. Natural text repeats words heavily (Zipf), so the
+  * model counts once per DISTINCT pre-token per task. */
 final class TokenCounter(model: TokenModel, byteLevel: Boolean) {
-  private val gpt2 = Pattern.compile(TextFunctions.Gpt2Pattern)
-  private val nonAlnum = Pattern.compile("[^a-z0-9]+")
   private val memo = new java.util.HashMap[String, java.lang.Long](1 << 16)
 
   def count(text: UTF8String): Long = {
-    val s = text.toString
     var total = 0L
-    if (byteLevel) {
-      val m = gpt2.matcher(s)
-      while (m.find()) total += memoized(m.group())
-    } else {
-      // Locale.ROOT matches Spark's locale-independent lower()
-      val words = nonAlnum.split(s.toLowerCase(java.util.Locale.ROOT))
-      var i = 0
-      while (i < words.length) {
-        if (words(i).nonEmpty) total += memoized(words(i))
-        i += 1
-      }
-    }
+    PreTokens.foreach(text.toString, byteLevel)(w => total += memoized(w))
     total
   }
 

@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compression-ratio quality signal (the RefinedWeb / MassiveText
@@ -36,26 +33,11 @@ object CompressKernels {
   }
 }
 
-/** string → double: DEFLATE-compressed size / raw UTF-8 size. */
-case class DeflateRatio(child: Expression, level: Int)
-    extends UnaryExpression {
-  require(level >= 1 && level <= 9, s"deflate level must be in [1, 9], got $level")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    CompressKernels.deflateRatioKernel(input.asInstanceOf[UTF8String], level)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.CompressKernels$$.MODULE$$.deflateRatioKernel($c, $level);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CompressColumns {
-  def deflateRatio(text: Column, level: Int = 6): Column =
-    GraftShim.column(DeflateRatio(GraftShim.expression(text), level))
+  /** string → double: DEFLATE-compressed size / raw UTF-8 size. */
+  def deflateRatio(text: Column, level: Int = 6): Column = {
+    require(level >= 1 && level <= 9, s"deflate level must be in [1, 9], got $level")
+    KernelCall.column("deflateratio", CompressKernels, "deflateRatioKernel", DoubleType,
+      Seq(text), Seq(level))
+  }
 }

@@ -1,8 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftShim, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, GraftShim, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+
+import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.plans.{TextHashColumns => THC}
 
 /** SQL surface for the native kernels: registers `graft_*` functions so
   * `spark.sql("SELECT graft_simhash(text) ...")` reaches the same
@@ -42,105 +45,47 @@ object GraftFunctions {
     args
   }
 
+  private def c(e: Expression): Column = GraftShim.column(e)
+
+  /** A function whose builder applies a Column helper of `owner` to
+    * the call's `n` arguments. The eager node converter unpacks the
+    * result, so it embeds into the calling expression tree. */
+  private def columnFn(name: String, n: Int, owner: AnyRef)(f: Seq[Expression] => Column)
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
+    (name, new ExpressionInfo(owner.getClass.getName, name),
+      (args: Seq[Expression]) => GraftShim.resolvedExpression(f(arity(name, n)(args))))
+
   /** (name, info, builder) for every exposed kernel. */
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_simhash",
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHash64(arity("graft_simhash", 1)(args).head)),
-    ("graft_minhash",
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (args: Seq[Expression]) => {
-        arity("graft_minhash", 3)(args)
-        MinHashSignature(args.head,
-          intArg(args(1), "shingleN"), intArg(args(2), "numHashes"))
-      }),
-    ("graft_simhash_md5",
-      new ExpressionInfo(classOf[SimHashMd5].getName, "graft_simhash_md5"),
-      (args: Seq[Expression]) =>
-        SimHashMd5(arity("graft_simhash_md5", 1)(args).head)),
-    ("graft_minhash_md5_key",
-      new ExpressionInfo(classOf[MinHashMd5Key].getName, "graft_minhash_md5_key"),
-      (args: Seq[Expression]) => {
-        arity("graft_minhash_md5_key", 2)(args)
-        MinHashMd5Key(args.head, intArg(args(1), "shingleN"))
-      }),
-    ("graft_lexical_stats",
-      new ExpressionInfo(classOf[LexicalStats].getName, "graft_lexical_stats"),
-      (args: Seq[Expression]) =>
-        LexicalStats(arity("graft_lexical_stats", 1)(args).head)),
-    ("graft_shingle_hashes",
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (args: Seq[Expression]) => {
-        arity("graft_shingle_hashes", 2)(args)
-        ShingleHashes(args.head, intArg(args(1), "shingleN"))
-      }),
-    ("graft_positional_shingles",
-      new ExpressionInfo(classOf[PositionalShingles].getName, "graft_positional_shingles"),
-      (args: Seq[Expression]) => {
-        arity("graft_positional_shingles", 2)(args)
-        PositionalShingles(args.head, intArg(args(1), "shingleN"))
-      }),
-    ("graft_nfc",
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "graft_nfc"),
-      (args: Seq[Expression]) =>
-        UnicodeNormalize(arity("graft_nfc", 1)(args).head, "NFC")),
-    ("graft_nfkc",
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "graft_nfkc"),
-      (args: Seq[Expression]) =>
-        UnicodeNormalize(arity("graft_nfkc", 1)(args).head, "NFKC")),
-    ("graft_strip_accents",
-      new ExpressionInfo(classOf[StripAccents].getName, "graft_strip_accents"),
-      (args: Seq[Expression]) =>
-        StripAccents(arity("graft_strip_accents", 1)(args).head)),
-    ("graft_cosine",
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (args: Seq[Expression]) => {
-        arity("graft_cosine", 2)(args)
-        CosineSim(args.head, args(1))
-      }),
+    columnFn("graft_simhash", 1, THC)(a => THC.simhash(c(a(0)))),
+    columnFn("graft_minhash", 3, THC)(a => THC.minhashSignature(c(a(0)),
+      intArg(a(1), "shingleN"), intArg(a(2), "numHashes"))),
+    columnFn("graft_simhash_md5", 1, THC)(a => THC.simhashMd5(c(a(0)))),
+    columnFn("graft_minhash_md5_key", 2, THC)(a =>
+      THC.minhashMd5Key(c(a(0)), intArg(a(1), "shingleN"))),
+    columnFn("graft_lexical_stats", 1, THC)(a => THC.lexicalStats(c(a(0)))),
+    columnFn("graft_shingle_hashes", 2, THC)(a =>
+      THC.shingleHashes(c(a(0)), intArg(a(1), "shingleN"))),
+    columnFn("graft_positional_shingles", 2, THC)(a =>
+      THC.positionalShingles(c(a(0)), intArg(a(1), "shingleN"))),
+    columnFn("graft_nfc", 1, UnicodeColumns)(a => UnicodeColumns.nfc(c(a(0)))),
+    columnFn("graft_nfkc", 1, UnicodeColumns)(a => UnicodeColumns.nfkc(c(a(0)))),
+    columnFn("graft_strip_accents", 1, UnicodeColumns)(a =>
+      UnicodeColumns.stripAccents(c(a(0)))),
+    columnFn("graft_cosine", 2, VectorColumns)(a => VectorColumns.cosine(c(a(0)), c(a(1)))),
     // legacy lowercase-alnum count under the default merge table
     ("graft_bpe_count",
       new ExpressionInfo(classOf[TokenCount].getName, "graft_bpe_count"),
       (args: Seq[Expression]) => TokenCount(arity("graft_bpe_count", 1)(args).head,
-        TokenCount.broadcast(BpeKernel.model(graft.functions.TextFunctions.DefaultMerges)),
+        TokenCount.broadcast(BpeKernel.model(TF.DefaultMerges)),
         byteLevel = false)),
-    // Column-composed kernels ride the same registry through the eager
-    // node converter (a lazy wrapper would reach codegen unevaluable
-    // when embedded mid-tree by the registry)
-    ("graft_quality_reason",
-      new ExpressionInfo(graft.functions.TextFunctions.getClass.getName,
-        "graft_quality_reason"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.TextFunctions.filterReason(
-          GraftShim.column(arity("graft_quality_reason", 1)(args).head)))),
-    ("graft_int8_quantize",
-      new ExpressionInfo(graft.functions.VectorFunctions.getClass.getName,
-        "graft_int8_quantize"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.VectorFunctions.int8Quantize(
-          GraftShim.column(arity("graft_int8_quantize", 1)(args).head)))),
-    ("graft_redact",
-      new ExpressionInfo(graft.functions.TextFunctions.getClass.getName,
-        "graft_redact"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.TextFunctions.redactPii(
-          GraftShim.column(arity("graft_redact", 1)(args).head)))),
-    ("graft_fix_mojibake",
-      new ExpressionInfo(classOf[FixMojibake].getName, "graft_fix_mojibake"),
-      (args: Seq[Expression]) =>
-        FixMojibake(arity("graft_fix_mojibake", 1)(args).head)),
-    ("graft_canonical_url",
-      new ExpressionInfo(graft.functions.TextFunctions.getClass.getName,
-        "graft_canonical_url"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.TextFunctions.canonicalUrl(
-          GraftShim.column(arity("graft_canonical_url", 1)(args).head)))),
-    ("graft_markup_ratio",
-      new ExpressionInfo(graft.functions.TextFunctions.getClass.getName,
-        "graft_markup_ratio"),
-      (args: Seq[Expression]) => GraftShim.resolvedExpression(
-        graft.functions.TextFunctions.markupRatio(
-          GraftShim.column(arity("graft_markup_ratio", 1)(args).head)))),
+    columnFn("graft_quality_reason", 1, TF)(a => TF.filterReason(c(a(0)))),
+    columnFn("graft_int8_quantize", 1, VF)(a => VF.int8Quantize(c(a(0)))),
+    columnFn("graft_redact", 1, TF)(a => TF.redactPii(c(a(0)))),
+    columnFn("graft_fix_mojibake", 1, MojibakeColumns)(a =>
+      MojibakeColumns.fixMojibake(c(a(0)))),
+    columnFn("graft_canonical_url", 1, TF)(a => TF.canonicalUrl(c(a(0)))),
+    columnFn("graft_markup_ratio", 1, TF)(a => TF.markupRatio(c(a(0)))),
     // variadic: graft_contains_any(text, 'p1', 'p2', ...) — patterns
     // must be string literals (the trie builds once, driver-side)
     ("graft_contains_any",
@@ -157,12 +102,8 @@ object GraftFunctions {
         }
         ContainsAny(args.head, pats)
       }),
-    ("graft_compress_ratio",
-      new ExpressionInfo(classOf[DeflateRatio].getName, "graft_compress_ratio"),
-      (args: Seq[Expression]) => {
-        arity("graft_compress_ratio", 2)(args)
-        DeflateRatio(args.head, intArg(args(1), "graft_compress_ratio level"))
-      }),
+    columnFn("graft_compress_ratio", 2, CompressColumns)(a => CompressColumns.deflateRatio(
+      c(a(0)), intArg(a(1), "graft_compress_ratio level"))),
     // multiplicative aggregate (polars Expr.product / DuckDB product):
     // the analyzer wraps a bare AggregateFunction from a registry
     // builder into an AggregateExpression, same as the builtin path

@@ -3,10 +3,8 @@ package graft.plans
 import java.nio.charset.{CharacterCodingException, CodingErrorAction, StandardCharsets}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mojibake repair (the ftfy core case, deterministic subset): text
@@ -100,7 +98,7 @@ object Mojibake {
     }
   }
 
-  /** Kernel (codegen entry point): iterate [[fixOnce]] to a bounded
+  /** The kernel: iterate [[fixOnce]] to a bounded
     * fixpoint — double-encoded mojibake needs two rounds. */
   def fixKernel(input: UTF8String): UTF8String = {
     var s = input.toString
@@ -116,22 +114,7 @@ object Mojibake {
   }
 }
 
-case class FixMojibake(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    Mojibake.fixKernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Mojibake$$.MODULE$$.fixKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MojibakeColumns {
   def fixMojibake(c: Column): Column =
-    GraftShim.column(FixMojibake(GraftShim.expression(c)))
+    KernelCall.column("fixmojibake", Mojibake, "fixKernel", StringType, Seq(c))
 }

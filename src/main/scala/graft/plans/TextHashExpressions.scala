@@ -2,24 +2,25 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression,
+  XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the engine's whitespace tokenizer
-  * and the token kernels built on it: the text-dedup hashes (SURVEY.md
-  * §4), the per-doc repetition/diversity counters, and the adjacent
-  * n-gram builder behind the n-gram LM family ([[TokenNgrams]]). The
+/** The engine's whitespace tokenizer and the token kernels built on
+  * it: the text-dedup hashes (SURVEY.md §4), the per-doc
+  * repetition/diversity counters, and the adjacent n-gram builder
+  * behind the n-gram LM family ([[TextHashColumns.tokenNgrams]]). The
   * HOF-lambda formulations (`filter`/`transform`/`zip_with`/
   * `aggregate` lambdas are interpreted per array element, and re-
   * evaluate the shingle subtree per outer iteration) are ~50× slower;
   * these run the whole kernel as one tight Scala loop per row over
-  * Spark's own XXH64. Each expression implements doGenCode as a static
-  * call into the kernel object, so the surrounding projection stays
-  * inside whole-stage codegen (no interpreted-subtree fallback, no row
-  * re-materialization per call).
+  * Spark's own XXH64. Each kernel is one method here, called through
+  * `StaticInvoke` ([[KernelCall]], [[TextHashColumns]]): generated code
+  * calls it directly, so the surrounding projection stays inside
+  * whole-stage codegen.
   */
 object TextHash {
 
@@ -34,8 +35,9 @@ object TextHash {
 
   /** The engine's one tokenizer: runs of `\s` whitespace split, empty
     * tokens dropped. Every token kernel here and
-    * [[graft.functions.TextFunctions.tokens]] ([[WhitespaceTokens]])
-    * call it, so they agree on what a token is by construction. */
+    * [[graft.functions.TextFunctions.tokens]]
+    * ([[TextHashColumns.whitespaceTokens]]) call it, so they agree on
+    * what a token is by construction. */
   private[plans] def whitespaceTokens(s: UTF8String): Array[UTF8String] = {
     val str = s.toString
     val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
@@ -64,8 +66,8 @@ object TextHash {
     out.toArray
   }
 
-  // Codegen entry points (referenced as TextHash$.MODULE$.…kernel from
-  // generated Java): take/return Catalyst-native types only.
+  // Kernel entry points (called through StaticInvoke): take and return
+  // Catalyst-native types only.
 
   def tokensKernel(input: UTF8String): GenericArrayData =
     new GenericArrayData(whitespaceTokens(input).asInstanceOf[Array[Any]])
@@ -106,13 +108,13 @@ object TextHash {
   def shingleKernel(input: UTF8String, shingleN: Int): GenericArrayData =
     new GenericArrayData(shingleHashes(input, shingleN))
 
-  /** One-pass repetition counters ([[RepetitionStats]]): unigram counts
-    * in a hash map (top frequency + total), 2-gram duplicate count via
-    * a seen-set on the exact gram STRINGS (tokens contain no
+  /** One-pass repetition counters ([[TextHashColumns.repetitionStats]]):
+    * unigram counts in a hash map (top frequency + total), 2-gram
+    * duplicate count via a seen-set on the exact gram STRINGS (tokens contain no
     * whitespace, so the space-joined gram is unambiguous — no hash
     * collision caveat against the DuckDB `count(DISTINCT gram)`
     * replica). */
-  def repetitionKernel(input: UTF8String): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
+  def repetitionKernel(input: UTF8String): GenericInternalRow = {
     val toks = whitespaceTokens(input)
     val n = toks.length
     val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
@@ -135,15 +137,14 @@ object TextHash {
         j += 1
       }
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n, top, n2, dup2))
+    new GenericInternalRow(Array[Any](n, top, n2, dup2))
   }
 
   /** Per-doc lexical-diversity counters in one pass:
     * struct<n_tokens, n_types, n_hapax> (hapax = a type occurring
     * exactly once). Same `\s`-split token contract as every kernel
     * here. */
-  def lexicalStatsKernel(input: UTF8String): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
+  def lexicalStatsKernel(input: UTF8String): GenericInternalRow = {
     val toks = whitespaceTokens(input)
     val n = toks.length
     val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
@@ -156,8 +157,7 @@ object TextHash {
     var hapax = 0
     val it = counts.values().iterator()
     while (it.hasNext) if (it.next().intValue == 1) hapax += 1
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n, counts.size(), hapax))
+    new GenericInternalRow(Array[Any](n, counts.size(), hapax))
   }
 
   private def gramKey(toks: Array[UTF8String], start: Int, n: Int): String = {
@@ -172,10 +172,10 @@ object TextHash {
   }
 
   /** One-pass duplicate-n-gram counters for arbitrary n
-    * ([[NgramDupStats]]): gram keys are the exact space-joined token
+    * ([[TextHashColumns.ngramDupStats]]): gram keys are the exact space-joined token
     * strings (the repetitionKernel convention — no hash-collision
     * caveat vs a SQL `count(DISTINCT gram)` replica). */
-  def ngramDupKernel(input: UTF8String, n: Int): org.apache.spark.sql.catalyst.expressions.GenericInternalRow = {
+  def ngramDupKernel(input: UTF8String, n: Int): GenericInternalRow = {
     val toks = whitespaceTokens(input)
     val nG = math.max(toks.length - n + 1, 0)
     var dup = 0
@@ -187,14 +187,13 @@ object TextHash {
         i += 1
       }
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nG, dup))
+    new GenericInternalRow(Array[Any](nG, dup))
   }
 
   /** Fraction of token characters covered by n-grams that occur more
-    * than once in the document ([[DupNgramCharFrac]]) — the Gopher
-    * repetition signal for n ∈ 5..10: each covered token's characters
-    * count ONCE however many duplicate grams overlap it. Two passes
+    * than once in the document ([[TextHashColumns.dupNgramCharFrac]]) —
+    * the Gopher repetition signal for n ∈ 5..10: each covered token's
+    * characters count ONCE however many duplicate grams overlap it. Two passes
     * over the (in-memory) token array, scan-local. */
   def dupCharFracKernel(input: UTF8String, n: Int): Double = {
     val toks = whitespaceTokens(input)
@@ -525,329 +524,12 @@ object TextHash {
   }
 }
 
-/** The engine's whitespace tokenizer as an array<string> column — see
-  * [[TextHash.whitespaceTokens]]. Null text yields null; blank text an
-  * empty array. */
-case class WhitespaceTokens(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.tokensKernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.tokensKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Adjacent whitespace-token n-grams, n = `fieldNames.size`:
-  * array<struct<f1:string, …, fn:string>>, one struct per window in
-  * document order — the scan-side occurrence builder of the n-gram LM
-  * family ([[graft.operators.Vocab]]). The kernel never emits a null
-  * token, so the fields are declared non-nullable: the optimizer then
-  * knows the n-gram columns are never null, and the lm branches that
-  * aggregate them stay canonically equal (exchange reuse) without a
-  * not-null filter on each. */
-case class TokenNgrams(child: Expression, fieldNames: Seq[String])
-    extends UnaryExpression {
-  require(fieldNames.size >= 2, "an n-gram needs n >= 2 fields")
-
-  override def dataType: DataType = ArrayType(
-    StructType(fieldNames.map(StructField(_, StringType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.tokenNgramsKernel(input.asInstanceOf[UTF8String], fieldNames.size)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.tokenNgramsKernel($c, ${fieldNames.size});")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** MinHash signature: array of `numHashes` minima of per-seed hashes
-  * over the document's distinct `shingleN`-gram shingles. Seed variants
-  * derive from one base shingle hash via XXH64.hashLong — O(shingles ×
-  * numHashes) long ops per row, no per-seed string re-hashing. */
-case class MinHashSignature(child: Expression, shingleN: Int, numHashes: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.minhashKernel(input.asInstanceOf[UTF8String], shingleN, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.minhashKernel($c, $shingleN, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Distinct `shingleN`-gram shingles of a document as 64-bit hashes
-  * (chained XXH64 over the token run — bijective with the space-joined
-  * shingle string up to hash collision, ~2⁻⁶⁵ per corpus pair). The
-  * set-similarity joins key on these longs instead of shingle strings:
-  * one tight kernel per row vs. the HOF formulation re-evaluating the
-  * tokenizer per sequence element (O(tokens²) string work), and the
-  * downstream shuffle carries 8-byte keys instead of n-gram text. */
-case class ShingleHashes(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.shingleKernel(input.asInstanceOf[UTF8String], shingleN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.shingleKernel($c, $shingleN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Positional shingles — array<struct<sh:long, cs:int, ce:int>>, one
-  * entry per shingle position with its covered code-point range. The
-  * span-dedup candidate generator keys on `sh` and shuffles only
-  * (id, pos, cs, ce) — text never leaves the scan stage. */
-case class PositionalShingles(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("sh", LongType, nullable = false),
-    StructField("cs", IntegerType, nullable = false),
-    StructField("ce", IntegerType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.positionalShingleKernel(input.asInstanceOf[UTF8String], shingleN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.positionalShingleKernel($c, $shingleN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash over whitespace tokens: bit b of the result is the
-  * sign of Σ_tokens (±1 per bit b of xxhash64(token)). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(TextHash.simhashKernel(input.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.simhashKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Gopher-style repetition counters over whitespace tokens, one tight
-  * pass per row: struct<n_words, top_count (most frequent unigram's
-  * occurrences), n_2grams, n_dup_2grams (occurrences beyond each
-  * gram's first)>. The quality-filter repetition signals derive as
-  * top_count/n_words and n_dup_2grams/n_2grams. Scan-local by design —
-  * the distributed alternative (explode tokens → two groupBys) shuffles
-  * every token of the corpus, which at 100 TB is the whole corpus
-  * re-shuffled twice; here nothing leaves the scan stage. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_words", IntegerType, nullable = false),
-    StructField("top_count", IntegerType, nullable = false),
-    StructField("n_2grams", IntegerType, nullable = false),
-    StructField("n_dup_2grams", IntegerType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.repetitionKernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.repetitionKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Duplicate-n-gram counters for arbitrary n (the 2-gram case is
-  * [[RepetitionStats]]): struct<n_ngrams, n_dup_ngrams>. One pass per
-  * row, scan-local — same design note as RepetitionStats. */
-case class NgramDupStats(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 2, "n-gram n must be >= 2")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_ngrams", IntegerType, nullable = false),
-    StructField("n_dup_ngrams", IntegerType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.ngramDupKernel(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.ngramDupKernel($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Gopher duplicate-n-gram CHARACTER coverage: the fraction of token
-  * characters inside any n-gram that occurs more than once (each char
-  * counted once). */
-case class DupNgramCharFrac(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 2, "n-gram n must be >= 2")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.dupCharFracKernel(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.dupCharFracKernel($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** md5-derived SimHash as a 64-char bit string — see
-  * [[TextHash.simhashMd5Kernel]]. */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhashMd5Kernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.simhashMd5Kernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Positional md5 shingle digests — array<binary>, one 16-byte digest
-  * per shingle position; see [[TextHash.md5ShinglesKernel]]. */
-case class Md5Shingles(child: Expression, shingleN: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.md5ShinglesKernel(input.asInstanceOf[UTF8String], shingleN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.md5ShinglesKernel($c, $shingleN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** md5-derived SimHash packed into a 64-bit long — see
-  * [[TextHash.simhashMd5LongKernel]]. */
-case class SimHashMd5Long(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.simhashMd5LongKernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.simhashMd5LongKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** md5-sliced MinHash signature key string — see
-  * [[TextHash.minhashMd5KeyKernel]]. */
-case class MinHashMd5Key(child: Expression, shingleN: Int) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.minhashMd5KeyKernel(input.asInstanceOf[UTF8String], shingleN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.minhashMd5KeyKernel($c, $shingleN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Lexical-diversity counters struct<n_tokens:int, n_types:int,
-  * n_hapax:int> — see [[TextHash.lexicalStatsKernel]]. */
-case class LexicalStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("n_types", IntegerType, nullable = false),
-    StructField("n_hapax", IntegerType, nullable = false)))
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.lexicalStatsKernel(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.lexicalStatsKernel($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** fastText hashing-trick bucket ids (array<int>) — see
-  * [[TextHash.hashedNgramBucketArray]]. */
-case class HashedNgramBuckets(child: Expression, numBuckets: Int, wordNgrams: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    TextHash.hashedNgramBucketsKernel(
-      input.asInstanceOf[UTF8String], numBuckets, wordNgrams)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.hashedNgramBucketsKernel(" +
-        s"$c, $numBuckets, $wordNgrams);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Mean hashed-n-gram bucket weight under a fixed table — the scoring
-  * kernel of [[graft.operators.FastTextQuality]]; the table rides the
-  * codegen reference registry, NOT the plan tree, so a 2^15-bucket
-  * model adds no plan-string or canonicalization weight. */
+/** Mean hashed-n-gram bucket weight under a fixed table
+  * ([[TextHash.hashedNgramMeanKernel]]) — the scoring kernel of
+  * [[graft.operators.FastTextQuality]]. The table is held by reference:
+  * generated code reaches it through the codegen reference registry,
+  * NOT the plan tree, so a 2^15-bucket model adds no plan-string or
+  * canonicalization weight. */
 case class HashedNgramMeanWeight(
     child: Expression, numBuckets: Int, wordNgrams: Int, table: Array[Double])
     extends UnaryExpression {
@@ -865,7 +547,7 @@ case class HashedNgramMeanWeight(
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tbl = ctx.addReferenceObj("ftWeights", table, "double[]")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash$$.MODULE$$.hashedNgramMeanKernel(" +
+      s"${ev.value} = graft.plans.TextHash.hashedNgramMeanKernel(" +
         s"$c, $numBuckets, $wordNgrams, $tbl);")
   }
 
@@ -873,54 +555,135 @@ case class HashedNgramMeanWeight(
     copy(child = newChild)
 }
 
+/** The token kernels as columns: each is one [[KernelCall]] of its
+  * [[TextHash]] method, named as the column shows it. Null text gives
+  * null. */
 object TextHashColumns {
+
+  private def call(name: String, method: String, dataType: DataType,
+      text: Column, args: Any*): Column =
+    KernelCall.column(name, TextHash, method, dataType, Seq(text), args)
+
+  private def ints(names: String*): StructType =
+    StructType(names.map(StructField(_, IntegerType, nullable = false)))
+
+  private val Longs = ArrayType(LongType, containsNull = false)
+
+  /** The engine's whitespace tokenizer as an array<string> — see
+    * [[TextHash.whitespaceTokens]]; blank text gives an empty array. */
   def whitespaceTokens(text: Column): Column =
-    GraftShim.column(WhitespaceTokens(GraftShim.expression(text)))
+    call("whitespacetokens", "tokensKernel", ArrayType(StringType, containsNull = false), text)
 
-  def tokenNgrams(text: Column, fieldNames: String*): Column =
-    GraftShim.column(TokenNgrams(GraftShim.expression(text), fieldNames))
+  /** Adjacent whitespace-token n-grams, n = `fieldNames.size`:
+    * array<struct<f1:string, …, fn:string>>, one struct per window in
+    * document order — the scan-side occurrence builder of the n-gram LM
+    * family ([[graft.operators.Vocab]]). The kernel never emits a null
+    * token, so the fields are declared non-nullable: the optimizer then
+    * knows the n-gram columns are never null, and the lm branches that
+    * aggregate them stay canonically equal (exchange reuse) without a
+    * not-null filter on each. */
+  def tokenNgrams(text: Column, fieldNames: String*): Column = {
+    require(fieldNames.size >= 2, "an n-gram needs n >= 2 fields")
+    call("tokenngrams", "tokenNgramsKernel", ArrayType(
+      StructType(fieldNames.map(StructField(_, StringType, nullable = false))),
+      containsNull = false), text, fieldNames.size)
+  }
 
+  /** MinHash signature: array of `numHashes` minima of per-seed hashes
+    * over the document's distinct `shingleN`-gram shingles. Seed variants
+    * derive from one base shingle hash via XXH64.hashLong — O(shingles ×
+    * numHashes) long ops per row, no per-seed string re-hashing. */
   def minhashSignature(text: Column, shingleN: Int, numHashes: Int): Column =
-    GraftShim.column(MinHashSignature(GraftShim.expression(text), shingleN, numHashes))
+    call("minhashsignature", "minhashKernel", Longs, text, shingleN, numHashes)
 
+  /** 64-bit SimHash over whitespace tokens: bit b of the result is the
+    * sign of Σ_tokens (±1 per bit b of xxhash64(token)). */
   def simhash(text: Column): Column =
-    GraftShim.column(SimHash64(GraftShim.expression(text)))
+    call("simhash64", "simhashKernel", LongType, text)
 
+  /** md5-derived SimHash as a 64-char bit string — see
+    * [[TextHash.simhashMd5Kernel]]. */
   def simhashMd5(text: Column): Column =
-    GraftShim.column(SimHashMd5(GraftShim.expression(text)))
+    call("simhashmd5", "simhashMd5Kernel", StringType, text)
 
+  /** md5-derived SimHash packed into a 64-bit long — see
+    * [[TextHash.simhashMd5LongKernel]]. */
   def simhashMd5Long(text: Column): Column =
-    GraftShim.column(SimHashMd5Long(GraftShim.expression(text)))
+    call("simhashmd5long", "simhashMd5LongKernel", LongType, text)
 
+  /** Positional md5 shingle digests — array<binary>, one 16-byte digest
+    * per shingle position; see [[TextHash.md5ShinglesKernel]]. */
   def md5Shingles(text: Column, shingleN: Int): Column =
-    GraftShim.column(Md5Shingles(GraftShim.expression(text), shingleN))
+    call("md5shingles", "md5ShinglesKernel", ArrayType(BinaryType, containsNull = false),
+      text, shingleN)
 
+  /** Lexical-diversity counters struct<n_tokens:int, n_types:int,
+    * n_hapax:int> — see [[TextHash.lexicalStatsKernel]]. */
   def lexicalStats(text: Column): Column =
-    GraftShim.column(LexicalStats(GraftShim.expression(text)))
+    call("lexicalstats", "lexicalStatsKernel", ints("n_tokens", "n_types", "n_hapax"), text)
 
+  /** md5-sliced MinHash signature key string — see
+    * [[TextHash.minhashMd5KeyKernel]]. */
   def minhashMd5Key(text: Column, shingleN: Int): Column =
-    GraftShim.column(MinHashMd5Key(GraftShim.expression(text), shingleN))
+    call("minhashmd5key", "minhashMd5KeyKernel", StringType, text, shingleN)
 
+  /** fastText hashing-trick bucket ids (array<int>) — see
+    * [[TextHash.hashedNgramBucketArray]]. */
   def hashedNgramBuckets(text: Column, numBuckets: Int, wordNgrams: Int): Column =
-    GraftShim.column(HashedNgramBuckets(GraftShim.expression(text), numBuckets, wordNgrams))
+    call("hashedngrambuckets", "hashedNgramBucketsKernel",
+      ArrayType(IntegerType, containsNull = false), text, numBuckets, wordNgrams)
 
   def hashedNgramMeanWeight(
       text: Column, numBuckets: Int, wordNgrams: Int, table: Array[Double]): Column =
     GraftShim.column(HashedNgramMeanWeight(
       GraftShim.expression(text), numBuckets, wordNgrams, table))
 
+  /** Distinct `shingleN`-gram shingles of a document as 64-bit hashes
+    * (chained XXH64 over the token run — bijective with the space-joined
+    * shingle string up to hash collision, ~2⁻⁶⁵ per corpus pair). The
+    * set-similarity joins key on these longs instead of shingle strings:
+    * one tight kernel per row vs. the HOF formulation re-evaluating the
+    * tokenizer per sequence element (O(tokens²) string work), and the
+    * downstream shuffle carries 8-byte keys instead of n-gram text. */
   def shingleHashes(text: Column, shingleN: Int): Column =
-    GraftShim.column(ShingleHashes(GraftShim.expression(text), shingleN))
+    call("shinglehashes", "shingleKernel", Longs, text, shingleN)
 
+  /** Positional shingles — array<struct<sh:long, cs:int, ce:int>>, one
+    * entry per shingle position with its covered code-point range. The
+    * span-dedup candidate generator keys on `sh` and shuffles only
+    * (id, pos, cs, ce) — text never leaves the scan stage. */
   def positionalShingles(text: Column, shingleN: Int): Column =
-    GraftShim.column(PositionalShingles(GraftShim.expression(text), shingleN))
+    call("positionalshingles", "positionalShingleKernel", ArrayType(StructType(Seq(
+      StructField("sh", LongType, nullable = false),
+      StructField("cs", IntegerType, nullable = false),
+      StructField("ce", IntegerType, nullable = false))), containsNull = false),
+      text, shingleN)
 
+  /** Gopher-style repetition counters over whitespace tokens, one tight
+    * pass per row: struct<n_words, top_count (most frequent unigram's
+    * occurrences), n_2grams, n_dup_2grams (occurrences beyond each
+    * gram's first)>. The quality-filter repetition signals derive as
+    * top_count/n_words and n_dup_2grams/n_2grams. Scan-local by design —
+    * the distributed alternative (explode tokens → two groupBys) shuffles
+    * every token of the corpus, which at 100 TB is the whole corpus
+    * re-shuffled twice; here nothing leaves the scan stage. */
   def repetitionStats(text: Column): Column =
-    GraftShim.column(RepetitionStats(GraftShim.expression(text)))
+    call("repetitionstats", "repetitionKernel",
+      ints("n_words", "top_count", "n_2grams", "n_dup_2grams"), text)
 
-  def ngramDupStats(text: Column, n: Int): Column =
-    GraftShim.column(NgramDupStats(GraftShim.expression(text), n))
+  /** Duplicate-n-gram counters for arbitrary n (the 2-gram case is
+    * [[repetitionStats]]): struct<n_ngrams, n_dup_ngrams>. One pass per
+    * row, scan-local. */
+  def ngramDupStats(text: Column, n: Int): Column = {
+    require(n >= 2, "n-gram n must be >= 2")
+    call("ngramdupstats", "ngramDupKernel", ints("n_ngrams", "n_dup_ngrams"), text, n)
+  }
 
-  def dupNgramCharFrac(text: Column, n: Int): Column =
-    GraftShim.column(DupNgramCharFrac(GraftShim.expression(text), n))
+  /** Gopher duplicate-n-gram CHARACTER coverage: the fraction of token
+    * characters inside any n-gram that occurs more than once (each char
+    * counted once). */
+  def dupNgramCharFrac(text: Column, n: Int): Column = {
+    require(n >= 2, "n-gram n must be >= 2")
+    call("dupngramcharfrac", "dupCharFracKernel", DoubleType, text, n)
+  }
 }

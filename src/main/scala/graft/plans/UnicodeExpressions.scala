@@ -2,17 +2,15 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode normalization kernels (NFC/NFKC + accent strip) — the
   * standard pre-hash normalization for multilingual corpora: without
   * it, composed ("é") and decomposed ("e" + U+0301) spellings of the
-  * same text hash to different dedup keys. Native codegen'd
-  * expressions around java.text.Normalizer; no UDF.
+  * same text hash to different dedup keys. Native kernels around
+  * java.text.Normalizer, called through `StaticInvoke`; no UDF.
   *
   * Reference surface: polars' `str` namespace has no normalizer, so
   * users call Python `unicodedata` row-by-row
@@ -44,50 +42,14 @@ object UnicodeNorm {
   }
 }
 
-/** form ∈ {NFC, NFKC}: canonical (always) / compatibility (also folds
-  * ligatures, full-width forms, ℕ-style styled letters) composition. */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  require(form == "NFC" || form == "NFKC", s"unsupported form $form")
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    if (form == "NFC") UnicodeNorm.nfc(input.asInstanceOf[UTF8String])
-    else UnicodeNorm.nfkc(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = if (form == "NFC") "nfc" else "nfkc"
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UnicodeNorm$$.MODULE$$.$m($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class StripAccents(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeNorm.stripAccents(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.UnicodeNorm$$.MODULE$$.stripAccents($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** NFC is canonical composition; NFKC also folds compatibility forms
+  * (ligatures, full-width forms, ℕ-style styled letters). Both keep
+  * the `unicodenormalize(...)` column name. */
 object UnicodeColumns {
-  def nfc(c: Column): Column =
-    GraftShim.column(UnicodeNormalize(GraftShim.expression(c), "NFC"))
-  def nfkc(c: Column): Column =
-    GraftShim.column(UnicodeNormalize(GraftShim.expression(c), "NFKC"))
-  def stripAccents(c: Column): Column =
-    GraftShim.column(StripAccents(GraftShim.expression(c)))
+  private def call(name: String, method: String, c: Column): Column =
+    KernelCall.column(name, UnicodeNorm, method, StringType, Seq(c))
+
+  def nfc(c: Column): Column = call("unicodenormalize", "nfc", c)
+  def nfkc(c: Column): Column = call("unicodenormalize", "nfkc", c)
+  def stripAccents(c: Column): Column = call("stripaccents", "stripAccents", c)
 }

@@ -1,106 +1,88 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal, TypeOf,
+  UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native cosine similarity over two array<float|double> columns
-  * (SURVEY.md §4): one tight loop per row accumulating dot product and
-  * both norms in double precision, element order — numerically
-  * identical to the three sequential HOF folds in
-  * [[graft.functions.VectorFunctions.cosine]] (and to DuckDB's
-  * list_cosine_similarity on DOUBLE[]), but ~20× faster than
-  * interpreted lambda evaluation on million-pair dedup joins.
-  * Implements doGenCode (same loop, generated), so dedup/ANN scoring
-  * projections stay inside whole-stage codegen instead of falling back
-  * to interpreted evaluation for the hottest expression in the plan.
+/** Native vector kernels over array<float|double> columns (SURVEY.md
+  * §4): one tight loop per row, accumulating in double precision in
+  * element order, so each equals its HOF formulation in
+  * [[graft.functions.VectorFunctions]] bit for bit while skipping the
+  * per-element interpreted lambdas. Each kernel is one method, called
+  * through `StaticInvoke` ([[VectorColumns]]); `float` flags say
+  * whether an input's elements are float or double.
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+object VectorKernels {
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = left.nullable || right.nullable
+  /** `a` as an `UnsafeArrayData`, copied only when a row hands in
+    * another array class (a parquet scan's column vector, a literal).
+    * The loops below then read through one final class, which the JIT
+    * inlines; read through `ArrayData`, a call site shared by every
+    * query would see each class and dispatch every element read. */
+  private def unsafe(a: ArrayData, float: Boolean): UnsafeArrayData = a match {
+    case u: UnsafeArrayData => u
+    case other =>
+      if (float) UnsafeArrayData.fromPrimitiveArray(other.toFloatArray())
+      else UnsafeArrayData.fromPrimitiveArray(other.toDoubleArray())
+  }
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  @inline private def at(a: UnsafeArrayData, i: Int, float: Boolean): Double =
+    if (float) a.getFloat(i).toDouble else a.getDouble(i)
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  private def cosineOf(a: UnsafeArrayData, b: UnsafeArrayData, aFloat: Boolean,
+      bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
-    val aFloat = elemType(left) == FloatType
-    val bFloat = elemType(right) == FloatType
     var dot = 0.0
     var na = 0.0
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      val x = at(a, i, aFloat)
+      val y = at(b, i, bFloat)
       dot += x * y
       na += x * x
       nb += y * y
       i += 1
     }
-    java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+    dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      def get(arr: String, float: Boolean) =
-        if (float) s"(double) $arr.getFloat($i)" else s"$arr.getDouble($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = ${get(a, elemType(left) == FloatType)};
-         |  double $y = ${get(b, elemType(right) == FloatType)};
-         |  $dot += $x * $y;
-         |  $na += $x * $x;
-         |  $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+  /** Cosine similarity over the common prefix: dot product and both
+    * norms in one pass — numerically identical to the three sequential
+    * HOF folds of [[graft.functions.VectorFunctions.cosine]] (and to
+    * DuckDB's list_cosine_similarity on DOUBLE[]). */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double =
+    cosineOf(unsafe(a, aFloat), unsafe(b, bFloat), aFloat, bFloat)
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
+  /** [[cosine]] of `v` against each array<double> of `cents`, in order —
+    * the IVF cell scores of one vector. */
+  def cosines(v: ArrayData, cents: ArrayData, vFloat: Boolean): ArrayData = {
+    val x = unsafe(v, vFloat)
+    val out = new Array[Double](cents.numElements())
+    var c = 0
+    while (c < out.length) {
+      out(c) = cosineOf(x, unsafe(cents.getArray(c), float = false), vFloat, bFloat = false)
+      c += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 
-/** Native symmetric int8 quantization over array<float|double> —
-  * numerically identical to the HOF formulation in
-  * [[graft.functions.VectorFunctions.int8Quantize]]
-  * (floor(x · (127/max|x|) + 0.5), zero/empty vectors → zeros) but two
-  * passes per row instead of the HOF's per-ELEMENT re-evaluation of the
-  * max|x| subexpression (O(d²) interpreted work per row, the dominant
-  * cost of quantization-heavy plans). Codegen'd, so quantization stays
-  * inside whole-stage codegen.
-  */
-case class Int8Quantize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
+  /** Symmetric int8 quantization — floor(x · (127/max|x|) + 0.5),
+    * zero/empty vectors → zeros, as the HOF formulation in
+    * [[graft.functions.VectorFunctions.int8Quantize]], but two passes
+    * per row instead of the HOF's per-ELEMENT re-evaluation of the
+    * max|x| subexpression (O(d²) interpreted work per row). */
+  def int8Quantize(v: ArrayData, float: Boolean): ArrayData = {
+    val x = unsafe(v, float)
+    val n = x.numElements()
     var ma = 0.0
     var i = 0
     while (i < n) {
-      val x = math.abs(if (isFloat) a.getFloat(i).toDouble else a.getDouble(i))
-      if (x > ma) ma = x
+      val ax = math.abs(at(x, i, float))
+      if (ax > ma) ma = ax
       i += 1
     }
     val out = new Array[Long](n)
@@ -108,61 +90,19 @@ case class Int8Quantize(child: Expression)
       val scale = 127.0 / ma
       i = 0
       while (i < n) {
-        val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
-        out(i) = math.floor(x * scale + 0.5).toLong
+        out(i) = math.floor(at(x, i, float) * scale + 0.5).toLong
         i += 1
       }
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val ma = ctx.freshName("ma")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      val scale = ctx.freshName("scale")
-      val get = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |double $ma = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = java.lang.Math.abs($get);
-         |  if ($x > $ma) $ma = $x;
-         |}
-         |long[] $out = new long[$n];
-         |if ($ma > 0) {
-         |  double $scale = 127.0 / $ma;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $out[$i] = (long) java.lang.Math.floor($get * $scale + 0.5);
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native integer dot product over two array<long> columns — exact long
-  * accumulation in element order, the scoring kernel of the int8 ANN
-  * recall stage (the HOF zip_with+aggregate form evaluates two
-  * interpreted lambdas per element per candidate pair). */
-case class DotLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  // null on length mismatch — the zip_with+aggregate HOF this replaces
-  // null-pads mismatched arrays to a NULL score; silently truncating
-  // would turn a dimension bug into a plausible-but-wrong number
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Exact integer dot product over two array<long>, in element order —
+    * the scoring kernel of the int8 ANN recall stage. Null on a length
+    * mismatch: the zip_with+aggregate HOF this replaces null-pads
+    * mismatched arrays to a NULL score, and silently truncating would
+    * turn a dimension bug into a plausible-but-wrong number. */
+  def dotLong(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0L
@@ -174,89 +114,47 @@ case class DotLong(left: Expression, right: Expression)
     java.lang.Long.valueOf(acc)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $acc = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $acc += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
+  /** Random-hyperplane signature: bit p = sign of dot(v, plane p), all
+    * planes in one pass over the vector (the HOF form pays an
+    * interpreted zip_with+aggregate PER PLANE). */
+  def hyperplaneBits(v: ArrayData, planes: Array[Array[Double]], float: Boolean): ArrayData = {
+    val x = unsafe(v, float)
+    val out = new Array[Int](planes.length)
+    var p = 0
+    while (p < planes.length) {
+      val plane = planes(p)
+      val d = math.min(x.numElements(), plane.length)
+      var dot = 0.0
+      var i = 0
+      while (i < d) {
+        dot += at(x, i, float) * plane(i)
+        i += 1
+      }
+      out(p) = if (dot >= 0) 1 else 0
+      p += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }
 
-/** Native random-hyperplane signature: bit p = sign of dot(v, plane p),
-  * all planes in one pass over the vector per row. The HOF form pays an
-  * interpreted zip_with+aggregate PER PLANE per row (planes × dim
-  * lambda calls); here the plane matrix rides along as a referenced
-  * object and the double loop is generated code. */
+/** [[VectorKernels.hyperplaneBits]] with the plane matrix held by
+  * reference: generated code reaches it through the reference registry,
+  * so the matrix never enters the plan string or the generated source. */
 case class HyperplaneBits(child: Expression, planes: Array[Array[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   private def isFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(v: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val out = new Array[Int](planes.length)
-    var p = 0
-    while (p < planes.length) {
-      val plane = planes(p)
-      val d = math.min(n, plane.length)
-      var dot = 0.0
-      var i = 0
-      while (i < d) {
-        val x = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
-        dot += x * plane(i)
-        i += 1
-      }
-      out(p) = if (dot >= 0) 1 else 0
-      p += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(v: Any): Any =
+    VectorKernels.hyperplaneBits(v.asInstanceOf[ArrayData], planes, isFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val n = ctx.freshName("n")
-      val d = ctx.freshName("d")
-      val dot = ctx.freshName("dot")
-      val plane = ctx.freshName("plane")
-      val out = ctx.freshName("out")
-      val get = if (isFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |int[] $out = new int[$planesRef.length];
-         |for (int $p = 0; $p < $planesRef.length; $p++) {
-         |  double[] $plane = $planesRef[$p];
-         |  int $d = java.lang.Math.min($n, $plane.length);
-         |  double $dot = 0.0;
-         |  for (int $i = 0; $i < $d; $i++) {
-         |    $dot += $get * $plane[$i];
-         |  }
-         |  $out[$p] = ($dot >= 0) ? 1 : 0;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.VectorKernels.hyperplaneBits($a, $planesRef, $isFloat);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -264,15 +162,30 @@ case class HyperplaneBits(child: Expression, planes: Array[Array[Double]])
 }
 
 object VectorColumns {
+
+  /** Whether `v`'s elements are float: a type test the optimizer folds
+    * to a literal boolean, since `v`'s type is only known once resolved. */
+  private def isFloat(v: Column): Expression =
+    EqualTo(TypeOf(GraftShim.expression(v)), Literal("array<float>"))
+
   def cosine(a: Column, b: Column): Column =
-    GraftShim.column(CosineSim(GraftShim.expression(a), GraftShim.expression(b)))
+    KernelCall.column("cosinesim", VectorKernels, "cosine", DoubleType,
+      Seq(a, b), Seq(isFloat(a), isFloat(b)))
+
+  /** The cosine of `v` against each centroid of `cents` (an
+    * array<array<double>>, e.g. a literal), as an array<double>. */
+  def cosines(v: Column, cents: Column): Column =
+    KernelCall.column("cosines", VectorKernels, "cosines",
+      ArrayType(DoubleType, containsNull = false), Seq(v, cents), Seq(isFloat(v)))
 
   def hyperplaneBits(v: Column, planes: Array[Array[Double]]): Column =
     GraftShim.column(HyperplaneBits(GraftShim.expression(v), planes))
 
   def int8Quantize(v: Column): Column =
-    GraftShim.column(Int8Quantize(GraftShim.expression(v)))
+    KernelCall.column("int8quantize", VectorKernels, "int8Quantize",
+      ArrayType(LongType, containsNull = false), Seq(v), Seq(isFloat(v)))
 
   def dotLong(a: Column, b: Column): Column =
-    GraftShim.column(DotLong(GraftShim.expression(a), GraftShim.expression(b)))
+    KernelCall.column("dotlong", VectorKernels, "dotLong", LongType, Seq(a, b),
+      returnNullable = true)
 }

@@ -166,7 +166,7 @@ object Pipeline {
     }),
 
     // word-2-GRAM repetition + top-unigram fraction via the native
-    // one-pass RepetitionStats kernel: scan-local, zero shuffle — the
+    // one-pass repetitionStats kernel: scan-local, zero shuffle — the
     // 2-gram complement of q_repetition's unigram signals, whose
     // explode-and-groupBy plan re-shuffles every token of the corpus —
     // exactly what 100 TB forbids (the two queries cross-check each

@@ -684,6 +684,25 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("IVF cells score natively — no interpreted lambda around the centroid cosines") {
+    // one kernel call per row scores a vector against every centroid;
+    // a transform lambda would run the cosine interpreted per
+    // (row, centroid). q_ann_ivf_pq keeps only its ADC fold.
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    for ((q, allowed) <- Seq("q_ann_ivf" -> Nil, "q_ann_ivf_exact" -> Nil,
+        "q_ann_ivf_pq" -> Seq("aggregate", "zip_with"), "q_dedup_semantic" -> Nil,
+        "q_mixture_cluster" -> Nil)) {
+      val plan = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
+      val hofs = PlanDump.lambdas(plan)
+      assert(hofs.map(_.prettyName).sorted == allowed,
+        s"$q runs interpreted lambdas: ${hofs.map(_.prettyName)}")
+      assert(plan.exists(_.expressions.exists(_.exists {
+        case s: StaticInvoke => s.functionName == "cosines"
+        case _ => false
+      })), s"$q scores its cells without the cosines kernel:\n$plan")
+    }
+  }
+
   test("BPE counts run natively — no interpreted lambda in the plan") {
     // every BPE count, Column, operator and SQL alike, is the native
     // TokenCount expression under a BPE model, not a transform/aggregate

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
@@ -355,12 +356,16 @@ class SamplingSpec extends SparkSpec {
         .filter(col("native") =!= col("hof")).count()
       assert(bad == 0, "single-pass gate differs from the regex reference")
     }
-    // generated code compiles with fallback disabled
+    // generated code compiles with fallback disabled: an RDD-backed
+    // frame, since the optimizer folds a projection over `toDF` rows
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try {
-      val r = edges.select(TF.filterReason(col("text")).as("r")).collect()
+      val viaRdd = spark.sparkContext.parallelize(SamplingSpec.FilterReasonEdges.map(Tuple1(_)), 2)
+        .toDF("text").select(TF.filterReason(col("text")).as("r"))
+      assert(viaRdd.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+      val r = viaRdd.collect()
       assert(r.length == 6 && r.forall(_.getString(0).nonEmpty))
     } finally spark.conf.set(key, prev)
   }
