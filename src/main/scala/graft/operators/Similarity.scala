@@ -244,9 +244,7 @@ object Similarity {
       idCol: String,
       vecCol: String,
       centroids: Array[Array[Double]]): DataFrame = {
-    // nested Lists, not the Array-backed Seq map() returns — Catalyst's
-    // literal converter rejects Array[Seq[_]] backing stores
-    val cents = typedlit(centroids.map(_.toList).toList)
+    val cents = graft.plans.VectorColumns.matrix(centroids)
     // argmax cell only — dots computed once per row in a projection,
     // the array never leaves the stage
     df.select(col(idCol).as("cid"), col(vecCol).as("cv"),
@@ -284,14 +282,15 @@ object Similarity {
       centroids: DataFrame, nProbe: Int): DataFrame = {
     require(nProbe >= 1, "nProbe must be positive")
     val centArr = centroids.collect().sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toList)
+      .map(_.getSeq[Double](1).toArray)
     val nCells = centArr.length // < nLists when the train sample is tiny
-    val cents = typedlit(centArr.toList)
+    val cents = graft.plans.VectorColumns.matrix(centArr)
     val wp = Window.partitionBy(col("qid")).orderBy(col("d").desc, col("cell"))
     queries
       .select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        posexplode(graft.plans.VectorColumns.cosines(col(vecCol), cents))
-          .as(Seq("cell", "d")))
+        // a NULL vector still gets nCells cells, each with a NULL score
+        posexplode(coalesce(graft.plans.VectorColumns.cosines(col(vecCol), cents),
+          array_repeat(lit(null).cast("double"), nCells))).as(Seq("cell", "d")))
       .withColumn("pr", row_number().over(wp))
       .filter(col("pr") <= math.min(nProbe, nCells))
       .select(col("qid"), col("qv"), col("cell").cast("long").as("cell"))

@@ -873,8 +873,11 @@ object Pipeline {
     // array itself is spec-tested
     "q_embed_quant" -> ((s, dir) => {
       import graft.functions.{VectorFunctions => VF}
-      val q = VF.int8Quantize(col("embedding"))
-      t(s, dir, "embeddings").select(
+      // quantized once per row, in its own projection (as q_list_sort)
+      val q = col("q")
+      t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"), VF.int8Quantize(col("embedding")).as("q"))
+        .select(
         col("vec_id"),
         round(VF.maxAbs(col("embedding")), 6).as("max_abs"),
         aggregate(q, lit(0L), (a, x) => a + x).as("q_sum"),

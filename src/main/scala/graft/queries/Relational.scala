@@ -1129,8 +1129,12 @@ object Relational {
     // index_of/eval-sum): binary string order matches DuckDB's default
     // collation, so sorted prefixes compare exactly
     "q_list_sort" -> ((s, dir) => {
-      val words = graft.functions.TextFunctions.tokens(col("text"))
-      t(s, dir, "documents").select(
+      // tokenized once per row, in its own projection: inlined, the
+      // kernel would run once per use, and interpreted under the lambdas
+      val words = col("words")
+      t(s, dir, "documents")
+        .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("words"))
+        .select(
         col("doc_id"),
         concat_ws("|", slice(sort_array(words), 1, 5)).as("sorted5"),
         concat_ws("|", slice(reverse(words), 1, 3)).as("rev3"),

@@ -55,9 +55,13 @@ class KernelPathsSpec extends SparkSpec {
     "trainingWords" -> BpeChains.trainingWords(t, byteLevel = true),
     "trainingWordsLegacy" -> BpeChains.trainingWords(t, byteLevel = false))
 
-  private def vectorKernels(v: Column, w: Column, cents: Column): Seq[(String, Column)] = Seq(
+  /** `cents` is the centroid matrix as `VectorColumns.matrix` builds it
+    * (binary format), `centList` the same matrix as a `typedlit`. */
+  private def vectorKernels(v: Column, w: Column, cents: Column, centList: Column)
+      : Seq[(String, Column)] = Seq(
     "cosine" -> VC.cosine(v, w),
     "cosines" -> VC.cosines(v, cents),
+    "cosinesTypedlit" -> VC.cosines(v, centList),
     "int8Quantize" -> VC.int8Quantize(v),
     "dotLong" -> VC.dotLong(VC.int8Quantize(v), VC.int8Quantize(w)),
     "hyperplaneBits" -> VC.hyperplaneBits(v, planes))
@@ -66,7 +70,7 @@ class KernelPathsSpec extends SparkSpec {
     * give NaN (a zero norm) and null-pad a length mismatch where the
     * kernels read the common prefix, so the cosine and hyperplane
     * references are checked on the real vectors only. */
-  private def vectorRefs(v: Column, w: Column, cents: Column, edges: Boolean)
+  private def vectorRefs(v: Column, w: Column, centList: Column, edges: Boolean)
       : Seq[(String, Column)] = {
     val (qv, qw) = (VF.int8QuantizeHof(v), VF.int8QuantizeHof(w))
     Seq(
@@ -74,7 +78,8 @@ class KernelPathsSpec extends SparkSpec {
       "dotLong" -> aggregate(zip_with(qv, qw, (x, y) => x * y), lit(0L), (acc, x) => acc + x)) ++
       (if (edges) Nil else Seq(
         "cosine" -> VF.cosine(v, w),
-        "cosines" -> transform(cents, c => VF.cosine(v, c)),
+        "cosines" -> transform(centList, c => VF.cosine(v, c)),
+        "cosinesTypedlit" -> transform(centList, c => VF.cosine(v, c)),
         "hyperplaneBits" -> VF.hyperplaneBitsHof(v, planes)))
   }
 
@@ -149,7 +154,8 @@ class KernelPathsSpec extends SparkSpec {
   test("every vector kernel agrees interpreted and through generated code, and with its reference") {
     val emb = Tables.t(spark, Sf, "embeddings").select(col("embedding"))
       .collect().map(_.getSeq[Float](0))
-    val cents = typedlit(emb.take(4).map(_.map(_.toDouble).toList).toList)
+    val centArr = emb.take(4).map(_.map(_.toDouble).toArray)
+    val (cents, centList) = (VC.matrix(centArr), typedlit(centArr.map(_.toList).toList))
     val real = emb.indices.map(i => (emb(i), emb((i + 1) % emb.length)))
     // zero, empty, negative-max, null, and a length mismatch (a null
     // integer dot)
@@ -162,8 +168,8 @@ class KernelPathsSpec extends SparkSpec {
       def typed(s: Seq[Float]): Seq[Any] =
         if (s == null || elem == FloatType) s else s.map(_.toDouble)
       val rows = pairs.zipWithIndex.map { case ((v, w), i) => Row(i.toLong, typed(v), typed(w)) }
-      checkBothPaths(rows, schema, vectorKernels(col("v"), col("w"), cents),
-        vectorRefs(col("v"), col("w"), cents, isEdge))
+      checkBothPaths(rows, schema, vectorKernels(col("v"), col("w"), cents, centList),
+        vectorRefs(col("v"), col("w"), centList, isEdge))
     }
   }
 
@@ -182,14 +188,14 @@ class KernelPathsSpec extends SparkSpec {
   }
 
   test("the optimizer strips the name: the plan holds the bare call and a literal type flag") {
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("a", ArrayType(FloatType)), StructField("b", ArrayType(DoubleType))))
-    val df = rddFrame(Seq(Row(1L, Seq(1f), Seq(2.0))), schema)
-    val plan = df.select(VC.cosine(col("a"), col("b"))).queryExecution.optimizedPlan
+    val schema = StructType(Seq(StructField("id", LongType), StructField("a", ArrayType(FloatType))))
+    val df = rddFrame(Seq(Row(1L, Seq(1f))), schema)
+    val plan = df.select(VC.cosines(col("a"), VC.matrix(Array(Array(2.0)))))
+      .queryExecution.optimizedPlan
     val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
     assert(!exprs.exists(_.isInstanceOf[KernelCall]), plan)
     val calls = exprs.collect { case s: StaticInvoke => s }
-    assert(calls.map(_.functionName) == Seq("cosine"), plan)
-    assert(calls.head.arguments.drop(2) == Seq(Literal(true), Literal(false)), plan)
+    assert(calls.map(_.functionName) == Seq("cosines"), plan)
+    assert(calls.head.arguments.drop(2) == Seq(Literal(true)), plan)
   }
 }

@@ -441,6 +441,17 @@ class SimilaritySpec extends SparkSpec {
       ksub = 4, trainSample = 256, iters = 2))
   }
 
+  test("a NULL query vector still probes nProbe cells, each scored NULL") {
+    val (assigned, cents) = Similarity.ivfBuild(emb, "vec_id", "embedding",
+      nLists = 4, trainSample = 256, iters = 2)
+    val nullQuery = emb.filter(col("vec_id") === 0).select(lit(-1L).as("vec_id"),
+      lit(null).cast(emb.schema("embedding").dataType).as("embedding"))
+    val out = Similarity.ivfTopKIndexed(assigned, cents, nullQuery, "vec_id", "embedding",
+      k = 3, nProbe = 2).collect()
+    assert(out.length == 3 && out.forall(r => r.getLong(0) == -1L && r.isNullAt(2)),
+      out.mkString(", "))
+  }
+
   test("IVF builds launch only training jobs: the sample collect, plus one PQ job") {
     // the PQ sub-codebooks train in one job, one task per subspace
     val sc = spark.sparkContext
