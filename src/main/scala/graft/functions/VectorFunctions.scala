@@ -23,7 +23,7 @@ object VectorFunctions {
   /** Random-hyperplane signature: `planes(p)(d)` fixed pseudo-random
     * weights; bit p = sign of dot(v, planes(p)). Returns array<int> of
     * 0/1 bits — group consecutive `bandBits` bits for LSH buckets.
-    * Executes as the native [[graft.plans.HyperplaneBits]] (one double
+    * Executes as the native [[graft.plans.VectorKernels.hyperplaneBits]] (one double
     * loop per row vs an interpreted lambda fold per plane); the HOF reference below stays spec-compared. */
   def hyperplaneBits(v: Column, planes: Array[Array[Double]]): Column =
     graft.plans.VectorColumns.hyperplaneBits(v, planes)

@@ -597,7 +597,7 @@ object Dedup {
     * that is many orders of magnitude smaller. Here the probe
     * shingles' 64-bit hashes aggregate into one driver-side Bloom
     * sketch (size bounded by the probe suite, `maxSketchBytes`-guarded)
-    * probed scan-side via [[graft.plans.BloomAnyContained]]: corpus
+    * probed scan-side via [[graft.plans.BloomColumns.anyContained]]: corpus
     * docs sharing no probe shingle — at a real decontamination pass,
     * nearly all of them — are dismissed inside the scan, and only
     * survivors enter the exact confirm join.

@@ -1,11 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Driver-built Bloom sketches probed scan-side — the membership
@@ -31,32 +28,16 @@ object BloomKernels {
   }
 }
 
-/** `array<long>` → boolean: does the Bloom sketch possibly contain any
-  * element? The sketch rides along as a task-serialized reference
-  * object (codegen: `ctx.addReferenceObj`), so the probe is one hash
-  * per element inside whole-stage codegen — no join, no shuffle, no
-  * broadcast exchange in the plan. Input arrays must hold non-null
-  * longs (the shingle/signature hash kernels guarantee that). */
-case class BloomAnyContained(child: Expression, bf: BloomFilter)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    BloomKernels.anyContained(input.asInstanceOf[ArrayData], bf)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bfRef = ctx.addReferenceObj("graftBloom", bf, classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.BloomKernels$$.MODULE$$.anyContained($c, $bfRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BloomColumns {
+
+  /** `array<long>` → boolean: does the Bloom sketch possibly contain
+    * any element? The sketch rides the [[KernelCall]] as an object
+    * argument (declared `BloomFilter`: its runtime class is not
+    * public), so the probe is one hash per element inside whole-stage
+    * codegen — no join, no shuffle, no broadcast exchange in the plan.
+    * Input arrays must hold non-null longs (the shingle/signature hash
+    * kernels guarantee that). */
   def anyContained(hashes: Column, bf: BloomFilter): Column =
-    GraftShim.column(BloomAnyContained(GraftShim.expression(hashes), bf))
+    KernelCall.column("bloomanycontained", BloomKernels, "anyContained", BooleanType,
+      Seq(hashes), Seq(KernelCall.payload(bf)))
 }

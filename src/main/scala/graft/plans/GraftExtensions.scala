@@ -89,7 +89,7 @@ object GraftFunctions {
     // variadic: graft_contains_any(text, 'p1', 'p2', ...) — patterns
     // must be string literals (the trie builds once, driver-side)
     ("graft_contains_any",
-      new ExpressionInfo(classOf[ContainsAny].getName, "graft_contains_any"),
+      new ExpressionInfo(StringColumns.getClass.getName, "graft_contains_any"),
       (args: Seq[Expression]) => {
         if (args.length < 2)
           throw new IllegalArgumentException(
@@ -100,7 +100,7 @@ object GraftFunctions {
           case other => throw new IllegalArgumentException(
             s"graft_contains_any patterns must be string literals, got $other")
         }
-        ContainsAny(args.head, pats)
+        GraftShim.resolvedExpression(StringColumns.containsAny(c(args.head), pats))
       }),
     columnFn("graft_compress_ratio", 2, CompressColumns)(a => CompressColumns.deflateRatio(
       c(a(0)), intArg(a(1), "graft_compress_ratio level"))),

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass multi-literal replacement (the polars
@@ -24,19 +23,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * suffix of one pattern is a prefix of another, no pattern contains
   * another) this is bit-identical to the chained-replace formulation —
   * the property the q_replace_many oracle pins.
+  *
+  * Equal by (patterns, replacements): two calls over one pattern set
+  * are one subexpression.
   */
-final class TrieReplacer(patterns: Array[String], replacements: Array[String])
-    extends Serializable {
+final case class TrieReplacer(patterns: Seq[String], replacements: Seq[String]) {
   require(patterns.length == replacements.length,
     "patterns and replacements must align")
   require(patterns.nonEmpty, "at least one pattern")
   require(patterns.forall(_.nonEmpty), "empty pattern would match everywhere")
 
+  private[plans] val patternArr = patterns.toArray
+  private[plans] val replacementArr = replacements.toArray
+
   // flat trie: per-node char→child maps + the replacement index that
-  // ends at this node (-1 = none). Built once driver-side, broadcast
-  // with the expression; ~O(total pattern chars) memory.
-  private val children = new java.util.ArrayList[java.util.HashMap[Character, Integer]]()
-  private val outs = new java.util.ArrayList[Integer]()
+  // ends at this node (-1 = none). Built once driver-side, shipped with
+  // the task; ~O(total pattern chars) memory.
+  private[plans] val children = new java.util.ArrayList[java.util.HashMap[Character, Integer]]()
+  private[plans] val outs = new java.util.ArrayList[Integer]()
   private def newNode(): Int = {
     children.add(new java.util.HashMap[Character, Integer]())
     outs.add(Integer.valueOf(-1))
@@ -45,8 +49,8 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
   locally {
     newNode() // root = 0
     var p = 0
-    while (p < patterns.length) {
-      val pat = patterns(p)
+    while (p < patternArr.length) {
+      val pat = patternArr(p)
       var node = 0
       var i = 0
       while (i < pat.length) {
@@ -63,8 +67,13 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
       p += 1
     }
   }
+}
 
-  def replaceAll(input: UTF8String): UTF8String = {
+/** The walks over a [[TrieReplacer]], one kernel per walk, each called
+  * through [[KernelCall]] with the trie as an object argument. */
+object TrieKernels {
+
+  def replaceAll(input: UTF8String, trie: TrieReplacer): UTF8String = {
     val s = input.toString
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
@@ -76,16 +85,16 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
       var bestEnd = -1
       var walking = true
       while (walking && j < s.length) {
-        val next = children.get(node).get(Character.valueOf(s.charAt(j)))
+        val next = trie.children.get(node).get(Character.valueOf(s.charAt(j)))
         if (next == null) walking = false
         else {
           node = next.intValue()
           j += 1
-          val o = outs.get(node).intValue()
+          val o = trie.outs.get(node).intValue()
           if (o >= 0) { best = o; bestEnd = j }
         }
       }
-      if (best >= 0) { sb.append(replacements(best)); i = bestEnd }
+      if (best >= 0) { sb.append(trie.replacementArr(best)); i = bestEnd }
       else { sb.append(s.charAt(i)); i += 1 }
     }
     UTF8String.fromString(sb.toString)
@@ -95,7 +104,7 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
     * under the SAME walk (leftmost, longest-at-position,
     * non-overlapping) — so a pattern set behaves identically whether
     * it is being redacted out or surveyed. */
-  def extractAll(input: UTF8String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def extractAll(input: UTF8String, trie: TrieReplacer): ArrayData = {
     val s = input.toString
     val out = new java.util.ArrayList[UTF8String]()
     var i = 0
@@ -106,20 +115,19 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
       var bestEnd = -1
       var walking = true
       while (walking && j < s.length) {
-        val next = children.get(node).get(Character.valueOf(s.charAt(j)))
+        val next = trie.children.get(node).get(Character.valueOf(s.charAt(j)))
         if (next == null) walking = false
         else {
           node = next.intValue()
           j += 1
-          val o = outs.get(node).intValue()
+          val o = trie.outs.get(node).intValue()
           if (o >= 0) { best = o; bestEnd = j }
         }
       }
-      if (best >= 0) { out.add(UTF8String.fromString(patterns(best))); i = bestEnd }
+      if (best >= 0) { out.add(UTF8String.fromString(trie.patternArr(best))); i = bestEnd }
       else i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.toArray(new Array[AnyRef](out.size())))
+    new GenericArrayData(out.toArray(new Array[AnyRef](out.size())))
   }
 
   /** Boolean membership probe under the same automaton: does ANY
@@ -129,7 +137,7 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
     * "first match at position i" here is exactly "extractAll
     * non-empty" (any match implies a first one), so the two kernels
     * cannot disagree. */
-  def containsAny(input: UTF8String): Boolean = {
+  def containsAny(input: UTF8String, trie: TrieReplacer): Boolean = {
     val s = input.toString
     var i = 0
     while (i < s.length) {
@@ -137,12 +145,12 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
       var j = i
       var walking = true
       while (walking && j < s.length) {
-        val next = children.get(node).get(Character.valueOf(s.charAt(j)))
+        val next = trie.children.get(node).get(Character.valueOf(s.charAt(j)))
         if (next == null) walking = false
         else {
           node = next.intValue()
           j += 1
-          if (outs.get(node).intValue() >= 0) return true
+          if (trie.outs.get(node).intValue() >= 0) return true
         }
       }
       i += 1
@@ -151,104 +159,31 @@ final class TrieReplacer(patterns: Array[String], replacements: Array[String])
   }
 }
 
-/** Catalyst face of [[TrieReplacer]]: the automaton is built once and
-  * shipped as a codegen reference object, so the generated code is a
-  * single virtual call per row — whole-stage codegen stays intact. */
-case class ReplaceMany(
-    child: Expression,
-    patterns: Seq[String],
-    replacements: Seq[String]) extends UnaryExpression {
-
-  @transient private lazy val replacer =
-    new TrieReplacer(patterns.toArray, replacements.toArray)
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    replacer.replaceAll(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("trieReplacer", replacer,
-      classOf[TrieReplacer].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.replaceAll($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** polars `str.extract_many`: every trie match in document order as
-  * an array<string> — keyword surveying / blocklist auditing with the
-  * same one-pass cost shape as [[ReplaceMany]] (O(maxPatternLen) per
-  * position, independent of pattern count). */
-case class ExtractMany(
-    child: Expression,
-    patterns: Seq[String]) extends UnaryExpression {
-
-  @transient private lazy val replacer =
-    new TrieReplacer(patterns.toArray, patterns.toArray)
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    replacer.extractAll(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("trieExtractor", replacer,
-      classOf[TrieReplacer].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.extractAll($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Boolean trie probe (polars `str.contains_any`): one automaton walk
-  * with early exit on the first hit — a 10k-phrase blocklist costs
-  * what 3 phrases do, and a match near the document head costs only
-  * the prefix. */
-case class ContainsAny(
-    child: Expression,
-    patterns: Seq[String]) extends UnaryExpression {
-
-  @transient private lazy val replacer =
-    new TrieReplacer(patterns.toArray, patterns.toArray)
-
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    replacer.containsAny(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("trieProber", replacer,
-      classOf[TrieReplacer].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.containsAny($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** The trie kernels as columns: the [[TrieReplacer]] is built here, so
+  * a bad pattern set fails at the call, and rides the [[KernelCall]] as
+  * an object argument. Null text gives null. */
 object StringColumns {
+
+  private def walk(name: String, method: String, dataType: DataType, c: Column,
+      trie: TrieReplacer): Column =
+    KernelCall.column(name, TrieKernels, method, dataType, Seq(c), Seq(KernelCall.payload(trie)))
+
   /** Ordered (pattern → replacement) pairs — a Seq, not a Map, so
     * duplicate-pattern priority is explicit and deterministic. */
   def replaceMany(c: Column, pairs: Seq[(String, String)]): Column =
-    GraftShim.column(ReplaceMany(
-      GraftShim.expression(c), pairs.map(_._1), pairs.map(_._2)))
+    walk("replacemany", "replaceAll", StringType, c,
+      TrieReplacer(pairs.map(_._1), pairs.map(_._2)))
 
   /** All matches of a literal set in document order (leftmost,
     * longest-at-position, non-overlapping — the [[replaceMany]]
     * walk). */
   def extractMany(c: Column, patterns: Seq[String]): Column =
-    GraftShim.column(ExtractMany(GraftShim.expression(c), patterns))
+    walk("extractmany", "extractAll", ArrayType(StringType, containsNull = false), c,
+      TrieReplacer(patterns, patterns))
 
   /** Does the text contain ANY of the literals? (polars
     * `str.contains_any`) — early-exit boolean dual of
     * [[extractMany]]. */
   def containsAny(c: Column, patterns: Seq[String]): Column =
-    GraftShim.column(ContainsAny(GraftShim.expression(c), patterns))
+    walk("containsany", "containsAny", BooleanType, c, TrieReplacer(patterns, patterns))
 }

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftShim}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression,
-  XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -524,37 +522,6 @@ object TextHash {
   }
 }
 
-/** Mean hashed-n-gram bucket weight under a fixed table
-  * ([[TextHash.hashedNgramMeanKernel]]) — the scoring kernel of
-  * [[graft.operators.FastTextQuality]]. The table is held by reference:
-  * generated code reaches it through the codegen reference registry,
-  * NOT the plan tree, so a 2^15-bucket model adds no plan-string or
-  * canonicalization weight. */
-case class HashedNgramMeanWeight(
-    child: Expression, numBuckets: Int, wordNgrams: Int, table: Array[Double])
-    extends UnaryExpression {
-
-  require(table.length == numBuckets,
-    s"weight table has ${table.length} entries for $numBuckets buckets")
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = child.nullable
-
-  override def nullSafeEval(input: Any): Any =
-    java.lang.Double.valueOf(TextHash.hashedNgramMeanKernel(
-      input.asInstanceOf[UTF8String], numBuckets, wordNgrams, table))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tbl = ctx.addReferenceObj("ftWeights", table, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextHash.hashedNgramMeanKernel(" +
-        s"$c, $numBuckets, $wordNgrams, $tbl);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** The token kernels as columns: each is one [[KernelCall]] of its
   * [[TextHash]] method, named as the column shows it. Null text gives
   * null. */
@@ -633,10 +600,18 @@ object TextHashColumns {
     call("hashedngrambuckets", "hashedNgramBucketsKernel",
       ArrayType(IntegerType, containsNull = false), text, numBuckets, wordNgrams)
 
+  /** Mean hashed-n-gram bucket weight under a fixed table — see
+    * [[TextHash.hashedNgramMeanKernel]]; the scoring kernel of
+    * [[graft.operators.FastTextQuality]]. The table rides the call as
+    * an object argument, not as plan data, so a 2^15-bucket model adds
+    * no plan-string or canonicalization weight. */
   def hashedNgramMeanWeight(
-      text: Column, numBuckets: Int, wordNgrams: Int, table: Array[Double]): Column =
-    GraftShim.column(HashedNgramMeanWeight(
-      GraftShim.expression(text), numBuckets, wordNgrams, table))
+      text: Column, numBuckets: Int, wordNgrams: Int, table: Array[Double]): Column = {
+    require(table.length == numBuckets,
+      s"weight table has ${table.length} entries for $numBuckets buckets")
+    call("hashedngrammeanweight", "hashedNgramMeanKernel", DoubleType, text,
+      numBuckets, wordNgrams, KernelCall.payload(table))
+  }
 
   /** Distinct `shingleN`-gram shingles of a document as 64-bit hashes
     * (chained XXH64 over the token run — bijective with the space-joined

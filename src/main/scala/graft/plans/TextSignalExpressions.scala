@@ -2,9 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, GetStructField, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GetStructField}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
@@ -33,14 +32,16 @@ object TextSignals {
     Seq("n_chars", "n_nonws", "n_symbols", "n_punct", "n_words", "n_stop") ++
       TextFunctions.Stopwords.map { case (lang, _) => s"stop_$lang" }
 
-  private[plans] val Schema: StructType =
+  private val Schema: StructType =
     StructType(Fields.map(StructField(_, IntegerType, nullable = false)))
 
   private val Index = stopwordIndex(TextFunctions.Stopwords.map(_._2))
 
-  /** The counts of one text as Int columns. */
+  /** The counts of one text as Int columns: fields of one
+    * `graft_text_signals(text)` call of [[of]]. */
   def columns(text: Column): TextCounts = {
-    val signals = TextSignals(GraftShim.expression(text))
+    val signals = GraftShim.expression(
+      KernelCall.column("graft_text_signals", TextSignals, "of", Schema, Seq(text)))
     val f = Fields.indices.map(i => GraftShim.column(GetStructField(signals, i, Some(Fields(i)))))
     TextCounts(f(0), f(1), f(2), f(3), f(4), f(5), f.drop(6))
   }
@@ -117,18 +118,3 @@ object TextSignals {
 final case class TextCounts(
     chars: Column, nonWs: Column, symbols: Column, punct: Column,
     words: Column, stopwords: Column, stopwordsByLang: Seq[Column])
-
-/** The text-signal counts struct of a string — see [[TextSignals]]. */
-case class TextSignals(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = TextSignals.Schema
-  override def prettyName: String = "graft_text_signals"
-
-  override def nullSafeEval(v: Any): Any = TextSignals.of(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.TextSignals.of($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}

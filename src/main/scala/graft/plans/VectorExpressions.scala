@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * per-element interpreted lambdas. `float` flags say whether an
   * input's elements are float or double; each element read tests its
   * own input's flag in place, so each read site keeps its own branch
-  * profile. `cosines` is called through `StaticInvoke`
-  * ([[VectorColumns]]); the others are the interpreted eval of the
-  * classes below.
+  * profile. `cosines` and `hyperplaneBits` are called through
+  * `StaticInvoke` ([[VectorColumns]]); the others are the interpreted
+  * eval of the classes below.
   */
 object VectorKernels {
 
@@ -244,30 +244,6 @@ case class DotLong(left: Expression, right: Expression) extends BinaryExpression
     copy(left = newLeft, right = newRight)
 }
 
-/** [[VectorKernels.hyperplaneBits]] with the plane matrix held by
-  * reference: generated code reaches it through the reference registry,
-  * so the matrix never enters the plan string or the generated source. */
-case class HyperplaneBits(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(v: Any): Any =
-    VectorKernels.hyperplaneBits(v.asInstanceOf[ArrayData], planes, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.VectorKernels.hyperplaneBits($a, $planesRef, $isFloat);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object VectorColumns {
 
   /** Whether `v`'s elements are float: a type test the optimizer folds
@@ -294,8 +270,12 @@ object VectorColumns {
       .apply(InternalRow(boxed)).getArray(0).copy(), t))
   }
 
+  /** The plane matrix rides the call as an object argument, so it never
+    * enters the plan as data or the generated source. */
   def hyperplaneBits(v: Column, planes: Array[Array[Double]]): Column =
-    GraftShim.column(HyperplaneBits(GraftShim.expression(v), planes))
+    KernelCall.column("hyperplanebits", VectorKernels, "hyperplaneBits",
+      ArrayType(IntegerType, containsNull = false), Seq(v),
+      Seq(KernelCall.payload(planes), isFloat(v)))
 
   def int8Quantize(v: Column): Column =
     GraftShim.column(Int8Quantize(GraftShim.expression(v)))

@@ -534,7 +534,7 @@ object Pipeline {
     }),
 
     // multi-literal blocklist scrub: ONE trie-walk pass over the text
-    // (native ReplaceMany kernel) vs the oracle's chained replace —
+    // (native replaceMany kernel) vs the oracle's chained replace —
     // bit-identical here because the pattern set is overlap-free (no
     // suffix↔prefix pairs, no containment), the property the kernel
     // doc pins; the multi-word pattern exercises longest-match

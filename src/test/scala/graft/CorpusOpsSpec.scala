@@ -332,6 +332,16 @@ class CorpusOpsSpec extends SparkSpec {
     assert(bad == 0, "containsAny and extractMany disagree")
   }
 
+  test("a bad trie pattern set fails at the call, before any query runs") {
+    import graft.plans.{StringColumns, TrieReplacer}
+    val t = col("text")
+    intercept[IllegalArgumentException](StringColumns.replaceMany(t, Nil))
+    intercept[IllegalArgumentException](StringColumns.replaceMany(t, Seq("a" -> "b", "" -> "c")))
+    intercept[IllegalArgumentException](StringColumns.extractMany(t, Seq("a", "")))
+    intercept[IllegalArgumentException](StringColumns.containsAny(t, Nil))
+    intercept[IllegalArgumentException](TrieReplacer(Seq("a", "b"), Seq("x")))
+  }
+
   test("greedyPack fills bins to the budget, isolates oversized docs, keeps every doc") {
     import spark.implicits._
     import graft.operators.Pack

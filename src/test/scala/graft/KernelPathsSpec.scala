@@ -7,10 +7,14 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
+
+import scala.jdk.CollectionConverters._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.plans.{CompressColumns, KernelCall, Mojibake, MojibakeColumns, PreTokens,
-  TextHashColumns => THC, UnicodeColumns, VectorColumns => VC}
+import graft.plans.{BloomColumns, CompressColumns, KernelCall, Mojibake, MojibakeColumns,
+  PreTokens, StringColumns, TextHashColumns => THC, TextSignals, UnicodeColumns,
+  VectorColumns => VC}
 
 /** Every native kernel column, evaluated both ways Spark runs it:
   * interpreted (a `LocalRelation`, whose projection the optimizer
@@ -23,8 +27,19 @@ class KernelPathsSpec extends SparkSpec {
 
   private val planes = VF.makePlanes(numPlanes = 8, dim = 64)
   private val weights = Array.tabulate(64)(i => i * 0.25 - 3.0)
+  // "customer query" contains "customer", and "on"/"ne" overlap in
+  // "one": the walk's leftmost-longest, non-overlapping choices show
+  private val trie = Seq("customer query" -> "[CQ]", "customer" -> "[C]", "on" -> "<on>",
+    "ne" -> "<ne>", "\u00e9" -> "e", "two" -> "")
 
-  private def textKernels(t: Column): Seq[(String, Column)] = Seq(
+  private def textSignals(t: Column): Column = {
+    val c = TextSignals.columns(t)
+    struct(Seq(c.chars, c.nonWs, c.symbols, c.punct, c.words, c.stopwords) ++
+      c.stopwordsByLang: _*)
+  }
+
+  /** `sketch` holds the 3-shingle hashes of half the rows. */
+  private def textKernels(t: Column, sketch: BloomFilter): Seq[(String, Column)] = Seq(
     "whitespaceTokens" -> THC.whitespaceTokens(t),
     "tokenNgrams" -> THC.tokenNgrams(t, "u", "v", "w"),
     "minhashSignature" -> THC.minhashSignature(t, 3, 16),
@@ -47,7 +62,12 @@ class KernelPathsSpec extends SparkSpec {
     "fixMojibake" -> MojibakeColumns.fixMojibake(t),
     "deflateRatio" -> CompressColumns.deflateRatio(t),
     "trainingWords" -> PreTokens.trainingWords(t, byteLevel = true),
-    "trainingWordsLegacy" -> PreTokens.trainingWords(t, byteLevel = false))
+    "trainingWordsLegacy" -> PreTokens.trainingWords(t, byteLevel = false),
+    "replaceMany" -> StringColumns.replaceMany(t, trie),
+    "extractMany" -> StringColumns.extractMany(t, trie.map(_._1)),
+    "containsAny" -> StringColumns.containsAny(t, trie.map(_._1)),
+    "bloomAnyContained" -> BloomColumns.anyContained(THC.shingleHashes(t, 3), sketch),
+    "textSignals" -> textSignals(t))
 
   private def textRefs(t: Column): Seq[(String, Column)] = Seq(
     "whitespaceTokens" -> filter(split(t, "\\s+"), x => x =!= ""),
@@ -148,7 +168,15 @@ class KernelPathsSpec extends SparkSpec {
   test("every text kernel agrees interpreted and through generated code, and with its reference") {
     val schema = StructType(Seq(StructField("id", LongType), StructField("text", StringType)))
     val rows = texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }
-    checkBothPaths(rows, schema, textKernels(col("text")), textRefs(col("text")))
+    val half = rddFrame(rows, schema).filter(col("id") % 2 === 0)
+      .select(explode(THC.shingleHashes(col("text"), 3)).as("sh"))
+    val sketch = half.stat.bloomFilter("sh", half.count(), 0.01)
+    checkBothPaths(rows, schema, textKernels(col("text"), sketch), textRefs(col("text")))
+    // the probe answers both ways on these rows
+    val probed = rddFrame(rows, schema)
+      .select(BloomColumns.anyContained(THC.shingleHashes(col("text"), 3), sketch))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getBoolean(0))).toSet
+    assert(probed == Set(None, Some(true), Some(false)))
   }
 
   test("every vector kernel agrees interpreted and through generated code, and with its reference") {
@@ -181,10 +209,64 @@ class KernelPathsSpec extends SparkSpec {
       UnicodeColumns.nfkc(col("text")), THC.simhash(lower(col("text")))).columns.toSeq
     assert(names == Seq("simhash64(text)", "shinglehashes(text)", "tokenngrams(text)",
       "cosinesim(a, b)", "unicodenormalize(text)", "simhash64(lower(text))"))
+    val bf = BloomFilter.create(10)
+    val payloads = df.select(StringColumns.replaceMany(col("text"), Seq("a" -> "b")),
+      StringColumns.extractMany(col("text"), Seq("a")),
+      StringColumns.containsAny(col("text"), Seq("a")),
+      BloomColumns.anyContained(THC.shingleHashes(col("text"), 2), bf),
+      VC.hyperplaneBits(col("a"), planes), THC.hashedNgramMeanWeight(col("text"), 64, 2, weights),
+      TextSignals.columns(col("text")).words).columns.toSeq
+    assert(payloads == Seq("replacemany(text)", "extractmany(text)", "containsany(text)",
+      "bloomanycontained(shinglehashes(text))", "hyperplanebits(a)",
+      "hashedngrammeanweight(text)", "graft_text_signals(text).n_words"))
     df.createOrReplaceTempView("kernel_names")
     val sql = spark.sql("SELECT graft_simhash(text), graft_compress_ratio(upper(text), 6) " +
       "FROM kernel_names").columns.toSeq
     assert(sql == Seq("simhash64(text)", "deflateratio(upper(text))"))
+  }
+
+  test("payloads ride the call as object literals, never as plan data") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("text", StringType),
+      StructField("a", ArrayType(FloatType))))
+    val df = rddFrame(Seq(Row(1L, "a b c", Seq.fill(64)(1f))), schema)
+    val plan = df.select(THC.hashedNgramMeanWeight(col("text"), 64, 2, weights),
+      VC.hyperplaneBits(col("a"), planes)).queryExecution.optimizedPlan
+    val lits = plan.flatMap(_.expressions.flatMap(_.collect { case l: Literal => l }))
+    def holds(payload: AnyRef) = lits.exists(l =>
+      (l.value.asInstanceOf[AnyRef] eq payload) && l.dataType == ObjectType(payload.getClass))
+    assert(holds(weights) && holds(planes), plan)
+    assert(!lits.exists(_.dataType.isInstanceOf[ArrayType]), plan)
+    // a trie rebuilt from the same patterns is the same call, so two
+    // reads of it stay one subexpression
+    val pats = trie.map(_._1)
+    val twice = df.select(StringColumns.extractMany(col("text"), pats),
+      StringColumns.extractMany(col("text"), pats)).queryExecution.optimizedPlan
+    val calls = twice.expressions.flatMap(_.collect { case s: StaticInvoke => s })
+    assert(calls.length == 2 && calls(0).semanticEquals(calls(1)), twice)
+  }
+
+  test("an Expression class exists only for per-task state or a measured per-query loop") {
+    // every other kernel is one method called through KernelCall; a new
+    // class here needs its reason written down
+    val reasons = Map(
+      "KernelCall" -> "the one named wrapper of a StaticInvoke kernel call",
+      "TokenCount" -> "per-task state: the tokenizer memo in a codegen mutable state",
+      "CosineSim" -> "a per-query generated loop: a shared cosine kernel measured 1.15-1.2x slower",
+      "Int8Quantize" -> "a per-query generated loop, as CosineSim",
+      "DotLong" -> "a per-query generated loop, as CosineSim")
+    val root = java.nio.file.Paths.get(
+      classOf[KernelCall].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val names = {
+      val dir = root.resolve("graft/plans")
+      val files = java.nio.file.Files.list(dir)
+      try files.iterator().asScala.map(_.getFileName.toString).toList finally files.close()
+    }
+    val loader = classOf[KernelCall].getClassLoader
+    val expressions = names.filter(_.endsWith(".class")).map(_.stripSuffix(".class"))
+      .filter(n => classOf[org.apache.spark.sql.catalyst.expressions.Expression]
+        .isAssignableFrom(Class.forName(s"graft.plans.$n", false, loader)))
+    assert(expressions.toSet == reasons.keySet,
+      s"Expression classes in graft.plans: ${expressions.sorted}; reasons: $reasons")
   }
 
   test("the optimizer strips the name: the plan holds the bare call and a literal type flag") {

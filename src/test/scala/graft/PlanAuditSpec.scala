@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.col
 
@@ -340,7 +341,7 @@ class PlanAuditSpec extends SparkSpec {
     // the sketch probe is a plain Filter expression — present in the
     // plan, adding NO join, broadcast, or shuffle: exchange count must
     // equal the exact path's
-    assert(bloomPlan.toLowerCase.contains("bloomanycontained"),
+    assert(bloomPlan.toLowerCase.contains("bloomkernels.anycontained"),
       "Bloom prefilter optimized away or not planned as a Filter")
     assert(!bloomPlan.contains("BroadcastNestedLoopJoin"),
       "sketch probe must not plan as a join")
@@ -679,8 +680,11 @@ class PlanAuditSpec extends SparkSpec {
       val plan = SparkEntry.queries(q)(spark, Sf).queryExecution.optimizedPlan
       val hofs = PlanDump.lambdas(plan)
       assert(hofs.isEmpty, s"$q runs interpreted lambdas: ${hofs.map(_.prettyName).distinct}")
-      assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.plans.TextSignals]))),
-        s"$q reads no TextSignals counts:\n$plan")
+      assert(plan.exists(_.expressions.exists(_.exists {
+        case s: StaticInvoke => s.staticObject == graft.plans.TextSignals.getClass &&
+          s.functionName == "of"
+        case _ => false
+      })), s"$q reads no TextSignals counts:\n$plan")
     }
   }
 
@@ -688,7 +692,6 @@ class PlanAuditSpec extends SparkSpec {
     // one kernel call per row scores a vector against every centroid;
     // a transform lambda would run the cosine interpreted per
     // (row, centroid). q_ann_ivf_pq keeps only its ADC fold.
-    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
     for ((q, allowed) <- Seq("q_ann_ivf" -> Nil, "q_ann_ivf_exact" -> Nil,
         "q_ann_ivf_pq" -> Seq("aggregate", "zip_with"), "q_dedup_semantic" -> Nil,
         "q_mixture_cluster" -> Nil)) {

@@ -81,6 +81,12 @@ class SqlFunctionsSpec extends SparkSpec {
       "SELECT graft_contains_any('t', upper('x'))").collect())
   }
 
+  test("graft_contains_any rejects an empty pattern at analysis, before the query runs") {
+    Tables.t(spark, Sf, "documents").createOrReplaceTempView("docs_trie")
+    intercept[IllegalArgumentException](
+      spark.sql("SELECT graft_contains_any(text, 'spark', '') FROM docs_trie"))
+  }
+
   test("graft_compress_ratio via SQL equals the Column API") {
     val loop = "'" + ("repeat me " * 40).trim + "'"
     val viaSql = spark.sql(s"SELECT graft_compress_ratio($loop, 6)").head().getDouble(0)
