@@ -24,18 +24,10 @@ object VectorFunctions {
     * weights; bit p = sign of dot(v, planes(p)). Returns array<int> of
     * 0/1 bits — group consecutive `bandBits` bits for LSH buckets.
     * Executes as the native [[graft.plans.VectorKernels.hyperplaneBits]] (one double
-    * loop per row vs an interpreted lambda fold per plane); the HOF reference below stays spec-compared. */
+    * loop per row vs an interpreted lambda fold per plane); its HOF
+    * formulation is a test reference. */
   def hyperplaneBits(v: Column, planes: Array[Array[Double]]): Column =
     graft.plans.VectorColumns.hyperplaneBits(v, planes)
-
-  /** The HOF reference formulation of [[hyperplaneBits]]. */
-  def hyperplaneBitsHof(v: Column, planes: Array[Array[Double]]): Column = {
-    val bitCols = planes.map { plane =>
-      val planeCol = array(plane.toIndexedSeq.map(lit): _*)
-      when(dot(v, planeCol) >= 0, lit(1)).otherwise(lit(0))
-    }
-    array(bitCols.toIndexedSeq: _*)
-  }
 
   /** Deterministic pseudo-random unit-free hyperplanes (fixed seed —
     * identical on every executor without shuffling state). */
@@ -74,21 +66,11 @@ object VectorFunctions {
     * same arithmetic in every engine (a bare `round` differs between
     * half-up and half-even implementations). 4× smaller vectors for
     * ANN recall stages; zero vectors quantize to zeros. Executes as the
-    * native [[graft.plans.VectorKernels.int8Quantize]] (the HOF form below
-    * re-evaluates max|x| per ELEMENT when interpreted — O(d²) per row);
-    * the HOF reference stays spec-compared bit-for-bit. */
+    * native [[graft.plans.VectorKernels.int8Quantize]] (the HOF form,
+    * a test reference, re-evaluates max|x| per ELEMENT when interpreted
+    * — O(d²) per row). */
   def int8Quantize(v: Column): Column =
     graft.plans.VectorColumns.int8Quantize(v)
-
-  /** The HOF reference formulation of [[int8Quantize]] — kept for the
-    * native == HOF equality spec, not for hot paths. */
-  def int8QuantizeHof(v: Column): Column = {
-    val vd = asDouble(v)
-    val ma = maxAbs(v)
-    when(ma > 0,
-      transform(vd, x => floor(x * (lit(127.0) / ma) + 0.5).cast("long")))
-      .otherwise(transform(vd, _ => lit(0L)))
-  }
 
   /** Per-vector QA verdict — the admission gate in front of every ANN
     * / dedup / PCA consumer: an embedding batch with NaN/Inf entries

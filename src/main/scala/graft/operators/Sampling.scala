@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.plans.TextHashColumns.md5Buckets
+
 /** Deterministic sampling for corpus curation (SURVEY.md §2.3).
   *
   * Both samplers are pure functions of a key column — the kept set is
@@ -61,8 +63,13 @@ object Sampling {
     * md5 bits, +0.5 lattice centering keeps u off 0 and 1; exact in a
     * double, identical in every engine that can read 13 hex chars). */
   def hashUniform(key: Column): Column =
-    (conv(substring(md5(key.cast("string").cast("binary")), 1, 13), 16, 10)
-      .cast("double") + 0.5) / lit(4503599627370496.0) // 2^52
+    (md5Top52(key.cast("string")).cast("double") + 0.5) /
+      lit(4503599627370496.0) // 2^52
+
+  /** The first 13 hex chars of md5(`s`) — its top 52 bits — as a
+    * decimal string, for a string column `s`. */
+  private def md5Top52(s: Column): Column =
+    conv(substring(md5(s.cast("binary")), 1, 13), 16, 10)
 
   /** The Efraimidis–Spirakis key −ln(u)/w over [[hashUniform]]. Pure
     * function of (key, weight) — the batch and streaming samplers
@@ -365,17 +372,8 @@ object Sampling {
       weights: Map[String, Double],
       totalTokens: Long,
       maxEpochs: Double = 4.0): DataFrame = {
-    require(totalTokens > 0, "totalTokens must be positive")
-    require(weights.nonEmpty, "weights must name at least one domain")
-    require(weights.values.forall(_ >= 0) && weights.values.sum > 0,
-      "weights must be non-negative and not all zero")
+    val target = tokenBudget(col("domain"), weights, totalTokens)
     require(maxEpochs > 0, "maxEpochs must be positive")
-    val norm = weights.toSeq.sortBy(_._1).map(_._2).sum
-    val target = weights.toSeq.sortBy(_._1)
-      .foldLeft(lit(0L): Column) { case (acc, (d, wt)) =>
-        when(col("domain") === d,
-          lit(math.floor(wt / norm * totalTokens).toLong)).otherwise(acc)
-      }
     counts
       .withColumn("target_tokens", target)
       .filter(col("target_tokens") > 0)
@@ -395,25 +393,29 @@ object Sampling {
       tokenCol: String,
       weights: Map[String, Double],
       totalTokens: Long): DataFrame = {
-    require(totalTokens > 0, "totalTokens must be positive")
-    require(weights.nonEmpty, "weights must name at least one domain")
-    require(weights.values.forall(_ >= 0) && weights.values.sum > 0,
-      "weights must be non-negative and not all zero")
-    // normalize in sorted-key order: double addition isn't associative
-    // and Map iteration order is unspecified — the sorted fold makes
-    // the budgets bit-reproducible run to run
-    val norm = weights.toSeq.sortBy(_._1).map(_._2).sum
-    // per-domain budget as a when-chain literal: floor(share × total)
-    val budgetExpr = weights.toSeq.sortBy(_._1)
-      .foldLeft(lit(0L): Column) { case (acc, (d, wt)) =>
-        when(domain === d, lit(math.floor(wt / norm * totalTokens).toLong))
-          .otherwise(acc)
-      }
+    val budgetExpr = tokenBudget(domain, weights, totalTokens)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(domain).orderBy(order: _*)
       .rowsBetween(Long.MinValue, 0)
     df.withColumn(s"cum_$tokenCol", sum(col(tokenCol)).over(w).cast("long"))
       .filter(col(s"cum_$tokenCol") <= budgetExpr)
+  }
+
+  /** Each domain's token budget, floor(share × total), as a when-chain
+    * literal over `domain` (0 for an unlisted domain). Shares normalize
+    * in sorted-key order: double addition isn't associative and Map
+    * iteration order is unspecified, so the sorted fold makes the
+    * budgets bit-reproducible run to run. */
+  private def tokenBudget(domain: Column, weights: Map[String, Double], totalTokens: Long): Column = {
+    require(totalTokens > 0, "totalTokens must be positive")
+    require(weights.nonEmpty, "weights must name at least one domain")
+    require(weights.values.forall(_ >= 0) && weights.values.sum > 0,
+      "weights must be non-negative and not all zero")
+    val sorted = weights.toSeq.sortBy(_._1)
+    val norm = sorted.map(_._2).sum
+    sorted.foldLeft(lit(0L): Column) { case (acc, (d, wt)) =>
+      when(domain === d, lit(math.floor(wt / norm * totalTokens).toLong)).otherwise(acc)
+    }
   }
 
   /** Deterministic shard id in [0, nShards) from the first 16 bits of
@@ -429,11 +431,16 @@ object Sampling {
   def shardAssign(key: Column, nShards: Int): Column = {
     require(nShards >= 1 && nShards <= 65536, "nShards must be in [1, 65536]")
     val hex = substring(md5(key.cast("string").cast("binary")), 1, 4)
+    pmod(hex4(hex), lit(nShards.toLong)).cast("int")
+  }
+
+  /** The first 4 hex chars of `hex` as a long, by plain instr/substr
+    * arithmetic that any SQL engine replays. */
+  private def hex4(hex: Column): Column = {
     val digits = lit("0123456789abcdef")
     def nib(i: Int): Column =
       (call_function("instr", digits, substring(hex, i, 1)) - lit(1)).cast("long")
-    val v = ((nib(1) * 16 + nib(2)) * 16 + nib(3)) * 16 + nib(4)
-    pmod(v, lit(nShards.toLong)).cast("int")
+    ((nib(1) * 16 + nib(2)) * 16 + nib(3)) * 16 + nib(4)
   }
 
   /** Export the frame as `nShards` hash shards under `path`
@@ -506,12 +513,8 @@ object Sampling {
     require(nShards >= 1 && nShards <= 65536, "nShards must be in [1, 65536]")
     requireHashableKey(df, key)
     val hex = md5(concat(lit(seed), lit(":"), key.cast("string")).cast("binary"))
-    val digits = lit("0123456789abcdef")
-    def nib(i: Int): Column =
-      (call_function("instr", digits, substring(col("__h"), i, 1)) - lit(1)).cast("long")
-    val v = ((nib(1) * 16 + nib(2)) * 16 + nib(3)) * 16 + nib(4)
     df.withColumn("__h", hex)
-      .withColumn("shard", pmod(v, lit(nShards.toLong)).cast("int"))
+      .withColumn("shard", pmod(hex4(col("__h")), lit(nShards.toLong)).cast("int"))
       .withColumn("pos",
         (row_number().over(
           Window.partitionBy(col("shard")).orderBy(col("__h"), key)) - 1).cast("long"))
@@ -540,19 +543,12 @@ object Sampling {
       idCol: String,
       textCol: String,
       buckets: Int = 1024): DataFrame = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"buckets must be in [2, 2^20], got $buckets")
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    def bucketOf(t: Column): Column =
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
     // ratio table shared with the frozen-scoring path — parenthesized
     // exactly like the oracle SQL so the doubles agree bit-for-bit
     // before the per-doc sum
     val ratios = dsirRatioTable(raw, target, textCol, buckets)
       .withColumnRenamed("lr", "__lr")
-    raw.select(col(idCol).as("id"), explode(toks).as("tok"))
-      .select(col("id"), bucketOf(col("tok")).as("b"))
+    raw.select(col(idCol).as("id"), explode(md5Buckets(col(textCol), buckets)).as("b"))
       .join(broadcast(ratios), Seq("b"))
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_toks"),
@@ -582,17 +578,10 @@ object Sampling {
       textCol: String,
       domainCol: String,
       buckets: Int = 1024): DataFrame = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"buckets must be in [2, 2^20], got $buckets")
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    def bucketOf(t: Column): Column =
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
     val grid = dsirDomainGrid(raw, target, textCol, domainCol, buckets)
       .withColumnRenamed("lr", "__lr")
     val docBuckets = raw
-      .select(col(idCol).as("id"), explode(toks).as("tok"))
-      .select(col("id"), bucketOf(col("tok")).as("b"))
+      .select(col(idCol).as("id"), explode(md5Buckets(col(textCol), buckets)).as("b"))
       .groupBy(col("id"), col("b")).agg(count(lit(1)).as("__c"))
     docBuckets.join(broadcast(grid), Seq("b"))
       .groupBy(col("id"), col("domain"))
@@ -616,12 +605,7 @@ object Sampling {
       textCol: String,
       domainCol: String,
       buckets: Int = 1024): DataFrame = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"buckets must be in [2, 2^20], got $buckets")
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    def bucketOf(t: Column): Column =
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
+    val bs = md5Buckets(col(textCol), buckets)
     // two passes over the raw pool by design (bucket totals here, then
     // per-doc scoring in the caller) — the same shape as dsirLogWeights.
     // Deriving rb from the per-doc (id, b) counts WOULD make it one
@@ -632,12 +616,10 @@ object Sampling {
     // 1.4x slower) — so the direct partial-agg pass, whose shuffle is
     // ≤ B rows per mapper, is the honest optimum
     val rb = raw
-      .select(explode(toks).as("tok"))
-      .select(bucketOf(col("tok")).as("b"))
+      .select(explode(bs).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("cr"))
     val tb = target
-      .select(col(domainCol).as("domain"), explode(toks).as("tok"))
-      .select(col("domain"), bucketOf(col("tok")).as("b"))
+      .select(col(domainCol).as("domain"), explode(bs).as("b"))
       .groupBy(col("domain"), col("b")).agg(count(lit(1)).as("ct"))
     val totR = rb.agg(sum(col("cr")).cast("double").as("__tr"))
     val totT = tb.groupBy(col("domain"))
@@ -660,47 +642,25 @@ object Sampling {
     * `array<struct<domain, logw>>` holding its frozen log-weight
     * against EVERY fitted domain — zero joins, zero shuffles, zero
     * state, so the same column scores batches and streams identically
-    * (the by-domain analog of [[dsirScoreFrozen]]'s prefix==batch
-    * contract). The reduce runs as ONE pass with a length-D array
-    * accumulator (`zip_with` add per token): higher-order functions
-    * evaluate interpreted, with no cross-expression subexpression
-    * reuse, so the naive per-domain-aggregate form re-hashes every
-    * token D times — this shape hashes each token ONCE (measured
-    * 2.3→~1.3 s on the sf0.1 documents table at D=5). The grid rides
-    * the plan as a single bucket → [lr per domain] map literal (one
-    * `typedLit` Literal node, domain-aligned arrays — complete over
-    * raw-pool buckets × domains by construction); buckets absent from
-    * the grid add the zero vector via the coalesce fallback (the OOV
-    * path), and a NULL text scores 0.0 against every domain (coerced
-    * to the empty document), both matching the oracle's LEFT-JOIN +
-    * coalesce replay. */
+    * (the by-domain analog of [[dsirScoreFrozen]]). One native kernel
+    * call per row ([[graft.plans.TextHashColumns.dsirDomainScores]])
+    * hashes each token once, adds its bucket's row of log-ratios to a
+    * length-D sum and rounds each sum to 4 dp; the grid rides the call
+    * as a dense B×D table plus the sorted domain names, not as plan
+    * data. A cell the grid lacks holds 0.0 (the OOV path), and a NULL
+    * text scores 0.0 against every domain (coerced to the empty
+    * document), both matching the oracle's LEFT-JOIN + coalesce
+    * replay. */
   def dsirScoreFrozenByDomain(
       grid: Array[(String, Long, Double)],
       textCol: Column,
       buckets: Int): Column = {
     require(grid.nonEmpty, "frozen domain grid must be non-empty")
-    require(grid.length <= 4096 * 64,
-      s"frozen domain grid too large to inline: ${grid.length} rows")
-    val domains = grid.map(_._1).distinct.sorted.toSeq
-    val byBucket: Map[Long, Seq[Double]] = grid.groupBy(_._2).view
-      .mapValues { rows =>
-        val m = rows.map(e => e._1 -> e._3).toMap
-        domains.map(d => m.getOrElse(d, 0.0))
-      }.toMap
-    val lrsLit = typedLit(byBucket)
-    val zeros = typedLit(Seq.fill(domains.length)(0.0))
-    val toks = graft.functions.TextFunctions.tokens(coalesce(textCol, lit("")))
-    val bucketOf = (t: Column) =>
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
-    val bs = transform(toks, t => bucketOf(t))
-    val sums = aggregate(bs, zeros, (acc, b) =>
-      zip_with(acc, coalesce(element_at(lrsLit, b), zeros), (x, y) => x + y))
-    // zip_with consumes `sums` ONCE — an element_at-per-domain
-    // projection would re-run the whole reduce D times (same
-    // no-subexpression-reuse trap as above)
-    zip_with(typedLit(domains), sums, (d, s) =>
-      struct(d.as("domain"), (round(s, 4) + lit(0.0)).as("logw")))
+    val domains = grid.map(_._1).distinct.sorted
+    val slot = domains.zipWithIndex.toMap
+    val table = denseTable(grid.map(g => (g._2, slot(g._1), g._3)), buckets, domains.length)
+    graft.plans.TextHashColumns.dsirDomainScores(coalesce(textCol, lit("")), buckets, table,
+      domains.map(org.apache.spark.unsafe.types.UTF8String.fromString))
   }
 
   /** Freeze a fitted DSIR bucket log-ratio table into a scan-local
@@ -708,31 +668,36 @@ object Sampling {
     * here has (quality model, LM score, contamination index): fit once
     * in batch with [[dsirRatioTable]], collect the ≤ `buckets`-row
     * table (a bounded training collect), and score any batch OR STREAM
-    * of documents with zero joins, zero shuffles, zero state — the
-    * log-ratios ride the plan as ONE map literal (`typedLit`, a single
-    * `Literal` node — an element-wise `map(lit, lit, ...)` would carry
-    * 2×|table| expression children and blow up analysis/codegen near
-    * the 2^20 bucket bound) and each row reduces its own tokens.
-    * Buckets ABSENT from the fitted table (dsirRatioTable full-joins
-    * raw∪target, so a bucket no fitted token hashed to has no row)
-    * score 0.0 via the coalesce fallback — the OOV path the oracle's
-    * LEFT JOIN + coalesce replays exactly. A NULL text also scores 0.0
-    * (coerced to the empty document), matching the oracle, where a
-    * null-text doc contributes no token rows. */
+    * of documents with zero joins, zero shuffles, zero state. One
+    * native kernel call per row ([[graft.plans.TextHashColumns.dsirScore]])
+    * sums its tokens' log-ratios from a dense length-`buckets` table
+    * riding the call, not the plan. Buckets ABSENT from the fitted
+    * table (no fitted token hashed to them) hold 0.0 — the OOV path the
+    * oracle's LEFT JOIN + coalesce replays exactly; a NULL text also
+    * scores 0.0 (coerced to the empty document). */
   def dsirScoreFrozen(
       ratios: Array[(Long, Double)],
       textCol: Column,
       buckets: Int): Column = {
-    require(ratios.nonEmpty && ratios.length <= buckets,
-      s"frozen ratio table must have 1..$buckets rows, got ${ratios.length}")
-    val lrMap = typedLit(ratios.toMap)
-    val toks = graft.functions.TextFunctions.tokens(coalesce(textCol, lit("")))
-    val bucketOf = (t: Column) =>
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
-    round(aggregate(toks, lit(0.0),
-      (acc, t) => acc + coalesce(element_at(lrMap, bucketOf(t)), lit(0.0))), 4) +
-      lit(0.0)
+    require(ratios.nonEmpty, "frozen ratio table must be non-empty")
+    val table = denseTable(ratios.map(r => (r._1, 0, r._2)), buckets, 1)
+    round(graft.plans.TextHashColumns.dsirScore(coalesce(textCol, lit("")), buckets, table),
+      4) + lit(0.0)
+  }
+
+  /** Fitted (bucket, column, value) cells as a dense `buckets × width`
+    * table, 0.0 where no cell was fitted. A bucket outside
+    * [0, buckets) means the table was fitted at another bucket count. */
+  private def denseTable(
+      cells: Array[(Long, Int, Double)], buckets: Int, width: Int): Array[Double] = {
+    val table = new Array[Double](
+      Math.multiplyExact(graft.plans.TextHashColumns.checkedBuckets(buckets), width))
+    for ((b, j, lr) <- cells) {
+      require(b >= 0 && b < buckets, s"fitted bucket $b is outside [0, $buckets): " +
+        "the table was fitted at another bucket count")
+      table(b.toInt * width + j) = lr
+    }
+    table
   }
 
   /** The fitted (bucket, log-ratio) table of [[dsirLogWeights]], for
@@ -743,15 +708,9 @@ object Sampling {
       target: DataFrame,
       textCol: String,
       buckets: Int = 1024): DataFrame = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"buckets must be in [2, 2^20], got $buckets")
-    val toks = graft.functions.TextFunctions.tokens(col(textCol))
-    def bucketOf(t: Column): Column =
-      pmod(conv(substring(md5(t.cast("binary")), 1, 13), 16, 10).cast("long"),
-        lit(buckets.toLong))
+    val bs = md5Buckets(col(textCol), buckets)
     def bucketCounts(df: DataFrame): DataFrame = df
-      .select(explode(toks).as("tok"))
-      .select(bucketOf(col("tok")).as("b"))
+      .select(explode(bs).as("b"))
       .groupBy(col("b")).agg(count(lit(1)).as("c"))
     val rb = bucketCounts(raw)
     val tb = bucketCounts(target)
@@ -796,8 +755,8 @@ object Sampling {
       .withColumn("__key",
         col("logw") - log(-log(hashUniform(col(idCol)))))
       .withColumn("__salt",
-        pmod(conv(substring(md5(concat(lit("s:"), col(idCol).cast("string"))
-          .cast("binary")), 1, 13), 16, 10).cast("long"), lit(salts.toLong)))
+        pmod(md5Top52(concat(lit("s:"), col(idCol).cast("string"))).cast("long"),
+          lit(salts.toLong)))
     val phase1 = Window.partitionBy(col("domain"), col("__salt"))
       .orderBy(col("__key").desc, col(idCol))
     val phase2 = Window.partitionBy(col("domain"))

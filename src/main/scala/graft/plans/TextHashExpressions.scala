@@ -2,23 +2,24 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The engine's whitespace tokenizer and the token kernels built on
   * it: the text-dedup hashes (SURVEY.md §4), the per-doc
-  * repetition/diversity counters, and the adjacent n-gram builder
-  * behind the n-gram LM family ([[TextHashColumns.tokenNgrams]]). The
+  * repetition/diversity counters, the adjacent n-gram builder behind
+  * the n-gram LM family ([[TextHashColumns.tokenNgrams]]), and the
+  * DSIR md5 token buckets with the frozen DSIR scorers that fold a
+  * fitted table over them ([[TextHashColumns.md5Buckets]]). The
   * HOF-lambda formulations (`filter`/`transform`/`zip_with`/
-  * `aggregate` lambdas are interpreted per array element, and re-
-  * evaluate the shingle subtree per outer iteration) are ~50× slower;
-  * these run the whole kernel as one tight Scala loop per row over
-  * Spark's own XXH64. Each kernel is one method here, called through
-  * `StaticInvoke` ([[KernelCall]], [[TextHashColumns]]): generated code
-  * calls it directly, so the surrounding projection stays inside
-  * whole-stage codegen.
+  * `aggregate` lambdas are interpreted per array element) are up to
+  * ~50× slower; these run the whole kernel as one tight Scala loop per
+  * row. Each kernel is one method here, called through `StaticInvoke`
+  * ([[KernelCall]], [[TextHashColumns]]): generated code calls it
+  * directly, so the surrounding projection stays inside whole-stage
+  * codegen.
   */
 object TextHash {
 
@@ -114,28 +115,18 @@ object TextHash {
     * replica). */
   def repetitionKernel(input: UTF8String): GenericInternalRow = {
     val toks = whitespaceTokens(input)
-    val n = toks.length
-    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
     var top = 0
-    var i = 0
-    while (i < n) {
-      val prev = counts.get(toks(i))
-      val c = if (prev == null) 1 else prev.intValue + 1
-      counts.put(toks(i), Integer.valueOf(c))
-      if (c > top) top = c
-      i += 1
-    }
-    val n2 = math.max(n - 1, 0)
-    var dup2 = 0
-    if (n2 > 0) {
-      val seen = new java.util.HashSet[String](n2 * 2)
-      var j = 0
-      while (j < n2) {
-        if (!seen.add(toks(j).toString + " " + toks(j + 1).toString)) dup2 += 1
-        j += 1
-      }
-    }
-    new GenericInternalRow(Array[Any](n, top, n2, dup2))
+    val it = countsOf(toks).values().iterator()
+    while (it.hasNext) top = math.max(top, it.next().intValue)
+    new GenericInternalRow(Array[Any](toks.length, top, math.max(toks.length - 1, 0),
+      dupGrams(toks, 2)))
+  }
+
+  /** How often each key occurs. */
+  private def countsOf[K](keys: Array[K]): java.util.HashMap[K, Integer] = {
+    val counts = new java.util.HashMap[K, Integer](keys.length * 2)
+    for (k <- keys) counts.merge(k, Integer.valueOf(1), (a: Integer, b: Integer) => a + b)
+    counts
   }
 
   /** Per-doc lexical-diversity counters in one pass:
@@ -144,19 +135,18 @@ object TextHash {
     * here. */
   def lexicalStatsKernel(input: UTF8String): GenericInternalRow = {
     val toks = whitespaceTokens(input)
-    val n = toks.length
-    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      val prev = counts.get(toks(i))
-      counts.put(toks(i), Integer.valueOf(if (prev == null) 1 else prev.intValue + 1))
-      i += 1
-    }
+    val counts = countsOf(toks)
     var hapax = 0
     val it = counts.values().iterator()
     while (it.hasNext) if (it.next().intValue == 1) hapax += 1
-    new GenericInternalRow(Array[Any](n, counts.size(), hapax))
+    new GenericInternalRow(Array[Any](toks.length, counts.size(), hapax))
   }
+
+  /** Tokens `start until start + n` joined by single spaces. */
+  private def joinGram(toks: Array[UTF8String], start: Int, n: Int): UTF8String =
+    UTF8String.concatWs(Space, java.util.Arrays.copyOfRange(toks, start, start + n): _*)
+
+  private val Space = UTF8String.fromString(" ")
 
   private def gramKey(toks: Array[UTF8String], start: Int, n: Int): String = {
     val sb = new java.lang.StringBuilder
@@ -175,17 +165,14 @@ object TextHash {
     * caveat vs a SQL `count(DISTINCT gram)` replica). */
   def ngramDupKernel(input: UTF8String, n: Int): GenericInternalRow = {
     val toks = whitespaceTokens(input)
+    new GenericInternalRow(Array[Any](math.max(toks.length - n + 1, 0), dupGrams(toks, n)))
+  }
+
+  /** Occurrences of `n`-grams beyond each gram's first. */
+  private def dupGrams(toks: Array[UTF8String], n: Int): Int = {
     val nG = math.max(toks.length - n + 1, 0)
-    var dup = 0
-    if (nG > 0) {
-      val seen = new java.util.HashSet[String](nG * 2)
-      var i = 0
-      while (i < nG) {
-        if (!seen.add(gramKey(toks, i, n))) dup += 1
-        i += 1
-      }
-    }
-    new GenericInternalRow(Array[Any](nG, dup))
+    val seen = new java.util.HashSet[String](nG * 2)
+    (0 until nG).count(i => !seen.add(gramKey(toks, i, n)))
   }
 
   /** Fraction of token characters covered by n-grams that occur more
@@ -201,16 +188,8 @@ object TextHash {
     var i = 0
     while (i < total) { totalChars += toks(i).numChars(); i += 1 }
     if (nG <= 0 || totalChars == 0L) return 0.0
-    val counts = new java.util.HashMap[String, Integer](nG * 2)
-    val keys = new Array[String](nG)
-    i = 0
-    while (i < nG) {
-      val k = gramKey(toks, i, n)
-      keys(i) = k
-      val prev = counts.get(k)
-      counts.put(k, Integer.valueOf(if (prev == null) 1 else prev.intValue + 1))
-      i += 1
-    }
+    val keys = Array.tabulate(nG)(gramKey(toks, _, n))
+    val counts = countsOf(keys)
     val covered = new Array[Boolean](total)
     i = 0
     while (i < nG) {
@@ -283,6 +262,11 @@ object TextHash {
       }
       ti += 1
     }
+    positiveBits(counts)
+  }
+
+  /** Bit b set ⇔ `counts(b) > 0`: a SimHash from its 64 bit votes. */
+  private def positiveBits(counts: Array[Int]): Long = {
     var out = 0L
     var b = 0
     while (b < 64) {
@@ -297,6 +281,61 @@ object TextHash {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** One token's DSIR bucket: md5 of its UTF-8 bytes, the digest's
+    * top 52 bits (its first 13 hex chars: the first 7 bytes big-endian,
+    * shifted right by 4), mod `buckets` — the oracles'
+    * `pmod(conv(substring(md5(t), 1, 13), 16, 10), B)`. */
+  private def md5Bucket(md: java.security.MessageDigest, token: UTF8String, buckets: Int): Long = {
+    md.reset()
+    val dig = md.digest(token.getBytes)
+    var top = 0L
+    var i = 0
+    while (i < 7) { top = (top << 8) | (dig(i) & 0xffL); i += 1 }
+    (top >>> 4) % buckets
+  }
+
+  private def md5BucketArray(input: UTF8String, buckets: Int): Array[Long] = {
+    val md = Md5.get()
+    whitespaceTokens(input).map(md5Bucket(md, _, buckets))
+  }
+
+  /** Each whitespace token's [[md5Bucket]], in token order. */
+  def md5BucketsKernel(input: UTF8String, buckets: Int): UnsafeArrayData =
+    UnsafeArrayData.fromPrimitiveArray(md5BucketArray(input, buckets))
+
+  /** The frozen DSIR scorers' fold: for each token, left to right from
+    * 0.0 (the order of the HOF fold it replaced, so the doubles agree
+    * bit for bit), adds its bucket's row of the dense `table` into
+    * `acc`, `acc.length` values per bucket. */
+  private def foldBuckets(
+      input: UTF8String, buckets: Int, table: Array[Double], acc: Array[Double]): Array[Double] = {
+    for (b <- md5BucketArray(input, buckets)) {
+      var j = 0
+      while (j < acc.length) { acc(j) += table(b.toInt * acc.length + j); j += 1 }
+    }
+    acc
+  }
+
+  /** A document's frozen DSIR log-weight: `table(b)` summed over its
+    * tokens' buckets. */
+  def dsirScoreKernel(input: UTF8String, buckets: Int, table: Array[Double]): Double =
+    foldBuckets(input, buckets, table, new Array[Double](1))(0)
+
+  /** A document's frozen DSIR log-weights, one struct<domain, logw> per
+    * domain: `table` holds `domains.length` values per bucket. Each sum
+    * is rounded as Spark's `round(s, 4) + 0.0` rounds a double: NaN and
+    * ±Inf pass through, the rest round half up in decimal. */
+  def dsirDomainScoresKernel(input: UTF8String, buckets: Int, table: Array[Double],
+      domains: Array[UTF8String]): GenericArrayData = {
+    val sums = foldBuckets(input, buckets, table, new Array[Double](domains.length))
+    new GenericArrayData(domains.indices.map { j =>
+      val s = sums(j)
+      val r = if (s.isNaN || s.isInfinite) s
+        else BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+      new GenericInternalRow(Array[Any](domains(j), r + 0.0))
+    })
+  }
+
   /** md5-derived 64-bit SimHash rendered as a 64-char "0"/"1" string —
     * the ORACLE-CHECKABLE SimHash parameterization (DuckDB has md5 but
     * not xxhash64). Bit b of the result is the sign of
@@ -306,23 +345,7 @@ object TextHash {
     * bit loop per token, vs 64 interpreted md5-substring-conv
     * subtrees per token). */
   def simhashMd5Kernel(input: UTF8String): UTF8String = {
-    val toks = whitespaceTokens(input)
-    val counts = new Array[Int](64)
-    val md = Md5.get()
-    var ti = 0
-    while (ti < toks.length) {
-      md.reset()
-      val dig = md.digest(toks(ti).getBytes)
-      var b = 0
-      while (b < 64) {
-        val hexIdx = b >> 2 // 0-based hex-char index into the md5 hex string
-        val byt = dig(hexIdx >> 1)
-        val nibble = if ((hexIdx & 1) == 0) (byt >> 4) & 0xf else byt & 0xf
-        if (((nibble >> (b & 3)) & 1) == 1) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      ti += 1
-    }
+    val counts = simhashMd5Votes(input)
     val out = new Array[Byte](64)
     var b = 0
     while (b < 64) {
@@ -373,7 +396,12 @@ object TextHash {
     * two kernels bit-aligned is what lets a radius-N hamming query be
     * SQL-oracle-checked: DuckDB replays the bit STRING and counts
     * differing positions, Spark xors the longs. */
-  def simhashMd5LongKernel(input: UTF8String): Long = {
+  def simhashMd5LongKernel(input: UTF8String): Long =
+    positiveBits(simhashMd5Votes(input))
+
+  /** The md5 SimHash's 64 bit votes: Σ_tokens ±1 per bit (b%4) of hex
+    * digit b/4 of md5(token). */
+  private def simhashMd5Votes(input: UTF8String): Array[Int] = {
     val toks = whitespaceTokens(input)
     val counts = new Array[Int](64)
     val md = Md5.get()
@@ -383,7 +411,7 @@ object TextHash {
       val dig = md.digest(toks(ti).getBytes)
       var b = 0
       while (b < 64) {
-        val hexIdx = b >> 2
+        val hexIdx = b >> 2 // 0-based hex-char index into the md5 hex string
         val byt = dig(hexIdx >> 1)
         val nibble = if ((hexIdx & 1) == 0) (byt >> 4) & 0xf else byt & 0xf
         if (((nibble >> (b & 3)) & 1) == 1) counts(b) += 1 else counts(b) -= 1
@@ -391,13 +419,7 @@ object TextHash {
       }
       ti += 1
     }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
+    counts
   }
 
   /** md5-derived MinHash signature key — the ORACLE-CHECKABLE MinHash
@@ -417,16 +439,11 @@ object TextHash {
     java.util.Arrays.fill(mins, Int.MaxValue)
     if (m > 0) {
       val md = Md5.get()
-      val space = UTF8String.fromString(" ")
       val nWindows = math.max(m - shingleN + 1, 1)
       var j = 0
       while (j < nWindows) {
-        val len = math.min(shingleN, m - j)
-        val parts = new Array[UTF8String](len)
-        var p = 0
-        while (p < len) { parts(p) = toks(j + p); p += 1 }
         md.reset()
-        val dig = md.digest(UTF8String.concatWs(space, parts: _*).getBytes)
+        val dig = md.digest(joinGram(toks, j, math.min(shingleN, m - j)).getBytes)
         var s = 0
         while (s < 8) {
           val v = ((dig(2 * s) & 0xff) << 8) | (dig(2 * s + 1) & 0xff)
@@ -470,17 +487,12 @@ object TextHash {
       out(k) = bucketOf(XXH64.hashUTF8String(toks(i), Seed), numBuckets)
       i += 1; k += 1
     }
-    val space = UTF8String.fromString(" ")
     n = 2
     while (n <= wordNgrams) {
       if (m >= n) {
         var j = 0
         while (j <= m - n) {
-          val parts = new Array[UTF8String](n)
-          var p = 0
-          while (p < n) { parts(p) = toks(j + p); p += 1 }
-          val g = UTF8String.concatWs(space, parts: _*)
-          out(k) = bucketOf(XXH64.hashUTF8String(g, Seed), numBuckets)
+          out(k) = bucketOf(XXH64.hashUTF8String(joinGram(toks, j, n), Seed), numBuckets)
           j += 1; k += 1
         }
       }
@@ -611,6 +623,38 @@ object TextHashColumns {
       s"weight table has ${table.length} entries for $numBuckets buckets")
     call("hashedngrammeanweight", "hashedNgramMeanKernel", DoubleType, text,
       numBuckets, wordNgrams, KernelCall.payload(table))
+  }
+
+  /** `buckets` if it is a DSIR bucket count, [2, 2^20]. */
+  private[graft] def checkedBuckets(buckets: Int): Int = {
+    require(buckets >= 2 && buckets <= (1 << 20), s"buckets must be in [2, 2^20], got $buckets")
+    buckets
+  }
+
+  /** Each whitespace token's DSIR bucket (array<bigint>), in token
+    * order — see [[TextHash.md5BucketsKernel]]. */
+  def md5Buckets(text: Column, buckets: Int): Column =
+    call("md5buckets", "md5BucketsKernel", Longs, text, checkedBuckets(buckets))
+
+  /** A frozen DSIR log-weight over a dense per-bucket `table` — see
+    * [[TextHash.dsirScoreKernel]]. Declared nullable, as the
+    * `aggregate` fold it replaced was, so output schemas keep theirs. */
+  def dsirScore(text: Column, buckets: Int, table: Array[Double]): Column = {
+    require(table.length == checkedBuckets(buckets), s"${table.length} log-ratios for $buckets buckets")
+    KernelCall.column("dsirscore", TextHash, "dsirScoreKernel", DoubleType, Seq(text),
+      Seq(buckets, KernelCall.payload(table)), returnNullable = true)
+  }
+
+  /** Frozen DSIR log-weights against every domain — see
+    * [[TextHash.dsirDomainScoresKernel]]; the struct fields are
+    * nullable, as the `zip_with` they replaced declared them. */
+  def dsirDomainScores(text: Column, buckets: Int, table: Array[Double],
+      domains: Array[UTF8String]): Column = {
+    require(table.length == checkedBuckets(buckets) * domains.length,
+      s"${table.length} log-ratios for $buckets buckets x ${domains.length} domains")
+    call("dsirdomainscores", "dsirDomainScoresKernel", ArrayType(StructType(Seq(
+      StructField("domain", StringType), StructField("logw", DoubleType))), containsNull = false),
+      text, buckets, KernelCall.payload(table), KernelCall.payload(domains))
   }
 
   /** Distinct `shingleN`-gram shingles of a document as 64-bit hashes

@@ -609,43 +609,33 @@ object Pipeline {
     // domain, the rest are the raw pool scored by hashed-unigram
     // bucket log-ratios (Xie et al. 2023)
     "q_dsir_weights" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Sampling.dsirLogWeights(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", buckets = 256)
+      val (raw, target) = dsirSplit(t(s, dir, "documents"))
+      graft.operators.Sampling.dsirLogWeights(raw, target, "doc_id", "text", buckets = 256)
     }),
 
     // DSIR selection: Gumbel-max top-k over the importance weights —
     // sampling without replacement proportional to exp(logw)
     "q_dsir_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Sampling.dsirSample(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", k = 100, buckets = 256)
+      val (raw, target) = dsirSplit(t(s, dir, "documents"))
+      graft.operators.Sampling.dsirSample(raw, target, "doc_id", "text", k = 100, buckets = 256)
     }),
 
     // per-domain DSIR: one importance weight per (raw doc, target
     // language) — the stratified-target table a mixture planner fills
     // per-domain budgets from (Xie 2023 §3.3)
     "q_dsir_by_domain" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Sampling.dsirLogWeightsByDomain(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", "lang", buckets = 256)
+      val (raw, target) = dsirSplit(t(s, dir, "documents"))
+      graft.operators.Sampling.dsirLogWeightsByDomain(raw, target, "doc_id", "text", "lang",
+        buckets = 256)
     }),
 
     // per-domain DSIR selection: 20 docs per target language via
     // Gumbel-max over the by-domain weights — salted two-phase top-k,
     // no domain-sized window funnel
     "q_dsir_sample_domain" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      graft.operators.Sampling.dsirSampleByDomain(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "doc_id", "text", "lang", kPerDomain = 20, buckets = 256)
+      val (raw, target) = dsirSplit(t(s, dir, "documents"))
+      graft.operators.Sampling.dsirSampleByDomain(raw, target, "doc_id", "text", "lang",
+        kPerDomain = 20, buckets = 256)
     }),
 
     // FROZEN DSIR scoring: fit the bucket log-ratio table on the same
@@ -655,10 +645,8 @@ object Pipeline {
     // (prefix==batch spec-pinned in StreamingSpec)
     "q_dsir_frozen" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val ratios = graft.operators.Sampling.dsirRatioTable(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "text", buckets = 256)
+      val (raw, target) = dsirSplit(docs)
+      val ratios = graft.operators.Sampling.dsirRatioTable(raw, target, "text", buckets = 256)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
       docs.select(col("doc_id"),
         graft.operators.Sampling.dsirScoreFrozen(ratios, col("text"), 256)
@@ -673,10 +661,8 @@ object Pipeline {
     // (prefix==batch spec-pinned in StreamingSpec, like q_dsir_frozen)
     "q_dsir_frozen_domain" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val grid = graft.operators.Sampling.dsirDomainGrid(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(10)) === 0),
-        "text", "lang", buckets = 256)
+      val (raw, target) = dsirSplit(docs)
+      val grid = graft.operators.Sampling.dsirDomainGrid(raw, target, "text", "lang", buckets = 256)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       docs.select(col("doc_id"),
           explode(graft.operators.Sampling.dsirScoreFrozenByDomain(
@@ -1227,6 +1213,13 @@ object Pipeline {
   // prior CTE `u(doc_id, url)`, exposes `canon(doc_id, url, host,
   // registered_domain, canonical)`. Plain (non-interpolated) string so
   // the regex backslashes survive; callers splice it with `s"..."`.
+  /** The DSIR queries' (raw, target) split of `documents`: every 10th
+    * doc plays the target domain, the rest are the raw pool. */
+  private def dsirSplit(docs: DataFrame): (DataFrame, DataFrame) = {
+    val isTarget = pmod(col("doc_id"), lit(10)) === 0
+    (docs.filter(!isTarget), docs.filter(isTarget))
+  }
+
   private val UrlCanonCtes =
     """parts AS (
            SELECT doc_id, url,

@@ -11,9 +11,12 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.operators.Sampling
 import graft.plans.{BloomColumns, CompressColumns, KernelCall, Mojibake, MojibakeColumns,
-  PreTokens, StringColumns, TextHashColumns => THC, TextSignals, UnicodeColumns,
+  PreTokens, StringColumns, TextHash, TextHashColumns => THC, TextSignals, UnicodeColumns,
   VectorColumns => VC}
 
 /** Every native kernel column, evaluated both ways Spark runs it:
@@ -27,10 +30,49 @@ class KernelPathsSpec extends SparkSpec {
 
   private val planes = VF.makePlanes(numPlanes = 8, dim = 64)
   private val weights = Array.tabulate(64)(i => i * 0.25 - 3.0)
+  private val domains = Array("fin", "zoo").map(UTF8String.fromString)
   // "customer query" contains "customer", and "on"/"ne" overlap in
   // "one": the walk's leftmost-longest, non-overlapping choices show
   private val trie = Seq("customer query" -> "[CQ]", "customer" -> "[C]", "on" -> "<on>",
     "ne" -> "<ne>", "\u00e9" -> "e", "two" -> "")
+
+  /** DSIR bucket counts: 2 and 3 (nearly every token collides), the
+    * queries' 256, a non-power-of-two, and the 2^20 maximum. */
+  private val dsirBuckets = Seq(2, 3, 256, 1000, 1 << 20)
+
+  /** A fitted DSIR ratio table and by-domain grid at `b` buckets over
+    * `texts`: two in three of the buckets their tokens hit (the rest
+    * take the OOV path), cells missing from the grid, and at b = 3 an
+    * infinite ratio of each sign, so sums reach ±Inf and NaN. */
+  private def fitted(b: Int, texts: Seq[String])
+      : (Array[(Long, Double)], Array[(String, Long, Double)]) = {
+    val hit = texts.filter(_ != null)
+      .flatMap(t => TextHash.md5BucketsKernel(UTF8String.fromString(t), b).toLongArray)
+      .distinct.sorted.filter(_ % 3 != 1)
+    def lr(k: Long, j: Int): Double =
+      if (b == 3 && k == 0 && j == 0) Double.PositiveInfinity
+      else if (b == 3 && k == 2 && j == 0) Double.NegativeInfinity
+      else ((k * 2654435761L + j * 40503L) % 10007) / 997.0 - 5.0
+    val grid = for (k <- hit; (d, j) <- Seq("zoo", "fin", "news").zipWithIndex
+        if (k + j) % 4 != 1) yield (d, k, lr(k, j))
+    (hit.map(k => (k, lr(k, 0))).toArray, grid.toArray)
+  }
+
+  private def dsirKernels(t: Column, texts: Seq[String]): Seq[(String, Column)] =
+    dsirBuckets.flatMap { b =>
+      val (ratios, grid) = fitted(b, texts)
+      Seq(s"md5Buckets/$b" -> THC.md5Buckets(t, b),
+        s"dsirScoreFrozen/$b" -> Sampling.dsirScoreFrozen(ratios, t, b),
+        s"dsirScoreFrozenByDomain/$b" -> Sampling.dsirScoreFrozenByDomain(grid, t, b))
+    }
+
+  private def dsirRefs(t: Column, texts: Seq[String]): Seq[(String, Column)] =
+    dsirBuckets.flatMap { b =>
+      val (ratios, grid) = fitted(b, texts)
+      Seq(s"md5Buckets/$b" -> DsirColumns.tokenBuckets(t, b),
+        s"dsirScoreFrozen/$b" -> DsirColumns.scoreFrozen(ratios, t, b),
+        s"dsirScoreFrozenByDomain/$b" -> DsirColumns.scoreFrozenByDomain(grid, t, b))
+    }
 
   private def textSignals(t: Column): Column = {
     val c = TextSignals.columns(t)
@@ -92,15 +134,15 @@ class KernelPathsSpec extends SparkSpec {
     * references are checked on the real vectors only. */
   private def vectorRefs(v: Column, w: Column, centList: Column, edges: Boolean)
       : Seq[(String, Column)] = {
-    val (qv, qw) = (VF.int8QuantizeHof(v), VF.int8QuantizeHof(w))
+    val (qv, qw) = (VectorHofs.int8Quantize(v), VectorHofs.int8Quantize(w))
     Seq(
-      "int8Quantize" -> VF.int8QuantizeHof(v),
+      "int8Quantize" -> VectorHofs.int8Quantize(v),
       "dotLong" -> aggregate(zip_with(qv, qw, (x, y) => x * y), lit(0L), (acc, x) => acc + x)) ++
       (if (edges) Nil else Seq(
         "cosine" -> VF.cosine(v, w),
         "cosines" -> transform(centList, c => VF.cosine(v, c)),
         "cosinesTypedlit" -> transform(centList, c => VF.cosine(v, c)),
-        "hyperplaneBits" -> VF.hyperplaneBitsHof(v, planes)))
+        "hyperplaneBits" -> VectorHofs.hyperplaneBits(v, planes)))
   }
 
   /** A value made comparable bit for bit: doubles by their raw bits,
@@ -171,7 +213,18 @@ class KernelPathsSpec extends SparkSpec {
     val half = rddFrame(rows, schema).filter(col("id") % 2 === 0)
       .select(explode(THC.shingleHashes(col("text"), 3)).as("sh"))
     val sketch = half.stat.bloomFilter("sh", half.count(), 0.01)
-    checkBothPaths(rows, schema, textKernels(col("text"), sketch), textRefs(col("text")))
+    val all = rows.map(_.getString(1))
+    checkBothPaths(rows, schema,
+      textKernels(col("text"), sketch) ++ dsirKernels(col("text"), all),
+      textRefs(col("text")) ++ dsirRefs(col("text"), all))
+    // the DSIR buckets read tokens with 2-, 3- and 4-byte UTF-8
+    // characters, and digests with the top bit set
+    val toks = all.filter(_ != null).flatMap(_.split("[ \t\n\u000B\f\r]+"))
+    assert(toks.exists(_.exists(c => Character.isSurrogate(c))) &&
+      toks.exists(_.exists(c => c >= '\u0800' && !Character.isSurrogate(c))) &&
+      toks.exists(_.exists(c => c >= '\u0080' && c < '\u0800')))
+    val md = java.security.MessageDigest.getInstance("MD5")
+    assert(toks.exists(t => md.digest(t.getBytes("UTF-8"))(0) < 0))
     // the probe answers both ways on these rows
     val probed = rddFrame(rows, schema)
       .select(BloomColumns.anyContained(THC.shingleHashes(col("text"), 3), sketch))
@@ -206,19 +259,23 @@ class KernelPathsSpec extends SparkSpec {
     val df = Seq((1L, "a b", Array(1.0f), Array(2.0f))).toDF("id", "text", "a", "b")
     val names = df.select(THC.simhash(col("text")), THC.shingleHashes(col("text"), 5),
       THC.tokenNgrams(col("text"), "u", "v"), VC.cosine(col("a"), col("b")),
-      UnicodeColumns.nfkc(col("text")), THC.simhash(lower(col("text")))).columns.toSeq
+      UnicodeColumns.nfkc(col("text")), THC.simhash(lower(col("text"))),
+      THC.md5Buckets(col("text"), 64)).columns.toSeq
     assert(names == Seq("simhash64(text)", "shinglehashes(text)", "tokenngrams(text)",
-      "cosinesim(a, b)", "unicodenormalize(text)", "simhash64(lower(text))"))
+      "cosinesim(a, b)", "unicodenormalize(text)", "simhash64(lower(text))",
+      "md5buckets(text)"))
     val bf = BloomFilter.create(10)
     val payloads = df.select(StringColumns.replaceMany(col("text"), Seq("a" -> "b")),
       StringColumns.extractMany(col("text"), Seq("a")),
       StringColumns.containsAny(col("text"), Seq("a")),
       BloomColumns.anyContained(THC.shingleHashes(col("text"), 2), bf),
       VC.hyperplaneBits(col("a"), planes), THC.hashedNgramMeanWeight(col("text"), 64, 2, weights),
-      TextSignals.columns(col("text")).words).columns.toSeq
+      TextSignals.columns(col("text")).words, THC.dsirScore(col("text"), 64, weights),
+      THC.dsirDomainScores(col("text"), 32, weights, domains)).columns.toSeq
     assert(payloads == Seq("replacemany(text)", "extractmany(text)", "containsany(text)",
       "bloomanycontained(shinglehashes(text))", "hyperplanebits(a)",
-      "hashedngrammeanweight(text)", "graft_text_signals(text).n_words"))
+      "hashedngrammeanweight(text)", "graft_text_signals(text).n_words", "dsirscore(text)",
+      "dsirdomainscores(text)"))
     df.createOrReplaceTempView("kernel_names")
     val sql = spark.sql("SELECT graft_simhash(text), graft_compress_ratio(upper(text), 6) " +
       "FROM kernel_names").columns.toSeq
@@ -229,12 +286,15 @@ class KernelPathsSpec extends SparkSpec {
     val schema = StructType(Seq(StructField("id", LongType), StructField("text", StringType),
       StructField("a", ArrayType(FloatType))))
     val df = rddFrame(Seq(Row(1L, "a b c", Seq.fill(64)(1f))), schema)
+    val (ratios, grid) = (Array.fill(64)(0.5), Array.fill(64 * 2)(-0.5))
     val plan = df.select(THC.hashedNgramMeanWeight(col("text"), 64, 2, weights),
-      VC.hyperplaneBits(col("a"), planes)).queryExecution.optimizedPlan
+      VC.hyperplaneBits(col("a"), planes), THC.dsirScore(col("text"), 64, ratios),
+      THC.dsirDomainScores(col("text"), 64, grid, domains)).queryExecution.optimizedPlan
     val lits = plan.flatMap(_.expressions.flatMap(_.collect { case l: Literal => l }))
     def holds(payload: AnyRef) = lits.exists(l =>
       (l.value.asInstanceOf[AnyRef] eq payload) && l.dataType == ObjectType(payload.getClass))
-    assert(holds(weights) && holds(planes), plan)
+    assert(holds(weights) && holds(planes) && holds(ratios) && holds(grid) && holds(domains),
+      plan)
     assert(!lits.exists(_.dataType.isInstanceOf[ArrayType]), plan)
     // a trie rebuilt from the same patterns is the same call, so two
     // reads of it stay one subexpression

@@ -920,6 +920,22 @@ class PlanAuditSpec extends SparkSpec {
       s"group predicate did not reach the scan: $pushed")
   }
 
+  test("no query calls a kernel under a higher-order function") {
+    // a higher-order function is CodegenFallback: everything under it,
+    // its array argument included, runs interpreted, so a kernel there
+    // is called by reflection once per row or per element. Compute the
+    // kernel column in a projection below, or fold in a kernel.
+    import graft.plans.KernelCall
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      val plan = SparkEntry.queries(name)(spark, Sf).queryExecution.optimizedPlan
+      PlanDump.lambdas(plan).flatMap(_.collect {
+        case s: StaticInvoke => s.functionName
+        case k: KernelCall => k.name
+      }).distinct.map(k => s"$name: $k")
+    }
+    assert(offenders.isEmpty, s"kernels under a higher-order function: ${offenders.mkString(", ")}")
+  }
+
   test("empty-partition windows appear only in the whitelisted bounded-frame queries") {
     // An un-partitioned window funnels its whole input through ONE task
     // — a 100 TB killer when the input is corpus-sized. The queries

@@ -649,6 +649,31 @@ class SamplingSpec extends SparkSpec {
     assert(degenerate.length == 4 &&
       degenerate.forall(r => !r.isNullAt(0) && r.getDouble(0) == 0.0))
   }
+
+  test("frozen DSIR scorers reject a table or grid fitted at another bucket count") {
+    import spark.implicits._
+    val target = ((1L to 20L).map(i => (i, "news", "zebra yak xylophone zebra yak")) ++
+      (21L to 40L).map(i => (i, "finance", "invoice ledger accrual ledger invoice")))
+      .toDF("doc_id", "lang", "text")
+    val raw = ((100L to 119L).map(i => (i, "zebra yak xylophone yak zebra")) ++
+      (200L to 219L).map(i => (i, "invoice ledger accrual ledger invoice")))
+      .toDF("doc_id", "text")
+    // fitted at 256 buckets: six tokens, so at most six rows — few
+    // enough to pass for a 64-bucket table, with buckets at or above 64
+    val ratios = Sampling.dsirRatioTable(raw, target, "text", buckets = 256)
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val grid = Sampling.dsirDomainGrid(raw, target, "text", "lang", buckets = 256)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+    assert(ratios.length <= 64 && ratios.exists(_._1 >= 64), ratios.toSeq)
+    assert(grid.length <= 64 && grid.exists(_._2 >= 64), grid.toSeq)
+    for (b <- Seq(64, 1, (1 << 20) + 1)) {
+      intercept[IllegalArgumentException](Sampling.dsirScoreFrozen(ratios, col("text"), b))
+      intercept[IllegalArgumentException](Sampling.dsirScoreFrozenByDomain(grid, col("text"), b))
+    }
+    // at the bucket count it was fitted at, the table scores
+    assert(raw.select(Sampling.dsirScoreFrozen(ratios, col("text"), 256)).count() == 40)
+    assert(raw.select(Sampling.dsirScoreFrozenByDomain(grid, col("text"), 256)).count() == 40)
+  }
 }
 
 object SamplingSpec {

@@ -43,7 +43,7 @@ class SimilaritySpec extends SparkSpec {
     for (df <- Seq(emb.limit(100).select(col("vec_id"), col("embedding")), edge)) {
       val bad = df.select(
           graft.plans.VectorColumns.int8Quantize(col("embedding")).as("native"),
-          VF.int8QuantizeHof(col("embedding")).as("hof"))
+          VectorHofs.int8Quantize(col("embedding")).as("hof"))
         .filter(not(col("native") <=> col("hof"))).count()
       assert(bad == 0, "quantization differs from the HOF reference")
     }
@@ -61,7 +61,7 @@ class SimilaritySpec extends SparkSpec {
     val planes = VF.makePlanes(numPlanes = 24, dim = 64)
     val bad = emb.limit(100).select(
         graft.plans.VectorColumns.hyperplaneBits(col("embedding"), planes).as("native"),
-        VF.hyperplaneBitsHof(col("embedding"), planes).as("hof"))
+        VectorHofs.hyperplaneBits(col("embedding"), planes).as("hof"))
       .filter(not(col("native") <=> col("hof"))).count()
     assert(bad == 0)
   }
