@@ -328,7 +328,7 @@ object TextHash {
   def dsirDomainScoresKernel(input: UTF8String, buckets: Int, table: Array[Double],
       domains: Array[UTF8String]): GenericArrayData = {
     val sums = foldBuckets(input, buckets, table, new Array[Double](domains.length))
-    new GenericArrayData(domains.indices.map { j =>
+    new GenericArrayData(Array.tabulate[Any](domains.length) { j =>
       val s = sums(j)
       val r = if (s.isNaN || s.isInfinite) s
         else BigDecimal(s).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble

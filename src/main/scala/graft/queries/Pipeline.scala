@@ -1209,10 +1209,6 @@ object Pipeline {
         t(s, dir, "documents").select(col("doc_id")), col("doc_id"), 8, "s1"))
   )
 
-  // TextFunctions.canonicalUrl replica as appendable CTEs: expects a
-  // prior CTE `u(doc_id, url)`, exposes `canon(doc_id, url, host,
-  // registered_domain, canonical)`. Plain (non-interpolated) string so
-  // the regex backslashes survive; callers splice it with `s"..."`.
   /** The DSIR queries' (raw, target) split of `documents`: every 10th
     * doc plays the target domain, the rest are the raw pool. */
   private def dsirSplit(docs: DataFrame): (DataFrame, DataFrame) = {
@@ -1220,6 +1216,10 @@ object Pipeline {
     (docs.filter(!isTarget), docs.filter(isTarget))
   }
 
+  // TextFunctions.canonicalUrl replica as appendable CTEs: expects a
+  // prior CTE `u(doc_id, url)`, exposes `canon(doc_id, url, host,
+  // registered_domain, canonical)`. Plain (non-interpolated) string so
+  // the regex backslashes survive; callers splice it with `s"..."`.
   private val UrlCanonCtes =
     """parts AS (
            SELECT doc_id, url,
